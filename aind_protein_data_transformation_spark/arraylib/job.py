@@ -150,96 +150,104 @@ def run_job(
     # write-then-read-back loop, czi_to_zarr.py:527-529; persist is the
     # in-memory equivalent, spilling to disk when needed).
     voxels = decode.pad_to_5d(decode.decode_stacks(content, decoder)).persist()
-
-    # Per-stack full-res shapes, needed up front: chunk extents at every
-    # level clamp to the DECLARED dims (min(chunk, shape - origin), the
-    # reference's fixed-chunk contract zarr_writer.py:62-64), never to
-    # whichever voxels happen to be present — so a sparse tail (a decoder
-    # that elides empty voxels) can't silently truncate a block. Also
-    # feeds the OME-NGFF sidecars below. One tiny agg over the persisted
-    # voxels; O(stacks) rows.
-    shapes = {
-        row["stack_id"]: (
-            row["mt"] + 1, row["mc"] + 1, row["mz"] + 1, row["my"] + 1, row["mx"] + 1
-        )
-        for row in voxels.groupBy("stack_id")
-        .agg(
-            F.max("t").alias("mt"),
-            F.max("c").alias("mc"),
-            F.max("z").alias("mz"),
-            F.max("y").alias("my"),
-            F.max("x").alias("mx"),
-        )
-        .collect()
-    }
-
-    # Per-stack dtype, one tiny distinct over the persisted voxels;
-    # needed inside the level loop when the zarr_v2 sink is on.
-    stack_dtypes = {
-        row["stack_id"]: row["dtype"]
-        for row in voxels.select("stack_id", "dtype").distinct().collect()
-    }
-
-    out_root = settings.output_root
     current = voxels
-    spatial = {sid: shape[2:] for sid, shape in shapes.items()}
-    fz, fy, fx = settings.scale_factor
-    for lvl in range(settings.downsample_levels):
-        if lvl > 0:
-            # persist each level before its write so level k+1 derives
-            # from the materialized level k, not a recomputed lineage
-            current = pyramid.downsample_once(current, settings.scale_factor).persist()
-            # ceil-division shape recurrence (reference czi_to_zarr.py:181-183)
-            spatial = {
-                sid: (-(-z // fz), -(-y // fy), -(-x // fx))
-                for sid, (z, y, x) in spatial.items()
-            }
-        chunked = blocks.encode_chunks(
-            current, settings.chunk_size, stack_spatial_shapes=spatial
-        )
-        blocks.write_level_parquet(chunked, out_root, lvl)
-        if settings.zarr_v2:
-            # per-stack format-valid zarr v2 arrays: <out>/zarr/<stack>/
-            # <lvl> under a .zgroup per stack (the reference's per-stack
-            # group, czi_to_zarr.py:483-485). Stack count is O(driver
-            # loop) by design — the reference iterates stacks serially
-            # too; within a stack the chunk writes stay distributed.
-            for sid, (z, y, x) in spatial.items():
-                grp = os.path.join(settings.output_directory, "zarr", sid)
-                os.makedirs(grp, exist_ok=True)
-                with open(os.path.join(grp, ".zgroup"), "w") as fh:
-                    json.dump({"zarr_format": 2}, fh)
-                blocks.write_zarr_v2_store(
-                    chunked.filter(F.col("stack_id") == sid),
-                    os.path.join(grp, str(lvl)),
-                    (shapes[sid][0], shapes[sid][1], z, y, x),
-                    (1, 1, *settings.chunk_size),
-                    stack_dtypes[sid],
-                )
-    dtypes = stack_dtypes
-    # Metadata always lands in the local output_directory (a few KB per
-    # stack) — including S3 runs, where the data goes to s3a:// but the
-    # sidecars must not be silently dropped. A production deployment
-    # would additionally upload this directory (the reference's A23
-    # derivatives sync, zeiss_job.py:202-220).
-    metadata_dir = os.path.join(settings.output_directory, "_metadata")
-    for path, stack_name in stack_meta:
-        stack_id = path.rsplit("/", 1)[-1]
-        shape = shapes.get(stack_id)
-        if shape is None:
-            continue
-        attrs = ome.build_multiscales_metadata(
-            image_name=stack_name,
-            data_shape=shape,
-            n_levels=settings.downsample_levels,
-            scale_factor=settings.scale_factor,
-            voxel_size=(1.0, 1.0, 1.0),
-            chunks=(1, 1, *settings.chunk_size),
-            channel_minmax=[ome.dtype_range(dtypes[stack_id])] * shape[1],
-        )
-        ome.write_ome_ngff_json(attrs, metadata_dir, f"{stack_name}.zattrs")
+    try:
+        # Per-stack full-res shapes, needed up front: chunk extents at every
+        # level clamp to the DECLARED dims (min(chunk, shape - origin), the
+        # reference's fixed-chunk contract zarr_writer.py:62-64), never to
+        # whichever voxels happen to be present — so a sparse tail (a decoder
+        # that elides empty voxels) can't silently truncate a block. Also
+        # feeds the OME-NGFF sidecars below. One tiny agg over the persisted
+        # voxels; O(stacks) rows.
+        shapes = {
+            row["stack_id"]: (
+                row["mt"] + 1, row["mc"] + 1, row["mz"] + 1, row["my"] + 1, row["mx"] + 1
+            )
+            for row in voxels.groupBy("stack_id")
+            .agg(
+                F.max("t").alias("mt"),
+                F.max("c").alias("mc"),
+                F.max("z").alias("mz"),
+                F.max("y").alias("my"),
+                F.max("x").alias("mx"),
+            )
+            .collect()
+        }
 
-    voxels.unpersist()
+        # Per-stack dtype, one tiny distinct over the persisted voxels;
+        # needed inside the level loop when the zarr_v2 sink is on.
+        stack_dtypes = {
+            row["stack_id"]: row["dtype"]
+            for row in voxels.select("stack_id", "dtype").distinct().collect()
+        }
+
+        out_root = settings.output_root
+        spatial = {sid: shape[2:] for sid, shape in shapes.items()}
+        fz, fy, fx = settings.scale_factor
+        for lvl in range(settings.downsample_levels):
+            previous = current
+            if lvl > 0:
+                # persist each level before its write so level k+1 derives
+                # from the materialized level k, not a recomputed lineage
+                current = pyramid.downsample_once(current, settings.scale_factor).persist()
+                # ceil-division shape recurrence (reference czi_to_zarr.py:181-183)
+                spatial = {
+                    sid: (-(-z // fz), -(-y // fy), -(-x // fx))
+                    for sid, (z, y, x) in spatial.items()
+                }
+            chunked = blocks.encode_chunks(
+                current, settings.chunk_size, stack_spatial_shapes=spatial
+            )
+            blocks.write_level_parquet(chunked, out_root, lvl)
+            if settings.zarr_v2:
+                # per-stack format-valid zarr v2 arrays: <out>/zarr/<stack>/
+                # <lvl> under a .zgroup per stack (the reference's per-stack
+                # group, czi_to_zarr.py:483-485). Stack count is O(driver
+                # loop) by design — the reference iterates stacks serially
+                # too; within a stack the chunk writes stay distributed.
+                for sid, (z, y, x) in spatial.items():
+                    grp = os.path.join(settings.output_directory, "zarr", sid)
+                    os.makedirs(grp, exist_ok=True)
+                    with open(os.path.join(grp, ".zgroup"), "w") as fh:
+                        json.dump({"zarr_format": 2}, fh)
+                    blocks.write_zarr_v2_store(
+                        chunked.filter(F.col("stack_id") == sid),
+                        os.path.join(grp, str(lvl)),
+                        (shapes[sid][0], shapes[sid][1], z, y, x),
+                        (1, 1, *settings.chunk_size),
+                        stack_dtypes[sid],
+                    )
+            if lvl > 0:
+                # level k is written (and so materialized): level k-1
+                # has no consumer left
+                previous.unpersist()
+        dtypes = stack_dtypes
+        # Metadata always lands in the local output_directory (a few KB per
+        # stack) — including S3 runs, where the data goes to s3a:// but the
+        # sidecars must not be silently dropped. A production deployment
+        # would additionally upload this directory (the reference's A23
+        # derivatives sync, zeiss_job.py:202-220).
+        metadata_dir = os.path.join(settings.output_directory, "_metadata")
+        for path, stack_name in stack_meta:
+            stack_id = path.rsplit("/", 1)[-1]
+            shape = shapes.get(stack_id)
+            if shape is None:
+                continue
+            attrs = ome.build_multiscales_metadata(
+                image_name=stack_name,
+                data_shape=shape,
+                n_levels=settings.downsample_levels,
+                scale_factor=settings.scale_factor,
+                voxel_size=(1.0, 1.0, 1.0),
+                chunks=(1, 1, *settings.chunk_size),
+                channel_minmax=[ome.dtype_range(dtypes[stack_id])] * shape[1],
+            )
+            ome.write_ome_ngff_json(attrs, metadata_dir, f"{stack_name}.zattrs")
+    finally:
+        # the last persisted level (level 0 is voxels itself) and the
+        # voxels are released on every exit, the error path included
+        current.unpersist()
+        voxels.unpersist()
     return JobResponse(
         0,
         f"Processed {len(stack_meta)} stacks in {time.time() - t0:.1f}s",

@@ -20,37 +20,16 @@ Scale design (100 TB corpus):
   hot shingles can be dropped by document frequency before the join
   (``shared_shingle_pairs(max_df=...)``, the boilerplate-pruning cap).
 
-Incremental index runbook (the operator lifecycle, end to end):
-
-1. ``write_minhash_index(corpus, name)`` — one-time build: bucketed
-   band + signature tables, co-located for probe joins.
-2. ``append_minhash_shard(spark, shard, name)`` — per-ingest update;
-   sigs-first ordering makes every crash state benign. Re-run after
-   any crash: result-idempotent (duplicate rows change no pairs).
-3. ``incremental_minhash_pairs(spark, shard, name)`` — the probe;
-   pass ``verify=True`` on the FIRST probe after a possibly
-   interrupted ingest to audit the index up front instead of silently
-   losing candidates.
-4. ``verify_minhash_index(spark, name)`` — the same audit standalone;
-   raises on the dangerous state (band rows without signatures, only
-   producible by tampering or pre-ordering code) with the recovery
-   rule, and reports benign orphan signatures.
-5. ``compact_minhash_index(spark, name)`` — periodic maintenance once
-   crash re-appends have accumulated duplicate rows (storage and
-   probe-candidate inflation); preserves bucketing, detects
-   re-signed-doc_id contract violations, idempotent. At index sizes
-   where staging the whole index is unreasonable, compact into a fresh
-   name instead (``target="name_v2"``) and swap probes over — a pure
-   streaming rewrite with no overwrite window.
-
-doc_ids are IMMUTABLE: a changed document is a new id. There is no
-update path; compaction refuses an index where one id carries two
-different signatures.
-
-The same five-step lifecycle exists for EMBEDDING near-dup
-(operators/embedding_index.py: write/append/probe/verify/compact an
-SRP-LSH index over vectors) — one operator playbook for both text and
-embedding shards.
+Incremental MinHash index (the bottom of this module): the corpus is
+indexed ONCE and each arriving shard is deduplicated against it without
+touching the history again — ``write_minhash_index`` /
+``append_minhash_shard`` / ``incremental_minhash_pairs`` /
+``verify_minhash_index`` / ``compact_minhash_index`` /
+``swap_minhash_index``. The lifecycle and its runbook live in
+operators/index_lifecycle.py, shared with the SRP embedding index
+(operators/embedding_index.py) and the SimHash index
+(operators/simhash_index.py); this module holds the MinHash spec, its
+signer, its stamp and its Jaccard verify score.
 """
 
 from __future__ import annotations
@@ -62,13 +41,13 @@ from pyspark.sql.window import Window
 from ..functions.text import hash64, normalize_text, tokens
 from .index_lifecycle import (
     IndexSpec,
+    Signer,
+    append_index,
     compact_index,
-    prune_probe_scan,
-    read_stamp,
+    probe_index,
     swap_index,
-    table_external_location,
-    table_num_buckets,
     verify_index,
+    write_index,
 )
 
 # MinHash parameters — shared verbatim with the SQL oracle
@@ -547,26 +526,51 @@ def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3, id_col: str = "doc
 
 # ------------------------------------------------------- incremental dedup
 #
-# The 100-TB dedup workflow is not one batch job: the corpus is indexed
-# ONCE, and each arriving shard is deduplicated AGAINST the index
-# without touching the historical data again. Two persisted tables:
+# The persisted MinHash index (lifecycle and runbook:
+# operators/index_lifecycle.py):
 #
 #   <name>_bands  (id, band, k0..k3)  bucketed+sorted on the band join
-#                 key — the probe join reads co-located, pre-sorted
-#                 buckets, so the corpus-sized side of the join never
-#                 shuffles or sorts again, for any number of shards;
+#                 key — probes read co-located, pre-sorted buckets;
 #   <name>_sigs   (id, n, hs)         bucketed on id — the exact-Jaccard
 #                 verify joins the (small) candidate set against it.
-#
-# Only the incoming shard (orders of magnitude smaller than the index)
-# moves through an exchange per probe. Appending a deduplicated shard
-# into the index is a bucketed append of its own band/sig rows.
-#
-# Maintenance runbook (no overwrite window at any step):
-#   compact_minhash_index(spark, name, target=f"{name}_v2")
-#   swap_minhash_index(spark, name, f"{name}_v2")   # verifies, then
-#       # promotes via metadata-only renames; crash-recoverable by
-#       # re-running — see index_lifecycle.swap_index
+
+MINHASH_SPEC = IndexSpec(
+    kind="minhash",
+    sidecar_suffix="sigs",
+    band_keys=("band", *(f"k{j}" for j in range(LSH_BAND_SIZE))),
+    payload_cols=("n", "hs"),
+    payload_noun="signature payloads",
+    sidecar_noun="signature row",
+    entity="document",
+    banded_key="banded_docs",
+    stored_key="signed_docs",
+    orphan_key="orphan_sig_docs",
+    stamp_keys=MINHASH_STAMP_KEYS,
+)
+
+
+def _minhash_stamp(k: int) -> dict[str, str]:
+    return {
+        "sparkgraft.minhash.perms": str(MINHASH_PERMS),
+        "sparkgraft.minhash.band_size": str(LSH_BAND_SIZE),
+        "sparkgraft.minhash.shingle_k": str(k),
+        "sparkgraft.minhash.hash_version": MINHASH_HASH_VERSION,
+    }
+
+
+def _signer(k: int, text_col: str, id_col: str) -> Signer:
+    """Shingle and sign in one aggregation pass, carrying the sorted
+    shingle-hash set the Jaccard verify intersects; the band rows are
+    :func:`band_rows` of the signatures."""
+    return Signer(
+        sign=lambda docs: minhash_signatures(
+            shingle_set(docs, k=k, text_col=text_col, id_col=id_col),
+            id_col=id_col,
+            with_hashes=True,
+        ),
+        bands=lambda sig: band_rows(sig, id_col),
+        stamp=_minhash_stamp(k),
+    )
 
 
 def write_minhash_index(
@@ -579,139 +583,11 @@ def write_minhash_index(
     id_col: str = "doc_id",
 ) -> None:
     """Index ``docs`` for incremental near-dup probes: shingle, sign,
-    and persist the band + signature tables described above. The
-    signature frame (the expensive shingle+min-agg pass) feeds BOTH
-    writes, so it is persisted for the duration of the build and
-    released before return (round-9 review — each saveAsTable used to
-    recompute it from the raw text).
-
-    The signature geometry (perm count, band size, shingle ``k``, hash
-    derivation version) is part of the index identity, so it is STAMPED
-    into the bands table's properties and validated by every append and
-    probe — a mismatch raises instead of silently losing pairs (VERDICT
-    r9 #2; the SRP family's guard, generalized). Build order bands →
-    stamp → sigs: a crash anywhere before the LAST write leaves the
-    sigs table missing, so every partial state fails loudly — a
-    complete-LOOKING index with a missing stamp cannot be produced by a
-    crash here."""
-    sig = minhash_signatures(
-        shingle_set(docs, k=k, text_col=text_col, id_col=id_col),
-        id_col=id_col,
-        with_hashes=True,
-    ).persist()
-    try:
-        key_cols = ["band"] + [f"k{j}" for j in range(LSH_BAND_SIZE)]
-        bw = (
-            band_rows(sig, id_col)
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, *key_cols)
-            .sortBy(*key_cols)
-        )
-        if path:
-            bw = bw.option("path", f"{path}/bands")
-        bw.saveAsTable(f"{name}_bands")
-        _stamp_minhash_params(docs.sparkSession, name, k)
-        sw = (
-            sig.select(id_col, "n", "hs")
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, id_col)
-        )
-        if path:
-            sw = sw.option("path", f"{path}/sigs")
-        sw.saveAsTable(f"{name}_sigs")
-    finally:
-        sig.unpersist()
-
-
-# Shared two-table lifecycle core (VERDICT r8 #5): bucket-metadata
-# readers, verify/compact/swap all live in index_lifecycle.py,
-# parametrized by this family's spec. The private aliases keep the
-# pre-extraction import surface working (tests, embedding_index).
-MINHASH_SPEC = IndexSpec(
-    kind="minhash",
-    sidecar_suffix="sigs",
-    band_keys=("band", *(f"k{j}" for j in range(LSH_BAND_SIZE))),
-    payload_cols=("n", "hs"),
-    payload_noun="signature payloads",
-    sidecar_noun="signature row",
-    entity="document",
-    banded_key="banded_docs",
-    stored_key="signed_docs",
-    orphan_key="orphan_sig_docs",
-    append_fn="append_minhash_shard",
-    write_fn="write_minhash_index",
-    compact_fn="compact_minhash_index",
-    stamp_keys=MINHASH_STAMP_KEYS,
-)
-
-
-def _stamp_minhash_params(spark, name: str, k: int) -> None:
-    """Record the signature geometry on the bands table — it is part of
-    the index identity (band keys across different perm counts, band
-    sizes, shingle widths, or hash derivations never collide
-    meaningfully), so appends and probes validate against it.
-
-    Also the RECOVERY tool for a lost stamp, exactly like the SRP twin
-    (_stamp_srp_params): an in-place compaction that crashed after the
-    bands overwrite but before the re-stamp leaves a complete-looking
-    UNSTAMPED index; :func:`verify_minhash_index` flags it
-    (``missing_stamp_keys`` > 0), and this call with the KNOWN shingle
-    width restores the guard."""
-    from .index_lifecycle import apply_stamp
-
-    apply_stamp(spark, f"{name}_bands", _minhash_stamp(k))
-
-
-def _minhash_stamp(k: int) -> dict[str, str]:
-    return {
-        "sparkgraft.minhash.perms": str(MINHASH_PERMS),
-        "sparkgraft.minhash.band_size": str(LSH_BAND_SIZE),
-        "sparkgraft.minhash.shingle_k": str(k),
-        "sparkgraft.minhash.hash_version": MINHASH_HASH_VERSION,
-    }
-
-
-def _check_minhash_params(spark, name: str, k: int) -> None:
-    """Raise when the session's signing constants (module constants +
-    the caller's shingle ``k``) disagree with the index's stamped ones:
-    a mismatched probe shingles/signs the shard under a different
-    derivation, so its band keys never meaningfully collide with the
-    stored ones and near-dup pairs silently go MISSING instead of
-    failing — the silent-recall-collapse class the SRP dimension and
-    geometry guards close (VERDICT r9 #2). Unstamped tables (hand-built,
-    or pre-stamp legacy indexes) pass unvalidated — the same policy as
-    the SRP twin; :func:`verify_minhash_index` reports those via
-    ``missing_stamp_keys``. A PARTIAL stamp is tampering/corruption, not
-    legacy, and raises rather than half-validating."""
-    props = read_stamp(spark, f"{name}_bands", MINHASH_STAMP_KEYS)
-    if not props:
-        return
-    if len(props) < len(MINHASH_STAMP_KEYS):
-        raise ValueError(
-            f"minhash index {name!r} carries a PARTIAL identity stamp "
-            f"({sorted(props)} of {MINHASH_STAMP_KEYS}) — the stamp is "
-            f"one identity; repair it with the known geometry "
-            f"(_stamp_minhash_params) before probing or appending."
-        )
-    expected = _minhash_stamp(k)
-    bad = {p: (props[p], expected[p]) for p in expected if props[p] != expected[p]}
-    if bad:
-        detail = "; ".join(
-            f"{p.rsplit('.', 1)[1]}: index={st!r} vs session={se!r}"
-            for p, (st, se) in sorted(bad.items())
-        )
-        raise ValueError(
-            f"minhash index {name!r} was built under different signature "
-            f"constants than this session's ({detail}) — band keys "
-            f"across different derivations never collide meaningfully, "
-            f"so the probe/append would silently lose near-dup pairs "
-            f"instead of failing. Probe with the index's own geometry "
-            f"(stamped in the bands table's properties) or rebuild the "
-            f"index under the session's constants."
-        )
-
-_table_num_buckets = table_num_buckets
-_table_external_location = table_external_location
+    and persist the band + signature tables described above, stamped
+    with the signature geometry (perm count, band size, shingle ``k``,
+    hash derivation version). Runbook step 1 of
+    operators/index_lifecycle.py."""
+    write_index(docs, name, MINHASH_SPEC, _signer(k, text_col, id_col), id_col, n_buckets, path)
 
 
 def append_minhash_shard(
@@ -722,100 +598,25 @@ def append_minhash_shard(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> None:
-    """Fold an (already-deduplicated) shard into the persisted index —
-    the second half of the incremental workflow the module notes above
-    describe: a bucketed APPEND of the shard's own band/sig rows. The
-    historical corpus is never read, re-shuffled, or re-signed; each
-    new file lands in its bucket, so subsequent probes still join
-    co-located. Bucket count is read from the existing table metadata
-    (a mismatched spec would poison the bucketed join silently).
-
-    Equivalence pinned by tests/test_incremental.py: probing after an
-    append finds exactly what an index rebuilt from scratch over
-    corpus+shard finds.
-
-    NOT transactional (two independent table appends — plain bucketed
-    parquet tables have no cross-table transaction; an ACID table
-    format would supply one), but ORDERED so every partial state is
-    BENIGN (VERDICT r6 #7): signatures append FIRST, band rows second.
-    A crash between the appends leaves orphan signature rows — which no
-    band row references, so probes return exactly what they returned
-    before the append (the shard simply isn't indexed yet); re-running
-    the append completes it. The dangerous partial state — band rows
-    WITHOUT signatures, whose candidates the verify join silently
-    drops — can no longer be produced by this function; it is still
-    DETECTABLE (a pre-fix index, external tampering) via
-    :func:`verify_minhash_index`, and healable by re-running the
-    append for the affected shard (the arriving signature rows make the
-    orphan band rows valid again). Re-appending a shard duplicates its
-    band/sig rows; the candidate AND output-pair sets are unchanged
-    (incremental_minhash_pairs deduplicates per (new_id, index_id)), so
-    re-running after any crash is idempotent at the result level.
-    Both tables are validated BEFORE the first write so a malformed
-    index fails cleanly up front.
-
-    Session-cache footgun: the append invalidates the relation cache of
-    the session that RUNS it. A probe from a DIFFERENT session — the
-    common case being Structured Streaming's ``foreachBatch``, which
-    hands the callback a CLONED session while user code holds the
-    outer one — can replay a stale cached file listing of the
-    bands/sigs tables and silently miss just-appended shards. Call
-    ``spark.catalog.refreshTable`` on both tables in the probing
-    session after cross-session appends (the dedup-at-ingest
-    composition in tests/test_streaming_dedup_ingest.py does exactly
-    this).
-    """
-    n_buckets = _table_num_buckets(spark, f"{name}_bands")
-    sig_buckets = _table_num_buckets(spark, f"{name}_sigs")
-    _check_minhash_params(spark, name, k)
-    # one materialization feeds both writes (localCheckpoint, not
-    # persist — same lifecycle reasoning as incremental_minhash_pairs)
-    sig = minhash_signatures(
-        shingle_set(docs, k=k, text_col=text_col, id_col=id_col),
-        id_col=id_col,
-        with_hashes=True,
-    ).localCheckpoint()
-    key_cols = ["band"] + [f"k{j}" for j in range(LSH_BAND_SIZE)]
-    # sigs FIRST: see the ordering contract in the docstring
-    (
-        sig.select(id_col, "n", "hs")
-        .write.mode("append")
-        .bucketBy(sig_buckets, id_col)
-        .saveAsTable(f"{name}_sigs")
-    )
-    (
-        band_rows(sig, id_col)
-        .write.mode("append")
-        .bucketBy(n_buckets, *key_cols)
-        .sortBy(*key_cols)
-        .saveAsTable(f"{name}_bands")
-    )
+    """Fold an (already-deduplicated) shard into the persisted index: a
+    bucketed APPEND of its own sig rows, then band rows; the history is
+    never read or re-signed. Equivalence pinned by
+    tests/test_incremental.py: probing after an append finds exactly
+    what an index rebuilt over corpus+shard finds. Runbook step 2
+    (crash ordering, session-cache footgun) of
+    operators/index_lifecycle.py."""
+    append_index(spark, docs, name, MINHASH_SPEC, _signer(k, text_col, id_col), id_col)
 
 
 def verify_minhash_index(
     spark, name: str, id_col: str = "doc_id"
 ) -> dict[str, int]:
-    """Consistency check for a persisted minhash index: every document
-    with band rows must have a signature row, else probes SILENTLY drop
-    that document's candidates at the verify join (the failure mode an
-    interrupted pre-ordering append could produce). Raises ValueError
-    naming the count and the recovery rule if any band doc lacks a
-    signature; returns ``{"banded_docs", "signed_docs",
-    "orphan_sig_docs"}`` otherwise. Orphan SIGNATURES (sig rows with no
-    band rows — the benign partial state the sigs-first ordering can
-    leave) do not raise: they affect no probe; the count is returned so
-    an operator can decide to finish the interrupted append. Cost: two
-    distinct-aggregates + one anti-join over the index tables — an
-    offline audit, not a per-probe tax. The result also carries
-    ``missing_stamp_keys`` (VERDICT r9 #2): 4 means the bands table
-    holds NO ``sparkgraft.minhash.*`` geometry stamp — on an index
-    built by :func:`write_minhash_index` that is the in-place
-    compaction crash signature (crash after the bands overwrite,
-    before the re-stamp); recover with :func:`_stamp_minhash_params`
-    and the known shingle width, or re-run the compaction with its
-    explicit ``shingle_k=`` override. Hand-built or pre-stamp legacy
-    indexes can ignore the count. Shared machinery:
-    :func:`index_lifecycle.verify_index` with :data:`MINHASH_SPEC`."""
+    """Consistency audit: raises if any banded document lacks a
+    signature row; returns ``{"banded_docs", "signed_docs",
+    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise (4 missing
+    keys = the in-place-compaction crash signature; recover with
+    ``compact_minhash_index(..., shingle_k=)``). Runbook step 4 of
+    operators/index_lifecycle.py."""
     return verify_index(spark, name, MINHASH_SPEC, id_col)
 
 
@@ -827,114 +628,30 @@ def compact_minhash_index(
     path: str | None = None,
     shingle_k: int | None = None,
 ) -> dict[str, int]:
-    """Rewrite both index tables without duplicate rows (VERDICT r7 #3).
-
-    Re-appending a shard after a crash is result-idempotent
-    (:func:`incremental_minhash_pairs` aggregates per pair) but
-    storage-MONOTONIC: the duplicate band/sig rows inflate every
-    subsequent probe's candidate join. This offline maintenance pass
-    drops exact-duplicate rows from both tables — bands on their full
-    key (band, k0..k{B-1}, id), sigs on the doc id — and rewrites each
-    with its ORIGINAL bucket spec (read from table metadata, the same
-    guard append_minhash_shard applies), so probes keep joining
-    co-located. Probe results are unchanged by construction: the
-    distinct candidate set and the per-pair aggregated jaccard are both
-    invariant under row multiplicity (pinned by test).
-
-    ZERO-shuffle: both dedup keys are supersets of their table's bucket
-    columns, so the bucketed read's hash partitioning already satisfies
-    the aggregation's clustering requirement — Catalyst plans the
-    dropDuplicates without an Exchange (plan-asserted in
-    tests/test_incremental.py), and the pass is read → partition-local
-    dedup → bucketed write at any index size.
-
-    Contract check: before rewriting, any doc_id carrying CONFLICTING
-    signature payloads (n, hs) raises — that is the append-only
-    contract violation incremental_minhash_pairs documents (a re-signed
-    document under a reused id); compacting would have to silently pick
-    one version. Recover by rebuilding the index (write_minhash_index)
-    or removing the stale shard's rows out of band.
-
-    Two modes:
-
-    - **In place** (``target=None``): overwrite ``name``'s tables. An
-      EXTERNAL table (built with ``path=``) is rewritten AT ITS OWN
-      LOCATION (read from the catalog) so it stays external and no
-      stale pre-compaction copy is stranded at the original path —
-      without that, overwrite-saveAsTable would silently recreate the
-      table managed in the warehouse dir. Each ``overwrite`` of a
-      plain-parquet bucketed table is a non-atomic
-      boundary (an ACID table format would close it), so run with the
-      index quiesced; the pass is idempotent — re-running after a crash
-      that lost one table's rewrite completes the compaction. The
-      deduplicated rows are materialized (localCheckpoint) BEFORE
-      either overwrite so the rewrite never reads the table it is
-      replacing — fine for the offline maintenance sizes this mode is
-      for, but it stages the whole index on executor local storage.
-    - **Into a fresh index** (``target="name_v2"`` [+ ``path``]): write
-      the compacted tables under the TARGET name and leave the source
-      untouched — the production shape at index sizes where staging the
-      whole index is unreasonable: a pure streaming
-      read-dedup-bucketed-write with no checkpoint and no overwrite
-      window; promote the verified build with :func:`swap_minhash_index`
-      (rename-based, no overwrite window at any step). Probe
-      equivalence between source and target is pinned by test. Crash
-      recovery in this mode: the writes use ``errorifexists``, so a
-      crash between the two target writes leaves a half-built target a
-      re-run REFUSES to overwrite — DROP both ``{target}_*`` tables and
-      re-run (the source is untouched throughout, nothing is lost);
-      never swap a target into service before its build completed.
+    """Rewrite both index tables without the duplicate rows crash
+    re-appends accumulate — bands on (band, k0..k{B-1}, id), sigs on
+    the doc id — zero-shuffle, raising on a doc_id with conflicting
+    (n, hs) payloads. In place (``target=None``) or into a fresh index
+    (``target="name_v2"`` [+ ``path``]) for :func:`swap_minhash_index`;
+    see :func:`index_lifecycle.compact_index` for both modes.
 
     ``shingle_k=`` overrides the geometry stamp written to the output —
     the RECOVERY path for an in-place compaction that crashed between
-    the bands overwrite and the re-stamp (the crash erases the source
-    stamp, so a plain re-run cannot restore what it can no longer read;
-    a re-run with the known shingle width can — the remaining stamp
-    fields are the session's module constants).
-
-    Returns row counts: ``{"bands_before", "bands_after",
-    "sigs_before", "sigs_after"}``. Shared machinery:
-    :func:`index_lifecycle.compact_index` with :data:`MINHASH_SPEC`.
-    """
+    the bands overwrite and the re-stamp (the remaining stamp fields are
+    the session's module constants). Returns ``{"bands_before",
+    "bands_after", "sigs_before", "sigs_after"}``."""
     override = _minhash_stamp(shingle_k) if shingle_k is not None else None
     return compact_index(
-        spark,
-        name,
-        MINHASH_SPEC,
-        id_col,
-        target=target,
-        path=path,
-        stamp_override=override,
+        spark, name, MINHASH_SPEC, id_col, target=target, path=path, stamp_override=override
     )
 
 
 def swap_minhash_index(spark, name: str, target: str) -> dict:
-    """Promote a verified compact-into-``target`` build to ``name`` via
-    metadata-only rename pairs — the production maintenance path's
-    closing move (compact → verify → swap; no overwrite window at any
-    step). Verifies the target first; crash-recoverable by re-running
-    (every intermediate catalog state is either the old index, the new
-    index, or loudly missing a table — crash-simulated at each
-    inter-rename point in tests/test_incremental.py). Verification
-    includes the geometry stamp (``missing_stamp_keys``): a build that
-    lost its stamp cannot be promoted — an unstamped live index would
-    bypass the geometry guard on every future append/probe; re-stamp
-    with :func:`_stamp_minhash_params` and the known shingle width
-    first. See :func:`index_lifecycle.swap_index` for the full
-    contract."""
-
-    def _verify(s, n):
-        health = verify_minhash_index(s, n)
-        if health.get("missing_stamp_keys"):
-            raise ValueError(
-                f"swap_minhash_index: target {n!r} is missing its "
-                f"geometry stamp ({MINHASH_STAMP_KEYS}) — re-stamp with "
-                f"_stamp_minhash_params (known shingle width) before "
-                f"promoting; an unstamped live index would bypass the "
-                f"geometry guard on every future append/probe."
-            )
-
-    return swap_index(spark, name, target, MINHASH_SPEC, verify_fn=_verify)
+    """Promote a verified (stamp included) compact-into-``target``
+    build to ``name`` via metadata-only rename pairs, crash-recoverable
+    by re-running — :func:`index_lifecycle.swap_index`, runbook
+    step 6."""
+    return swap_index(spark, name, target, MINHASH_SPEC, "doc_id")
 
 
 def incremental_minhash_pairs(
@@ -950,131 +667,40 @@ def incremental_minhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs between ``new_docs`` and the corpus indexed by
     :func:`write_minhash_index`: (new_id, index_id, jaccard), exact
-    Jaccard >= ``threshold`` over the LSH candidates.
+    Jaccard >= ``threshold`` over the LSH candidates, one row per pair
+    (``max(jaccard)`` — row dedup under the append-only contract).
 
-    Geometry stamp: the shard is shingled and signed under the index's
-    STAMPED geometry (perms / band_size / shingle_k / hash_version —
-    ``_check_minhash_params`` reads the bands table's stamp); an
-    explicit ``k`` that disagrees with the stamp RAISES rather than
-    silently probing with mismatched shingles (see the module notes and
-    :func:`aind_protein_data_transformation_spark.operators.index_lifecycle.verify_index` for the
-    lost-stamp recovery rule).
-
-    ``prune_scan`` (int, default None = full-scan regime) enables the
-    point-lookup regime for SMALL shards: the shard's distinct ``k0``
-    band-hash values (bounded by the argument, which may only TIGHTEN
-    :data:`index_lifecycle.PRUNE_SCAN_MAX_KEYS`) are pushed as an IN
-    filter into the bands scan, so the (band, k0, ...)-sorted row
-    groups skip at I/O time. Any candidate pair matches the probe on
-    every band key INCLUDING k0, so pruning on k0 drops only rows the
-    join could never match — pair set identical to the unpruned probe
-    (test-pinned: tests/test_prune_scan.py).
-
-    ``verify=True`` runs :func:`verify_minhash_index` first (VERDICT r7
-    #6) — one offline audit before probing a possibly-interrupted
-    index: an index whose band rows lack signature rows (the dangerous
-    partial state a pre-ordering append or external tampering can
-    leave) would otherwise SILENTLY drop those documents' candidates at
-    the verify join; with the flag set the probe raises up front,
-    naming the recovery rule (re-run append_minhash_shard for the
-    affected shard). Off by default: the audit costs two distinct
-    aggregates + an anti-join over the index — an operator turns it on
-    for the first probe after an interrupted ingest, not per shard.
-
-    Scale shape: the shard is shingled/signed in one pass; its band
-    rows join the bucketed band index (index side co-located and
-    pre-sorted — only the shard's band rows exchange); the candidate
-    pairs then join the signature sidecar for an array_intersect
-    verify. The historical corpus is never re-scanned, re-shuffled, or
-    re-signed. Batch-equivalence (the pair set equals what the full
-    batch pipeline finds between the same shard and corpus) is pinned
-    by tests/test_incremental.py.
-
-    Output is one ROW per pair even against an index holding duplicate
-    rows (a re-run append after a crash — ADVICE r6): the candidate
-    set is distinct but the signature join was not, so duplicated sig
-    rows used to multiply output rows.
-
-    Index contract (ADVICE r7): the persisted index is APPEND-ONLY over
-    IMMUTABLE doc_ids — re-appending a shard repeats identical rows (a
-    crash re-run), it never re-signs a changed document under the same
-    id (a changed document is a NEW doc_id; there is no update path —
-    neither table carries a version column). Under that contract every
-    duplicate row carries the identical signature payload, hence the
-    identical jaccard, and the final per-(new_id, index_id) aggregation
-    is pure row dedup. The aggregation uses max(jaccard) rather than an
-    arbitrary-pick dropDuplicates so that even a contract VIOLATION (an
-    out-of-band re-signed doc_id) yields the deterministic upper bound
-    instead of a nondeterministic one of the two values;
-    :func:`compact_minhash_index` detects such conflicting signature
-    payloads and raises.
-
-    Probing DURING a swap (index_lifecycle runbook): between
-    :func:`swap_minhash_index`'s retire and promote phases the live
-    name is missing at least one table, so a concurrent probe FAILS
-    LOUDLY on a missing table — by design, never a silent mixture of
-    generations. The probe is read-only and idempotent: re-run it
-    after the swap completes (or re-run the crashed swap first; it
-    resumes from any point).
-    """
-    if verify:
-        verify_minhash_index(spark, name, id_col=id_col)
-    _check_minhash_params(spark, name, k)
-    # localCheckpoint, not persist(): the shard signatures feed two
-    # branches (band probe + verify join), but a persist() here would
-    # outlive the returned DataFrame in the session's cache manager —
-    # the same library-use leak dedup_simhash closed. The eager local
-    # checkpoint materializes the (shard-sized, small) signatures once;
-    # its RDD is released with the DataFrame, no caller action needed.
-    sig = minhash_signatures(
-        shingle_set(new_docs, k=k, text_col=text_col, id_col=id_col),
-        id_col=id_col,
-        with_hashes=True,
-    ).localCheckpoint()
-    probe = band_rows(sig, id_col)
-    idx = spark.table(f"{name}_bands")
-    if prune_scan is not None:
-        # point-lookup regime (index_lifecycle.prune_probe_scan): the
-        # bands table is sorted (band, k0, ...) inside each bucket, so
-        # pushed k0 point predicates skip row groups at scan time.
-        idx = prune_probe_scan(idx, probe, "k0", prune_scan)
-    key_eq = [probe["band"] == idx["band"]] + [
-        probe[f"k{j}"] == idx[f"k{j}"] for j in range(LSH_BAND_SIZE)
-    ]
-    cand = (
-        probe.join(idx, key_eq)
-        .select(
-            probe[id_col].alias("new_id"), idx[id_col].alias("index_id")
-        )
-        .distinct()
+    The shard is shingled and signed with shingle width ``k``, which
+    must match the index's stamp (a mismatch raises). ``verify=True``
+    audits the index first (:func:`verify_minhash_index`).
+    ``prune_scan`` (int, default None = full-scan regime) pushes the
+    shard's distinct ``k0`` values into the (band, k0, ...)-sorted bands
+    scan — any candidate matches on every band key including k0, so the
+    pair set is identical to the unpruned probe
+    (tests/test_prune_scan.py). Batch equivalence (the pair set equals
+    the full batch pipeline's between the same shard and corpus) is
+    pinned by tests/test_incremental.py. Runbook step 3 (probing during
+    a swap, scale shape) of operators/index_lifecycle.py."""
+    paired = probe_index(
+        spark,
+        new_docs,
+        name,
+        MINHASH_SPEC,
+        _signer(k, text_col, id_col),
+        id_col,
+        verify=verify,
+        prune_scan=prune_scan,
     )
-    isig = spark.table(f"{name}_sigs").select(
-        F.col(id_col).alias("index_id"),
-        F.col("n").alias("n_idx"),
-        F.col("hs").alias("hs_idx"),
-    )
-    nsig = sig.select(
-        F.col(id_col).alias("new_id"),
-        F.col("n").alias("n_new"),
-        F.col("hs").alias("hs_new"),
-    )
-    verified = (
-        cand.join(nsig, "new_id")
-        .join(isig, "index_id")
-        .select(
+    shared = F.size(F.array_intersect("hs_new", "hs_idx"))
+    return (
+        paired.select(
             "new_id",
             "index_id",
-            (
-                F.size(F.array_intersect("hs_new", "hs_idx")).cast("double")
-                / (
-                    F.col("n_new")
-                    + F.col("n_idx")
-                    - F.size(F.array_intersect("hs_new", "hs_idx"))
-                )
-            ).alias("jaccard"),
+            (shared.cast("double") / (F.col("n_new") + F.col("n_idx") - shared)).alias(
+                "jaccard"
+            ),
         )
         .filter(F.col("jaccard") >= threshold)
         .groupBy("new_id", "index_id")
         .agg(F.max("jaccard").alias("jaccard"))
     )
-    return verified

@@ -1,13 +1,10 @@
-"""Incremental SRP-LSH embedding index — the embedding twin of the
-bucketed MinHash index lifecycle (operators/dedup.py:497-862): write /
-append / probe / verify / compact, for the production shape of
-embedding near-dup at corpus scale. New embedding shards arrive
-continuously and must be near-dup-checked against an indexed history
-WITHOUT re-signing, re-scanning, or re-shuffling that history.
-
-Two plain bucketed parquet tables per index (same trade-offs and the
-same non-transactional caveats as the minhash index — an ACID table
-format would supply cross-table atomicity):
+"""Incremental SRP-LSH embedding index: new embedding shards are
+near-dup-checked against an indexed history WITHOUT re-signing,
+re-scanning, or re-shuffling it. One of the three families on the
+shared two-table lifecycle — the write / append / probe / verify /
+compact / swap runbook, crash contract and stamp guard are in
+operators/index_lifecycle.py; this module holds the SRP spec, its
+signer, its stamp, its cosine verify score and its input checks.
 
 - ``{name}_bands``: (vec_id, band, band_val) bucketed AND sorted by
   (band, band_val) — a probe's candidate join exchanges only the
@@ -23,30 +20,15 @@ family (the fold does O(n_bits x dim) interpreted multiply-adds per
 row — kernel 2x at dim-64, ~226x at dim-1024; BENCH.md round 8).
 ``use_gemm=False`` falls back to the oracle-replayable fold, and the
 two signers are agreement-pinned at the band-table level by
-tests/test_embedding_index.py.
-
-Crash contract (the VERDICT-r6 ordering lesson, applied unchanged):
-appends write the VECS table first, band rows second, so every partial
-state is benign — orphan vector rows affect no probe (no band row
-references them); the dangerous inverse (band rows whose vec_id has no
-vector row, whose candidates the verify join would SILENTLY drop) can
-no longer be produced by this module and is detected by
-:func:`verify_srp_index`. Append-only over immutable vec_ids: a
-changed embedding is a NEW vec_id; duplicate rows from a crash re-run
-change no probe result (pairs aggregate per (new_id, index_id)), and
-:func:`compact_srp_index` drops them from storage.
-
-Maintenance runbook (no overwrite window at any step)::
-
-    compact_srp_index(spark, name, target=f"{name}_v2")
-    swap_srp_index(spark, name, f"{name}_v2")   # verifies (incl. the
-        # geometry stamp), then promotes via metadata-only renames;
-        # crash-recoverable by re-running — index_lifecycle.swap_index
+tests/test_embedding_index.py. ``n_bits``/``n_bands`` are the stamped
+geometry (``sparkgraft.srp.*``). The input checks are this family's
+own: every write/append/probe validates the whole shard for NULL
+vectors, NULL elements, ragged or empty dimensions and (append/probe)
+the index's dimension, because the fold signer would otherwise degrade
+silently where the GEMM signer raises.
 
 No counterpart exists in the reference (its array layer is
-conversion-only); the lifecycle mirrors this repo's minhash index so
-operators run one playbook for both text and embedding near-dup — the
-shared verify/compact/swap core lives in operators/index_lifecycle.py.
+conversion-only); part of the SURVEY.md §2 training-pipeline addendum.
 """
 
 from __future__ import annotations
@@ -57,12 +39,13 @@ from pyspark.sql import functions as F
 from ..functions.vector import spark_dot_sql
 from .index_lifecycle import (
     IndexSpec,
+    Signer,
+    append_index,
     compact_index,
-    prune_probe_scan,
-    read_stamp,
+    probe_index,
     swap_index,
-    table_num_buckets,
     verify_index,
+    write_index,
 )
 from .similarity import (
     PAIR_COSINE_UDF_MIN_DIM,
@@ -76,9 +59,6 @@ SRP_INDEX_THRESH = 0.9
 
 SRP_STAMP_KEYS = ("sparkgraft.srp.n_bits", "sparkgraft.srp.n_bands")
 
-# Shared two-table lifecycle core (VERDICT r8 #5): verify/compact/swap
-# and the bucket-metadata readers live in index_lifecycle.py; this spec
-# is the whole per-family cost of the lifecycle.
 SRP_SPEC = IndexSpec(
     kind="srp",
     sidecar_suffix="vecs",
@@ -90,9 +70,6 @@ SRP_SPEC = IndexSpec(
     banded_key="banded_vecs",
     stored_key="stored_vecs",
     orphan_key="orphan_vec_rows",
-    append_fn="append_srp_shard",
-    write_fn="write_srp_index",
-    compact_fn="compact_srp_index",
     stamp_keys=SRP_STAMP_KEYS,
 )
 
@@ -125,57 +102,21 @@ def _sig_bands(
     )
 
 
-def _stamp_srp_params(spark, name: str, n_bits: int, n_bands: int) -> None:
-    """Record the signer geometry on the bands table — it is part of
-    the index identity (band_val collisions across different widths
-    are meaningless), so appends and probes validate against it.
+def _srp_stamp(n_bits: int, n_bands: int) -> dict[str, str]:
+    return {"sparkgraft.srp.n_bits": str(n_bits), "sparkgraft.srp.n_bands": str(n_bands)}
 
-    Also the RECOVERY tool for a lost stamp (ADVICE r8): an in-place
-    compaction that crashed after the bands overwrite but before the
-    re-stamp leaves a complete-looking index whose geometry stamp is
-    erased — _check_srp_params then passes it UNVALIDATED, and a
-    compaction re-run cannot restore the stamp because it re-reads the
-    now-unstamped table. :func:`verify_srp_index` flags the state
-    (``missing_stamp_keys`` > 0 on an index you know was stamped);
-    recover by calling this with the KNOWN geometry, or re-run the
-    compaction with its explicit ``n_bits=``/``n_bands=`` override."""
-    spark.sql(
-        f"ALTER TABLE {name}_bands SET TBLPROPERTIES "
-        f"('sparkgraft.srp.n_bits' = '{n_bits}', "
-        f"'sparkgraft.srp.n_bands' = '{n_bands}')"
+
+def _signer(vec_id: str, vec_col: str, n_bits: int, n_bands: int, use_gemm: bool) -> Signer:
+    """The signed frame carries the raw vector (the band signers
+    normalize internally) and its unit-normalized form ``en`` — the
+    sidecar payload and the probe's verify operand."""
+    return Signer(
+        sign=lambda vectors: vectors.select(
+            vec_id, vec_col, F.expr(_en_expr(vec_col)).alias("en")
+        ),
+        bands=lambda signed: _sig_bands(signed, vec_id, vec_col, n_bits, n_bands, use_gemm),
+        stamp=_srp_stamp(n_bits, n_bands),
     )
-
-
-def _check_srp_params(spark, name: str, n_bits: int, n_bands: int) -> None:
-    """Raise when the caller's signer geometry disagrees with the
-    index's stamped one: a mismatched probe emits band rows for the
-    wrong band set / bit width, so candidate pairs silently go MISSING
-    instead of failing — the same silent-drop class the dimension
-    guard closes. Unstamped tables (not built by write_srp_index) pass
-    unvalidated; a PARTIAL stamp is tampering/corruption, not legacy,
-    and raises rather than half-validating (round-10 hardening — the
-    compact path already treated partial stamps as an error)."""
-    props = read_stamp(spark, f"{name}_bands", SRP_STAMP_KEYS)
-    if not props:
-        return
-    bits = props.get("sparkgraft.srp.n_bits")
-    bands = props.get("sparkgraft.srp.n_bands")
-    if bits is None or bands is None:
-        raise ValueError(
-            f"srp index {name!r} carries a PARTIAL identity stamp "
-            f"({sorted(props)} of {SRP_STAMP_KEYS}) — the stamp is one "
-            f"identity; repair it with the known geometry "
-            f"(_stamp_srp_params) before probing or appending."
-        )
-    if (int(bits), int(bands)) != (n_bits, n_bands):
-        raise ValueError(
-            f"srp index {name!r} was built with n_bits={bits}/"
-            f"n_bands={bands} but the caller passed n_bits={n_bits}/"
-            f"n_bands={n_bands} — band values across different signer "
-            f"geometries never collide meaningfully, so the probe/append "
-            f"would silently lose near-dup pairs. Pass the index's own "
-            f"geometry (it is stamped in the bands table's properties)."
-        )
 
 
 def _table_dim(spark, name: str) -> int | None:
@@ -290,39 +231,14 @@ def write_srp_index(
     use_gemm: bool = True,
 ) -> None:
     """Index ``vectors`` for incremental near-dup probes: persist the
-    band and normalized-vector tables described in the module notes.
-    ``n_bits``/``n_bands`` are part of the index identity (band_val
-    collisions across different signer geometries are meaningless), so
-    they are STAMPED into the bands table's properties and validated
-    by every append and probe — a mismatch raises instead of silently
-    losing pairs, exactly like the dimension guard. The corpus passes
-    the same full validation the append/probe paths run
-    (:func:`_check_vectors` — round-9 review: a NULL embedding in the
-    FRESH build used to be stored silently as an unreachable row)."""
+    band and normalized-vector tables described in the module notes,
+    stamped with ``n_bits``/``n_bands``. The corpus passes the same
+    full validation the append/probe paths run (:func:`_check_vectors`
+    — a NULL embedding in a fresh build would be stored as an
+    unreachable row). Runbook step 1 of operators/index_lifecycle.py."""
     _check_vectors(vectors, vec_col)
-    bands = _sig_bands(vectors, vec_id, vec_col, n_bits, n_bands, use_gemm)
-    vecs = vectors.select(F.col(vec_id), F.expr(_en_expr(vec_col)).alias("en"))
-    # build order: bands -> stamp -> vecs. A fresh build that crashes
-    # anywhere before the LAST write leaves the vecs table missing, so
-    # every partial state fails LOUDLY (probes can't read {name}_vecs;
-    # verify_srp_index raises) — in particular a complete-LOOKING index
-    # whose geometry stamp is missing (which would silently bypass
-    # _check_srp_params' unstamped pass) cannot be produced by a crash
-    # in this function. (Appends order vecs-first for the opposite
-    # reason — there the benign partial state is the goal.)
-    bw = (
-        bands.write.mode("overwrite")
-        .bucketBy(n_buckets, "band", "band_val")
-        .sortBy("band", "band_val")
-    )
-    if path:
-        bw = bw.option("path", f"{path}/bands")
-    bw.saveAsTable(f"{name}_bands")
-    _stamp_srp_params(vectors.sparkSession, name, n_bits, n_bands)
-    vw = vecs.write.mode("overwrite").bucketBy(n_buckets, vec_id)
-    if path:
-        vw = vw.option("path", f"{path}/vecs")
-    vw.saveAsTable(f"{name}_vecs")
+    signer = _signer(vec_id, vec_col, n_bits, n_bands, use_gemm)
+    write_index(vectors, name, SRP_SPEC, signer, vec_id, n_buckets, path)
 
 
 def append_srp_shard(
@@ -336,58 +252,22 @@ def append_srp_shard(
     use_gemm: bool = True,
 ) -> None:
     """Fold an (already-deduplicated) shard into the persisted index —
-    a bucketed APPEND of the shard's own band/vector rows; the
-    historical corpus is never read or re-signed. Bucket counts come
-    from the existing table metadata (a mismatched spec would poison
-    the bucketed join silently), and the shard's dimension is checked
-    against the index up front (:func:`_check_dim`). Session-cache
-    footgun shared with ``append_minhash_shard`` (see its docstring):
-    probes from a DIFFERENT session than the appending one (e.g. the
-    outer session while appends run inside a ``foreachBatch`` clone)
-    must ``refreshTable`` both tables first.
-
-    Ordering contract (see module notes): vecs FIRST, bands second —
-    a crash between the writes leaves orphan vector rows, which no
-    probe can reach; re-running the append completes the index and the
-    duplicate rows change no probe result."""
-    band_buckets = table_num_buckets(spark, f"{name}_bands")
-    vec_buckets = table_num_buckets(spark, f"{name}_vecs")
+    a bucketed APPEND of its vector rows, then band rows; the history
+    is never read or re-signed. The shard's dimension is checked
+    against the index up front (:func:`_check_dim`). Runbook step 2 of
+    operators/index_lifecycle.py."""
     _check_dim(spark, name, vectors, vec_col)
-    _check_srp_params(spark, name, n_bits, n_bands)
-    base = vectors.select(vec_id, vec_col).localCheckpoint()
-    (
-        base.select(F.col(vec_id), F.expr(_en_expr(vec_col)).alias("en"))
-        .write.mode("append")
-        .bucketBy(vec_buckets, vec_id)
-        .saveAsTable(f"{name}_vecs")
-    )
-    (
-        _sig_bands(base, vec_id, vec_col, n_bits, n_bands, use_gemm)
-        .write.mode("append")
-        .bucketBy(band_buckets, "band", "band_val")
-        .sortBy("band", "band_val")
-        .saveAsTable(f"{name}_bands")
-    )
+    signer = _signer(vec_id, vec_col, n_bits, n_bands, use_gemm)
+    append_index(spark, vectors, name, SRP_SPEC, signer, vec_id)
 
 
 def verify_srp_index(spark, name: str, vec_id: str = "vec_id") -> dict[str, int]:
-    """Consistency audit, the :func:`verify_minhash_index` twin: every
-    banded vec_id must hold a vector row, else probes silently drop its
-    candidates at the verify join — raises with the recovery rule if
-    any do. Orphan VECTOR rows (the benign state the vecs-first
-    ordering can leave) are counted, not raised. Cost: two distinct
-    aggregates + one anti-join — an offline audit, not a per-probe tax.
-
-    The result also carries ``missing_stamp_keys`` (ADVICE r8): 2 means
-    the bands table holds NO ``sparkgraft.srp.*`` geometry stamp. On an
-    index built by :func:`write_srp_index` that is the in-place
-    compaction crash signature (crash after the bands overwrite, before
-    the re-stamp) — the index looks complete but _check_srp_params now
-    passes it unvalidated. Recover with :func:`_stamp_srp_params` and
-    the known geometry, or re-run the compaction with its explicit
-    ``n_bits=``/``n_bands=`` override. Hand-built unstamped indexes can
-    ignore the count. Shared machinery:
-    :func:`index_lifecycle.verify_index` with :data:`SRP_SPEC`."""
+    """Consistency audit: raises if any banded vec_id lacks a vector
+    row; returns ``{"banded_vecs", "stored_vecs", "orphan_vec_rows",
+    "missing_stamp_keys"}`` otherwise (2 missing keys = the
+    in-place-compaction crash signature; recover with
+    ``compact_srp_index(..., n_bits=, n_bands=)``). Runbook step 4 of
+    operators/index_lifecycle.py."""
     return verify_index(spark, name, SRP_SPEC, vec_id)
 
 
@@ -400,80 +280,30 @@ def compact_srp_index(
     n_bits: int | None = None,
     n_bands: int | None = None,
 ) -> dict[str, int]:
-    """Drop the duplicate rows crash re-appends accumulate — the
-    :func:`compact_minhash_index` twin, with the same two modes
-    (in-place overwrite for quiesced maintenance — external tables are
-    rewritten at their own catalog location so they stay external and
-    no stale copy is stranded; ``target=`` for the streaming
-    compact-into-fresh-index production shape, promoted with
-    :func:`swap_srp_index` once verified; a crash mid target build
-    leaves a half-built target a re-run refuses to overwrite — drop
-    both ``{target}_*`` tables and re-run, the source is untouched
-    throughout), the same stamped-geometry preservation, and the same
-    ZERO-shuffle property: both dedup keys are supersets of their
-    table's bucket columns, so Catalyst plans the dropDuplicates
-    without an Exchange off the bucketed reads (plan-asserted in
-    tests/test_embedding_index.py).
-
-    Contract check first: a vec_id carrying CONFLICTING normalized
-    vectors means the append-only/immutable-vec_id contract was
-    violated (an embedding re-signed under a reused id) — compaction
-    raises rather than silently picking a version.
-
-    ``n_bits=``/``n_bands=`` (both or neither) override the geometry
-    stamp written to the output — the RECOVERY path for an in-place
-    compaction that crashed between the bands overwrite and the
-    re-stamp (ADVICE r8): the crash erases the source stamp, so a
-    plain re-run cannot restore what it can no longer read; a re-run
-    with the known geometry can. Shared machinery:
-    :func:`index_lifecycle.compact_index` with :data:`SRP_SPEC`."""
+    """Drop the duplicate rows crash re-appends accumulate —
+    :func:`index_lifecycle.compact_index` (zero-shuffle, in place or
+    into ``target`` for :func:`swap_srp_index`, raising on a vec_id
+    with conflicting normalized vectors). ``n_bits=``/``n_bands=``
+    (both or neither) override the geometry stamp written to the
+    output — the recovery path for a crash between the in-place bands
+    overwrite and the re-stamp."""
     if (n_bits is None) != (n_bands is None):
         raise ValueError(
             "compact_srp_index: pass BOTH n_bits and n_bands (the "
             "geometry stamp is one identity) or neither"
         )
-    override = None
-    if n_bits is not None:
-        override = {
-            "sparkgraft.srp.n_bits": str(n_bits),
-            "sparkgraft.srp.n_bands": str(n_bands),
-        }
+    override = _srp_stamp(n_bits, n_bands) if n_bits is not None else None
     return compact_index(
-        spark,
-        name,
-        SRP_SPEC,
-        vec_id,
-        target=target,
-        path=path,
-        stamp_override=override,
+        spark, name, SRP_SPEC, vec_id, target=target, path=path, stamp_override=override
     )
 
 
 def swap_srp_index(spark, name: str, target: str) -> dict:
-    """Promote a verified compact-into-``target`` build to ``name`` via
-    metadata-only rename pairs — the production maintenance path's
-    closing move (compact → verify → swap; no overwrite window at any
-    step, and the geometry stamp travels with its table). Verifies the
-    target first — including that its stamp is present
-    (``missing_stamp_keys``), so a half-stamped build cannot be
-    promoted. Crash-recoverable by re-running (every intermediate
-    catalog state is either the old index, the new index, or loudly
-    missing a table — crash-simulated at each inter-rename point in
-    tests/test_embedding_index.py). See
-    :func:`index_lifecycle.swap_index` for the full contract."""
-
-    def _verify(s, n):
-        health = verify_srp_index(s, n)
-        if health.get("missing_stamp_keys"):
-            raise ValueError(
-                f"swap_srp_index: target {n!r} is missing its geometry "
-                f"stamp ({SRP_STAMP_KEYS}) — re-stamp with "
-                f"_stamp_srp_params (known geometry) before promoting; "
-                f"an unstamped live index would bypass the geometry "
-                f"guard on every future append/probe."
-            )
-
-    return swap_index(spark, name, target, SRP_SPEC, verify_fn=_verify)
+    """Promote a verified (stamp included) compact-into-``target``
+    build to ``name`` via metadata-only rename pairs, crash-recoverable
+    by re-running — :func:`index_lifecycle.swap_index`, runbook
+    step 6."""
+    return swap_index(spark, name, target, SRP_SPEC, "vec_id")
 
 
 def incremental_srp_pairs(
@@ -493,85 +323,34 @@ def incremental_srp_pairs(
 ) -> DataFrame:
     """Near-dup pairs between ``new_vectors`` and the indexed corpus:
     (new_id, index_id, cosine), exact cosine >= ``threshold`` over the
-    SRP band collisions.
+    SRP band collisions, one row per pair (``max(cosine)``).
 
-    Geometry stamp: the shard is signed under the index's STAMPED
-    geometry (``_check_srp_params`` reads n_bits / n_bands / the signer
-    family from the bands table's stamp); explicit ``n_bits`` /
-    ``n_bands`` that disagree with the stamp RAISE rather than
-    silently emitting band rows for the wrong band set (module notes;
-    lost-stamp recovery via ``verify_index``'s ``missing_stamp_keys``).
-
-    ``prune_scan`` (int, default None = full-scan regime) enables the
-    point-lookup regime for SMALL shards: the shard's distinct
-    ``band_val`` values (bounded by the argument, which may only
-    TIGHTEN :data:`index_lifecycle.PRUNE_SCAN_MAX_KEYS`) are pushed as
-    an IN filter into the bands scan, so the (band, band_val)-sorted
-    row groups skip at I/O time. Any candidate pair matches the probe
-    on band AND band_val, so pruning on band_val drops only rows the
-    join could never match — pair set identical to the unpruned probe
-    (test-pinned: tests/test_prune_scan.py).
-
-    Scale shape: the shard is signed in one map-only pass (GEMM by
-    default); its band rows join the bucketed band index (index side
-    co-located and pre-sorted — only the shard's rows exchange); the
-    DISTINCT candidate pairs then join the shard's normalized vectors
-    and the bucketed vecs table for the exact verify. The history is
-    never re-scanned. Batch equivalence (the pair set equals what the
-    banded batch pipeline finds between the same shard and corpus) is
-    pinned by tests/test_embedding_index.py.
-
-    ``verify=True`` runs :func:`verify_srp_index` first — one offline
-    audit before probing a possibly-interrupted index. ``verify_batch``
-    mirrors ``ivf_topk``: False = JVM dot-product fold (both sides are
-    stored/derived unit vectors, so the dot IS the cosine); True = the
-    Arrow pair-cosine kernel; None = dispatch on the index dimension
-    against ``pair_min_dim``.
-
-    Output aggregates ``max(cosine)`` per (new_id, index_id) — row
-    dedup under the append-only contract, and the deterministic upper
-    bound under an out-of-band contract violation (the ADVICE-r7
-    adjudication, unchanged from the minhash probe).
-
-    Probing DURING a swap (index_lifecycle runbook): between
-    :func:`swap_srp_index`'s retire and promote phases the live name
-    is missing at least one table, so a concurrent probe FAILS LOUDLY
-    on a missing table — by design, never a silent mixture of
-    generations. The probe is read-only and idempotent: re-run it
-    after the swap completes (or re-run the crashed swap first; it
-    resumes from any point)."""
-    if verify:
-        verify_srp_index(spark, name, vec_id=vec_id)
+    ``n_bits``/``n_bands`` must match the index's stamp (a mismatch
+    raises). ``verify=True`` audits the index first
+    (:func:`verify_srp_index`). ``prune_scan`` (int, default None =
+    full-scan regime) pushes the shard's distinct ``band_val`` values
+    into the (band, band_val)-sorted bands scan — any candidate matches
+    on band AND band_val, so the pair set is identical to the unpruned
+    probe (tests/test_prune_scan.py). ``verify_batch`` mirrors
+    ``ivf_topk``: False = JVM dot-product fold (both sides are unit
+    vectors, so the dot IS the cosine); True = the Arrow pair-cosine
+    kernel; None = dispatch on the index dimension against
+    ``pair_min_dim``. Batch equivalence (the pair set equals the banded
+    batch pipeline's) is pinned by tests/test_embedding_index.py.
+    Runbook step 3 of operators/index_lifecycle.py."""
     _check_dim(spark, name, new_vectors, vec_col)
-    _check_srp_params(spark, name, n_bits, n_bands)
     if verify_batch is None:
-        verify_batch = (
-            dispatch_by_dim(_table_dim(spark, name), pair_min_dim) == "kernel"
-        )
-    base = new_vectors.select(vec_id, vec_col).localCheckpoint()
-    probe = _sig_bands(base, vec_id, vec_col, n_bits, n_bands, use_gemm)
-    idx = spark.table(f"{name}_bands")
-    if prune_scan is not None:
-        # point-lookup regime (index_lifecycle.prune_probe_scan): the
-        # bands table is sorted (band, band_val) inside each bucket, so
-        # pushed band_val point predicates skip row groups at scan time.
-        idx = prune_probe_scan(idx, probe, "band_val", prune_scan)
-    cand = (
-        probe.join(
-            idx,
-            (probe["band"] == idx["band"])
-            & (probe["band_val"] == idx["band_val"]),
-        )
-        .select(probe[vec_id].alias("new_id"), idx[vec_id].alias("index_id"))
-        .distinct()
+        verify_batch = dispatch_by_dim(_table_dim(spark, name), pair_min_dim) == "kernel"
+    paired = probe_index(
+        spark,
+        new_vectors,
+        name,
+        SRP_SPEC,
+        _signer(vec_id, vec_col, n_bits, n_bands, use_gemm),
+        vec_id,
+        verify=verify,
+        prune_scan=prune_scan,
     )
-    new_en = base.select(
-        F.col(vec_id).alias("new_id"), F.expr(_en_expr(vec_col)).alias("en_new")
-    )
-    idx_en = spark.table(f"{name}_vecs").select(
-        F.col(vec_id).alias("index_id"), F.col("en").alias("en_idx")
-    )
-    paired = cand.join(new_en, "new_id").join(idx_en, "index_id")
     if verify_batch:
         # two-step projection: the UDF lands in its own column FIRST so
         # the NaN->null map cannot double-evaluate it (the round-6

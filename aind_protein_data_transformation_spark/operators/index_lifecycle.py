@@ -1,46 +1,93 @@
 """Shared core of the bucketed two-table incremental-index lifecycle.
 
-Both persisted index families — the MinHash text near-dup index
-(operators/dedup.py) and the SRP embedding near-dup index
-(operators/embedding_index.py) — store one bucketed+sorted BANDS table
-(the blocking keys a probe joins co-located) plus one bucketed SIDECAR
-table holding the per-id payload the exact verify stage joins (minhash
-signatures / unit-normalized vectors). By round 8 their
-verify/compact/bucket-metadata code had grown ~85% parallel text
-(VERDICT r8 #5); this module holds that machinery ONCE, parametrized by
-:class:`IndexSpec`, so a third family (simhash chunk tables are the
-obvious candidate) costs a config, not a module — and a lifecycle fix
-lands once, not twice. Family-specific signing (shingle/minhash vs SRP
-GEMM) stays in the family modules; everything that reasons about the
-TWO-TABLE SHAPE lives here.
+Three index families persist near-dup indexes in one shape: MinHash
+text (operators/dedup.py), SRP embeddings (operators/embedding_index.py)
+and SimHash text (operators/simhash_index.py). Each stores one
+bucketed+sorted BANDS table — the blocking keys a probe joins
+co-located — and one bucketed SIDECAR table holding the per-id payload
+the exact verify stage joins (minhash signatures, unit vectors, full
+simhashes). Every flow that reasons about that two-table shape lives
+here, parametrized by the family's :class:`IndexSpec` (table layout,
+message nouns) and a :class:`Signer` (input frame + geometry → signed
+frame, projected to band rows and sidecar rows) — one index structure
+with pluggable signatures. A family module holds its spec, its signer,
+its stamp dict, its verify score and its own input checks, nothing
+else.
 
-Runbook — compaction without an overwrite window (VERDICT r8 #3): the
-production maintenance path is ``compact_*_index(..., target=...)``
-(pure streaming read→dedup→bucketed-write, source untouched) followed
-by :func:`swap_index`, which promotes the verified target via
-metadata-only ``ALTER TABLE ... RENAME`` pairs: retire BOTH live
-tables, promote BOTH target tables, drop the retired pair. No state a
-probe can read ever mixes generations — every intermediate state is
-missing at least one of the two live tables, so a concurrent probe
-either sees the old index, the new index, or fails LOUDLY on a missing
-table; re-running :func:`swap_index` from any crash point completes the
-promotion (each step is guarded by table existence, and a single
-``RENAME`` is atomic in the catalog). Renames keep TBLPROPERTIES (the
-SRP geometry stamp travels with its table) and keep an EXTERNAL table's
-location — at object-store scale build indexes with ``path=`` so the
-swap is metadata-only (a MANAGED-table rename relocates the warehouse
-directory: a cheap filesystem rename locally/HDFS, a copy on s3a).
-Probe-side contract during a swap: between retire and promote the live
-name is missing at least one table, so a concurrent probe fails LOUDLY
-on a missing table (by design — never a silent mixture); the retry
-rule — idempotent re-run after the swap completes — is documented on
-each family's probe (``incremental_minhash_pairs``,
-``incremental_srp_pairs``, ``incremental_simhash_pairs``). All three
-probes also expose the point-lookup regime (``prune_scan=``, backed by
-:func:`prune_probe_scan` below): for a small shard the blocking keys
-are pushed into the sorted bands scan as parquet per-value predicates,
-skipping most of the index's bytes at I/O time with a test-pinned
-identical pair set (tests/test_prune_scan.py).
+Runbook — the same for every family (``{kind}`` = minhash | srp |
+simhash):
+
+1. ``write_{kind}_index`` (:func:`write_index`) — one-time build. The
+   signed frame is materialized once (persist, released before return)
+   and feeds both writes. Build order bands → stamp → sidecar: a crash
+   before the LAST write leaves the sidecar missing, so every partial
+   state fails loudly — a complete-LOOKING unstamped index cannot come
+   out of a crashed build.
+2. ``append_{kind}_shard`` (:func:`append_index`) — per-ingest update.
+   Bucket counts come from the live tables' metadata (a mismatched
+   bucket spec would silently poison the co-located join), the stamp
+   guard runs, the shard is signed once (localCheckpoint), then
+   SIDECAR first, bands second. Not transactional (two plain parquet
+   tables; an ACID table format would supply that) but ORDERED so every
+   partial state is benign: a crash between the writes leaves orphan
+   sidecar rows no band row references, so probes return what they
+   returned before. Re-run after any crash — duplicate rows change no
+   probe result. Session-cache footgun: the append invalidates the
+   relation cache of the session that RUNS it; a probe from another
+   session (Structured Streaming's ``foreachBatch`` hands the callback
+   a cloned session) must ``spark.catalog.refreshTable`` both tables
+   first (tests/test_streaming_dedup_ingest.py does).
+3. ``incremental_{kind}_pairs`` (:func:`probe_index`) — the probe. The
+   shard is signed once (localCheckpoint: it feeds the blocking join
+   AND the verify, and unlike persist() leaves nothing in the session's
+   cache manager); its band rows join the bands table on
+   ``spec.band_keys`` (only the shard's rows exchange, the index side
+   reads co-located and pre-sorted); the DISTINCT candidate pairs join
+   both sidecars; the family scores them (Jaccard / cosine / hamming)
+   and keeps one row per (new_id, index_id). History is never
+   re-scanned, re-shuffled or re-signed. ``verify=True`` runs step 4
+   first — use it on the first probe after a possibly interrupted
+   ingest. ``prune_scan=`` selects the point-lookup regime
+   (:func:`prune_probe_scan`).
+4. ``verify_{kind}_index`` (:func:`verify_index`) — offline audit:
+   raises on band rows without a sidecar row (probes silently drop
+   their candidates; only tampering or pre-ordering code leave this —
+   re-run the append for the shard to heal), counts the benign orphan
+   sidecar rows, reports ``missing_stamp_keys``.
+5. ``compact_{kind}_index`` (:func:`compact_index`) — maintenance once
+   crash re-appends have piled up duplicate rows: zero-shuffle dedup of
+   both tables, refusing ids with conflicting payloads. Production
+   shape: ``target=`` (a streaming rewrite, source untouched), then
+6. ``swap_{kind}_index`` (:func:`swap_index`) — verify the target
+   (stamp included), then metadata-only ``ALTER TABLE ... RENAME``
+   pairs: retire BOTH live tables, promote BOTH target tables, drop the
+   retired pair. Every intermediate state misses at least one live
+   table, so a concurrent probe sees the old index, the new one, or
+   fails LOUDLY — never a mixture of generations; the probe is
+   read-only and idempotent, so re-run it after the swap, and re-run a
+   crashed swap to complete it. Renames keep TBLPROPERTIES (the stamp
+   travels) and an EXTERNAL table's location — build with ``path=`` so
+   the swap is metadata-only (a MANAGED rename moves the warehouse
+   directory: cheap on a local FS/HDFS, a copy on s3a).
+
+Contracts shared by every family:
+
+- Ids are IMMUTABLE and the index APPEND-ONLY: a changed document or
+  embedding is a new id; there is no update path. Duplicate rows
+  therefore carry identical payloads, the probe's per-pair aggregate
+  (max score, min hamming) is pure row dedup — and the deterministic
+  bound under an out-of-band violation — and compaction raises on
+  conflicting payloads rather than pick a version.
+- The signing geometry is index identity: STAMPED on the bands table
+  (``spec.stamp_keys``) at build and checked by every append and probe
+  (:func:`check_stamp`) — unstamped (hand-built, legacy) tables pass, a
+  partial stamp raises, a mismatch raises naming each field and both
+  values. A mismatched probe would otherwise emit band keys that never
+  collide and silently lose pairs. A lost stamp (the in-place
+  compaction crash window) shows as ``missing_stamp_keys`` > 0; recover
+  with the compaction's explicit geometry override, or
+  :func:`apply_stamp` with the family's stamp dict for the known
+  geometry.
 
 No counterpart exists in the reference (its array layer is
 conversion-only, reference czi_to_zarr.py); the lifecycle extends the
@@ -51,7 +98,9 @@ training-pipeline addendum.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Callable
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -59,32 +108,44 @@ from pyspark.sql import functions as F
 class IndexSpec:
     """Everything the shared lifecycle needs to know about one index
     family. ``band_keys`` are the bands table's bucket+sort columns
-    (also, with the id, its row identity for compaction);
-    ``payload_cols`` are the sidecar columns that must be IDENTICAL
-    across duplicate rows for one id (the append-only contract);
-    ``stamp_keys`` are TBLPROPERTIES that are part of the index
-    identity and must survive compaction. The noun/function-name
-    fields keep error messages as precise as the pre-extraction
-    per-family texts (tests pin their fragments)."""
+    (also, with the id, its row identity for compaction; the second key
+    is the first hash-valued one, the column :func:`prune_probe_scan`
+    pushes); ``payload_cols`` are the sidecar columns, which must be
+    IDENTICAL across duplicate rows for one id (the append-only
+    contract) and which the probe pairs up as ``{col}_new`` /
+    ``{col}_idx``; ``stamp_keys`` are the TBLPROPERTIES that make up the
+    index identity. The public function names derive from ``kind``
+    (``write_{kind}_index``, ``append_{kind}_shard``, ...)."""
 
-    kind: str  # "minhash" | "srp" — leads every error message
+    kind: str  # "minhash" | "srp" | "simhash" — leads every error message
     sidecar_suffix: str  # "sigs" | "vecs"
     band_keys: tuple[str, ...]
     payload_cols: tuple[str, ...]
-    payload_noun: str  # "signature payloads" | "vectors"
+    payload_noun: str  # "signature payloads" | "vectors" | ...
     sidecar_noun: str  # "signature row" | "vector row"
     entity: str  # "document" | "embedding" (re-sign message)
     banded_key: str  # verify-result key names (historical API)
     stored_key: str
     orphan_key: str
-    append_fn: str  # recovery-rule function names
-    write_fn: str
-    compact_fn: str
-    stamp_keys: tuple[str, ...] = ()
+    stamp_keys: tuple[str, ...]
 
     @property
     def suffixes(self) -> tuple[str, str]:
         return ("bands", self.sidecar_suffix)
+
+
+@dataclass(frozen=True)
+class Signer:
+    """One family's signing at one geometry. ``sign`` maps the input
+    frame to the signed frame (id + ``spec.payload_cols`` + whatever
+    ``bands`` needs) — the one frame the core materializes; ``bands``
+    projects it to the bands table's (id, *band_keys) rows; the sidecar
+    rows are its (id, *payload_cols) projection. ``stamp`` is the
+    geometry's identity stamp."""
+
+    sign: Callable[[DataFrame], DataFrame]
+    bands: Callable[[DataFrame], DataFrame]
+    stamp: dict[str, str]
 
 
 def table_num_buckets(spark, table: str) -> int:
@@ -206,8 +267,6 @@ def prune_probe_scan(idx, probe, key: str, max_keys: int = PRUNE_SCAN_MAX_KEYS):
 
 def read_stamp(spark, table: str, keys: tuple[str, ...]) -> dict[str, str]:
     """The subset of ``table``'s TBLPROPERTIES under ``keys``."""
-    if not keys:
-        return {}
     return {
         r.key: r.value
         for r in spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
@@ -222,27 +281,187 @@ def apply_stamp(spark, table: str, props: dict[str, str]) -> None:
     spark.sql(f"ALTER TABLE {table} SET TBLPROPERTIES ({kv})")
 
 
-def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, int]:
-    """Consistency audit shared by both families: every id with band
-    rows must hold a sidecar row, else probes SILENTLY drop that id's
-    candidates at the verify join (the failure mode an interrupted
-    pre-ordering append or external tampering can leave) — raises with
-    the family's recovery rule if any do. Orphan SIDECAR rows (the
-    benign partial state the sidecar-first append ordering can leave)
-    are counted, not raised: they affect no probe. Cost: two distinct
-    aggregates + one anti-join — an offline audit, not a per-probe tax.
+def check_stamp(spark, name: str, spec: IndexSpec, expected: dict[str, str]) -> None:
+    """The stamp guard every append and probe runs before signing;
+    ``expected`` is the caller's geometry as a stamp dict. Unstamped
+    bands tables (hand-built, pre-stamp legacy) pass unvalidated —
+    :func:`verify_index` reports them via ``missing_stamp_keys``; a
+    PARTIAL stamp is tampering or corruption, not legacy, and raises
+    rather than half-validating; any disagreeing field raises, naming
+    the field and both values."""
+    props = read_stamp(spark, f"{name}_bands", spec.stamp_keys)
+    if not props:
+        return
+    if len(props) < len(spec.stamp_keys):
+        raise ValueError(
+            f"{spec.kind} index {name!r} carries a PARTIAL identity stamp "
+            f"({sorted(props)} of {spec.stamp_keys}) — the stamp is one "
+            f"identity; repair it with the known geometry (apply_stamp, or "
+            f"compact_{spec.kind}_index's geometry override) before "
+            f"probing or appending."
+        )
+    detail = "; ".join(
+        f"{k.rsplit('.', 1)[1]}: index={props[k]!r} vs session={expected[k]!r}"
+        for k in spec.stamp_keys
+        if props[k] != expected[k]
+    )
+    if detail:
+        raise ValueError(
+            f"{spec.kind} index {name!r} was built under different signature "
+            f"constants than this session's ({detail}) — band keys across "
+            f"different geometries never collide meaningfully, so the "
+            f"probe/append would silently lose near-dup pairs instead of "
+            f"failing. Probe with the index's own geometry (stamped in the "
+            f"bands table's properties) or rebuild the index under the "
+            f"session's."
+        )
 
-    When the family stamps identity properties on its bands table
-    (``spec.stamp_keys``), the result also carries
-    ``missing_stamp_keys``: non-zero means a bands table that SHOULD
-    carry the stamp lost it — the in-place-compaction crash window
-    (crash after the bands overwrite, before the re-stamp) produces
-    exactly this complete-LOOKING-but-unstamped state, which would
-    otherwise bypass the geometry guard's unstamped-pass. Recover by
-    re-applying the stamp with the KNOWN geometry (the family's
-    ``stamp_*`` helper, or re-run the compaction with the explicit
-    geometry override); callers that never stamp (hand-built indexes)
-    can ignore the count."""
+
+def _save(
+    rows: DataFrame,
+    table: str,
+    mode: str,
+    n_buckets: int,
+    keys: tuple[str, ...],
+    path: str | None = None,
+    sort: bool = False,
+) -> None:
+    """One bucketed table write (bands: ``sort=True`` on the band keys,
+    so parquet row-group stats on them stay tight)."""
+    w = rows.write.mode(mode).bucketBy(n_buckets, *keys)
+    if sort:
+        w = w.sortBy(*keys)
+    if path:
+        w = w.option("path", path)
+    w.saveAsTable(table)
+
+
+def _write_pair(spark, out, spec, id_col, bands, sidecar, mode, buckets, paths, stamp) -> None:
+    """Bands → stamp → sidecar: until the LAST write lands the sidecar
+    table is missing, so a crash leaves a partial index probes cannot
+    read — never a complete-looking one without its stamp."""
+    _save(bands, f"{out}_bands", mode, buckets[0], spec.band_keys, paths[0], sort=True)
+    apply_stamp(spark, f"{out}_bands", stamp)
+    _save(sidecar, f"{out}_{spec.sidecar_suffix}", mode, buckets[1], (id_col,), paths[1])
+
+
+def write_index(
+    frame: DataFrame,
+    name: str,
+    spec: IndexSpec,
+    signer: Signer,
+    id_col: str,
+    n_buckets: int,
+    path: str | None,
+) -> None:
+    """Runbook step 1: build ``name``'s two tables from ``frame``. The
+    signed frame feeds both writes, so it is persisted for the build
+    and released before return (without it each write would re-sign
+    from the raw input)."""
+    signed = signer.sign(frame).persist()
+    try:
+        _write_pair(
+            frame.sparkSession,
+            name,
+            spec,
+            id_col,
+            signer.bands(signed),
+            signed.select(id_col, *spec.payload_cols),
+            "overwrite",
+            (n_buckets, n_buckets),
+            (path and f"{path}/bands", path and f"{path}/{spec.sidecar_suffix}"),
+            signer.stamp,
+        )
+    finally:
+        signed.unpersist()
+
+
+def append_index(
+    spark, frame: DataFrame, name: str, spec: IndexSpec, signer: Signer, id_col: str
+) -> None:
+    """Runbook step 2: fold ``frame`` (an already-deduplicated shard)
+    into ``name`` — bucket counts from the live tables, stamp guard,
+    one localCheckpoint of the signed shard, then sidecar FIRST and
+    bands second (the benign-partial-state ordering)."""
+    band_buckets = table_num_buckets(spark, f"{name}_bands")
+    side_buckets = table_num_buckets(spark, f"{name}_{spec.sidecar_suffix}")
+    check_stamp(spark, name, spec, signer.stamp)
+    signed = signer.sign(frame).localCheckpoint()
+    _save(
+        signed.select(id_col, *spec.payload_cols),
+        f"{name}_{spec.sidecar_suffix}",
+        "append",
+        side_buckets,
+        (id_col,),
+    )
+    _save(signer.bands(signed), f"{name}_bands", "append", band_buckets, spec.band_keys, sort=True)
+
+
+def probe_index(
+    spark,
+    frame: DataFrame,
+    name: str,
+    spec: IndexSpec,
+    signer: Signer,
+    id_col: str,
+    verify: bool = False,
+    prune_scan: int | None = None,
+    shape=None,
+) -> DataFrame:
+    """Runbook step 3 up to the score: the DISTINCT candidate pairs
+    between ``frame`` and ``name``, joined to both sidecars —
+    (index_id, new_id, {payload}_new..., {payload}_idx...). The family
+    scores this frame and keeps one row per pair.
+
+    ``prune_scan`` pushes the shard's distinct ``spec.band_keys[1]``
+    values into the bands scan (:func:`prune_probe_scan`). ``shape``, a
+    ``(probe, idx) -> (probe, idx)`` hook applied after the prune, lets
+    a family re-partition its probe rows or cap the index buckets
+    before the candidate join (the SimHash fan-out and ``max_bucket``).
+    """
+    if verify:
+        verify_index(spark, name, spec, id_col)
+    check_stamp(spark, name, spec, signer.stamp)
+    signed = signer.sign(frame).localCheckpoint()
+    probe = signer.bands(signed)
+    idx = spark.table(f"{name}_bands")
+    if prune_scan is not None:
+        idx = prune_probe_scan(idx, probe, spec.band_keys[1], prune_scan)
+    if shape is not None:
+        probe, idx = shape(probe, idx)
+    cand = (
+        probe.join(idx, [probe[k] == idx[k] for k in spec.band_keys])
+        .select(probe[id_col].alias("new_id"), idx[id_col].alias("index_id"))
+        .distinct()
+    )
+
+    def side(rows, role, tag):
+        cols = [F.col(c).alias(f"{c}_{tag}") for c in spec.payload_cols]
+        return rows.select(F.col(id_col).alias(role), *cols)
+
+    stored = spark.table(f"{name}_{spec.sidecar_suffix}")
+    return cand.join(side(signed, "new_id", "new"), "new_id").join(
+        side(stored, "index_id", "idx"), "index_id"
+    )
+
+
+def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, int]:
+    """Runbook step 4: every id with band rows must hold a sidecar row,
+    else probes SILENTLY drop that id's candidates at the verify join
+    (the failure mode an interrupted pre-ordering append or external
+    tampering can leave) — raises with the recovery rule if any do.
+    Orphan SIDECAR rows (the benign partial state the sidecar-first
+    append ordering can leave) are counted, not raised: they affect no
+    probe. Cost: two distinct aggregates + one anti-join — an offline
+    audit, not a per-probe tax.
+
+    The result also carries ``missing_stamp_keys``: non-zero means the
+    bands table lost (part of) its stamp — on an index built by
+    ``write_{kind}_index`` that is the in-place-compaction crash window
+    (crash after the bands overwrite, before the re-stamp), a
+    complete-LOOKING but unguarded index. Recover by re-applying the
+    known geometry (runbook). Hand-built indexes that never stamped can
+    ignore the count."""
     bands = spark.table(f"{name}_bands").select(id_col).distinct()
     sidecar = spark.table(f"{name}_{spec.sidecar_suffix}").select(id_col).distinct()
     n_band = bands.count()
@@ -253,21 +472,19 @@ def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, in
             f"{spec.kind} index {name!r} is inconsistent: {n_unbacked} of "
             f"{n_band} banded {spec.entity}s have no {spec.sidecar_noun} — "
             f"probes are silently dropping their candidates. Recover by "
-            f"re-running {spec.append_fn} for the affected shard (its "
-            f"{spec.sidecar_noun}s make the orphan band rows valid; "
+            f"re-running append_{spec.kind}_shard for the affected shard "
+            f"(its {spec.sidecar_noun}s make the orphan band rows valid; "
             f"duplicate rows change no probe result) or rebuilding the "
-            f"index with {spec.write_fn}."
+            f"index with write_{spec.kind}_index."
         )
     n_orphan = sidecar.join(bands, id_col, "left_anti").count()
-    out = {
+    present = read_stamp(spark, f"{name}_bands", spec.stamp_keys)
+    return {
         spec.banded_key: n_band,
         spec.stored_key: n_stored,
         spec.orphan_key: n_orphan,
+        "missing_stamp_keys": len(spec.stamp_keys) - len(present),
     }
-    if spec.stamp_keys:
-        present = read_stamp(spark, f"{name}_bands", spec.stamp_keys)
-        out["missing_stamp_keys"] = len(spec.stamp_keys) - len(present)
-    return out
 
 
 def compact_index(
@@ -290,13 +507,13 @@ def compact_index(
     ZERO-shuffle: both dedup keys are supersets of their table's bucket
     columns, so the bucketed read's hash partitioning already satisfies
     the aggregation's clustering requirement — Catalyst plans the
-    dropDuplicates without an Exchange (plan-asserted in both families'
+    dropDuplicates without an Exchange (plan-asserted in the families'
     test suites), and the pass is read → partition-local dedup →
     bucketed write at any index size.
 
     Contract check first: an id carrying CONFLICTING sidecar payloads
     means the append-only/immutable-id contract was violated (a
-    {entity} re-signed under a reused id) — compaction raises rather
+    document or embedding re-signed under a reused id) — compaction raises rather
     than silently picking a version.
 
     Two modes:
@@ -332,7 +549,7 @@ def compact_index(
     if target is None:
         if path is not None:
             raise ValueError(
-                f"{spec.compact_fn}: path= is only meaningful with "
+                f"compact_{spec.kind}_index: path= is only meaningful with "
                 f"target= — in-place compaction always rewrites each "
                 f"table at its own catalog location (external stays at "
                 f"its path, managed stays managed); rewriting in place "
@@ -360,7 +577,7 @@ def compact_index(
                 # tables strand every stale file at the old path
                 # forever. Relocation must be explicit.
                 raise ValueError(
-                    f"{spec.compact_fn}: source tables {external} are "
+                    f"compact_{spec.kind}_index: source tables {external} are "
                     f"EXTERNAL but target mode got no path= — the "
                     f"target would be created MANAGED in the warehouse, "
                     f"making the follow-up swap relocate data instead "
@@ -374,7 +591,7 @@ def compact_index(
     if stamp_override is not None:
         if set(stamp_override) != set(spec.stamp_keys):
             raise ValueError(
-                f"{spec.compact_fn}: stamp_override must supply exactly "
+                f"compact_{spec.kind}_index: stamp_override must supply exactly "
                 f"the index-identity properties {spec.stamp_keys} (the "
                 f"stamp is one identity, not overridable piecemeal); "
                 f"got {sorted(stamp_override)}"
@@ -385,7 +602,7 @@ def compact_index(
         # degrade to a fully-unstamped rewrite — that would make the
         # geometry guard pass every mismatched probe unvalidated
         raise ValueError(
-            f"{spec.compact_fn}: {name}_bands carries a PARTIAL "
+            f"compact_{spec.kind}_index: {name}_bands carries a PARTIAL "
             f"identity stamp ({sorted(stamp)} of {spec.stamp_keys}) — "
             f"compacting would erase the remainder and un-guard the "
             f"index. Re-run with the explicit geometry override (the "
@@ -406,7 +623,7 @@ def compact_index(
             f"{spec.payload_noun} for {n_conflicts} {id_col}s — the "
             f"append-only/immutable-{id_col} contract was violated (a "
             f"{spec.entity} was re-signed under a reused id); compaction "
-            f"cannot pick a version. Rebuild with {spec.write_fn} or "
+            f"cannot pick a version. Rebuild with write_{spec.kind}_index or "
             f"remove the stale shard's rows."
         )
     bands_before = bands.count()
@@ -417,31 +634,28 @@ def compact_index(
         # in place: materialize before overwriting the source tables
         comp_bands = comp_bands.localCheckpoint()
         comp_side = comp_side.localCheckpoint()
-    # bands first, stamp immediately after: a target-mode crash before
-    # the LAST write leaves the target's sidecar table missing, so every
-    # partial target is LOUD (probes cannot read it) — never a
-    # complete-looking index. (In place, see the docstring's stamp
-    # window + stamp_override recovery.)
-    bw = (
-        comp_bands.write.mode(mode)
-        .bucketBy(band_buckets, *spec.band_keys)
-        .sortBy(*spec.band_keys)
+    # bands first, stamp immediately after (_write_pair): a target-mode
+    # crash before the LAST write leaves the target's sidecar missing,
+    # so every partial target is LOUD. (In place, see the docstring's
+    # stamp window + stamp_override recovery.)
+    _write_pair(
+        spark,
+        out,
+        spec,
+        id_col,
+        comp_bands,
+        comp_side,
+        mode,
+        (band_buckets, side_buckets),
+        (band_path, side_path),
+        stamp,
     )
-    if band_path:
-        bw = bw.option("path", band_path)
-    bw.saveAsTable(f"{out}_bands")
-    if len(stamp) == len(spec.stamp_keys):
-        apply_stamp(spark, f"{out}_bands", stamp)
-    sw = comp_side.write.mode(mode).bucketBy(side_buckets, id_col)
-    if side_path:
-        sw = sw.option("path", side_path)
-    sw.saveAsTable(f"{out}_{spec.sidecar_suffix}")
-    side_prefix = spec.sidecar_suffix
+    side = spec.sidecar_suffix
     return {
         "bands_before": bands_before,
         "bands_after": spark.table(f"{out}_bands").count(),
-        f"{side_prefix}_before": side_before,
-        f"{side_prefix}_after": spark.table(f"{out}_{spec.sidecar_suffix}").count(),
+        f"{side}_before": side_before,
+        f"{side}_after": spark.table(f"{out}_{side}").count(),
     }
 
 
@@ -449,14 +663,28 @@ def _retired(name: str, sfx: str) -> str:
     return f"{name}_{sfx}__retired"
 
 
-def swap_index(spark, name: str, target: str, spec: IndexSpec, verify_fn=None) -> dict:
+def _verify_promotable(spark, name: str, spec: IndexSpec, id_col: str) -> None:
+    """The swap's verify: :func:`verify_index`, plus a refusal to
+    promote a table without its geometry stamp — an unstamped live
+    index would bypass the stamp guard on every future append/probe."""
+    if verify_index(spark, name, spec, id_col)["missing_stamp_keys"]:
+        raise ValueError(
+            f"swap_{spec.kind}_index: target {name!r} is missing its "
+            f"geometry stamp ({spec.stamp_keys}) — re-stamp it with the "
+            f"known geometry (apply_stamp, or compact_{spec.kind}_index's "
+            f"geometry override) before promoting; an unstamped live index "
+            f"would bypass the geometry guard on every future append/probe."
+        )
+
+
+def swap_index(spark, name: str, target: str, spec: IndexSpec, id_col: str) -> dict:
     """Promote a verified ``target`` index build to ``name`` via
     metadata-only ``ALTER TABLE ... RENAME`` pairs (VERDICT r8 #3) —
     the closing move of the no-overwrite-window maintenance path
     (``compact_*_index(target=...)`` → verify → ``swap_index``).
 
-    Sequence: verify the target (``verify_fn``, skipped on resume and
-    when None), then (1) retire BOTH live tables
+    Sequence: verify the target (:func:`_verify_promotable`, skipped on
+    resume), then (1) retire BOTH live tables
     (``{name}_{sfx}`` → ``{name}_{sfx}__retired``), (2) promote BOTH
     target tables (``{target}_{sfx}`` → ``{name}_{sfx}``), (3) drop the
     retired pair. Because retiring completes before promoting begins,
@@ -532,8 +760,7 @@ def swap_index(spark, name: str, target: str, spec: IndexSpec, verify_fn=None) -
                 f"half-built errorifexists target must be dropped and "
                 f"rebuilt, never swapped)."
             )
-        if verify_fn is not None:
-            verify_fn(spark, target)
+        _verify_promotable(spark, target, spec, id_col)
     else:
         # Per-suffix progression through this tool's phases:
         #   0 = not started (live + target), 1 = retired not promoted,
@@ -617,8 +844,8 @@ def swap_index(spark, name: str, target: str, spec: IndexSpec, verify_fn=None) -
     # a RESUMED promotion skipped the fresh-path target verify; never
     # drop the old copy behind an unverified promotion — verify the
     # live name now, while the retired pair still allows rename-back
-    if resuming and verify_fn is not None:
-        verify_fn(spark, name)
+    if resuming:
+        _verify_promotable(spark, name, spec, id_col)
     # phase 3: drop the retired pair (old index fully out of service);
     # record what was actually deleted — on a resume this is the audit
     # trail for the inherently-ambiguous stale-__retired case (ADVICE

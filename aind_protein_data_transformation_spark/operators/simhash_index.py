@@ -1,32 +1,19 @@
-"""Incremental SimHash index — the THIRD bucketed two-table index
-family, and the payoff of the shared lifecycle core (VERDICT r8 #5):
-verify / compact / swap are one :class:`~.index_lifecycle.IndexSpec`
-config plus thin wrappers; only the family-specific signing (the
-SimHash vote aggregate, operators/dedup.py) and the probe join live
-here.
-
-Two plain bucketed parquet tables per index, same trade-offs and
-non-transactional caveats as the minhash/SRP twins:
+"""Incremental SimHash index — the third family on the shared two-table
+lifecycle: the write / append / probe / verify / compact / swap
+runbook, crash contract and stamp guard are in
+operators/index_lifecycle.py; this module holds the SimHash spec, its
+signer (the vote aggregate of operators/dedup.py, then the chunk
+rows), its stamp, its hamming verify score and its own checks (the
+geometry validation, the ``max_hamming`` pigeonhole cap, and the
+probe's fan-out and ``max_bucket`` cap).
 
 - ``{name}_bands``: (doc_id, chunk, val) — each document's hash chunks
   (``n_chunks`` fields of ``bits / n_chunks`` bits each), bucketed AND
   sorted by (chunk, val): the pigeonhole blocking key (hamming <=
-  n_chunks - 1 guarantees at least one equal chunk), so a probe's
-  candidate join exchanges only the shard's chunk rows while the
-  corpus side reads co-located and pre-sorted.
+  n_chunks - 1 guarantees at least one equal chunk).
 - ``{name}_sigs``: (doc_id, simhash) bucketed by doc_id — the full
   hash the verify stage recomputes hamming distance from (bit_count of
   XOR; no text is re-read).
-
-Crash contract, unchanged from the minhash twin: appends write sigs
-FIRST, bands second, so every partial state is benign (orphan sig rows
-affect no probe); the dangerous inverse is detected by
-:func:`verify_simhash_index`. Append-only over immutable doc_ids —
-duplicate rows from a crash re-run change no probe result (pairs
-aggregate per (new_id, index_id)) and are dropped from storage by
-:func:`compact_simhash_index`; promote a compact-into-target build
-with :func:`swap_simhash_index` (metadata-only renames, no overwrite
-window — see index_lifecycle's runbook).
 
 Scale envelope (measured round 9, BENCH.md): chunk blocking over
 ``n_chunks`` fixed w-bit values yields ~n/2^w candidates per chunk per
@@ -76,13 +63,14 @@ from pyspark.sql import functions as F
 from .dedup import SIMHASH_BITS, SIMHASH_CHUNKS, simhash
 from .index_lifecycle import (
     IndexSpec,
-    apply_stamp,
+    Signer,
+    append_index,
     compact_index,
-    prune_probe_scan,
+    probe_index,
     read_stamp,
     swap_index,
-    table_num_buckets,
     verify_index,
+    write_index,
 )
 
 SIMHASH_MAX_HAMMING = 3
@@ -100,9 +88,6 @@ SIMHASH_SPEC = IndexSpec(
     banded_key="banded_docs",
     stored_key="signed_docs",
     orphan_key="orphan_sig_docs",
-    append_fn="append_simhash_shard",
-    write_fn="write_simhash_index",
-    compact_fn="compact_simhash_index",
     stamp_keys=SIMHASH_STAMP_KEYS,
 )
 
@@ -135,81 +120,26 @@ def _validate_geometry(bits: int, n_chunks: int) -> None:
         )
 
 
-def _stamp_simhash_params(spark, name: str, bits: int, n_chunks: int) -> None:
-    """Record the chunk geometry on the bands table — it is part of the
-    index identity (chunk values across different widths never collide
-    meaningfully), so appends and probes derive their layout from it.
-    Also the RECOVERY tool for a lost stamp (the in-place-compaction
-    crash window flagged by ``missing_stamp_keys`` in
-    :func:`verify_simhash_index`): re-apply with the KNOWN geometry, or
-    re-run the compaction with its explicit ``bits=``/``n_chunks=``
-    override."""
-    apply_stamp(spark, f"{name}_bands", _simhash_stamp(bits, n_chunks))
-
-
 def _simhash_stamp(bits: int, n_chunks: int) -> dict[str, str]:
-    return {
-        "sparkgraft.simhash.bits": str(bits),
-        "sparkgraft.simhash.chunks": str(n_chunks),
-    }
+    return {"sparkgraft.simhash.bits": str(bits), "sparkgraft.simhash.chunks": str(n_chunks)}
 
 
-def _read_geometry(spark, name: str) -> tuple[int, int] | None:
-    """The index's stamped (bits, n_chunks), or None when unstamped
-    (hand-built or pre-stamp legacy — :func:`verify_simhash_index`
-    reports those via ``missing_stamp_keys``). A PARTIAL stamp is
-    tampering/corruption, not legacy, and raises."""
-    props = read_stamp(spark, f"{name}_bands", SIMHASH_STAMP_KEYS)
-    if not props:
-        return None
-    if len(props) < len(SIMHASH_STAMP_KEYS):
-        raise ValueError(
-            f"simhash index {name!r} carries a PARTIAL identity stamp "
-            f"({sorted(props)} of {SIMHASH_STAMP_KEYS}) — the stamp is "
-            f"one identity; repair it with the known geometry "
-            f"(_stamp_simhash_params) before probing or appending."
-        )
-    return (
-        int(props["sparkgraft.simhash.bits"]),
-        int(props["sparkgraft.simhash.chunks"]),
-    )
-
-
-def _resolve_geometry(
-    spark, name: str, bits: int | None, n_chunks: int | None, caller: str
-) -> tuple[int, int]:
-    """The geometry an append/probe must sign and chunk under: the
-    index's STAMP when present (the probe can then never join
-    new-geometry chunk rows against old-geometry bands — the silent
-    recall collapse VERDICT r9 flagged); explicit caller values must
-    AGREE with the stamp or this raises. Unstamped legacy indexes fall
-    back to the caller's values, else the module defaults (32/4 — the
-    pre-stamp constants every legacy index was built under)."""
-    stamped = _read_geometry(spark, name)
-    if stamped is not None:
-        sb, sc = stamped
-        eb = bits if bits is not None else sb
-        ec = n_chunks if n_chunks is not None else sc
-        if (eb, ec) != (sb, sc):
-            raise ValueError(
-                f"{caller}: simhash index {name!r} was built with "
-                f"bits={sb}/n_chunks={sc} but the caller passed "
-                f"bits={eb}/n_chunks={ec} — chunk values across "
-                f"different geometries never collide meaningfully, so "
-                f"the probe/append would silently lose near-dup pairs. "
-                f"Omit the geometry arguments (they derive from the "
-                f"stamp) or pass the index's own."
-            )
-        # a corrupted stamp carrying an impossible geometry must not
-        # silently drive a nonsense chunk layout
-        _validate_geometry(sb, sc)
-        return sb, sc
-    out = (
-        bits if bits is not None else SIMHASH_BITS,
-        n_chunks if n_chunks is not None else SIMHASH_CHUNKS,
-    )
-    _validate_geometry(*out)
-    return out
+def _resolve_geometry(spark, name: str, bits: int | None, n_chunks: int | None) -> tuple[int, int]:
+    """The geometry an append/probe signs and chunks under: explicit
+    arguments, else the index's STAMP, else the module defaults (32/4 —
+    the pre-stamp constants every legacy index was built under),
+    validated. Explicit values that disagree with the stamp — and a
+    partial stamp — are then rejected by the core stamp guard, so a
+    probe can never join new-geometry chunk rows against old-geometry
+    bands; a corrupted stamp carrying an impossible geometry fails the
+    validation here."""
+    stamp = read_stamp(spark, f"{name}_bands", SIMHASH_STAMP_KEYS)
+    if bits is None:
+        bits = int(stamp.get("sparkgraft.simhash.bits", SIMHASH_BITS))
+    if n_chunks is None:
+        n_chunks = int(stamp.get("sparkgraft.simhash.chunks", SIMHASH_CHUNKS))
+    _validate_geometry(bits, n_chunks)
+    return bits, n_chunks
 
 
 def _chunk_rows(
@@ -240,6 +170,14 @@ def _chunk_rows(
     ).select(id_col, "ck.chunk", "ck.val")
 
 
+def _signer(text_col: str, id_col: str, bits: int, n_chunks: int) -> Signer:
+    return Signer(
+        sign=lambda docs: simhash(docs, text_col=text_col, id_col=id_col, n_bits=bits),
+        bands=lambda sims: _chunk_rows(sims, id_col, bits, n_chunks),
+        stamp=_simhash_stamp(bits, n_chunks),
+    )
+
+
 def write_simhash_index(
     docs: DataFrame,
     name: str,
@@ -253,39 +191,13 @@ def write_simhash_index(
     """Index ``docs`` for incremental hamming-distance probes: one
     SimHash vote aggregate over the corpus, persisted as the chunk
     blocking table + full-hash sidecar described in the module notes.
-
     ``bits``/``n_chunks`` are the widen-the-chunks scale dial (module
-    notes): they are part of the index identity, STAMPED into the
-    bands table's properties, and every subsequent append/probe derives
-    its chunk layout and pigeonhole cap from the stamp — so the 100-TB
-    geometry is a constructor argument here, never an edit against an
-    existing index. Build order bands -> stamp -> sigs: a fresh build
-    that crashes before the LAST write leaves the sigs table missing,
-    so every partial state fails loudly (probes cannot read
-    ``{name}_sigs``) — in particular a complete-LOOKING index with a
-    missing stamp cannot be produced by a crash here."""
+    notes), validated and STAMPED; every later append/probe derives its
+    chunk layout from the stamp. Runbook step 1 of
+    operators/index_lifecycle.py."""
     _validate_geometry(bits, n_chunks)
-    # persist: the vote aggregate (the expensive pass) feeds BOTH
-    # writes; without it each saveAsTable recomputes it from the raw
-    # text (round-9 review). Bounded lifetime: released before return.
-    sims = simhash(docs, text_col=text_col, id_col=id_col, n_bits=bits).persist()
-    try:
-        bw = (
-            _chunk_rows(sims, id_col, bits, n_chunks)
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, "chunk", "val")
-            .sortBy("chunk", "val")
-        )
-        if path:
-            bw = bw.option("path", f"{path}/bands")
-        bw.saveAsTable(f"{name}_bands")
-        _stamp_simhash_params(docs.sparkSession, name, bits, n_chunks)
-        sw = sims.write.mode("overwrite").bucketBy(n_buckets, id_col)
-        if path:
-            sw = sw.option("path", f"{path}/sigs")
-        sw.saveAsTable(f"{name}_sigs")
-    finally:
-        sims.unpersist()
+    signer = _signer(text_col, id_col, bits, n_chunks)
+    write_index(docs, name, SIMHASH_SPEC, signer, id_col, n_buckets, path)
 
 
 def append_simhash_shard(
@@ -298,52 +210,21 @@ def append_simhash_shard(
     n_chunks: int | None = None,
 ) -> None:
     """Fold an (already-deduplicated) shard into the persisted index —
-    a bucketed APPEND of the shard's own chunk/sig rows; the history is
-    never read or re-signed. The shard is signed and chunked under the
+    a bucketed APPEND of its sig rows, then chunk rows, signed under the
     index's STAMPED geometry (explicit ``bits``/``n_chunks`` must agree
-    with the stamp or this raises — see :func:`_resolve_geometry`).
-    Sigs FIRST, bands second (the minhash ordering contract): a crash
-    between the writes leaves orphan sig rows, which no probe can
-    reach; re-running completes the index and duplicate rows change no
-    probe result. Session-cache footgun shared with
-    ``append_minhash_shard`` (see its docstring): probes from a
-    DIFFERENT session than the appending one must ``refreshTable``
-    both tables first."""
-    band_buckets = table_num_buckets(spark, f"{name}_bands")
-    sig_buckets = table_num_buckets(spark, f"{name}_sigs")
-    bits, n_chunks = _resolve_geometry(
-        spark, name, bits, n_chunks, "append_simhash_shard"
-    )
-    sims = simhash(
-        docs, text_col=text_col, id_col=id_col, n_bits=bits
-    ).localCheckpoint()
-    (
-        sims.write.mode("append")
-        .bucketBy(sig_buckets, id_col)
-        .saveAsTable(f"{name}_sigs")
-    )
-    (
-        _chunk_rows(sims, id_col, bits, n_chunks)
-        .write.mode("append")
-        .bucketBy(band_buckets, "chunk", "val")
-        .sortBy("chunk", "val")
-        .saveAsTable(f"{name}_bands")
-    )
+    with the stamp or this raises). Runbook step 2 of
+    operators/index_lifecycle.py."""
+    signer = _signer(text_col, id_col, *_resolve_geometry(spark, name, bits, n_chunks))
+    append_index(spark, docs, name, SIMHASH_SPEC, signer, id_col)
 
 
 def verify_simhash_index(spark, name: str, id_col: str = "doc_id") -> dict[str, int]:
-    """Consistency audit — :func:`index_lifecycle.verify_index` with
-    :data:`SIMHASH_SPEC`: banded docs without a signature row raise
-    (probes would silently drop their candidates at the hamming
-    verify); orphan sig rows (the benign sigs-first partial state) are
-    counted, not raised. The result also carries ``missing_stamp_keys``
-    (VERDICT r9 #2): 2 means the bands table holds NO
-    ``sparkgraft.simhash.*`` geometry stamp — on an index built by
-    :func:`write_simhash_index` that is the in-place compaction crash
-    signature; recover with :func:`_stamp_simhash_params` and the known
-    geometry, or re-run the compaction with its explicit
-    ``bits=``/``n_chunks=`` override. Hand-built or pre-stamp legacy
-    indexes can ignore the count."""
+    """Consistency audit: raises if any banded document lacks a
+    signature row; returns ``{"banded_docs", "signed_docs",
+    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise (2 missing
+    keys = the in-place-compaction crash signature; recover with
+    ``compact_simhash_index(..., bits=, n_chunks=)``). Runbook step 4
+    of operators/index_lifecycle.py."""
     return verify_index(spark, name, SIMHASH_SPEC, id_col)
 
 
@@ -356,16 +237,13 @@ def compact_simhash_index(
     bits: int | None = None,
     n_chunks: int | None = None,
 ) -> dict[str, int]:
-    """Drop duplicate rows from both tables — shared
-    :func:`index_lifecycle.compact_index` (zero-shuffle off the
-    bucketed reads, conflict check on the simhash payload, in-place or
-    compact-into-target modes; promote a verified target with
-    :func:`swap_simhash_index`). The geometry stamp travels to the
-    output; ``bits=``/``n_chunks=`` (both or neither) override it —
-    the RECOVERY path for an in-place compaction that crashed between
-    the bands overwrite and the re-stamp (the crash erases the source
-    stamp, so a plain re-run cannot restore what it can no longer
-    read; a re-run with the known geometry can)."""
+    """Drop duplicate rows from both tables —
+    :func:`index_lifecycle.compact_index` (zero-shuffle, in place or
+    into ``target`` for :func:`swap_simhash_index`, raising on a doc_id
+    with conflicting simhash values). ``bits=``/``n_chunks=`` (both or
+    neither) override the geometry stamp written to the output — the
+    recovery path for a crash between the in-place bands overwrite and
+    the re-stamp."""
     if (bits is None) != (n_chunks is None):
         raise ValueError(
             "compact_simhash_index: pass BOTH bits and n_chunks (the "
@@ -373,37 +251,17 @@ def compact_simhash_index(
         )
     override = _simhash_stamp(bits, n_chunks) if bits is not None else None
     return compact_index(
-        spark,
-        name,
-        SIMHASH_SPEC,
-        id_col,
-        target=target,
-        path=path,
-        stamp_override=override,
+        spark, name, SIMHASH_SPEC, id_col, target=target, path=path, stamp_override=override
     )
 
 
 def swap_simhash_index(spark, name: str, target: str) -> dict:
-    """Promote a verified compact-into-``target`` build via
-    metadata-only rename pairs — :func:`index_lifecycle.swap_index`
-    with :data:`SIMHASH_SPEC`; verifies the target first, INCLUDING
-    that its geometry stamp is present (``missing_stamp_keys``) — an
-    unstamped live index would make every future append/probe fall
-    back to the legacy default geometry, silently collapsing recall on
-    a widened-chunk index."""
-
-    def _verify(s, n):
-        health = verify_simhash_index(s, n)
-        if health.get("missing_stamp_keys"):
-            raise ValueError(
-                f"swap_simhash_index: target {n!r} is missing its "
-                f"geometry stamp ({SIMHASH_STAMP_KEYS}) — re-stamp with "
-                f"_stamp_simhash_params (known geometry) before "
-                f"promoting; an unstamped live index would derive the "
-                f"legacy default geometry on every future append/probe."
-            )
-
-    return swap_index(spark, name, target, SIMHASH_SPEC, verify_fn=_verify)
+    """Promote a verified (stamp included — an unstamped live index
+    would make every future append/probe fall back to the legacy
+    default geometry) compact-into-``target`` build via metadata-only
+    rename pairs — :func:`index_lifecycle.swap_index`, runbook
+    step 6."""
+    return swap_index(spark, name, target, SIMHASH_SPEC, "doc_id")
 
 
 def chunk_bucket_sizes(spark, name: str) -> DataFrame:
@@ -448,25 +306,14 @@ def incremental_simhash_pairs(
     geometry's pigeonhole guarantee, ``n_chunks - 1``: beyond it the
     chunk blocking silently under-recalls, so the API raises instead.
 
-    Scale shape, identical to the minhash/SRP probes: the shard is
-    signed in one vote-aggregate pass (localCheckpoint — it feeds the
-    blocking join AND the verify); its chunk rows join the bucketed
-    bands table (index side co-located and pre-sorted, only the
-    shard's rows exchange); the DISTINCT candidate pairs then join the
-    sig sidecar for the exact bit_count(XOR) verify. History is never
-    re-scanned. Batch equivalence against simhash_near_pairs over
-    corpus+shard is pinned by tests/test_simhash_index.py.
-
-    Probing DURING a swap (index_lifecycle runbook): between
-    :func:`swap_simhash_index`'s retire and promote phases the live
-    name is missing at least one table, so a concurrent probe FAILS
-    LOUDLY on a missing table — by design, never a silent mixture of
-    generations. The probe is read-only and idempotent: re-run it
-    after the swap completes (or re-run the crashed swap first; it
-    resumes from any point).
-
-    ``verify=True`` runs :func:`verify_simhash_index` first — the one
-    offline audit before probing a possibly-interrupted index.
+    ``verify=True`` audits the index first
+    (:func:`verify_simhash_index`); ``prune_scan`` pushes the shard's
+    distinct chunk values into the sorted bands scan before the cap —
+    pruning removes whole (chunk, val) buckets, so the surviving
+    buckets' occupancy (the cap's input) is unchanged. Batch
+    equivalence against simhash_near_pairs over corpus+shard is pinned
+    by tests/test_simhash_index.py. Runbook step 3 (scale shape,
+    probing during a swap) of operators/index_lifecycle.py.
 
     ``max_bucket`` is the per-bucket skew cap, the probe-side twin of
     ``lsh_candidate_pairs(max_bucket=...)`` (round 10 — the 10x
@@ -492,15 +339,10 @@ def incremental_simhash_pairs(
     skewed corpora, and ALWAYS audit the drop with
     :func:`chunk_bucket_sizes` before enabling it.
 
-    Output aggregates ``min(hamming)`` per (new_id, index_id): pure
-    row dedup under the append-only contract (duplicates carry the
-    identical hash, hence the identical hamming), and the
-    deterministic LOWER bound under an out-of-band contract violation
-    — the same adjudication as the other two probes' max(score), with
-    the inequality flipped because smaller hamming = nearer."""
-    bits, n_chunks = _resolve_geometry(
-        spark, name, bits, n_chunks, "incremental_simhash_pairs"
-    )
+    Output aggregates ``min(hamming)`` per (new_id, index_id) — the
+    other probes' max(score) with the inequality flipped, because
+    smaller hamming = nearer."""
+    bits, n_chunks = _resolve_geometry(spark, name, bits, n_chunks)
     if max_hamming is None:
         max_hamming = n_chunks - 1
     if max_hamming > n_chunks - 1:
@@ -511,67 +353,47 @@ def incremental_simhash_pairs(
             f"would be silently MISSING from the probe, not slower to "
             f"find. Rebuild the index with more chunks for wider radii."
         )
-    if verify:
-        verify_simhash_index(spark, name, id_col=id_col)
-    sims = simhash(
-        new_docs, text_col=text_col, id_col=id_col, n_bits=bits
-    ).localCheckpoint()
-    # Fan the shard's chunk rows out to the session's width BEFORE the
-    # candidate join (measured round 9 at the 10x text layout): AQE
-    # coalesces the tiny checkpointed shard to ONE partition, and when
-    # the bands table fits a broadcast the collision join runs on the
-    # STREAM side's partitioning — one task dragging every collision
-    # row (7.9M for a 250-doc shard there: 8-bit chunk buckets hold
-    # ~n/256 docs each, so candidates grow with the corpus). The
-    # 1000-row exchange is free; the join's output work spreads across
-    # the cluster. At index sizes past the broadcast threshold the
-    # bucketed SMJ repartitions the probe side anyway — this makes the
-    # small/medium regime behave the same way.
     from ..plans.scale import fanout_width
 
-    probe = _chunk_rows(sims, id_col, bits, n_chunks).repartition(
-        fanout_width(spark)
-    )
-    idx = spark.table(f"{name}_bands")
-    if prune_scan is not None:
-        # point-lookup regime (index_lifecycle.prune_probe_scan): push
-        # the shard's distinct chunk values into the bands scan so the
-        # sorted row groups skip at I/O time. Before the cap on
-        # purpose, and composable with it: pruning on "val" removes
-        # whole (chunk, val) buckets, so surviving buckets' occupancy
-        # counts — the cap's input — are unchanged.
-        idx = prune_probe_scan(idx, probe, "val", prune_scan)
-    if max_bucket is not None:
-        keep = (
-            idx.groupBy("chunk", "val")
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") <= max_bucket)
-            .select("chunk", "val")
-        )
-        idx = idx.join(keep, ["chunk", "val"], "left_semi")
-    cand = (
-        probe.join(
-            idx,
-            (probe["chunk"] == idx["chunk"]) & (probe["val"] == idx["val"]),
-        )
-        .select(probe[id_col].alias("new_id"), idx[id_col].alias("index_id"))
-        .distinct()
-    )
-    new_sig = sims.select(
-        F.col(id_col).alias("new_id"), F.col("simhash").alias("sh_new")
-    )
-    idx_sig = spark.table(f"{name}_sigs").select(
-        F.col(id_col).alias("index_id"), F.col("simhash").alias("sh_idx")
+    def shape(probe, idx):
+        if max_bucket is not None:
+            keep = (
+                idx.groupBy("chunk", "val")
+                .agg(F.count("*").alias("_n"))
+                .filter(F.col("_n") <= max_bucket)
+                .select("chunk", "val")
+            )
+            idx = idx.join(keep, ["chunk", "val"], "left_semi")
+        # Fan the shard's chunk rows out to the session's width BEFORE
+        # the candidate join (measured round 9 at the 10x text layout):
+        # AQE coalesces the tiny checkpointed shard to ONE partition, and
+        # when the bands table fits a broadcast the collision join runs
+        # on the STREAM side's partitioning — one task dragging every
+        # collision row (7.9M for a 250-doc shard there: 8-bit chunk
+        # buckets hold ~n/256 docs each, so candidates grow with the
+        # corpus). The small exchange is free; the join's output work
+        # spreads across the cluster. Past the broadcast threshold the
+        # bucketed SMJ repartitions the probe side anyway.
+        return probe.repartition(fanout_width(spark)), idx
+
+    paired = probe_index(
+        spark,
+        new_docs,
+        name,
+        SIMHASH_SPEC,
+        _signer(text_col, id_col, bits, n_chunks),
+        id_col,
+        verify=verify,
+        prune_scan=prune_scan,
+        shape=shape,
     )
     return (
-        cand.join(new_sig, "new_id")
-        .join(idx_sig, "index_id")
-        .select(
+        paired.select(
             "new_id",
             "index_id",
-            F.bit_count(
-                F.col("sh_new").bitwiseXOR(F.col("sh_idx"))
-            ).alias("hamming"),
+            F.bit_count(F.col("simhash_new").bitwiseXOR(F.col("simhash_idx"))).alias(
+                "hamming"
+            ),
         )
         .filter(F.col("hamming") <= max_hamming)
         .groupBy("new_id", "index_id")

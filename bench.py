@@ -302,6 +302,11 @@ def main(argv: list[str]) -> int:
             "cold_first_run": cold,
             "session_floor_seconds": floor,
             "sf": out["sf"],
+            # the core count asked for next to the parallelism the
+            # session actually got, so a scaling run can be checked
+            # for an ignored SPARK_GRAFT_CPUS
+            "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
+            "default_parallelism": spark.sparkContext.defaultParallelism,
         }
         duck = chosen["duck"]
         if duck is not None:

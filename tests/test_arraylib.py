@@ -355,9 +355,12 @@ def test_run_job_end_to_end(spark, stack_dir, tmp_path):
         downsample_levels=2,
         chunk_size=(2, 2, 2),
     )
+    spark.catalog.clearCache()
     resp = run_job(spark, settings)
     assert resp.status_code == 0
     assert sorted(json.loads(resp.data)["stacks"]) == ["plain.czi_0", "tile_a_1", "tile_a_2"]
+    # every persisted level and the decoded voxels were released
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     level0 = spark.read.parquet(os.path.join(out, "level=0"))
     assert level0.count() > 0
@@ -395,6 +398,29 @@ def test_run_job_end_to_end(spark, stack_dir, tmp_path):
     with open(sidecars[0], encoding="utf-8") as fh:
         doc = json.load(fh)
     assert doc["multiscales"][0]["datasets"][1]["coordinateTransformations"][0]["scale"][2] == 2.0
+
+
+def test_run_job_releases_caches_when_a_write_fails(spark, stack_dir, tmp_path, monkeypatch):
+    """A sink failure mid-pyramid must not leak the persisted voxels or
+    the persisted level: both are released in run_job's finally."""
+    real_write = blocks.write_level_parquet
+
+    def fail_at_level_1(chunked, out_root, lvl):
+        if lvl == 1:
+            raise RuntimeError("sink down")
+        return real_write(chunked, out_root, lvl)
+
+    monkeypatch.setattr(blocks, "write_level_parquet", fail_at_level_1)
+    settings = StackJobSettings(
+        input_source=stack_dir,
+        output_directory=str(tmp_path / "out"),
+        downsample_levels=2,
+        chunk_size=(2, 2, 2),
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="sink down"):
+        run_job(spark, settings)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_job_settings_validation(tmp_path):

@@ -98,6 +98,9 @@ def test_bench_prints_one_compact_json_line_plus_sidecar(tmp_path):
     assert set(detail["duckdb_queries"]) == set(out["queries"])
     assert set(detail["cold_first_run"]) == set(out["queries"])
     assert detail["session_floor_seconds"] > 0
+    # the session ran at the parallelism the env asked for
+    assert detail["spark_graft_cpus"] == env["SPARK_GRAFT_CPUS"]
+    assert detail["default_parallelism"] == int(env["SPARK_GRAFT_CPUS"])
 
 
 def test_sidecar_routing_protects_headline_record(monkeypatch):

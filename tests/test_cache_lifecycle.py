@@ -172,3 +172,43 @@ def test_no_untracked_persist_calls_in_query_modules():
                 if ".persist()" in line and not line.lstrip().startswith("#"):
                     offenders.append(f"{os.path.basename(path)}:{i}")
     assert not offenders, f"untracked persist() in query modules: {offenders}"
+
+
+def test_index_storage_calls_live_only_in_the_lifecycle_core():
+    """Structural invariant: the index family modules hold no bucketed
+    write, stamp write, persist or checkpoint of their own — every
+    ``saveAsTable`` / ``bucketBy`` / ``TBLPROPERTIES`` /
+    ``.persist()`` / ``.localCheckpoint()`` of the index code is in
+    operators/index_lifecycle.py, so a storage fix lands once for all
+    three families and index storage cannot grow back per family.
+    Docstrings and comments are excluded (they may name the calls)."""
+    import ast
+    import os
+
+    from aind_protein_data_transformation_spark import operators
+
+    banned_attrs = {"saveAsTable", "bucketBy", "persist", "localCheckpoint"}
+    offenders = []
+    for mod in ("dedup", "embedding_index", "simhash_index"):
+        path = os.path.join(os.path.dirname(operators.__file__), f"{mod}.py")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef))
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and node.attr in banned_attrs:
+                offenders.append(f"{mod}.py:{node.lineno} .{node.attr}")
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and id(node) not in docstrings
+                and "TBLPROPERTIES" in node.value
+            ):
+                offenders.append(f"{mod}.py:{node.lineno} TBLPROPERTIES")
+    assert not offenders, f"index storage outside index_lifecycle: {offenders}"

@@ -110,8 +110,8 @@ def _partial_append(spark, vectors, name, *, vecs=False, bands=False):
     simulator: vecs-only = a crash after the first (new-order) write;
     bands-only = the dangerous state only pre-ordering code or
     tampering could leave."""
-    from aind_protein_data_transformation_spark.operators.dedup import (
-        _table_num_buckets,
+    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
+        table_num_buckets,
     )
 
     base = vectors.select("vec_id", "embedding").localCheckpoint()
@@ -119,14 +119,14 @@ def _partial_append(spark, vectors, name, *, vecs=False, bands=False):
         (
             base.select(F.col("vec_id"), F.expr(_en_expr("embedding")).alias("en"))
             .write.mode("append")
-            .bucketBy(_table_num_buckets(spark, f"{name}_vecs"), "vec_id")
+            .bucketBy(table_num_buckets(spark, f"{name}_vecs"), "vec_id")
             .saveAsTable(f"{name}_vecs")
         )
     if bands:
         (
             _sig_bands(base, "vec_id", "embedding", 32, 4, True)
             .write.mode("append")
-            .bucketBy(_table_num_buckets(spark, f"{name}_bands"), "band", "band_val")
+            .bucketBy(table_num_buckets(spark, f"{name}_bands"), "band", "band_val")
             .sortBy("band", "band_val")
             .saveAsTable(f"{name}_bands")
         )
@@ -336,9 +336,9 @@ def test_signer_geometry_mismatch_raises_and_survives_compaction(spark, vecs, tm
         write_srp_index(
             vecs, "t_egeo", path=str(tmp_path / "egeo"), n_bits=16, n_bands=4
         )
-        with pytest.raises(ValueError, match="n_bits=16"):
+        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
             incremental_srp_pairs(spark, shard, "t_egeo")  # defaults 32/4
-        with pytest.raises(ValueError, match="n_bits=16"):
+        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
             append_srp_shard(spark, shard, "t_egeo")
         # matching geometry works
         assert incremental_srp_pairs(
@@ -346,13 +346,13 @@ def test_signer_geometry_mismatch_raises_and_survives_compaction(spark, vecs, tm
         ).count()
         # the stamp survives in-place compaction...
         compact_srp_index(spark, "t_egeo")
-        with pytest.raises(ValueError, match="n_bits=16"):
+        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
             incremental_srp_pairs(spark, shard, "t_egeo")
         # ...and compact-into-target
         compact_srp_index(
             spark, "t_egeo", target="t_egeo_v2", path=str(tmp_path / "egeo2")
         )
-        with pytest.raises(ValueError, match="n_bits=16"):
+        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
             incremental_srp_pairs(spark, shard, "t_egeo_v2")
         assert incremental_srp_pairs(
             spark, shard, "t_egeo_v2", n_bits=16, n_bands=4
@@ -477,7 +477,7 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
 def test_lost_stamp_detected_and_recoverable(spark, vecs):
     """ADVICE r8: an in-place compaction that crashes after the bands
     overwrite but before the re-stamp leaves a complete-looking index
-    whose geometry stamp is erased — _check_srp_params then passes it
+    whose geometry stamp is erased — the stamp guard then passes it
     UNVALIDATED, and a plain compaction re-run cannot restore the stamp
     (it re-reads the now-unstamped table). verify_srp_index flags the
     state; a re-run with the explicit geometry override restores it."""
@@ -504,7 +504,7 @@ def test_lost_stamp_detected_and_recoverable(spark, vecs):
         compact_srp_index(spark, "t_estamp", n_bits=32, n_bands=4)
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 0
         # and the restored stamp guards probes again
-        with pytest.raises(ValueError, match="n_bits=32"):
+        with pytest.raises(ValueError, match="n_bits: index='32' vs session='16'"):
             incremental_srp_pairs(spark, vecs, "t_estamp", n_bits=16)
         # round-9 review: a PARTIAL stamp (one key unset) must not
         # silently degrade to fully-unstamped on compaction

@@ -5,9 +5,8 @@ a new shard against a persisted corpus index finds EXACTLY the
 shard-corpus near-dup pairs the full batch pipeline finds when run over
 corpus+shard together (restricted to pairs that straddle the split —
 pure shard-shard and corpus-corpus pairs are the batch job's business).
-Also pins that the probe leaves nothing behind in the session cache
-manager (the persist-leak fix: shard signatures are localCheckpoint-ed,
-not persist()-ed).
+That the probe leaves nothing behind in the session cache manager is
+pinned for all three families in tests/test_swap_index.py.
 """
 
 from __future__ import annotations
@@ -149,8 +148,10 @@ def _partial_append(spark, docs, name, *, sigs=False, bands=False):
     bands-only = the dangerous state the pre-ordering code could leave."""
     from aind_protein_data_transformation_spark.operators.dedup import (
         LSH_BAND_SIZE,
-        _table_num_buckets,
         band_rows,
+    )
+    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
+        table_num_buckets,
     )
 
     sig = minhash_signatures(
@@ -160,7 +161,7 @@ def _partial_append(spark, docs, name, *, sigs=False, bands=False):
         (
             sig.select("doc_id", "n", "hs")
             .write.mode("append")
-            .bucketBy(_table_num_buckets(spark, f"{name}_sigs"), "doc_id")
+            .bucketBy(table_num_buckets(spark, f"{name}_sigs"), "doc_id")
             .saveAsTable(f"{name}_sigs")
         )
     if bands:
@@ -168,7 +169,7 @@ def _partial_append(spark, docs, name, *, sigs=False, bands=False):
         (
             band_rows(sig, "doc_id")
             .write.mode("append")
-            .bucketBy(_table_num_buckets(spark, f"{name}_bands"), *key_cols)
+            .bucketBy(table_num_buckets(spark, f"{name}_bands"), *key_cols)
             .sortBy(*key_cols)
             .saveAsTable(f"{name}_bands")
         )
@@ -465,24 +466,6 @@ def test_probe_verify_flag_detects_interrupted_index(spark, sf_dir, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_probe_leaves_cache_manager_empty(spark, split_docs, tmp_path):
-    corpus, shard = split_docs
-    name = "t_incr_cache"
-    write_minhash_index(corpus, name, path=str(tmp_path / "idx"))
-    try:
-        spark.catalog.clearCache()
-        incremental_minhash_pairs(spark, shard, name).count()
-        # the old persist() registered the shard signatures in the SQL
-        # cache manager keyed by plan — a session-lifetime entry that
-        # matched (and silently served) future plans. localCheckpoint's
-        # RDD-level storage is GC-bounded with the DataFrame instead,
-        # so the plan-keyed cache must stay empty.
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
-        spark.sql(f"DROP TABLE IF EXISTS {name}_sigs")
-
-
 # ------------------------------------------------- geometry stamp (r10)
 
 
@@ -496,9 +479,12 @@ def test_minhash_stamp_guards_probe_and_append(spark, split_docs, tmp_path):
     instead."""
     from aind_protein_data_transformation_spark.operators.dedup import (
         MINHASH_STAMP_KEYS,
-        _stamp_minhash_params,
+        _minhash_stamp,
         compact_minhash_index,
         verify_minhash_index,
+    )
+    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
+        apply_stamp,
     )
 
     corpus, shard = split_docs
@@ -551,7 +537,7 @@ def test_minhash_stamp_guards_probe_and_append(spark, split_docs, tmp_path):
             f"ALTER TABLE {name}_bands UNSET TBLPROPERTIES "
             + "(" + ", ".join(f"'{k}'" for k in MINHASH_STAMP_KEYS) + ")"
         )
-        _stamp_minhash_params(spark, name, 3)
+        apply_stamp(spark, f"{name}_bands", _minhash_stamp(3))
         assert verify_minhash_index(spark, name)["missing_stamp_keys"] == 0
     finally:
         for t in (f"{name}_bands", f"{name}_sigs"):

@@ -223,7 +223,7 @@ def test_geometry_stamp_guards_probe_and_append(spark, split_docs, tmp_path):
                 spark, shard, "t_shg", bits=48, n_chunks=3
             ),
         ):
-            with pytest.raises(ValueError, match="built with bits=32/n_chunks=4"):
+            with pytest.raises(ValueError, match="bits: index='32' vs session='48'; chunks: index='4' vs session='3'"):
                 fn()
         # a PARTIAL stamp is corruption, not legacy — raises
         spark.sql(
@@ -396,7 +396,7 @@ def test_lost_simhash_stamp_detected_and_recoverable(spark, split_docs):
         compact_simhash_index(spark, "t_shl", bits=32, n_chunks=4)
         assert verify_simhash_index(spark, "t_shl")["missing_stamp_keys"] == 0
         # the restored stamp guards probes again
-        with pytest.raises(ValueError, match="built with bits=32"):
+        with pytest.raises(ValueError, match="bits: index='32' vs session='48'; chunks: index='4' vs session='3'"):
             incremental_simhash_pairs(spark, shard, "t_shl", bits=48, n_chunks=3)
     finally:
         _drop(spark, "t_shl_bands", "t_shl_sigs")

@@ -27,6 +27,7 @@ from pyspark.errors import AnalysisException
 
 from aind_protein_data_transformation_spark.operators.dedup import (
     MINHASH_STAMP_KEYS,
+    append_minhash_shard,
     compact_minhash_index,
     incremental_minhash_pairs,
     swap_minhash_index,
@@ -34,6 +35,7 @@ from aind_protein_data_transformation_spark.operators.dedup import (
 )
 from aind_protein_data_transformation_spark.operators.embedding_index import (
     SRP_STAMP_KEYS,
+    append_srp_shard,
     compact_srp_index,
     incremental_srp_pairs,
     swap_srp_index,
@@ -41,6 +43,7 @@ from aind_protein_data_transformation_spark.operators.embedding_index import (
 )
 from aind_protein_data_transformation_spark.operators.simhash_index import (
     SIMHASH_STAMP_KEYS,
+    append_simhash_shard,
     compact_simhash_index,
     incremental_simhash_pairs,
     swap_simhash_index,
@@ -51,6 +54,7 @@ from aind_protein_data_transformation_spark.operators.simhash_index import (
 class MinhashFamily:
     sidecar = "sigs"
     stamp_keys = MINHASH_STAMP_KEYS
+    append = staticmethod(append_minhash_shard)
     swap = staticmethod(swap_minhash_index)
     compact = staticmethod(compact_minhash_index)
 
@@ -82,6 +86,7 @@ class MinhashFamily:
 class SrpFamily:
     sidecar = "vecs"
     stamp_keys = SRP_STAMP_KEYS
+    append = staticmethod(append_srp_shard)
     swap = staticmethod(swap_srp_index)
     compact = staticmethod(compact_srp_index)
 
@@ -114,6 +119,7 @@ class SrpFamily:
 class SimhashFamily:
     sidecar = "sigs"
     stamp_keys = SIMHASH_STAMP_KEYS
+    append = staticmethod(append_simhash_shard)
     swap = staticmethod(swap_simhash_index)
     compact = staticmethod(compact_simhash_index)
 
@@ -170,6 +176,27 @@ def _swap_ops(name, target, sidecar):
         f"DROP TABLE {name}_bands__retired",
         f"DROP TABLE {name}_{sidecar}__retired",
     ]
+
+
+@pytest.mark.parametrize("fam", FAMILIES)
+def test_probe_leaves_cache_manager_empty(spark, sf_dir, fam):
+    """write → append → probe leaves the session's plan-keyed cache
+    manager empty for every family: the shared write releases its
+    persisted signed frame before returning, and the append and probe
+    materialize their shard with localCheckpoint, whose RDD-level
+    storage is GC-bounded with the DataFrame. A persist() left behind
+    would be a session-lifetime entry that matches (and silently
+    serves) future plans."""
+    name = "swp_cache"
+    _drop_all(spark, name)
+    spark.catalog.clearCache()
+    try:
+        shard = fam.build(spark, sf_dir, name)
+        fam.append(spark, shard, name)
+        assert fam.probe(spark, shard, name)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    finally:
+        _drop_all(spark, name)
 
 
 @pytest.mark.parametrize("fam", FAMILIES)
