@@ -358,17 +358,17 @@ def write_chunks_zarr(
 def write_zarr_v2_store(
     chunk_df: DataFrame,
     store_path: str,
-    shape: Sequence[int],
+    shapes: dict[str, Sequence[int]],
     chunks: Sequence[int],
-    dtype: str,
+    dtypes: dict[str, str],
     compress_level: int = 3,
 ) -> None:
-    """Dependency-free **format-valid zarr v2** array store.
+    """Dependency-free **format-valid zarr v2** array stores, one per stack.
 
     Closes the gap between :func:`write_chunks_files` (private layout,
     needs :func:`read_chunk_file`) and the import-gated
-    :func:`write_chunks_zarr` (needs zarr+numcodecs): this sink writes a
-    real zarr v2 array any zarr reader opens, using only the stdlib —
+    :func:`write_chunks_zarr` (needs zarr+numcodecs): this sink writes
+    real zarr v2 arrays any zarr reader opens, using only the stdlib —
     ``.zarray`` metadata plus one file per chunk keyed
     ``t/c/gz/gy/gx`` (``dimension_separator="/"``, the reference's
     layout, czi_to_zarr.py:551). Codec is ``zlib`` (a numcodecs
@@ -377,33 +377,46 @@ def write_zarr_v2_store(
     only the compressor id differs, swapped by one argument where
     numcodecs exists.
 
+    ``shapes`` and ``dtypes`` map each ``stack_id`` in ``chunk_df`` to
+    its array's TCZYX shape and dtype. The literal ``{stack_id}`` in
+    ``store_path`` is replaced by each stack's id (``str.replace``, so
+    other braces in the path survive); without it the path names one
+    store and only one stack may be given.
+
     Per the v2 spec, EDGE CHUNKS ARE STORED FULL-SIZE: a block that
     under-fills its chunk is zero-padded to ``chunks`` before encoding
-    (fill_value 0). Executors write their own co-located chunks via
-    ``foreachPartition`` — chunk grid cells never overlap, so no write
-    coordination is needed; the driver writes only the metadata key.
+    (fill_value 0). Every stack's chunks land in ONE ``foreachPartition``
+    job: each executor routes a row to its stack's store by
+    ``row.stack_id`` — chunk grid cells never overlap, so no write
+    coordination is needed; the driver writes only the metadata keys.
     """
     import json as _json
 
     import numpy as np
 
-    shape_t = [int(s) for s in shape]
+    if "{stack_id}" not in store_path and len(shapes) > 1:
+        raise ValueError(
+            f"{len(shapes)} stacks would share the store {store_path!r}: "
+            "put '{stack_id}' in the path"
+        )
     chunks_t = [int(c) for c in chunks]
-    dtype_str = np.dtype(dtype).str
-    os.makedirs(store_path, exist_ok=True)
-    meta = {
-        "zarr_format": 2,
-        "shape": shape_t,
-        "chunks": chunks_t,
-        "dtype": dtype_str,
-        "compressor": {"id": "zlib", "level": int(compress_level)},
-        "fill_value": 0,
-        "order": "C",
-        "filters": None,
-        "dimension_separator": "/",
-    }
-    with open(os.path.join(store_path, ".zarray"), "w") as fh:
-        _json.dump(meta, fh, indent=2)
+    stores = {sid: store_path.replace("{stack_id}", sid) for sid in shapes}
+    dtype_strs = {sid: np.dtype(dtypes[sid]).str for sid in shapes}
+    for sid, path in stores.items():
+        os.makedirs(path, exist_ok=True)
+        meta = {
+            "zarr_format": 2,
+            "shape": [int(s) for s in shapes[sid]],
+            "chunks": chunks_t,
+            "dtype": dtype_strs[sid],
+            "compressor": {"id": "zlib", "level": int(compress_level)},
+            "fill_value": 0,
+            "order": "C",
+            "filters": None,
+            "dimension_separator": "/",
+        }
+        with open(os.path.join(path, ".zarray"), "w") as fh:
+            _json.dump(meta, fh, indent=2)
 
     _, _, cz, cy, cx = chunks_t
 
@@ -413,6 +426,7 @@ def write_zarr_v2_store(
         import numpy as _np
 
         for row in rows:
+            dtype_str = dtype_strs[row.stack_id]
             block = _np.frombuffer(bytes(row.payload), dtype=dtype_str).reshape(
                 list(row.shape)
             )
@@ -420,7 +434,7 @@ def write_zarr_v2_store(
             full[: block.shape[0], : block.shape[1], : block.shape[2]] = block
             gz, gy, gx = row.z0 // cz, row.y0 // cy, row.x0 // cx
             d = os.path.join(
-                store_path, str(int(row.t)), str(int(row.c)), str(gz), str(gy)
+                stores[row.stack_id], str(int(row.t)), str(int(row.c)), str(gz), str(gy)
             )
             os.makedirs(d, exist_ok=True)
             with open(os.path.join(d, str(gx)), "wb") as fh:

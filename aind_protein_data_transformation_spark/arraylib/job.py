@@ -152,36 +152,34 @@ def run_job(
     voxels = decode.pad_to_5d(decode.decode_stacks(content, decoder)).persist()
     current = voxels
     try:
-        # Per-stack full-res shapes, needed up front: chunk extents at every
-        # level clamp to the DECLARED dims (min(chunk, shape - origin), the
-        # reference's fixed-chunk contract zarr_writer.py:62-64), never to
-        # whichever voxels happen to be present — so a sparse tail (a decoder
-        # that elides empty voxels) can't silently truncate a block. Also
-        # feeds the OME-NGFF sidecars below. One tiny agg over the persisted
-        # voxels; O(stacks) rows.
-        shapes = {
-            row["stack_id"]: (
-                row["mt"] + 1, row["mc"] + 1, row["mz"] + 1, row["my"] + 1, row["mx"] + 1
-            )
-            for row in voxels.groupBy("stack_id")
-            .agg(
-                F.max("t").alias("mt"),
-                F.max("c").alias("mc"),
-                F.max("z").alias("mz"),
-                F.max("y").alias("my"),
-                F.max("x").alias("mx"),
-            )
+        # Per-stack full-res shapes and dtypes, needed up front: chunk
+        # extents at every level clamp to the DECLARED dims (min(chunk,
+        # shape - origin), the reference's fixed-chunk contract
+        # zarr_writer.py:62-64), never to whichever voxels happen to be
+        # present — so a sparse tail (a decoder that elides empty voxels)
+        # can't silently truncate a block. Also feeds the zarr sink and the
+        # OME-NGFF sidecars below. One tiny agg over the persisted voxels
+        # (dtype is constant per stack, so it groups without splitting a
+        # stack); O(stacks) rows.
+        shapes, stack_dtypes = {}, {}
+        for row in (
+            voxels.groupBy("stack_id", "dtype")
+            .agg(*(F.max(axis).alias(axis) for axis in "tczyx"))
             .collect()
-        }
-
-        # Per-stack dtype, one tiny distinct over the persisted voxels;
-        # needed inside the level loop when the zarr_v2 sink is on.
-        stack_dtypes = {
-            row["stack_id"]: row["dtype"]
-            for row in voxels.select("stack_id", "dtype").distinct().collect()
-        }
+        ):
+            shapes[row["stack_id"]] = tuple(row[axis] + 1 for axis in "tczyx")
+            stack_dtypes[row["stack_id"]] = row["dtype"]
 
         out_root = settings.output_root
+        zarr_root = os.path.join(settings.output_directory, "zarr")
+        if settings.zarr_v2:
+            # one zarr group per stack holding an array per level
+            # (the reference's per-stack group, czi_to_zarr.py:483-485)
+            for sid in shapes:
+                grp = os.path.join(zarr_root, sid)
+                os.makedirs(grp, exist_ok=True)
+                with open(os.path.join(grp, ".zgroup"), "w") as fh:
+                    json.dump({"zarr_format": 2}, fh)
         spatial = {sid: shape[2:] for sid, shape in shapes.items()}
         fz, fy, fx = settings.scale_factor
         for lvl in range(settings.downsample_levels):
@@ -200,28 +198,22 @@ def run_job(
             )
             blocks.write_level_parquet(chunked, out_root, lvl)
             if settings.zarr_v2:
-                # per-stack format-valid zarr v2 arrays: <out>/zarr/<stack>/
-                # <lvl> under a .zgroup per stack (the reference's per-stack
-                # group, czi_to_zarr.py:483-485). Stack count is O(driver
-                # loop) by design — the reference iterates stacks serially
-                # too; within a stack the chunk writes stay distributed.
-                for sid, (z, y, x) in spatial.items():
-                    grp = os.path.join(settings.output_directory, "zarr", sid)
-                    os.makedirs(grp, exist_ok=True)
-                    with open(os.path.join(grp, ".zgroup"), "w") as fh:
-                        json.dump({"zarr_format": 2}, fh)
-                    blocks.write_zarr_v2_store(
-                        chunked.filter(F.col("stack_id") == sid),
-                        os.path.join(grp, str(lvl)),
-                        (shapes[sid][0], shapes[sid][1], z, y, x),
-                        (1, 1, *settings.chunk_size),
-                        stack_dtypes[sid],
-                    )
+                # every stack's zarr v2 array for this level in one job,
+                # read back from the parquet just written — the encode runs
+                # once per level (the reference's write-then-read-back,
+                # czi_to_zarr.py:527-528). The explicit schema skips the
+                # footer-inference job.
+                blocks.write_zarr_v2_store(
+                    spark.read.schema(chunked.schema).parquet(f"{out_root}/level={lvl}"),
+                    os.path.join(zarr_root, "{stack_id}", str(lvl)),
+                    {sid: (*shapes[sid][:2], *spatial[sid]) for sid in shapes},
+                    (1, 1, *settings.chunk_size),
+                    stack_dtypes,
+                )
             if lvl > 0:
                 # level k is written (and so materialized): level k-1
                 # has no consumer left
                 previous.unpersist()
-        dtypes = stack_dtypes
         # Metadata always lands in the local output_directory (a few KB per
         # stack) — including S3 runs, where the data goes to s3a:// but the
         # sidecars must not be silently dropped. A production deployment
@@ -240,7 +232,7 @@ def run_job(
                 scale_factor=settings.scale_factor,
                 voxel_size=(1.0, 1.0, 1.0),
                 chunks=(1, 1, *settings.chunk_size),
-                channel_minmax=[ome.dtype_range(dtypes[stack_id])] * shape[1],
+                channel_minmax=[ome.dtype_range(stack_dtypes[stack_id])] * shape[1],
             )
             ome.write_ome_ngff_json(attrs, metadata_dir, f"{stack_name}.zattrs")
     finally:

@@ -57,25 +57,27 @@ def downsample_once(
 
     ``groupBy(t, c, z div fz, y div fy, x div fx).avg(v)`` — Catalyst
     plans a partial+final hash aggregate; no pre-repartition needed (the
-    exchange after partial agg moves already-reduced rows).
+    exchange after partial agg moves already-reduced rows). ``dtype`` is
+    a grouping key, not a ``first`` aggregate: it is constant per stack,
+    so the groups are the same, and a string ``first`` buffer would
+    force a sort aggregate over every input voxel.
     """
     fz, fy, fx = scale_factor
     value = F.avg("v")
     if preserve_dtype:
         # Truncation-toward-zero for integer dtypes == numpy astype.
         value = F.when(
-            F.first("dtype").isin(*_INT_DTYPES), F.avg("v").cast("long").cast("double")
+            F.col("dtype").isin(*_INT_DTYPES), F.avg("v").cast("long").cast("double")
         ).otherwise(F.avg("v"))
     return df.groupBy(
         "stack_id",
+        "dtype",
         "t",
         "c",
         (F.col("z") / F.lit(fz)).cast("long").alias("z"),
         (F.col("y") / F.lit(fy)).cast("long").alias("y"),
         (F.col("x") / F.lit(fx)).cast("long").alias("x"),
-    ).agg(F.first("dtype").alias("dtype"), value.alias("v")).select(
-        "stack_id", "dtype", "t", "c", "z", "y", "x", "v"
-    )
+    ).agg(value.alias("v"))
 
 
 def build_pyramid(

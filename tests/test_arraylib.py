@@ -74,6 +74,21 @@ def test_downsample_preserves_float_dtype_without_truncation(spark):
     assert vals == [1.0, 3.25]
 
 
+def test_downsample_once_plans_hash_aggregate(spark):
+    """The windowed mean is a partial+final hash aggregate: dtype is a
+    grouping key, so no string ``first`` buffer forces a sort aggregate
+    that sorts every input voxel."""
+    arr = np.arange(2 * 4 * 6 * 5, dtype=np.uint16).reshape(1, 2, 4, 6, 5)
+    plan = (
+        pyramid.downsample_once(voxels_df(spark, arr))
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "SortAggregate" not in plan, plan[:3000]
+    assert plan.count("HashAggregate") >= 2, plan[:3000]  # partial + final
+
+
 def test_pyramid_cascade_is_levelwise_not_deep_mean(spark):
     # Truncation happens per level: values where mean-of-truncated-means
     # differs from the deep mean pin the levelwise recursion.
@@ -248,21 +263,49 @@ def test_block_shape_for_uses_spatial_dims():
 # ------------------------------------------------------------ decode + stacks
 
 
+#: TCZYX header shapes of the stacks in the ``stack_dir`` fixture.
+FIXTURE_SHAPES = {
+    "tile_a(1).czi": (1, 1, 2, 3, 4),
+    "tile_a(2).czi": (1, 2, 2, 2, 2),
+    "plain.czi": (1, 1, 1, 2, 2),
+}
+
+
+def fixture_array(shape) -> np.ndarray:
+    """The voxels ``decode.synthetic_decoder`` yields for a header shape."""
+    return (np.arange(np.prod(shape), dtype=np.int64) % 1000).reshape(shape).astype(np.uint16)
+
+
+def read_zarr_v2(store: str) -> tuple[dict, np.ndarray]:
+    """Decode a zlib zarr v2 array with the stdlib: ``(.zarray, array)``.
+    Every chunk key of the grid must be present, and no other."""
+    import zlib as _zlib
+
+    meta = json.load(open(os.path.join(store, ".zarray")))
+    shape, chunks = meta["shape"], meta["chunks"]
+    grid = [-(-s // c) for s, c in zip(shape, chunks)]
+    keys = {
+        os.path.relpath(p, store).replace(os.sep, "/")
+        for p in glob.glob(os.path.join(store, *["*"] * len(shape)))
+    }
+    assert keys == {"/".join(map(str, idx)) for idx in np.ndindex(*grid)}, store
+    padded = np.zeros([g * c for g, c in zip(grid, chunks)], dtype=meta["dtype"])
+    for idx in np.ndindex(*grid):
+        buf = _zlib.decompress(open(os.path.join(store, *map(str, idx)), "rb").read())
+        padded[tuple(slice(i * c, (i + 1) * c) for i, c in zip(idx, chunks))] = np.frombuffer(
+            buf, dtype=meta["dtype"]
+        ).reshape(chunks)
+    return meta, padded[tuple(slice(0, s) for s in shape)]
+
+
 @pytest.fixture()
 def stack_dir(tmp_path):
     d = tmp_path / "stacks"
     d.mkdir()
-    for name, shape in [
-        ("tile_a(1).czi", (1, 1, 2, 3, 4)),
-        ("tile_a(2).czi", (1, 2, 2, 2, 2)),
-        ("plain.czi", (1, 1, 1, 2, 2)),
-        ("ignored.txt", None),
-    ]:
-        if shape is None:
-            (d / name).write_bytes(b"not a stack")
-        else:
-            header = ",".join(str(s) for s in shape).encode() + b";"
-            (d / name).write_bytes(header)
+    for name, shape in FIXTURE_SHAPES.items():
+        header = ",".join(str(s) for s in shape).encode() + b";"
+        (d / name).write_bytes(header)
+    (d / "ignored.txt").write_bytes(b"not a stack")
     return str(d)
 
 
@@ -660,7 +703,7 @@ def test_write_zarr_v2_store_is_format_valid(spark, tmp_path):
     chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
     store = str(tmp_path / "v2.zarr")
     blocks.write_zarr_v2_store(
-        chunk_df, store, arr.shape, (1, 1, 2, 2, 2), "uint16"
+        chunk_df, store, {"s0": arr.shape}, (1, 1, 2, 2, 2), {"s0": "uint16"}
     )
 
     meta = json.loads(open(os.path.join(store, ".zarray")).read())
@@ -740,3 +783,63 @@ def test_run_job_zarr_v2_sink(spark, stack_dir, tmp_path):
             ).reshape(2, 2, 2)
             rebuilt[0, 0, :, gy * 2 : gy * 2 + 2, gx * 2 : gx * 2 + 2] = block
     np.testing.assert_array_equal(rebuilt[:, :, :2, :3, :4], arr)
+
+    # every stack's store at every level: .zarray shape and dtype, one
+    # chunk file per grid cell, and the stdlib decode equal to the numpy
+    # cascade — pins the row -> store routing of the one-job sink,
+    # including the 2-channel tile_a(2)
+    for name, shape in FIXTURE_SHAPES.items():
+        grp = os.path.join(out, "zarr", name)
+        assert json.load(open(os.path.join(grp, ".zgroup"))) == {"zarr_format": 2}
+        level = fixture_array(shape)
+        for lvl in range(2):
+            if lvl:
+                level = np_windowed_mean(level, (1, 1, 2, 2, 2))
+            meta, got = read_zarr_v2(os.path.join(grp, str(lvl)))
+            assert meta["shape"] == list(level.shape), (name, lvl)
+            assert meta["dtype"] == "<u2", (name, lvl)
+            np.testing.assert_array_equal(got, level, err_msg=f"{name} level {lvl}")
+
+
+def test_write_zarr_v2_store_needs_a_stack_placeholder_for_several_stacks(spark, tmp_path):
+    arr = np.zeros((1, 1, 2, 2, 2), dtype=np.uint16)
+    chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
+    shapes = {"a": arr.shape, "b": arr.shape}
+    dtypes = {"a": "uint16", "b": "uint16"}
+    with pytest.raises(ValueError, match="share the store"):
+        blocks.write_zarr_v2_store(chunk_df, str(tmp_path / "one"), shapes, (1, 1, 2, 2, 2), dtypes)
+    # braces elsewhere in the path survive the substitution
+    store = str(tmp_path / "{x}" / "{stack_id}")
+    blocks.write_zarr_v2_store(
+        chunk_df.filter(F.lit(False)), store, shapes, (1, 1, 2, 2, 2), dtypes
+    )
+    assert sorted(os.listdir(tmp_path / "{x}")) == ["a", "b"]
+
+
+def test_zarr_sink_adds_one_job_per_level(spark, stack_dir, tmp_path):
+    """The zarr sink writes every stack's store of a level in one Spark
+    job, whatever the stack count: run_job with zarr_v2 runs exactly
+    downsample_levels more jobs than without it (3 stacks here)."""
+    sc = spark.sparkContext
+    levels = 2
+
+    def jobs_of(zarr_v2: bool) -> int:
+        group = f"zarr-sink-jobs-{zarr_v2}-{tmp_path.name}"
+        settings = StackJobSettings(
+            input_source=stack_dir,
+            output_directory=str(tmp_path / f"out-{zarr_v2}"),
+            downsample_levels=levels,
+            chunk_size=(2, 2, 2),
+            zarr_v2=zarr_v2,
+        )
+        sc.setJobGroup(group, "run_job")
+        try:
+            assert run_job(spark, settings).status_code == 0
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        # job starts reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_of(True) - jobs_of(False) == levels
