@@ -10,11 +10,13 @@ every stage over Spark DataFrames:
   pruning, A4 regex rename.
 - :mod:`.decode`  — A5 binary->voxel decode (``mapInPandas``), A6 squeeze,
   A7 extract_data, A8 pad-to-5D.
-- :mod:`.pyramid` — A9 grid repartition, A10 dtype-preserving windowed
-  mean, A11 cascading multiscale, A12 dtype-range stats.
-- :mod:`.ome`     — A13-A16 OME-NGFF metadata generation (pure functions).
-- :mod:`.blocks`  — A17 codec config, A18 chunk->block expansion, A19
-  block-slice enumeration, A20/A21 blocked sinks (parquet; optional zarr).
+- :mod:`.pyramid` — A10 dtype-preserving windowed mean, A11 cascading
+  multiscale.
+- :mod:`.ome`     — A12 dtype-range channel stats, A13-A16 OME-NGFF
+  metadata generation (pure functions).
+- :mod:`.blocks`  — A9 rechunk (the chunk encode's grid shuffle), A17
+  fixed codecs (parquet zstd, zarr zlib), A18 chunk->block expansion,
+  A19 block-slice enumeration, A20/A21 sinks (zstd parquet; zarr v2).
 - :mod:`.job`     — A24/A25 settings + end-to-end runner.
 
 Data model: a **long-form voxel table** ``(stack_id, t, c, z, y, x, v)``

@@ -5,9 +5,9 @@ blocks near a bytes target (``compress/zarr_writer.py:51-120``), then
 streams block-by-block to keep the scheduler bounded at terabyte scale
 (zarr_writer.py:188-213). In Spark the same levers are
 ``spark.sql.files.maxPartitionBytes`` / AQE advisory sizes and bounded
-tasks — so the primary sink here is partitioned zstd parquet and the
-sizing helpers exist for (a) parity with the reference's numbers and
-(b) computing rows-per-file targets for ``maxRecordsPerFile``.
+tasks, so the sizing helpers exist for parity with the reference's
+numbers. The two sinks are partitioned zstd parquet and a
+dependency-free zarr v2 store (zlib, level :data:`ZARR_ZLIB_LEVEL`).
 """
 
 from __future__ import annotations
@@ -18,10 +18,9 @@ from collections.abc import Iterator, Sequence
 
 from pyspark.sql import DataFrame
 
-#: Parity with the reference's compressor defaults (models.py:52-56):
-#: blosc zstd level 3 with byte-shuffle. The parquet sink maps this to
-#: parquet's zstd codec; the optional zarr sink uses it verbatim.
-DEFAULT_COMPRESSOR = {"cname": "zstd", "clevel": 3, "shuffle": "shuffle"}
+#: zlib level of the zarr v2 chunks: the reference's blosc-zstd level 3
+#: (models.py:52-56), with zlib standing in for blosc.
+ZARR_ZLIB_LEVEL = 3
 
 
 def nbytes(shape: Sequence[int], itemsize: int) -> int:
@@ -144,24 +143,20 @@ def gen_block_ranges(
             return
 
 
-def write_level_parquet(df: DataFrame, output_path: str, level: int, max_records_per_file: int = 0) -> None:
+def write_level_parquet(df: DataFrame, output_path: str, level: int) -> None:
     """Materialize one pyramid level as zstd parquet under ``level=<k>/``.
 
     The Spark analog of A20/A21 (create_dataset + blocked store): Spark
     tasks are already bounded writers, so the blocked-store machinery
-    reduces to a partitioned write; ``maxRecordsPerFile`` plays the role
-    of the bytes-targeted block shape.
+    reduces to a partitioned write.
     """
-    writer = df.write.mode("overwrite").option("compression", "zstd")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(f"{output_path}/level={level}")
+    df.write.mode("overwrite").option("compression", "zstd").parquet(f"{output_path}/level={level}")
 
 
 def encode_chunks(
     voxels: DataFrame,
-    chunk_size: Sequence[int] = (128, 128, 128),
-    stack_spatial_shapes: dict[str, tuple[int, int, int]] | None = None,
+    chunk_size: Sequence[int],
+    stack_spatial_shapes: dict[str, Sequence[int]],
 ) -> DataFrame:
     """Voxel rows -> chunk rows ``(stack_id, t, c, z0, y0, x0, shape, payload)``.
 
@@ -173,40 +168,24 @@ def encode_chunks(
 
     Block extents follow the reference's fixed-chunk contract
     (zarr_writer.py: chunk extents clamped to array bounds, NOT derived
-    from which voxels happen to be present): pass
-    ``stack_spatial_shapes`` ({stack_id: (Z, Y, X)}) to clamp each cell
-    to ``min(chunk, shape - origin)``. Without declared shapes the
-    extent falls back to the observed max voxel and the group is
-    REQUIRED to be dense — a sparse group raises instead of silently
-    encoding a truncated block that a zarr region-update would then
-    under-write.
+    from which voxels happen to be present): ``stack_spatial_shapes``
+    ({stack_id: (Z, Y, X)}) clamps each cell to ``min(chunk, shape -
+    origin)``, and voxels missing from a cell stay zero.
     """
     import numpy as np
     import pandas as pd
 
     cz, cy, cx = (int(c) for c in chunk_size)
-    declared = dict(stack_spatial_shapes) if stack_spatial_shapes else None
 
     def encode(pdf: pd.DataFrame) -> pd.DataFrame:
         dtype = pdf["dtype"].iloc[0]
         z0 = int(pdf["gz"].iloc[0]) * cz
         y0 = int(pdf["gy"].iloc[0]) * cy
         x0 = int(pdf["gx"].iloc[0]) * cx
-        if declared is not None:
-            sz, sy, sx = declared[pdf["stack_id"].iloc[0]]
-            dz = min(cz, sz - z0)
-            dy = min(cy, sy - y0)
-            dx = min(cx, sx - x0)
-        else:
-            dz = int(pdf["z"].max()) - z0 + 1
-            dy = int(pdf["y"].max()) - y0 + 1
-            dx = int(pdf["x"].max()) - x0 + 1
-            if len(pdf) != dz * dy * dx:
-                raise ValueError(
-                    f"sparse chunk group at origin ({z0},{y0},{x0}): "
-                    f"{len(pdf)} voxels for extent {dz}x{dy}x{dx}; pass "
-                    "stack_spatial_shapes to encode sparse inputs"
-                )
+        sz, sy, sx = stack_spatial_shapes[pdf["stack_id"].iloc[0]]
+        dz = min(cz, sz - z0)
+        dy = min(cy, sy - y0)
+        dx = min(cx, sx - x0)
         block = np.zeros((dz, dy, dx), dtype=dtype)
         block[pdf["z"] - z0, pdf["y"] - y0, pdf["x"] - x0] = pdf["v"].to_numpy()
         return pd.DataFrame(
@@ -241,141 +220,22 @@ def encode_chunks(
     )
 
 
-def write_chunks_files(
-    chunk_df: DataFrame,
-    store_path: str,
-    level: int,
-    chunk_size: Sequence[int] = (128, 128, 128),
-    compress_level: int = 3,
-) -> None:
-    """Zarr-layout chunk-file sink, dependency-free (A20/A21 fidelity).
-
-    Each chunk row lands as its own compressed file at
-    ``<store>/<level>/<t>.<c>.<gz>/<gy>/<gx>`` — the reference's
-    ``dimension_separator="/"`` layout (czi_to_zarr.py:551) with zlib
-    standing in for blosc (numcodecs absent here; ``write_chunks_zarr``
-    is the byte-identical variant when it is installed). Runs as
-    ``foreachPartition``: every executor writes its own co-located
-    chunks, no driver involvement — the distributed analog of the
-    reference's bounded sequential blocked store (zarr_writer.py:188-213).
-    """
-    import json as _json
-
-    level_dir = os.path.join(store_path, str(level))
-    cz, cy, cx = (int(c) for c in chunk_size)
-
-    def write_partition(rows) -> None:
-        import zlib
-
-        for row in rows:
-            gz, gy, gx = row.z0 // cz, row.y0 // cy, row.x0 // cx
-            # one group per stack, matching the reference's per-stack
-            # zarr group (czi_to_zarr.py:483-485)
-            d = os.path.join(level_dir, row.stack_id, f"{row.t}.{row.c}.{gz}", str(gy))
-            os.makedirs(d, exist_ok=True)
-            payload = zlib.compress(bytes(row.payload), compress_level)
-            meta = _json.dumps(
-                {"shape": list(row.shape), "dtype": row.dtype, "z0": row.z0, "y0": row.y0, "x0": row.x0}
-            ).encode()
-            with open(os.path.join(d, str(gx)), "wb") as fh:
-                fh.write(len(meta).to_bytes(4, "big") + meta + payload)
-
-    os.makedirs(level_dir, exist_ok=True)
-    chunk_df.foreachPartition(write_partition)
-
-
-def read_chunk_file(path: str):
-    """Read one chunk file written by :func:`write_chunks_files` back to
-    ``(meta_dict, ndarray)`` — the verification path for the sink."""
-    import json as _json
-    import zlib
-
-    import numpy as np
-
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    n = int.from_bytes(raw[:4], "big")
-    meta = _json.loads(raw[4 : 4 + n])
-    block = np.frombuffer(zlib.decompress(raw[4 + n :]), dtype=meta["dtype"]).reshape(
-        meta["shape"]
-    )
-    return meta, block
-
-
-def write_chunks_zarr(
-    chunk_df: DataFrame,
-    store_path: str,
-    shape: Sequence[int],
-    chunks: Sequence[int],
-    dtype: str,
-    compressor: dict | None = None,
-) -> bool:
-    """Optional byte-fidelity zarr sink via ``foreachPartition``.
-
-    Each executor partition opens the store and writes its chunk rows —
-    the distributed analog of the reference's sequential blocked store
-    (zarr_writer.py:188-213), safe because chunk rows never overlap.
-    Returns False (no-op) when zarr/numcodecs are not installed; parquet
-    remains the primary sink.
-    """
-    try:
-        import numcodecs  # noqa: F401
-        import zarr  # noqa: F401
-    except ImportError:
-        return False
-
-    comp = dict(DEFAULT_COMPRESSOR if compressor is None else compressor)
-    shape_t = tuple(int(s) for s in shape)
-    chunks_t = tuple(int(c) for c in chunks)
-
-    def write_partition(rows) -> None:
-        import numcodecs as nc
-        import numpy as np
-        import zarr as za
-
-        shuffle = {"noshuffle": 0, "shuffle": 1, "bitshuffle": 2}.get(
-            str(comp.get("shuffle", "shuffle")), 1
-        )
-        blosc = nc.Blosc(cname=comp.get("cname", "zstd"), clevel=int(comp.get("clevel", 3)), shuffle=shuffle)
-        arr = za.open_array(
-            store_path, mode="a", shape=shape_t, chunks=chunks_t, dtype=dtype, compressor=blosc
-        )
-        for row in rows:
-            block = np.frombuffer(row.payload, dtype=dtype).reshape(row.shape)
-            z0, y0, x0 = int(row.z0), int(row.y0), int(row.x0)
-            arr[
-                int(row.t),
-                int(row.c),
-                z0 : z0 + block.shape[0],
-                y0 : y0 + block.shape[1],
-                x0 : x0 + block.shape[2],
-            ] = block
-
-    chunk_df.foreachPartition(write_partition)
-    return True
-
-
 def write_zarr_v2_store(
     chunk_df: DataFrame,
     store_path: str,
     shapes: dict[str, Sequence[int]],
     chunks: Sequence[int],
     dtypes: dict[str, str],
-    compress_level: int = 3,
 ) -> None:
     """Dependency-free **format-valid zarr v2** array stores, one per stack.
 
-    Closes the gap between :func:`write_chunks_files` (private layout,
-    needs :func:`read_chunk_file`) and the import-gated
-    :func:`write_chunks_zarr` (needs zarr+numcodecs): this sink writes
-    real zarr v2 arrays any zarr reader opens, using only the stdlib —
-    ``.zarray`` metadata plus one file per chunk keyed
+    Writes real zarr v2 arrays any zarr reader opens, using only the
+    stdlib — ``.zarray`` metadata plus one file per chunk keyed
     ``t/c/gz/gy/gx`` (``dimension_separator="/"``, the reference's
     layout, czi_to_zarr.py:551). Codec is ``zlib`` (a numcodecs
     built-in) standing in for the reference's blosc-zstd — the format
     contract (metadata, keys, C-order full-chunk buffers) is exact;
-    only the compressor id differs, swapped by one argument where
-    numcodecs exists.
+    only the compressor id differs.
 
     ``shapes`` and ``dtypes`` map each ``stack_id`` in ``chunk_df`` to
     its array's TCZYX shape and dtype. The literal ``{stack_id}`` in
@@ -409,7 +269,7 @@ def write_zarr_v2_store(
             "shape": [int(s) for s in shapes[sid]],
             "chunks": chunks_t,
             "dtype": dtype_strs[sid],
-            "compressor": {"id": "zlib", "level": int(compress_level)},
+            "compressor": {"id": "zlib", "level": ZARR_ZLIB_LEVEL},
             "fill_value": 0,
             "order": "C",
             "filters": None,
@@ -438,6 +298,6 @@ def write_zarr_v2_store(
             )
             os.makedirs(d, exist_ok=True)
             with open(os.path.join(d, str(gx)), "wb") as fh:
-                fh.write(zlib.compress(full.tobytes(order="C"), compress_level))
+                fh.write(zlib.compress(full.tobytes(order="C"), ZARR_ZLIB_LEVEL))
 
     chunk_df.foreachPartition(write_partition)

@@ -23,7 +23,7 @@ import json
 import os
 import sys
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import SparkSession
 
@@ -38,10 +38,6 @@ class StackJobSettings:
     output_directory: str
     num_of_partitions: int = 1
     partition_to_process: int = 0
-    compressor_name: str = "blosc"
-    compressor_kwargs: dict = field(
-        default_factory=lambda: dict(blocks.DEFAULT_COMPRESSOR)
-    )
     chunk_size: tuple[int, int, int] = pyramid.DEFAULT_CHUNK_SIZE
     scale_factor: tuple[int, int, int] = pyramid.DEFAULT_SCALE_FACTOR
     downsample_levels: int = pyramid.DEFAULT_N_LEVELS
@@ -50,8 +46,7 @@ class StackJobSettings:
     #: also emit a dependency-free zarr v2 store per stack per level
     #: (blocks.write_zarr_v2_store) alongside the parquet levels — a
     #: format-valid twin of the reference's OME-Zarr output, readable
-    #: by any zarr reader (zlib codec; blosc via write_chunks_zarr
-    #: where numcodecs exists).
+    #: by any zarr reader (zlib codec where the reference uses blosc).
     zarr_v2: bool = False
 
     def __post_init__(self) -> None:
@@ -59,6 +54,14 @@ class StackJobSettings:
             raise ValueError("partition_to_process must be in [0, num_of_partitions)")
         if self.downsample_levels < 1:
             raise ValueError("downsample_levels must be >= 1")
+        for name in ("chunk_size", "scale_factor"):
+            value = getattr(self, name)
+            if not (
+                isinstance(value, (tuple, list))
+                and len(value) == 3
+                and all(isinstance(v, int) and v >= 1 for v in value)
+            ):
+                raise ValueError(f"{name} must be 3 ints >= 1, got {value!r}")
 
     @property
     def output_root(self) -> str:
@@ -180,21 +183,20 @@ def run_job(
                 os.makedirs(grp, exist_ok=True)
                 with open(os.path.join(grp, ".zgroup"), "w") as fh:
                     json.dump({"zarr_format": 2}, fh)
-        spatial = {sid: shape[2:] for sid, shape in shapes.items()}
-        fz, fy, fx = settings.scale_factor
         for lvl in range(settings.downsample_levels):
             previous = current
             if lvl > 0:
                 # persist each level before its write so level k+1 derives
                 # from the materialized level k, not a recomputed lineage
                 current = pyramid.downsample_once(current, settings.scale_factor).persist()
-                # ceil-division shape recurrence (reference czi_to_zarr.py:181-183)
-                spatial = {
-                    sid: (-(-z // fz), -(-y // fy), -(-x // fx))
-                    for sid, (z, y, x) in spatial.items()
-                }
+            level_shapes = {
+                sid: ome.level_shape(shape, settings.scale_factor, lvl)
+                for sid, shape in shapes.items()
+            }
             chunked = blocks.encode_chunks(
-                current, settings.chunk_size, stack_spatial_shapes=spatial
+                current,
+                settings.chunk_size,
+                {sid: shape[2:] for sid, shape in level_shapes.items()},
             )
             blocks.write_level_parquet(chunked, out_root, lvl)
             if settings.zarr_v2:
@@ -206,7 +208,7 @@ def run_job(
                 blocks.write_zarr_v2_store(
                     spark.read.schema(chunked.schema).parquet(f"{out_root}/level={lvl}"),
                     os.path.join(zarr_root, "{stack_id}", str(lvl)),
-                    {sid: (*shapes[sid][:2], *spatial[sid]) for sid in shapes},
+                    level_shapes,
                     (1, 1, *settings.chunk_size),
                     stack_dtypes,
                 )

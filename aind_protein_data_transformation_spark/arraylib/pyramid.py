@@ -1,4 +1,4 @@
-"""Multiscale pyramid (SURVEY.md §2A A9-A12) — the reference's core math.
+"""Multiscale pyramid (SURVEY.md §2A A10-A11) — the reference's core math.
 
 The reference computes each level with ``xarray_multiscale.multiscale(
 reduction=windowed_mean, preserve_dtype=True)`` (czi_to_zarr.py:342-386)
@@ -17,10 +17,9 @@ divisible by the factor) average over the voxels present.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: Reference defaults: 4 levels, 2×2×2, 128³ chunks (models.py:62-76).
@@ -31,27 +30,9 @@ DEFAULT_CHUNK_SIZE = (128, 128, 128)
 _INT_DTYPES = {"int8", "int16", "int32", "int64", "uint8", "uint16", "uint32", "uint64"}
 
 
-def grid_repartition(df: DataFrame, chunk_size: Sequence[int] = DEFAULT_CHUNK_SIZE) -> DataFrame:
-    """A9 (rechunk): co-locate each storage chunk's voxels in one partition.
-
-    Keyed by the chunk-grid coordinate so a downstream chunk encode or
-    zarr write never shuffles twice; AQE coalesces small grids.
-    """
-    cz, cy, cx = chunk_size
-    return df.repartition(
-        F.col("stack_id"),
-        F.col("t"),
-        F.col("c"),
-        (F.col("z") / F.lit(cz)).cast("long"),
-        (F.col("y") / F.lit(cy)).cast("long"),
-        (F.col("x") / F.lit(cx)).cast("long"),
-    )
-
-
 def downsample_once(
     df: DataFrame,
     scale_factor: Sequence[int] = DEFAULT_SCALE_FACTOR,
-    preserve_dtype: bool = True,
 ) -> DataFrame:
     """A10: one windowed-mean reduction of the voxel table.
 
@@ -63,12 +44,10 @@ def downsample_once(
     force a sort aggregate over every input voxel.
     """
     fz, fy, fx = scale_factor
-    value = F.avg("v")
-    if preserve_dtype:
-        # Truncation-toward-zero for integer dtypes == numpy astype.
-        value = F.when(
-            F.col("dtype").isin(*_INT_DTYPES), F.avg("v").cast("long").cast("double")
-        ).otherwise(F.avg("v"))
+    # Truncation-toward-zero for integer dtypes == numpy astype.
+    value = F.when(
+        F.col("dtype").isin(*_INT_DTYPES), F.avg("v").cast("long").cast("double")
+    ).otherwise(F.avg("v"))
     return df.groupBy(
         "stack_id",
         "dtype",
@@ -84,55 +63,16 @@ def build_pyramid(
     df: DataFrame,
     n_levels: int = DEFAULT_N_LEVELS,
     scale_factor: Sequence[int] = DEFAULT_SCALE_FACTOR,
-    preserve_dtype: bool = True,
-    materialize_dir: str | None = None,
-    spark: SparkSession | None = None,
 ) -> list[DataFrame]:
     """A11: the cascading multiscale loop.
 
     Level 0 is the input; level k+1 is ``downsample_once`` of level k —
     mean-of-(truncated-)means per level, exactly the reference's
     levelwise recursion (czi_to_zarr.py:534-540), NOT a single deep
-    average.
-
-    ``materialize_dir`` reproduces the reference's write-then-read-back
-    lineage truncation ("It's faster to write the scale and then read it
-    back", czi_to_zarr.py:527-528): each level lands as zstd parquet and
-    the next level scans that — at 100 TB this caps the plan depth and
-    lets every level's shuffle size derive from real file statistics.
-    Without it the levels stay lazy (fine for few levels / small grids).
+    average. The levels stay lazy; ``job.run_job`` persists each level
+    before its write.
     """
     levels = [df]
-    current = df
-    for lvl in range(1, n_levels):
-        if materialize_dir is not None:
-            if spark is None:
-                raise ValueError("materialize_dir requires the spark session")
-            path = os.path.join(materialize_dir, f"level={lvl - 1}")
-            current.write.mode("overwrite").option("compression", "zstd").parquet(path)
-            current = spark.read.parquet(path)
-            levels[lvl - 1] = current
-        current = downsample_once(current, scale_factor, preserve_dtype)
-        levels.append(current)
+    for _ in range(1, n_levels):
+        levels.append(downsample_once(levels[-1], scale_factor))
     return levels
-
-
-def channel_stats(df: DataFrame, approx: bool = False) -> DataFrame:
-    """A12: per-channel rendering stats.
-
-    The reference derives min/max from the dtype alone (czi_to_zarr.py:
-    461-475; see :func:`...arraylib.ome.dtype_range`) and explicitly
-    rejects ``da.percentile`` as too slow (478-480). The engine offers
-    the data-driven path anyway because Spark's ``percentile_approx``
-    is a single-pass sketch: ``approx=True`` computes the (0.1%, 95%)
-    render window the reference wished for.
-    """
-    if approx:
-        pcts = F.percentile_approx("v", F.array(F.lit(0.001), F.lit(0.95)))
-        return df.groupBy("c").agg(
-            F.element_at(pcts, 1).alias("window_start"),
-            F.element_at(pcts, 2).alias("window_end"),
-            F.min("v").alias("v_min"),
-            F.max("v").alias("v_max"),
-        )
-    return df.groupBy("c").agg(F.min("v").alias("v_min"), F.max("v").alias("v_max"))

@@ -163,14 +163,6 @@ def explain_has(df: DataFrame, *needles: str) -> dict[str, bool]:
     return {n: (n in plan) for n in needles}
 
 
-def repartition_for_grid(df: DataFrame, cols: Sequence[str | Column], n: int | None = None) -> DataFrame:
-    """Hash-co-locate rows on ``cols`` (the chunk-grid / join-key
-    pre-shuffle used by arraylib); explicit ``n`` pins the layout when a
-    downstream zipPartitions-style consumer needs a fixed count."""
-    cs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    return df.repartition(n, *cs) if n else df.repartition(*cs)
-
-
 def sorted_small(df: DataFrame, *cols: str | Column) -> DataFrame:
     """Total order for a provably-SMALL final result without a
     RangePartitioning exchange.

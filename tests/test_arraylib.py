@@ -108,31 +108,6 @@ def test_pyramid_cascade_is_levelwise_not_deep_mean(spark):
     # the real distinguishing pin: level1 values themselves were already asserted above.
 
 
-def test_pyramid_materialized_cascade_roundtrip(spark, tmp_path):
-    rng = np.random.default_rng(11)
-    arr = rng.integers(0, 500, size=(1, 1, 4, 4, 4)).astype(np.uint16)
-    lazy = pyramid.build_pyramid(voxels_df(spark, arr), n_levels=3)
-    mat = pyramid.build_pyramid(
-        voxels_df(spark, arr), n_levels=3, materialize_dir=str(tmp_path / "pyr"), spark=spark
-    )
-    for lvl in range(3):
-        a = sorted(tuple(r) for r in lazy[lvl].collect())
-        b = sorted(tuple(r) for r in mat[lvl].collect())
-        assert a == b
-    assert os.path.isdir(tmp_path / "pyr" / "level=1")
-
-
-def test_channel_stats_modes(spark):
-    arr = np.arange(16, dtype=np.uint16).reshape(1, 2, 1, 2, 4)
-    df = voxels_df(spark, arr)
-    exact = {r.c: (r.v_min, r.v_max) for r in pyramid.channel_stats(df).collect()}
-    assert exact == {0: (0.0, 7.0), 1: (8.0, 15.0)}
-    approx = pyramid.channel_stats(df, approx=True).collect()
-    assert {r.c for r in approx} == {0, 1}
-    for r in approx:
-        assert r.window_start <= r.window_end
-
-
 # ------------------------------------------------------------------ metadata
 
 
@@ -366,7 +341,9 @@ def test_squeeze_extract_pad(spark):
 def test_encode_chunks_roundtrip(spark):
     rng = np.random.default_rng(3)
     arr = rng.integers(0, 900, size=(1, 1, 4, 5, 3)).astype(np.uint16)
-    chunked = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2)).collect()
+    chunked = blocks.encode_chunks(
+        voxels_df(spark, arr), chunk_size=(2, 2, 2), stack_spatial_shapes={"s0": arr.shape[2:]}
+    ).collect()
     # grid: z in {0,1}, y in {0,1,2}, x in {0,1} -> 12 chunks, edges truncated
     assert len(chunked) == 12
     rebuilt = np.zeros(arr.shape, dtype=np.uint16)
@@ -379,12 +356,6 @@ def test_encode_chunks_roundtrip(spark):
             row.x0 : row.x0 + row.shape[2],
         ] = block
     np.testing.assert_array_equal(rebuilt, arr)
-
-
-def test_grid_repartition_preserves_rows(spark):
-    arr = np.arange(27, dtype=np.uint16).reshape(1, 1, 3, 3, 3)
-    df = pyramid.grid_repartition(voxels_df(spark, arr), chunk_size=(2, 2, 2))
-    assert df.count() == 27
 
 
 # ------------------------------------------------------------------ job (e2e)
@@ -471,6 +442,15 @@ def test_job_settings_validation(tmp_path):
         StackJobSettings(input_source="a", output_directory="b", num_of_partitions=2, partition_to_process=2)
     with pytest.raises(ValueError):
         StackJobSettings(input_source="a", output_directory="b", downsample_levels=0)
+    # geometry arrives from CLI JSON or a config file: 3 ints, each >= 1,
+    # rejected before run_job can write a partial pyramid
+    for bad in (
+        {"scale_factor": (0, 2, 2)},
+        {"chunk_size": (128, 128)},
+        {"chunk_size": (128, 0, 128)},
+    ):
+        with pytest.raises(ValueError, match=next(iter(bad))):
+            StackJobSettings(input_source="a", output_directory="b", **bad)
     s = StackJobSettings(input_source="a", output_directory="b", s3_location="s3://bucket/key")
     assert s.output_root == "s3a://bucket/key"
 
@@ -484,37 +464,6 @@ def test_empty_bucket_returns_error(spark, stack_dir):
     )
     resp = run_job(spark, settings)
     assert resp.status_code == 1
-
-
-def test_write_chunks_zarr_gated(spark):
-    # zarr/numcodecs are absent in this environment: the sink must no-op.
-    arr = np.arange(8, dtype=np.uint16).reshape(1, 1, 2, 2, 2)
-    chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
-    ok = blocks.write_chunks_zarr(chunk_df, "/tmp/nonexistent.zarr", arr.shape, (1, 1, 2, 2, 2), "uint16")
-    try:
-        import zarr  # noqa: F401
-
-        assert ok is True
-    except ImportError:
-        assert ok is False
-
-
-# ------------------------------------------------------------- datasource API
-
-
-def test_stackvoxels_datasource_matches_mapinpandas_path(spark, stack_dir):
-    from aind_protein_data_transformation_spark.arraylib.datasource import StackVoxelDataSource
-
-    spark.dataSource.register(StackVoxelDataSource)
-    via_ds = spark.read.format("stackvoxels").load(stack_dir)
-    via_mp = decode.decode_stacks(
-        stacks.scan_stack_dir(spark, stack_dir, with_content=True)
-    )
-    a = sorted(tuple(r) for r in via_ds.collect())
-    b = sorted(tuple(r) for r in via_mp.collect())
-    assert a == b
-    # one input partition per stack file
-    assert via_ds.rdd.getNumPartitions() == 3
 
 
 def test_job_entrypoint_config_file(spark, stack_dir, tmp_path, monkeypatch):
@@ -540,33 +489,29 @@ def test_job_entrypoint_config_file(spark, stack_dir, tmp_path, monkeypatch):
     assert os.path.isdir(os.path.join(out, "level=1"))
 
 
-def test_write_chunks_files_roundtrip(spark, tmp_path):
-    rng = np.random.default_rng(5)
-    arr = rng.integers(0, 900, size=(1, 1, 4, 5, 3)).astype(np.uint16)
-    chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
-    store = str(tmp_path / "store")
-    blocks.write_chunks_files(chunk_df, store, level=0, chunk_size=(2, 2, 2))
-    files = glob.glob(os.path.join(store, "0", "s0", "*", "*", "*"))
-    assert len(files) == 12  # one file per chunk, dimension_separator="/"
-    rebuilt = np.zeros(arr.shape, dtype=np.uint16)
-    for path in files:
-        meta, block = blocks.read_chunk_file(path)
-        z0, y0, x0 = meta["z0"], meta["y0"], meta["x0"]
-        rebuilt[0, 0, z0:z0+block.shape[0], y0:y0+block.shape[1], x0:x0+block.shape[2]] = block
-    np.testing.assert_array_equal(rebuilt, arr)
+def test_job_entrypoint_rejects_settings_the_job_does_not_read(monkeypatch):
+    """A settings key no code reads is an error, raised before any
+    session starts, not a value silently ignored."""
+    import aind_protein_data_transformation_spark.session as session_mod
+    from aind_protein_data_transformation_spark.arraylib.job import job_entrypoint
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a session was started")
+
+    monkeypatch.setattr(session_mod, "get_spark", no_session)
+    cfg = {"input_source": "in", "output_directory": "out", "compressor_name": "blosc"}
+    with pytest.raises(TypeError, match="compressor_name"):
+        job_entrypoint(["--job-settings", json.dumps(cfg)])
 
 
-def test_encode_chunks_sparse_requires_declared_shape(spark):
+def test_encode_chunks_zero_fills_within_declared_shape(spark):
     rng = np.random.default_rng(5)
     arr = rng.integers(0, 900, size=(1, 1, 2, 2, 2)).astype(np.uint16)
     vox = voxels_df(spark, arr)
-    # drop the trailing voxel: without declared dims the truncated block
-    # would silently under-cover the logical chunk — must raise instead
+    # drop the trailing voxel: the extent comes from the stack's declared
+    # spatial shape, clamped to min(chunk, shape - origin), and the
+    # missing voxel stays zero-filled
     sparse = vox.filter("NOT (z = 1 AND y = 1 AND x = 1)")
-    with pytest.raises(Exception, match="sparse chunk group"):
-        blocks.encode_chunks(sparse, chunk_size=(2, 2, 2)).collect()
-    # with the stack's declared spatial shape the extent is clamped to
-    # min(chunk, shape - origin) and missing voxels stay zero-filled
     chunked = blocks.encode_chunks(
         sparse, chunk_size=(2, 2, 2), stack_spatial_shapes={"s0": (2, 2, 2)}
     ).collect()
@@ -700,7 +645,9 @@ def test_write_zarr_v2_store_is_format_valid(spark, tmp_path):
     stdlib, and openable by the zarr library wherever it is installed."""
     rng = np.random.default_rng(11)
     arr = rng.integers(0, 900, size=(1, 1, 4, 5, 3)).astype(np.uint16)
-    chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
+    chunk_df = blocks.encode_chunks(
+        voxels_df(spark, arr), chunk_size=(2, 2, 2), stack_spatial_shapes={"s0": arr.shape[2:]}
+    )
     store = str(tmp_path / "v2.zarr")
     blocks.write_zarr_v2_store(
         chunk_df, store, {"s0": arr.shape}, (1, 1, 2, 2, 2), {"s0": "uint16"}
@@ -803,7 +750,9 @@ def test_run_job_zarr_v2_sink(spark, stack_dir, tmp_path):
 
 def test_write_zarr_v2_store_needs_a_stack_placeholder_for_several_stacks(spark, tmp_path):
     arr = np.zeros((1, 1, 2, 2, 2), dtype=np.uint16)
-    chunk_df = blocks.encode_chunks(voxels_df(spark, arr), chunk_size=(2, 2, 2))
+    chunk_df = blocks.encode_chunks(
+        voxels_df(spark, arr), chunk_size=(2, 2, 2), stack_spatial_shapes={"s0": arr.shape[2:]}
+    )
     shapes = {"a": arr.shape, "b": arr.shape}
     dtypes = {"a": "uint16", "b": "uint16"}
     with pytest.raises(ValueError, match="share the store"):
