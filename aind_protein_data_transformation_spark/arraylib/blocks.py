@@ -249,6 +249,14 @@ def write_zarr_v2_store(
     job: each executor routes a row to its stack's store by
     ``row.stack_id`` — chunk grid cells never overlap, so no write
     coordination is needed; the driver writes only the metadata keys.
+
+    Commit order: a store's ``.zarray`` is its commit point. Any stale
+    ``.zarray`` is removed before the chunk job, each chunk lands under
+    a dot-prefixed temp name and is ``os.replace``-d into place (a
+    killed task leaves no torn chunk), and ``.zarray`` is written only
+    after the job returns. A failed job therefore leaves no ``.zarray``
+    — never a store a reader would open and silently fill with
+    ``fill_value`` for the missing chunks.
     """
     import json as _json
 
@@ -262,21 +270,10 @@ def write_zarr_v2_store(
     chunks_t = [int(c) for c in chunks]
     stores = {sid: store_path.replace("{stack_id}", sid) for sid in shapes}
     dtype_strs = {sid: np.dtype(dtypes[sid]).str for sid in shapes}
-    for sid, path in stores.items():
+    for path in stores.values():
         os.makedirs(path, exist_ok=True)
-        meta = {
-            "zarr_format": 2,
-            "shape": [int(s) for s in shapes[sid]],
-            "chunks": chunks_t,
-            "dtype": dtype_strs[sid],
-            "compressor": {"id": "zlib", "level": ZARR_ZLIB_LEVEL},
-            "fill_value": 0,
-            "order": "C",
-            "filters": None,
-            "dimension_separator": "/",
-        }
-        with open(os.path.join(path, ".zarray"), "w") as fh:
-            _json.dump(meta, fh, indent=2)
+        if os.path.exists(os.path.join(path, ".zarray")):
+            os.remove(os.path.join(path, ".zarray"))
 
     _, _, cz, cy, cx = chunks_t
 
@@ -297,7 +294,25 @@ def write_zarr_v2_store(
                 stores[row.stack_id], str(int(row.t)), str(int(row.c)), str(gz), str(gy)
             )
             os.makedirs(d, exist_ok=True)
-            with open(os.path.join(d, str(gx)), "wb") as fh:
+            tmp = os.path.join(d, f".{gx}.{os.getpid()}.tmp")
+            with open(tmp, "wb") as fh:
                 fh.write(zlib.compress(full.tobytes(order="C"), ZARR_ZLIB_LEVEL))
+            os.replace(tmp, os.path.join(d, str(gx)))
 
     chunk_df.foreachPartition(write_partition)
+    for sid, path in stores.items():
+        meta = {
+            "zarr_format": 2,
+            "shape": [int(s) for s in shapes[sid]],
+            "chunks": chunks_t,
+            "dtype": dtype_strs[sid],
+            "compressor": {"id": "zlib", "level": ZARR_ZLIB_LEVEL},
+            "fill_value": 0,
+            "order": "C",
+            "filters": None,
+            "dimension_separator": "/",
+        }
+        with open(os.path.join(path, ".zarray"), "w") as fh:
+            _json.dump(meta, fh, indent=2)
+
+

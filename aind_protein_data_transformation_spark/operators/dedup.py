@@ -613,37 +613,26 @@ def verify_minhash_index(
 ) -> dict[str, int]:
     """Consistency audit: raises if any banded document lacks a
     signature row; returns ``{"banded_docs", "signed_docs",
-    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise (4 missing
-    keys = the in-place-compaction crash signature; recover with
-    ``compact_minhash_index(..., shingle_k=)``). Runbook step 4 of
-    operators/index_lifecycle.py."""
+    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise. Runbook
+    step 4 of operators/index_lifecycle.py."""
     return verify_index(spark, name, MINHASH_SPEC, id_col)
 
 
 def compact_minhash_index(
     spark,
     name: str,
-    id_col: str = "doc_id",
-    target: str | None = None,
+    id_col: str,
+    target: str,
     path: str | None = None,
-    shingle_k: int | None = None,
 ) -> dict[str, int]:
-    """Rewrite both index tables without the duplicate rows crash
-    re-appends accumulate — bands on (band, k0..k{B-1}, id), sigs on
-    the doc id — zero-shuffle, raising on a doc_id with conflicting
-    (n, hs) payloads. In place (``target=None``) or into a fresh index
-    (``target="name_v2"`` [+ ``path``]) for :func:`swap_minhash_index`;
-    see :func:`index_lifecycle.compact_index` for both modes.
-
-    ``shingle_k=`` overrides the geometry stamp written to the output —
-    the RECOVERY path for an in-place compaction that crashed between
-    the bands overwrite and the re-stamp (the remaining stamp fields are
-    the session's module constants). Returns ``{"bands_before",
+    """Rewrite both index tables into ``target`` (at ``path`` when
+    given) without the duplicate rows crash re-appends accumulate —
+    bands on (band, k0..k{B-1}, id), sigs on the doc id — zero-shuffle,
+    raising on a doc_id with conflicting (n, hs) payloads; promote with
+    :func:`swap_minhash_index`. See
+    :func:`index_lifecycle.compact_index`. Returns ``{"bands_before",
     "bands_after", "sigs_before", "sigs_after"}``."""
-    override = _minhash_stamp(shingle_k) if shingle_k is not None else None
-    return compact_index(
-        spark, name, MINHASH_SPEC, id_col, target=target, path=path, stamp_override=override
-    )
+    return compact_index(spark, name, MINHASH_SPEC, id_col, target, path)
 
 
 def swap_minhash_index(spark, name: str, target: str) -> dict:

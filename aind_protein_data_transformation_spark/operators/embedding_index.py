@@ -264,9 +264,7 @@ def append_srp_shard(
 def verify_srp_index(spark, name: str, vec_id: str = "vec_id") -> dict[str, int]:
     """Consistency audit: raises if any banded vec_id lacks a vector
     row; returns ``{"banded_vecs", "stored_vecs", "orphan_vec_rows",
-    "missing_stamp_keys"}`` otherwise (2 missing keys = the
-    in-place-compaction crash signature; recover with
-    ``compact_srp_index(..., n_bits=, n_bands=)``). Runbook step 4 of
+    "missing_stamp_keys"}`` otherwise. Runbook step 4 of
     operators/index_lifecycle.py."""
     return verify_index(spark, name, SRP_SPEC, vec_id)
 
@@ -274,28 +272,15 @@ def verify_srp_index(spark, name: str, vec_id: str = "vec_id") -> dict[str, int]
 def compact_srp_index(
     spark,
     name: str,
-    vec_id: str = "vec_id",
-    target: str | None = None,
+    vec_id: str,
+    target: str,
     path: str | None = None,
-    n_bits: int | None = None,
-    n_bands: int | None = None,
 ) -> dict[str, int]:
     """Drop the duplicate rows crash re-appends accumulate —
-    :func:`index_lifecycle.compact_index` (zero-shuffle, in place or
-    into ``target`` for :func:`swap_srp_index`, raising on a vec_id
-    with conflicting normalized vectors). ``n_bits=``/``n_bands=``
-    (both or neither) override the geometry stamp written to the
-    output — the recovery path for a crash between the in-place bands
-    overwrite and the re-stamp."""
-    if (n_bits is None) != (n_bands is None):
-        raise ValueError(
-            "compact_srp_index: pass BOTH n_bits and n_bands (the "
-            "geometry stamp is one identity) or neither"
-        )
-    override = _srp_stamp(n_bits, n_bands) if n_bits is not None else None
-    return compact_index(
-        spark, name, SRP_SPEC, vec_id, target=target, path=path, stamp_override=override
-    )
+    :func:`index_lifecycle.compact_index` (zero-shuffle, into
+    ``target`` for :func:`swap_srp_index`, raising on a vec_id with
+    conflicting normalized vectors)."""
+    return compact_index(spark, name, SRP_SPEC, vec_id, target, path)
 
 
 def swap_srp_index(spark, name: str, target: str) -> dict:

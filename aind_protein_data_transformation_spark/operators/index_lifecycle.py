@@ -56,8 +56,8 @@ simhash):
    sidecar rows, reports ``missing_stamp_keys``.
 5. ``compact_{kind}_index`` (:func:`compact_index`) — maintenance once
    crash re-appends have piled up duplicate rows: zero-shuffle dedup of
-   both tables, refusing ids with conflicting payloads. Production
-   shape: ``target=`` (a streaming rewrite, source untouched), then
+   both tables into a fresh ``target`` index, refusing ids with
+   conflicting payloads. The source stays untouched; promotion is
 6. ``swap_{kind}_index`` (:func:`swap_index`) — verify the target
    (stamp included), then metadata-only ``ALTER TABLE ... RENAME``
    pairs: retire BOTH live tables, promote BOTH target tables, drop the
@@ -83,11 +83,10 @@ Contracts shared by every family:
   (:func:`check_stamp`) — unstamped (hand-built, legacy) tables pass, a
   partial stamp raises, a mismatch raises naming each field and both
   values. A mismatched probe would otherwise emit band keys that never
-  collide and silently lose pairs. A lost stamp (the in-place
-  compaction crash window) shows as ``missing_stamp_keys`` > 0; recover
-  with the compaction's explicit geometry override, or
-  :func:`apply_stamp` with the family's stamp dict for the known
-  geometry.
+  collide and silently lose pairs. A lost stamp (tampering, or a
+  hand-built table) shows as ``missing_stamp_keys`` > 0; the one
+  recovery is :func:`apply_stamp` with the family's stamp dict for the
+  known geometry.
 
 No counterpart exists in the reference (its array layer is
 conversion-only, reference czi_to_zarr.py); the lifecycle extends the
@@ -157,11 +156,7 @@ def table_num_buckets(spark, table: str) -> int:
 
 def table_external_location(spark, table: str) -> str | None:
     """The table's storage location IF it is EXTERNAL (created with a
-    ``path=`` option), else None. In-place compaction must re-pass an
-    external table's own location: a plain overwrite-saveAsTable with
-    no path would silently recreate the table MANAGED in the warehouse
-    dir, leaving the stale pre-compaction files at the original
-    external path for any direct reader (and never cleaning them)."""
+    ``path=`` option), else None."""
     typ = loc = None
     for r in spark.sql(f"DESCRIBE FORMATTED {table}").collect():
         nm = r.col_name.strip()
@@ -296,9 +291,8 @@ def check_stamp(spark, name: str, spec: IndexSpec, expected: dict[str, str]) -> 
         raise ValueError(
             f"{spec.kind} index {name!r} carries a PARTIAL identity stamp "
             f"({sorted(props)} of {spec.stamp_keys}) — the stamp is one "
-            f"identity; repair it with the known geometry (apply_stamp, or "
-            f"compact_{spec.kind}_index's geometry override) before "
-            f"probing or appending."
+            f"identity; repair it with the known geometry (apply_stamp with "
+            f"the family's stamp dict) before probing or appending."
         )
     detail = "; ".join(
         f"{k.rsplit('.', 1)[1]}: index={props[k]!r} vs session={expected[k]!r}"
@@ -457,10 +451,9 @@ def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, in
 
     The result also carries ``missing_stamp_keys``: non-zero means the
     bands table lost (part of) its stamp — on an index built by
-    ``write_{kind}_index`` that is the in-place-compaction crash window
-    (crash after the bands overwrite, before the re-stamp), a
-    complete-LOOKING but unguarded index. Recover by re-applying the
-    known geometry (runbook). Hand-built indexes that never stamped can
+    ``write_{kind}_index`` that is tampering, a complete-LOOKING but
+    unguarded index. Recover with :func:`apply_stamp` and the known
+    geometry (runbook). Hand-built indexes that never stamped can
     ignore the count."""
     bands = spark.table(f"{name}_bands").select(id_col).distinct()
     sidecar = spark.table(f"{name}_{spec.sidecar_suffix}").select(id_col).distinct()
@@ -492,17 +485,17 @@ def compact_index(
     name: str,
     spec: IndexSpec,
     id_col: str,
-    target: str | None = None,
+    target: str,
     path: str | None = None,
-    stamp_override: dict[str, str] | None = None,
 ) -> dict[str, int]:
-    """Rewrite both index tables without the duplicate rows crash
-    re-appends accumulate (VERDICT r7 #3 / r8 #5). Probe results are
-    unchanged by construction — the candidate set is distinct and the
-    per-pair score aggregates over multiplicity — so this is pure
-    storage maintenance. Bands dedup on (band keys, id); the sidecar
-    dedups on the id. Each table is rewritten with its ORIGINAL bucket
-    spec, read from table metadata, so probes keep joining co-located.
+    """Rewrite both index tables into a fresh ``target`` index without
+    the duplicate rows crash re-appends accumulate (VERDICT r7 #3 / r8
+    #5). Probe results are unchanged by construction — the candidate
+    set is distinct and the per-pair score aggregates over multiplicity
+    — so this is pure storage maintenance. Bands dedup on (band keys,
+    id); the sidecar dedups on the id. Each table is rewritten with its
+    ORIGINAL bucket spec, read from table metadata, so probes keep
+    joining co-located.
 
     ZERO-shuffle: both dedup keys are supersets of their table's bucket
     columns, so the bucketed read's hash partitioning already satisfies
@@ -516,88 +509,44 @@ def compact_index(
     document or embedding re-signed under a reused id) — compaction raises rather
     than silently picking a version.
 
-    Two modes:
-
-    - **In place** (``target=None``): overwrite ``name``'s tables at
-      their own catalog locations (an EXTERNAL table keeps its path —
-      without that the rewrite would silently go MANAGED and strand the
-      stale external files). The rows are materialized
-      (localCheckpoint) BEFORE either overwrite so the rewrite never
-      reads the table it replaces; each overwrite is a non-atomic
-      boundary, so run quiesced — or better, use target mode + swap.
-      Bands are written FIRST and re-stamped immediately; a crash
-      between the bands overwrite and the re-stamp leaves a
-      complete-looking UNSTAMPED index — detectable via
-      :func:`verify_index`'s ``missing_stamp_keys`` and recoverable by
-      re-running with ``stamp_override`` set to the known geometry
-      (the stamp cannot be re-read from the now-unstamped table).
-    - **Into a fresh index** (``target=`` [+ ``path``]): write the
-      compacted tables under the TARGET name and leave the source
-      untouched — the production shape: no checkpoint, no overwrite
-      window; promote with :func:`swap_index` once verified. The
-      writes use ``errorifexists``, so a crash between the two target
-      writes leaves a half-built target a re-run REFUSES to overwrite —
-      DROP both ``{target}_*`` tables and re-run (the source is
-      untouched throughout); never swap a target into service before
-      its build completed.
+    The source is never written: the compacted tables land under the
+    ``target`` name (at ``path`` when given) with the source's stamp,
+    and :func:`swap_index` promotes them once verified. The writes use
+    ``errorifexists``, so a crash between the two target writes leaves
+    a half-built target a re-run REFUSES to overwrite — DROP both
+    ``{target}_*`` tables and re-run; never swap a target into service
+    before its build completed.
     """
     # ---- metadata-only validation FIRST (round-9 review: a pure
     # configuration error must fail in milliseconds, not after the
     # corpus-sized conflict/count scans below)
     band_buckets = table_num_buckets(spark, f"{name}_bands")
     side_buckets = table_num_buckets(spark, f"{name}_{spec.sidecar_suffix}")
-    if target is None:
-        if path is not None:
+    if path is None:
+        external = [
+            t
+            for t in (f"{name}_bands", f"{name}_{spec.sidecar_suffix}")
+            if table_external_location(spark, t) is not None
+        ]
+        if external:
+            # round-9 review: without this, compacting an EXTERNAL
+            # (object-store) index into a pathless target writes the
+            # target MANAGED in the warehouse — the subsequent swap's
+            # renames then RELOCATE data (a copy on s3a, not
+            # metadata-only) and the dropped retired EXTERNAL tables
+            # strand every stale file at the old path forever.
+            # Relocation must be explicit.
             raise ValueError(
-                f"compact_{spec.kind}_index: path= is only meaningful with "
-                f"target= — in-place compaction always rewrites each "
-                f"table at its own catalog location (external stays at "
-                f"its path, managed stays managed); rewriting in place "
-                f"to a DIFFERENT path would strand the stale "
-                f"pre-compaction files at the old location for any "
-                f"direct reader. Compact into a target to relocate."
+                f"compact_{spec.kind}_index: source tables {external} are "
+                f"EXTERNAL but target mode got no path= — the "
+                f"target would be created MANAGED in the warehouse, "
+                f"making the follow-up swap relocate data instead "
+                f"of renaming metadata and stranding the stale "
+                f"files at the external location. Pass path= (the "
+                f"compacted index's new external location)."
             )
-        out, mode = name, "overwrite"
-        band_path = table_external_location(spark, f"{name}_bands")
-        side_path = table_external_location(spark, f"{name}_{spec.sidecar_suffix}")
-    else:
-        out, mode = target, "errorifexists"
-        if path is None:
-            external = [
-                t
-                for t in (f"{name}_bands", f"{name}_{spec.sidecar_suffix}")
-                if table_external_location(spark, t) is not None
-            ]
-            if external:
-                # round-9 review: without this, compacting an EXTERNAL
-                # (object-store) index into a pathless target writes
-                # the target MANAGED in the warehouse — the subsequent
-                # swap's renames then RELOCATE data (a copy on s3a,
-                # not metadata-only) and the dropped retired EXTERNAL
-                # tables strand every stale file at the old path
-                # forever. Relocation must be explicit.
-                raise ValueError(
-                    f"compact_{spec.kind}_index: source tables {external} are "
-                    f"EXTERNAL but target mode got no path= — the "
-                    f"target would be created MANAGED in the warehouse, "
-                    f"making the follow-up swap relocate data instead "
-                    f"of renaming metadata and stranding the stale "
-                    f"files at the external location. Pass path= (the "
-                    f"compacted index's new external location)."
-                )
-        band_path = f"{path}/bands" if path else None
-        side_path = f"{path}/{spec.sidecar_suffix}" if path else None
     stamp = read_stamp(spark, f"{name}_bands", spec.stamp_keys)
-    if stamp_override is not None:
-        if set(stamp_override) != set(spec.stamp_keys):
-            raise ValueError(
-                f"compact_{spec.kind}_index: stamp_override must supply exactly "
-                f"the index-identity properties {spec.stamp_keys} (the "
-                f"stamp is one identity, not overridable piecemeal); "
-                f"got {sorted(stamp_override)}"
-            )
-        stamp = dict(stamp_override)
-    elif 0 < len(stamp) < len(spec.stamp_keys):
+    if 0 < len(stamp) < len(spec.stamp_keys):
         # a PARTIAL stamp (tampering / partial UNSET) must not silently
         # degrade to a fully-unstamped rewrite — that would make the
         # geometry guard pass every mismatched probe unvalidated
@@ -605,8 +554,8 @@ def compact_index(
             f"compact_{spec.kind}_index: {name}_bands carries a PARTIAL "
             f"identity stamp ({sorted(stamp)} of {spec.stamp_keys}) — "
             f"compacting would erase the remainder and un-guard the "
-            f"index. Re-run with the explicit geometry override (the "
-            f"known full stamp), or repair the properties first."
+            f"index. Repair the properties first (apply_stamp with the "
+            f"known full stamp)."
         )
     # ---- data scans (conflict contract check, before/after counts)
     bands = spark.table(f"{name}_bands")
@@ -628,34 +577,27 @@ def compact_index(
         )
     bands_before = bands.count()
     side_before = sidecar.count()
-    comp_bands = bands.dropDuplicates([*spec.band_keys, id_col])
-    comp_side = sidecar.dropDuplicates([id_col])
-    if target is None:
-        # in place: materialize before overwriting the source tables
-        comp_bands = comp_bands.localCheckpoint()
-        comp_side = comp_side.localCheckpoint()
-    # bands first, stamp immediately after (_write_pair): a target-mode
-    # crash before the LAST write leaves the target's sidecar missing,
-    # so every partial target is LOUD. (In place, see the docstring's
-    # stamp window + stamp_override recovery.)
+    # bands first, stamp immediately after (_write_pair): a crash before
+    # the LAST write leaves the target's sidecar missing, so every
+    # partial target is LOUD
     _write_pair(
         spark,
-        out,
+        target,
         spec,
         id_col,
-        comp_bands,
-        comp_side,
-        mode,
+        bands.dropDuplicates([*spec.band_keys, id_col]),
+        sidecar.dropDuplicates([id_col]),
+        "errorifexists",
         (band_buckets, side_buckets),
-        (band_path, side_path),
+        (path and f"{path}/bands", path and f"{path}/{spec.sidecar_suffix}"),
         stamp,
     )
     side = spec.sidecar_suffix
     return {
         "bands_before": bands_before,
-        "bands_after": spark.table(f"{out}_bands").count(),
+        "bands_after": spark.table(f"{target}_bands").count(),
         f"{side}_before": side_before,
-        f"{side}_after": spark.table(f"{out}_{side}").count(),
+        f"{side}_after": spark.table(f"{target}_{side}").count(),
     }
 
 
@@ -671,9 +613,9 @@ def _verify_promotable(spark, name: str, spec: IndexSpec, id_col: str) -> None:
         raise ValueError(
             f"swap_{spec.kind}_index: target {name!r} is missing its "
             f"geometry stamp ({spec.stamp_keys}) — re-stamp it with the "
-            f"known geometry (apply_stamp, or compact_{spec.kind}_index's "
-            f"geometry override) before promoting; an unstamped live index "
-            f"would bypass the geometry guard on every future append/probe."
+            f"known geometry (apply_stamp with the family's stamp dict) "
+            f"before promoting; an unstamped live index would bypass the "
+            f"geometry guard on every future append/probe."
         )
 
 
@@ -704,12 +646,9 @@ def swap_index(spark, name: str, target: str, spec: IndexSpec, id_col: str) -> d
     also moves the warehouse directory, which on an S3-class object
     store is a per-object copy-and-delete — neither atomic nor O(1).
     The ``path=`` external form is therefore not just a nicety but the
-    REQUIRED shape at an object-store deployment (same boundary as
-    ``compact_clustered_table``: its ``swap="rename"`` regime assumes
-    POSIX/HDFS atomic rename, and ``swap="manifest"`` — pointer
-    indirection over immutable versioned units — is the object-store
-    form; an external-table catalog rename is the catalog's version of
-    that same pointer update).
+    REQUIRED shape at an object-store deployment (an external-table
+    catalog rename is the catalog's version of the pointer update
+    ``compact_clustered_table`` commits with).
 
     Returns ``{"status": "swapped" | "resumed", "dropped": [...]}``,
     where ``dropped`` lists the retired tables phase 3 actually deleted

@@ -558,10 +558,10 @@ def zorder_layout(
             "key would silently replace it and the stored schema would "
             "no longer be the input schema; rename it first"
         )
-    # A manifest-compacted table's live unit is a versioned directory
-    # under <path>/_versions — route the write there, so appends after
-    # a swap="manifest" compact stay visible to resolved readers
-    # instead of landing invisibly in the root.
+    # A compacted table's live unit is a versioned directory under
+    # <path>/_versions — route the write there, so appends after a
+    # compact stay visible to resolved readers instead of landing
+    # invisibly in the root.
     out_path = resolve_clustered_table(out_path, spark=df.sparkSession)
     if bits is None:
         if edges is not None:
@@ -723,16 +723,15 @@ def load_edge_snapshot(
 def resolve_clustered_table(path: str, spark=None) -> str:
     """Resolve the LIVE data directory of a clustered table.
 
-    Tables compacted with ``swap="manifest"`` keep their data in
-    versioned units under ``<path>/_versions/`` with a small
+    Tables compacted with :func:`compact_clustered_table` keep their
+    data in versioned units under ``<path>/_versions/`` with a small
     ``_CURRENT`` pointer file naming the live one (the Delta/Iceberg
     commit shape: retired units are immutable, only the pointer
     changes; the LIVE unit still accepts appends —
-    :func:`zorder_layout` routes them there). Tables never
-    manifest-compacted resolve to ``path`` itself. Readers in the
-    manifest regime must go through this helper (or
-    :func:`read_clustered_table`); a raw ``spark.read.parquet(path)``
-    on a manifest table fails loudly (the root holds no data files —
+    :func:`zorder_layout` routes them there). Tables never compacted
+    resolve to ``path`` itself. Readers must go through this helper
+    (or :func:`read_clustered_table`); a raw
+    ``spark.read.parquet(path)`` on a compacted table fails loudly (the root holds no data files —
     only the hidden ``_versions`` dir plus any non-data sidecars the
     caller keeps there) rather than returning stale data.
 
@@ -919,43 +918,30 @@ def compact_clustered_table(
     compression: str = "zstd",
     curve: str = "morton",
     spark=None,
-    swap: str = "rename",
     keep_versions: int = 1,
 ) -> dict[str, list[float]]:
     """Re-cluster an incrementally-appended table back to the global
-    bound, verify, then swap — the table-level twin of the index
+    bound, verify, then commit — the table-level twin of the index
     lifecycles' compact step.
 
     ``mode="append"`` ingestion pins the kept fraction at the
     per-BATCH tiling bound (measured: 0.270 ten-batch incremental vs
     0.132 global at the ×10 layout — BENCH.md round 12); compaction
     recovers the global bound by re-clustering the merged unit once.
-    Two swap regimes, both verify-then-promote (a full-row multiset
-    fingerprint must match the live table BEFORE anything is promoted
-    — a compact must never lose, duplicate, or re-type a row):
+    Verify-then-promote: a full-row multiset fingerprint must match the
+    live table BEFORE anything is promoted — a compact must never lose,
+    duplicate, or re-type a row.
 
-    ``swap="rename"`` (the filesystem fast path) mirrors
-    ``swap_*_index``: the re-cluster lands in a sibling
-    ``<path>.compact`` directory, then two directory renames promote
-    it (live → ``<path>.retired``, compact → live) and the retired
-    directory is removed last. A crash between the renames leaves
-    either the verified old or the verified new directory under a
-    recoverable name — never a half-written live table. **Boundary:
-    this regime assumes atomic, O(1) directory rename — true on POSIX
-    and HDFS, FALSE on S3-class object stores, where a directory
-    rename is a per-object copy-and-delete (non-atomic AND O(data)).
-    At an object-store deployment use** ``swap="manifest"``.
-
-    ``swap="manifest"`` is the object-store-safe form (the
-    Delta/Iceberg commit shape): the re-cluster lands in an immutable
-    versioned unit ``<path>/_versions/v_NNNNNN`` (underscore-prefixed,
-    so Spark's listing never sees it as data), and promotion is ONE
-    small-file update of ``<path>/_versions/_CURRENT`` — write-tmp +
+    The commit is the Delta/Iceberg shape, correct on every store: the
+    re-cluster lands in an immutable versioned unit
+    ``<path>/_versions/v_NNNNNN`` (underscore-prefixed, so Spark's
+    listing never sees it as data), and promotion is ONE small-file
+    update of ``<path>/_versions/_CURRENT`` — write-tmp +
     ``os.replace`` on local filesystems (atomic on POSIX), a
     single-object overwrite through the Hadoop FileSystem on non-local
-    schemes (on S3-class stores one small PUT, atomic per object); the
-    big data directories are never renamed at all, so promotion stays
-    O(1) where directory rename is O(data). Readers resolve through
+    schemes (on S3-class stores one small PUT, atomic per object). No
+    directory is ever renamed, so promotion stays O(1) on stores where
+    a directory rename is a per-object copy. Readers resolve through
     :func:`resolve_clustered_table`. Crash points: before the pointer
     commit the live table is untouched and the half-built version dir
     is overwritten by the retried compact (the version number is
@@ -966,24 +952,23 @@ def compact_clustered_table(
     inside the cleanup window costs temporary storage, never
     correctness.
 
-    **Reader retention window** (``keep_versions``, manifest regime
-    only): cleanup keeps the ``keep_versions`` most recently RETIRED
-    versioned units (default 1 — the immediately-previous unit), so a
-    reader that resolved the old pointer just before the commit can
-    finish its scan — the same retired-snapshot grace Delta/Iceberg
-    give in-flight readers, with :func:`vacuum_clustered_table` as the
-    separate explicit vacuum. The boundary: a reader is safe while its
-    resolved unit is within the newest ``keep_versions`` retired
-    units — with the default, any scan that outlives ONE further
-    compact loses its files (loudly, mid-collect — never silently
-    wrong). Two deliberate edges: ``keep_versions=0`` restores eager
-    cleanup for single-runner deployments that never overlap reads
-    with compacts, and the FIRST compact's sweep of the pre-manifest
-    flat root files is always eager regardless — the blank-pointer
-    hardening requires the root to hold no data (a crashed commit
-    resolves there and must fail loudly, never serve a stale flat
-    copy), so readers of the not-yet-converted flat state get no
-    grace; convert during a quiet window.
+    **Reader retention window** (``keep_versions``): cleanup keeps the
+    ``keep_versions`` most recently RETIRED versioned units (default 1
+    — the immediately-previous unit), so a reader that resolved the old
+    pointer just before the commit can finish its scan — the same
+    retired-snapshot grace Delta/Iceberg give in-flight readers, with
+    :func:`vacuum_clustered_table` as the separate explicit vacuum. The
+    boundary: a reader is safe while its resolved unit is within the
+    newest ``keep_versions`` retired units — with the default, any scan
+    that outlives ONE further compact loses its files (loudly,
+    mid-collect — never silently wrong). Two deliberate edges:
+    ``keep_versions=0`` restores eager cleanup for single-runner
+    deployments that never overlap reads with compacts, and the FIRST
+    compact's sweep of the pre-manifest flat root files is always eager
+    regardless — the blank-pointer hardening requires the root to hold
+    no data (a crashed commit resolves there and must fail loudly,
+    never serve a stale flat copy), so readers of the not-yet-converted
+    flat state get no grace; convert during a quiet window.
 
     Accepts a path (str); ``spark`` is required then. ``bits=None``
     law-sizes the re-clustered geometry (see :func:`zorder_layout`).
@@ -991,78 +976,56 @@ def compact_clustered_table(
     whatever cadence the measured incremental-vs-global gap justifies
     — the same amortization argument as the LSH index compaction.
     """
-    import shutil
-
     if not isinstance(df_or_path, str):
         raise ValueError(
-            "compact_clustered_table takes the table PATH (the swap "
-            "renames directories; a DataFrame has no directory)"
+            "compact_clustered_table takes the table PATH (the commit "
+            "writes a versioned unit under it; a DataFrame has no "
+            "directory)"
         )
-    if swap not in ("rename", "manifest"):
-        raise ValueError(f"unknown swap regime {swap!r}; rename or manifest")
     path = df_or_path
     if spark is None:
         raise ValueError("spark session required when passing a path")
-    # ONE pointer read feeds both the live snapshot and (in the
-    # manifest branch) the next version number — two reads could
-    # straddle a concurrent commit and number the new unit against a
-    # different state than the one fingerprint-verified
+    # ONE pointer read feeds both the live snapshot and the next version
+    # number — two reads could straddle a concurrent commit and number
+    # the new unit against a different state than the one
+    # fingerprint-verified
     current = _read_pointer(path, spark)
     live_dir = (os.path.join(path, _VERSIONS_DIR, current)
                 if current else path)
     live = spark.read.parquet(live_dir)
-
-    def _recluster_and_verify(target: str, untouched: str):
-        # shared by both regimes: one re-cluster into ``target``, then
-        # the fingerprint gate BEFORE anything is promoted
-        edges = zorder_layout(
-            live, cols, target, bits=bits, num_files=num_files,
-            row_group_bytes=row_group_bytes, compression=compression,
-            curve=curve,
+    versions_root = os.path.join(path, _VERSIONS_DIR)
+    next_n = (int(current.split("_")[1]) + 1) if current else 1
+    next_version = f"v_{next_n:06d}"
+    target = os.path.join(versions_root, next_version)
+    edges = zorder_layout(
+        live, cols, target, bits=bits, num_files=num_files,
+        row_group_bytes=row_group_bytes, compression=compression,
+        curve=curve,
+    )
+    if (_multiset_fingerprint(spark.read.parquet(target))
+            != _multiset_fingerprint(live)):
+        raise RuntimeError(
+            f"compact of {path} changed the row multiset; {target} "
+            f"kept for inspection, live pointer untouched"
         )
-        if (_multiset_fingerprint(spark.read.parquet(target))
-                != _multiset_fingerprint(live)):
-            raise RuntimeError(
-                f"compact of {path} changed the row multiset; {target} "
-                f"kept for inspection, {untouched} untouched"
-            )
-        return edges
-
-    if swap == "manifest":
-        versions_root = os.path.join(path, _VERSIONS_DIR)
-        next_n = (int(current.split("_")[1]) + 1) if current else 1
-        next_version = f"v_{next_n:06d}"
-        target = os.path.join(versions_root, next_version)
-        edges = _recluster_and_verify(target, "live pointer")
-        _commit_pointer(versions_root, next_version, spark)
-        # everything the pointer doesn't name is now unreferenced —
-        # remove best-effort, EXCEPT the newest ``keep_versions``
-        # retired units (the in-flight-reader grace window; see
-        # docstring). Re-swept by every later compact, so a crash
-        # between a past commit and its cleanup cannot strand a stale
-        # shadow copy forever. Stale flat DATA files in the root are
-        # always swept eagerly (see _retired_units: the blank-pointer
-        # hardening needs an empty root), and only parquet-looking root
-        # entries are: caller sidecars stored next to the data (edge
-        # snapshots, markers — the zorder_layout docstring invites
-        # them) are not data and are left alone.
-        for unit in _retired_units(path, next_version, spark)[
-            max(0, int(keep_versions)):
-        ]:
-            _delete_tree(unit, spark)
-        for entry in _list_entries(path, spark):
-            if entry != _VERSIONS_DIR and entry.endswith(".parquet"):
-                _delete_tree(os.path.join(path, entry), spark)
-        return edges
-
-    tmp = path.rstrip("/") + ".compact"
-    retired = path.rstrip("/") + ".retired"
-    for leftover in (tmp, retired):
-        shutil.rmtree(leftover, ignore_errors=True)
-    edges = _recluster_and_verify(tmp, "live table")
-    os.rename(path, retired)
-    os.rename(tmp, path)
-    shutil.rmtree(retired, ignore_errors=True)
+    _commit_pointer(versions_root, next_version, spark)
+    # everything the pointer doesn't name is now unreferenced — remove
+    # best-effort, EXCEPT the newest ``keep_versions`` retired units (the
+    # in-flight-reader grace window; see docstring). Re-swept by every
+    # later compact, so a crash between a past commit and its cleanup
+    # cannot strand a stale shadow copy forever. Stale flat DATA files
+    # in the root are always swept eagerly (see _retired_units: the
+    # blank-pointer hardening needs an empty root), and only
+    # parquet-looking root entries are: caller sidecars stored next to
+    # the data (edge snapshots, markers — the zorder_layout docstring
+    # invites them) are not data and are left alone.
+    for unit in _retired_units(path, next_version, spark)[
+        max(0, int(keep_versions)):
+    ]:
+        _delete_tree(unit, spark)
+    for entry in _list_entries(path, spark):
+        if entry != _VERSIONS_DIR and entry.endswith(".parquet"):
+            _delete_tree(os.path.join(path, entry), spark)
     return edges
 
 
@@ -1134,7 +1097,8 @@ def vacuum_clustered_table(path: str, spark, keep_versions: int = 0) -> list[str
 
 def _rename(src: str, dst: str, spark) -> None:
     """Directory rename, scheme-portable (atomic on POSIX/HDFS; on
-    object stores a per-object copy — see compact_ingest_units)."""
+    object stores a per-object copy) — used only to move a failed
+    fold's output aside as evidence (compact_ingest_units)."""
     if _use_local_fs(src, spark):
         os.rename(_strip_file_scheme(src), _strip_file_scheme(dst))
         return
@@ -1175,7 +1139,7 @@ def _ingest_spans(
     (the stream's overwrite-by-batch-id replay handles its partial
     states); a folded ``batch=c<lo>-<hi>`` unit counts only once its
     ``_FOLD_COMMITTED`` marker exists — a marker-less folded unit is a
-    promote that crashed mid-copy (or pre-marker) and must neither be
+    fold that crashed mid-write (or pre-marker) and must neither be
     read nor retire the originals its range covers. Uncommitted names
     come back span-ordered, separately, for the repair sweep."""
     spans: dict[str, tuple[int, int]] = {}
@@ -1223,9 +1187,8 @@ def resolve_ingest_units(lake: str, spark=None) -> list[str]:
     single-runner lifecycle can produce — mid-fold, post-fold,
     post-crash — because a folded unit is LIVE only once its
     ``_FOLD_COMMITTED`` marker exists, written strictly after every
-    data object: a listing concurrent with a promote — even the
-    non-atomic per-object copy an S3-class rename performs — excludes
-    the marker-less partial unit and keeps reading the still-present
+    data object: a listing concurrent with a fold's write excludes the
+    marker-less partial unit and keeps reading the still-present
     originals; once the marker lands (one small PUT, the commit
     point), the folded unit is complete and the originals drop out by
     span containment. Cheap and read-only: one directory listing, one
@@ -1258,10 +1221,9 @@ def read_ingest_lake(spark, lake: str) -> DataFrame:
 def repair_ingest_units(lake: str, spark=None) -> list[str]:
     """Delete every dead ingest unit — the retired generation (units
     span-contained in a COMMITTED folded unit) and any marker-less
-    folded unit (a promote that crashed mid-copy or before its commit
+    folded unit (a fold that crashed mid-write or before its commit
     marker; its originals are all still live, so deleting the partial
-    is lossless) — plus a stale ``.fold_tmp`` staging dir, and return
-    the deleted unit names. This is the fold's own step 1, exposed so
+    is lossless) — and return the deleted unit names. This is the fold's own step 1, exposed so
     callers can reclaim the retained generation's storage early — or
     restore the flat one-copy invariant for legacy ``batch=*`` glob
     readers — without paying for a full fold. Cheap: one listing,
@@ -1278,8 +1240,8 @@ def repair_ingest_units(lake: str, spark=None) -> list[str]:
     Hadoop), so a unit whose delete silently failed is NOT reported as
     reclaimed. Callers that must not tolerate a survivor (the fold —
     re-folding a surviving retired unit would double-count its rows,
-    and a surviving marker-less unit could collide with the promote
-    target) compare the fresh listing instead of this return value."""
+    and a surviving marker-less unit could collide with the fold's
+    output) compare the fresh listing instead of this return value."""
     spans, uncommitted = _ingest_spans(lake, spark)
     dead = _subsumed_units(spans) + uncommitted
     removed = []
@@ -1288,7 +1250,6 @@ def repair_ingest_units(lake: str, spark=None) -> list[str]:
         _delete_tree(target, spark)
         if not _exists(target, spark):
             removed.append(name)
-    _delete_tree(os.path.join(lake, ".fold_tmp"), spark)
     return removed
 
 
@@ -1302,7 +1263,6 @@ def compact_ingest_units(
     compression: str = "zstd",
     curve: str = "morton",
     keep_last: int = 1,
-    promote: str = "rename",
 ) -> dict:
     """Fold the older ``batch=<id>`` units of a batch-keyed ingest lake
     (the ``streaming_clustered_ingest`` layout) into ONE re-clustered
@@ -1318,17 +1278,17 @@ def compact_ingest_units(
     1. REPAIR (:func:`repair_ingest_units`): delete any unit whose
        batch-id span is contained in a committed unit's range — the
        retired generation the PREVIOUS fold left in place — plus any
-       marker-less folded unit (a promote that crashed before its
-       commit marker; lossless to delete, its originals are all still
+       marker-less folded unit (a fold that crashed before its commit
+       marker; lossless to delete, its originals are all still
        live). Repair runs BEFORE candidates are chosen so a retry
        converges instead of re-folding duplicates. Because
        ``_delete_tree`` is best-effort, the fold then re-lists and
        RAISES if any dead unit survived its delete: a surviving
        retired unit re-entering the candidate set would double-count
        its rows into the folded unit (and pass the fingerprint gate,
-       which compares staging against the same duplicated union), and
-       a surviving marker-less unit could collide with the promote
-       target — a silently failed delete is never re-folded.
+       which compares the output against the same duplicated union),
+       and a surviving marker-less unit could collide with the fold's
+       output — a silently failed delete is never re-folded.
     2. Candidates = every live unit except the ``keep_last``
        newest-by-span-end (the hot tail the stream is still near);
        no-op with fewer than 2 candidates. ``keep_last >= 1`` is a
@@ -1341,35 +1301,15 @@ def compact_ingest_units(
     3. One ``zorder_layout`` over the union of candidate units,
        reusing the lake's persisted edge snapshot when present so the
        folded unit stays in the SAME key space as the stream's
-       appends; multiset fingerprint must equal the candidates' union
-       BEFORE anything is promoted. The write target depends on
-       ``promote``:
-
-       - ``promote="rename"`` (default): write into the HIDDEN staging
-         dir ``<lake>/.fold_tmp`` (dot-prefixed: invisible to the
-         resolver, any glob, and any flat listing), then promote with
-         ONE directory rename to ``batch=c<lo>-<hi>``. On local/HDFS
-         stores the rename is a cheap metadata move; on S3-class
-         stores it is a per-object COPY of the folded span — a cost,
-         never a correctness issue (see step 4).
-       - ``promote="direct"``: write STRAIGHT to ``batch=c<lo>-<hi>``
-         — no staging, no rename, NO per-object copy on any store.
-         This is safe for exactly the reason step 4 gives: a folded
-         unit without its ``_FOLD_COMMITTED`` marker does not exist as
-         far as the resolver and the repair sweep are concerned, so
-         the in-progress write is as invisible through the supported
-         read path as a dot-prefixed dir (only a raw ``batch=*`` glob
-         could see it mid-write, and glob reads are already documented
-         as valid only on never-folded lakes). This regime is the
-         prescribed choice on object stores; ``rename`` remains the
-         default because the dot-prefixed staging is additionally
-         invisible to flat listings and out-of-band tooling, which is
-         worth one free metadata move wherever rename IS cheap. A
-         manifest/pointer promote (the ``compact_clustered_table``
-         ``swap="manifest"`` machinery) would also avoid the copy but
-         needs a second reader protocol beside the span resolver;
-         ``direct`` closes the same cost with zero new read-path
-         surface, so it is the adjudicated alternative.
+       appends, written STRAIGHT to ``batch=c<lo>-<hi>`` — no staging
+       directory and no rename, so no per-object copy on any store.
+       The in-progress write is invisible through the supported read
+       path for the reason step 4 gives: a folded unit without its
+       ``_FOLD_COMMITTED`` marker does not exist as far as the resolver
+       and the repair sweep are concerned (only a raw ``batch=*`` glob
+       could see it mid-write, and glob reads are documented as valid
+       only on never-folded lakes). The multiset fingerprint must equal
+       the candidates' union BEFORE the marker lands.
 
        On a fingerprint mismatch the written output is renamed to
        ``<lake>/.fold_failed`` (replacing any earlier failure) so a
@@ -1382,19 +1322,17 @@ def compact_ingest_units(
        folded unit — strictly after every data object — as the COMMIT
        POINT (one small PUT, atomic per object on every store). A
        folded unit without its marker is invisible to the resolver and
-       deleted by the next repair, so even on stores whose rename is a
-       non-atomic per-object copy (S3-class) no reader can observe a
-       partial folded unit: correctness never depends on rename
-       atomicity in EITHER promote regime. The subsumed
+       deleted by the next repair, so no reader can observe a partial
+       folded unit on any store. The subsumed
        units are RETAINED in place as the retired generation — deleted
        by the NEXT fold's repair pass (or an explicit
        :func:`repair_ingest_units`), never by this one. That is the
        same one-generation reader grace the manifest compact gives
        (``compact_clustered_table`` ``keep_versions``): a reader that
-       resolved its unit list just before the promote keeps every
+       resolved its unit list just before the commit keeps every
        listed file alive until the next fold, and a resolver reader
-       listing at ANY point sees exactly one copy of every row — the
-       crash window between rename and delete is gone because there is
+       listing at ANY point sees exactly one copy of every row — there
+       is no crash window between commit and delete because there is
        no delete. Cost: one retained extra copy of the folded span
        until the next fold/repair. A raw ``batch=*`` glob, by contrast,
        double-counts the retained generation — glob reads are only
@@ -1417,16 +1355,12 @@ def compact_ingest_units(
             "next repair delete the fully-replayed unit as contained — "
             "permanent row loss, not a performance trade"
         )
-    if promote not in ("rename", "direct"):
-        raise ValueError(
-            f"promote must be 'rename' or 'direct' (got {promote!r})"
-        )
     repaired = repair_ingest_units(lake, spark)
     spans, uncommitted = _ingest_spans(lake, spark)
     # _delete_tree is best-effort: a dead unit that survived repair's
     # delete would re-enter the candidate union and double-count its
-    # rows past the fingerprint gate (which compares staging against
-    # the same duplicated union), or collide with the promote target.
+    # rows past the fingerprint gate (which compares the output against
+    # the same duplicated union), or collide with the fold's output.
     # Never re-fold a silently failed delete — fail loudly instead.
     leftover = sorted(set(_subsumed_units(spans)) | set(uncommitted))
     if leftover:
@@ -1449,17 +1383,15 @@ def compact_ingest_units(
         *[os.path.join(lake, n) for n in candidates]
     )
     folded_name = f"batch=c{lo}-{hi}"
-    # promote="direct" writes straight to the final name — marker-less,
-    # so invisible to the resolver until the commit point lands; no
-    # staging rename, no per-object copy on S3-class stores (step 3)
-    staging = (os.path.join(lake, folded_name) if promote == "direct"
-               else os.path.join(lake, ".fold_tmp"))
+    # written straight to the final name — marker-less, so invisible to
+    # the resolver until the commit point lands (step 3)
+    unit = os.path.join(lake, folded_name)
     edges = zorder_layout(
-        union, list(cols), staging, bits=bits, num_files=num_files,
+        union, list(cols), unit, bits=bits, num_files=num_files,
         row_group_bytes=row_group_bytes, compression=compression,
         curve=curve, edges=load_edge_snapshot(lake, spark),
     )
-    if (_multiset_fingerprint(spark.read.parquet(staging))
+    if (_multiset_fingerprint(spark.read.parquet(unit))
             != _multiset_fingerprint(union)):
         failed = os.path.join(lake, ".fold_failed")
         preserved = True
@@ -1467,16 +1399,16 @@ def compact_ingest_units(
             _delete_tree(failed, spark)
             if _exists(failed, spark):
                 raise OSError(f"earlier failure at {failed} not clearable")
-            _rename(staging, failed, spark)
+            _rename(unit, failed, spark)
         except Exception:
             # never mask the diagnostic below with a secondary failure
             # of the evidence-preserving move itself
             preserved = False
         note = (
-            f"staging kept for inspection at {failed} (replaces any "
+            f"output kept for inspection at {failed} (replaces any "
             "earlier failure; repair never touches it)"
             if preserved else
-            f"moving the staging from {staging} to {failed} FAILED — "
+            f"moving the output from {unit} to {failed} FAILED — "
             "it remains where it was written and the NEXT repair sweep "
             "will delete it; inspect before re-running"
         )
@@ -1484,15 +1416,13 @@ def compact_ingest_units(
             f"ingest fold of {lake} changed the row multiset; {note}; "
             "original units untouched"
         )
-    if promote == "rename":
-        _rename(staging, os.path.join(lake, folded_name), spark)
     # the commit point: one small PUT strictly after every data object
     # (see step 4 above) — before this lands the folded unit does not
     # exist as far as the resolver and the next repair are concerned
     import json
 
     _write_small_file(
-        os.path.join(lake, folded_name, _FOLD_MARKER),
+        os.path.join(unit, _FOLD_MARKER),
         json.dumps({"folded": list(candidates), "lo": lo, "hi": hi}),
         spark,
     )

@@ -221,38 +221,23 @@ def append_simhash_shard(
 def verify_simhash_index(spark, name: str, id_col: str = "doc_id") -> dict[str, int]:
     """Consistency audit: raises if any banded document lacks a
     signature row; returns ``{"banded_docs", "signed_docs",
-    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise (2 missing
-    keys = the in-place-compaction crash signature; recover with
-    ``compact_simhash_index(..., bits=, n_chunks=)``). Runbook step 4
-    of operators/index_lifecycle.py."""
+    "orphan_sig_docs", "missing_stamp_keys"}`` otherwise. Runbook
+    step 4 of operators/index_lifecycle.py."""
     return verify_index(spark, name, SIMHASH_SPEC, id_col)
 
 
 def compact_simhash_index(
     spark,
     name: str,
-    id_col: str = "doc_id",
-    target: str | None = None,
+    id_col: str,
+    target: str,
     path: str | None = None,
-    bits: int | None = None,
-    n_chunks: int | None = None,
 ) -> dict[str, int]:
     """Drop duplicate rows from both tables —
-    :func:`index_lifecycle.compact_index` (zero-shuffle, in place or
-    into ``target`` for :func:`swap_simhash_index`, raising on a doc_id
-    with conflicting simhash values). ``bits=``/``n_chunks=`` (both or
-    neither) override the geometry stamp written to the output — the
-    recovery path for a crash between the in-place bands overwrite and
-    the re-stamp."""
-    if (bits is None) != (n_chunks is None):
-        raise ValueError(
-            "compact_simhash_index: pass BOTH bits and n_chunks (the "
-            "geometry stamp is one identity) or neither"
-        )
-    override = _simhash_stamp(bits, n_chunks) if bits is not None else None
-    return compact_index(
-        spark, name, SIMHASH_SPEC, id_col, target=target, path=path, stamp_override=override
-    )
+    :func:`index_lifecycle.compact_index` (zero-shuffle, into
+    ``target`` for :func:`swap_simhash_index`, raising on a doc_id with
+    conflicting simhash values)."""
+    return compact_index(spark, name, SIMHASH_SPEC, id_col, target, path)
 
 
 def swap_simhash_index(spark, name: str, target: str) -> dict:

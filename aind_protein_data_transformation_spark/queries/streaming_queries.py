@@ -556,7 +556,7 @@ def streaming_clustered_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the natural compaction granularity: ``compact_ingest_units`` folds
     the older units into one re-clustered ``batch=c<lo>-<hi>`` unit
     (verify-then-promote; the commit point is a ``_FOLD_COMMITTED``
-    marker PUT after every data object, so a crashed promote is
+    marker PUT after every data object, so a crashed fold is
     invisible to readers and repaired losslessly by range containment)
     on whatever cadence the incremental-vs-global gap justifies. The fold
     RETAINS the subsumed units for one generation (deleted by the NEXT

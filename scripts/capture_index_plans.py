@@ -103,7 +103,7 @@ def _flows(spark, work: str, sf_dir: str):
         spark, shard0, "pm", prune_scan=1024
     )
     yield "minhash", "compact", lambda: dedup.compact_minhash_index(
-        spark, "pm", target="pm_v2", path=f"{work}/pm_v2"
+        spark, "pm", "doc_id", "pm_v2", path=f"{work}/pm_v2"
     )
     yield "srp", "write", lambda: embedding_index.write_srp_index(vcorpus, "ps", path=f"{work}/ps")
     yield "srp", "append", lambda: embedding_index.append_srp_shard(spark, vshard1, "ps")
@@ -112,7 +112,7 @@ def _flows(spark, work: str, sf_dir: str):
         spark, vshard0, "ps", prune_scan=1024
     )
     yield "srp", "compact", lambda: embedding_index.compact_srp_index(
-        spark, "ps", target="ps_v2", path=f"{work}/ps_v2"
+        spark, "ps", "vec_id", "ps_v2", path=f"{work}/ps_v2"
     )
     yield "simhash", "write", lambda: simhash_index.write_simhash_index(corpus, "pz", path=f"{work}/pz")
     yield "simhash", "append", lambda: simhash_index.append_simhash_shard(spark, shard1, "pz")
@@ -121,7 +121,7 @@ def _flows(spark, work: str, sf_dir: str):
         spark, shard0, "pz", prune_scan=1024, max_bucket=50
     )
     yield "simhash", "compact", lambda: simhash_index.compact_simhash_index(
-        spark, "pz", target="pz_v2", path=f"{work}/pz_v2"
+        spark, "pz", "doc_id", "pz_v2", path=f"{work}/pz_v2"
     )
 
 

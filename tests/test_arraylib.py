@@ -691,6 +691,29 @@ def test_write_zarr_v2_store_is_format_valid(spark, tmp_path):
     np.testing.assert_array_equal(np.asarray(opened), arr)
 
 
+def test_write_zarr_v2_store_failed_job_leaves_no_zarray(spark, tmp_path):
+    """``.zarray`` is the store's commit point: a chunk job that fails
+    partway (here one truncated payload) leaves no ``.zarray`` — not
+    even a stale one from an earlier complete write — so no zarr reader
+    opens the partial store and fills the missing chunks with zeros."""
+    arr = np.arange(4 * 5 * 3, dtype=np.uint16).reshape(1, 1, 4, 5, 3)
+    chunk_df = blocks.encode_chunks(
+        voxels_df(spark, arr), chunk_size=(2, 2, 2), stack_spatial_shapes={"s0": arr.shape[2:]}
+    )
+    store = str(tmp_path / "v2.zarr")
+    args = (store, {"s0": arr.shape}, (1, 1, 2, 2, 2), {"s0": "uint16"})
+    blocks.write_zarr_v2_store(chunk_df, *args)
+    assert os.path.isfile(os.path.join(store, ".zarray"))
+
+    first = (F.col("z0") == 0) & (F.col("y0") == 0) & (F.col("x0") == 0)
+    torn = chunk_df.withColumn(
+        "payload", F.when(first, F.expr("substring(payload, 1, 3)")).otherwise(F.col("payload"))
+    )
+    with pytest.raises(Exception):
+        blocks.write_zarr_v2_store(torn, *args)
+    assert not os.path.exists(os.path.join(store, ".zarray"))
+
+
 def test_run_job_zarr_v2_sink(spark, stack_dir, tmp_path):
     """zarr_v2=True emits a per-stack zarr v2 group with one array per
     level alongside the parquet output, and the store round-trips to the

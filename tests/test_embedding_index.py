@@ -22,6 +22,7 @@ from aind_protein_data_transformation_spark.operators.embedding_index import (
     append_srp_shard,
     compact_srp_index,
     incremental_srp_pairs,
+    swap_srp_index,
     verify_srp_index,
     write_srp_index,
 )
@@ -241,14 +242,16 @@ def test_reappend_compact_restores_single_append_counts(spark, vecs, tmp_path):
             }
             return info.get("Type"), info.get("Location")
 
-        loc_before = {t: _meta(t) for t in ("t_ecmp_bands", "t_ecmp_vecs")}
-        stats = compact_srp_index(spark, "t_ecmp")
-        # in-place compaction of an EXTERNAL index must keep each table
-        # external AT ITS OWN LOCATION — a silent managed-table rewrite
-        # would strand the stale pre-compaction files at the path
-        for t, (typ, loc) in loc_before.items():
+        stats = compact_srp_index(
+            spark, "t_ecmp", "vec_id", "t_ecmp_v2", path=str(tmp_path / "cmp_v2")
+        )
+        swap_srp_index(spark, "t_ecmp", "t_ecmp_v2")
+        # the swapped-in EXTERNAL index keeps each table external at the
+        # compaction's path (the rename is metadata-only)
+        for t, sub in (("t_ecmp_bands", "bands"), ("t_ecmp_vecs", "vecs")):
+            typ, loc = _meta(t)
             assert typ == "EXTERNAL", (t, typ)
-            assert _meta(t) == (typ, loc), t
+            assert loc.endswith(f"cmp_v2/{sub}"), (t, loc)
         assert stats["bands_before"] > stats["bands_after"]
         assert stats["vecs_before"] > stats["vecs_after"]
         assert stats["bands_after"] == spark.table("t_ecmp_ref_bands").count()
@@ -258,13 +261,11 @@ def test_reappend_compact_restores_single_append_counts(spark, vecs, tmp_path):
             ddl = spark.sql(f"SHOW CREATE TABLE {t}").first()[0]
             assert "CLUSTERED BY" in ddl, ddl
         # idempotent
-        stats2 = compact_srp_index(spark, "t_ecmp")
+        stats2 = compact_srp_index(
+            spark, "t_ecmp", "vec_id", "t_ecmp_v3", path=str(tmp_path / "cmp_v3")
+        )
         assert stats2["bands_before"] == stats2["bands_after"]
         assert stats2["vecs_before"] == stats2["vecs_after"]
-        # in-place mode rejects a divergent path (it would strand the
-        # stale files at the catalog location)
-        with pytest.raises(ValueError, match="only meaningful with target"):
-            compact_srp_index(spark, "t_ecmp", path=str(tmp_path / "other"))
         # zero-shuffle: dedup keys are supersets of the bucket columns
         for tbl, keys in (
             ("t_ecmp_bands", ["band", "band_val", "vec_id"]),
@@ -279,7 +280,7 @@ def test_reappend_compact_restores_single_append_counts(spark, vecs, tmp_path):
             )
             assert "Exchange" not in plan, (tbl, plan)
     finally:
-        for t in ("t_ecmp_bands", "t_ecmp_vecs",
+        for t in ("t_ecmp_bands", "t_ecmp_vecs", "t_ecmp_v3_bands", "t_ecmp_v3_vecs",
                   "t_ecmp_ref_bands", "t_ecmp_ref_vecs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -296,7 +297,7 @@ def test_compact_into_target_leaves_source_and_matches(spark, vecs, tmp_path):
         src_probe = _probe(spark, c, "t_etgt_src")
         assert src_probe, "degenerate: no cross pairs on this fixture"
         stats = compact_srp_index(
-            spark, "t_etgt_src", target="t_etgt_v2", path=str(tmp_path / "v2")
+            spark, "t_etgt_src", "vec_id", "t_etgt_v2", path=str(tmp_path / "v2")
         )
         assert stats["bands_after"] < stats["bands_before"]
         assert spark.table("t_etgt_src_bands").count() == src_bands
@@ -319,7 +320,10 @@ def test_compact_raises_on_conflicting_vectors(spark, vecs, tmp_path):
         b_modified = b.selectExpr("vec_id", f"{MUT} AS embedding")
         append_srp_shard(spark, b_modified, "t_econf")
         with pytest.raises(ValueError, match="conflicting vectors"):
-            compact_srp_index(spark, "t_econf")
+            compact_srp_index(
+                spark, "t_econf", "vec_id", "t_econf_v2", path=str(tmp_path / "conf_v2")
+            )
+        assert not spark.catalog.tableExists("t_econf_v2_bands")
     finally:
         for t in ("t_econf_bands", "t_econf_vecs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -330,7 +334,8 @@ def test_signer_geometry_mismatch_raises_and_survives_compaction(spark, vecs, tm
     different signer geometry emits band rows that can never collide
     meaningfully, silently losing pairs — the stamped table properties
     turn that into an up-front error, and compaction (which recreates
-    the table) must carry the stamp forward in both modes."""
+    the table) must carry the stamp forward through the target and the
+    swap into service."""
     shard = _mutants(vecs, 10, 0, 1_000_000)
     try:
         write_srp_index(
@@ -344,19 +349,19 @@ def test_signer_geometry_mismatch_raises_and_survives_compaction(spark, vecs, tm
         assert incremental_srp_pairs(
             spark, shard, "t_egeo", n_bits=16, n_bands=4
         ).count()
-        # the stamp survives in-place compaction...
-        compact_srp_index(spark, "t_egeo")
-        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
-            incremental_srp_pairs(spark, shard, "t_egeo")
-        # ...and compact-into-target
+        # the stamp survives compact-into-target...
         compact_srp_index(
-            spark, "t_egeo", target="t_egeo_v2", path=str(tmp_path / "egeo2")
+            spark, "t_egeo", "vec_id", "t_egeo_v2", path=str(tmp_path / "egeo2")
         )
         with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
             incremental_srp_pairs(spark, shard, "t_egeo_v2")
         assert incremental_srp_pairs(
             spark, shard, "t_egeo_v2", n_bits=16, n_bands=4
         ).count()
+        # ...and the swap into service
+        swap_srp_index(spark, "t_egeo", "t_egeo_v2")
+        with pytest.raises(ValueError, match="n_bits: index='16' vs session='32'"):
+            incremental_srp_pairs(spark, shard, "t_egeo")
     finally:
         for t in ("t_egeo_bands", "t_egeo_vecs",
                   "t_egeo_v2_bands", "t_egeo_v2_vecs"):
@@ -475,33 +480,34 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
 
 
 def test_lost_stamp_detected_and_recoverable(spark, vecs):
-    """ADVICE r8: an in-place compaction that crashes after the bands
-    overwrite but before the re-stamp leaves a complete-looking index
-    whose geometry stamp is erased — the stamp guard then passes it
-    UNVALIDATED, and a plain compaction re-run cannot restore the stamp
-    (it re-reads the now-unstamped table). verify_srp_index flags the
-    state; a re-run with the explicit geometry override restores it."""
+    """ADVICE r8: an index whose geometry stamp is erased (tampering, a
+    hand-built table) is complete-looking, and the stamp guard passes
+    it UNVALIDATED; compaction cannot restore the stamp (it carries
+    what it reads). verify_srp_index flags the state; apply_stamp with
+    the known geometry restores it."""
     from aind_protein_data_transformation_spark.operators.embedding_index import (
         SRP_STAMP_KEYS,
+        _srp_stamp,
         compact_srp_index,
+    )
+    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
+        apply_stamp,
     )
 
     try:
         write_srp_index(vecs, "t_estamp", n_buckets=4)
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 0
-        # simulate the crash window: stamp gone, tables complete
+        # stamp gone, tables complete
         spark.sql(
             f"ALTER TABLE t_estamp_bands UNSET TBLPROPERTIES "
             f"('{SRP_STAMP_KEYS[0]}', '{SRP_STAMP_KEYS[1]}')"
         )
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 2
-        # a plain re-run cannot restore what it can no longer read...
-        compact_srp_index(spark, "t_estamp")
-        assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 2
-        # ...the explicit known-geometry override can
-        with pytest.raises(ValueError, match="BOTH n_bits and n_bands"):
-            compact_srp_index(spark, "t_estamp", n_bits=32)
-        compact_srp_index(spark, "t_estamp", n_bits=32, n_bands=4)
+        # compaction cannot restore what it can no longer read...
+        compact_srp_index(spark, "t_estamp", "vec_id", "t_estamp_v2")
+        assert verify_srp_index(spark, "t_estamp_v2")["missing_stamp_keys"] == 2
+        # ...the known-geometry re-stamp can
+        apply_stamp(spark, "t_estamp_bands", _srp_stamp(32, 4))
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 0
         # and the restored stamp guards probes again
         with pytest.raises(ValueError, match="n_bits: index='32' vs session='16'"):
@@ -514,10 +520,10 @@ def test_lost_stamp_detected_and_recoverable(spark, vecs):
         )
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 1
         with pytest.raises(ValueError, match="PARTIAL identity stamp"):
-            compact_srp_index(spark, "t_estamp")
-        # the full explicit override repairs it
-        compact_srp_index(spark, "t_estamp", n_bits=32, n_bands=4)
+            compact_srp_index(spark, "t_estamp", "vec_id", "t_estamp_v3")
+        # the full re-stamp repairs it
+        apply_stamp(spark, "t_estamp_bands", _srp_stamp(32, 4))
         assert verify_srp_index(spark, "t_estamp")["missing_stamp_keys"] == 0
     finally:
-        for t in ("t_estamp_bands", "t_estamp_vecs"):
+        for t in ("t_estamp_bands", "t_estamp_vecs", "t_estamp_v2_bands", "t_estamp_v2_vecs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

@@ -272,11 +272,12 @@ def test_reappend_emits_unique_rows(spark, sf_dir, tmp_path):
 def test_compact_restores_single_append_counts(spark, sf_dir, tmp_path):
     """VERDICT r7 #3: a re-appended shard is result-idempotent but
     storage-monotonic. compact_minhash_index rewrites both tables
-    without the duplicate rows: after double-append + compact, row
-    counts equal a single-append index, probes return exactly the same
-    pairs, and the bucketed layout survives the rewrite."""
+    without the duplicate rows: after double-append + compact + swap,
+    row counts equal a single-append index, probes return exactly the
+    same pairs, and the bucketed layout survives the rewrite."""
     from aind_protein_data_transformation_spark.operators.dedup import (
         compact_minhash_index,
+        swap_minhash_index,
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -309,13 +310,15 @@ def test_compact_restores_single_append_counts(spark, sf_dir, tmp_path):
             }
             return info.get("Type"), info.get("Location")
 
-        loc_before = {t: _meta(t) for t in ("t_cmp_bands", "t_cmp_sigs")}
-        stats = compact_minhash_index(spark, "t_cmp")
-        # in-place compaction of an EXTERNAL index keeps each table
-        # external at its own location (no stranded stale copy)
-        for t, (typ, loc) in loc_before.items():
+        v2 = str(tmp_path / "cmp_v2")
+        stats = compact_minhash_index(spark, "t_cmp", "doc_id", "t_cmp_v2", path=v2)
+        swap_minhash_index(spark, "t_cmp", "t_cmp_v2")
+        # the swapped-in EXTERNAL index keeps each table external at the
+        # compaction's path (the rename is metadata-only)
+        for t, sub in (("t_cmp_bands", "bands"), ("t_cmp_sigs", "sigs")):
+            typ, loc = _meta(t)
             assert typ == "EXTERNAL", (t, typ)
-            assert _meta(t) == (typ, loc), t
+            assert loc.endswith(f"cmp_v2/{sub}"), (t, loc)
         # duplicates were really present and really removed
         assert stats["bands_before"] > stats["bands_after"]
         assert stats["sigs_before"] > stats["sigs_after"]
@@ -327,13 +330,11 @@ def test_compact_restores_single_append_counts(spark, sf_dir, tmp_path):
             ddl = spark.sql(f"SHOW CREATE TABLE {t}").first()[0]
             assert "CLUSTERED BY" in ddl, ddl
         # idempotent: compacting a compacted index is a no-op
-        stats2 = compact_minhash_index(spark, "t_cmp")
+        stats2 = compact_minhash_index(
+            spark, "t_cmp", "doc_id", "t_cmp_v3", path=str(tmp_path / "cmp_v3")
+        )
         assert stats2["bands_before"] == stats2["bands_after"]
         assert stats2["sigs_before"] == stats2["sigs_after"]
-        # in-place mode rejects a divergent path (it would strand the
-        # stale files at the catalog location)
-        with pytest.raises(ValueError, match="only meaningful with target"):
-            compact_minhash_index(spark, "t_cmp", path=str(tmp_path / "o"))
         # scale shape: the dedup keys are supersets of the bucket
         # columns, so the bucketed reads satisfy the aggregation's
         # clustering requirement and compaction shuffles NOTHING
@@ -355,7 +356,7 @@ def test_compact_restores_single_append_counts(spark, sf_dir, tmp_path):
             )
             assert "Exchange" not in plan, (tbl, plan)
     finally:
-        for t in ("t_cmp_bands", "t_cmp_sigs",
+        for t in ("t_cmp_bands", "t_cmp_sigs", "t_cmp_v3_bands", "t_cmp_v3_sigs",
                   "t_cmp_ref_bands", "t_cmp_ref_sigs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
@@ -391,7 +392,7 @@ def test_compact_into_target_leaves_source_and_matches(spark, sf_dir, tmp_path):
         src_probe = probe("t_tgt_src")
         assert src_probe, "degenerate: no cross pairs at this sf"
         stats = compact_minhash_index(
-            spark, "t_tgt_src", target="t_tgt_v2", path=str(tmp_path / "v2")
+            spark, "t_tgt_src", "doc_id", "t_tgt_v2", path=str(tmp_path / "v2")
         )
         assert stats["bands_after"] < stats["bands_before"]
         # source untouched, target probes identically with bucketing
@@ -427,7 +428,10 @@ def test_compact_raises_on_conflicting_signatures(spark, sf_dir, tmp_path):
         )
         append_minhash_shard(spark, b_modified, "t_conf")
         with pytest.raises(ValueError, match="conflicting signature"):
-            compact_minhash_index(spark, "t_conf")
+            compact_minhash_index(
+                spark, "t_conf", "doc_id", "t_conf_v2", path=str(tmp_path / "conf_v2")
+            )
+        assert not spark.catalog.tableExists("t_conf_v2_bands")
     finally:
         for t in ("t_conf_bands", "t_conf_sigs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -517,28 +521,26 @@ def test_minhash_stamp_guards_probe_and_append(spark, split_docs, tmp_path):
         )
         with pytest.raises(ValueError, match="PARTIAL identity stamp"):
             incremental_minhash_pairs(spark, shard, name)
+        # ...and compaction refuses to carry it into a target
+        with pytest.raises(ValueError, match="PARTIAL identity stamp"):
+            compact_minhash_index(
+                spark, name, "doc_id", f"{name}_v2", path=str(tmp_path / "v2")
+            )
         # fully-unstamped legacy passes unvalidated; verify flags it,
-        # and the known-geometry re-stamp (or the compaction override)
-        # restores the guard
+        # compaction cannot restore what it can't read, and the
+        # known-geometry re-stamp restores the guard
         spark.sql(
             f"ALTER TABLE {name}_bands UNSET TBLPROPERTIES "
             + "(" + ", ".join(f"'{k}'" for k in MINHASH_STAMP_KEYS) + ")"
         )
         assert verify_minhash_index(spark, name)["missing_stamp_keys"] == 4
         incremental_minhash_pairs(spark, shard, name).count()  # legacy pass
-        compact_minhash_index(spark, name)  # cannot restore what it can't read
-        assert verify_minhash_index(spark, name)["missing_stamp_keys"] == 4
-        compact_minhash_index(spark, name, shingle_k=3)
+        compact_minhash_index(spark, name, "doc_id", f"{name}_v2", path=str(tmp_path / "v2"))
+        assert verify_minhash_index(spark, f"{name}_v2")["missing_stamp_keys"] == 4
+        apply_stamp(spark, f"{name}_bands", _minhash_stamp(3))
         assert verify_minhash_index(spark, name)["missing_stamp_keys"] == 0
         with pytest.raises(ValueError, match="shingle_k"):
             incremental_minhash_pairs(spark, shard, name, k=4)
-        # the direct re-stamp tool works too
-        spark.sql(
-            f"ALTER TABLE {name}_bands UNSET TBLPROPERTIES "
-            + "(" + ", ".join(f"'{k}'" for k in MINHASH_STAMP_KEYS) + ")"
-        )
-        apply_stamp(spark, f"{name}_bands", _minhash_stamp(3))
-        assert verify_minhash_index(spark, name)["missing_stamp_keys"] == 0
     finally:
-        for t in (f"{name}_bands", f"{name}_sigs"):
+        for t in (f"{name}_bands", f"{name}_sigs", f"{name}_v2_bands", f"{name}_v2_sigs"):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

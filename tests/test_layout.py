@@ -357,13 +357,14 @@ def test_incremental_append_clusters_each_batch(spark, tmp_path):
 
 
 def test_compact_recovers_global_clustering(spark, tmp_path):
-    """The compact step's two claims: the swap preserves the multiset
+    """The compact step's two claims: the commit preserves the multiset
     (verified BEFORE promotion — a corrupted compact raises and leaves
     the live table untouched), and re-clustering the merged unit
     recovers (approximately) the globally-clustered pruning bound the
     per-batch appends gave up."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
+        read_clustered_table,
     )
 
     n = 128
@@ -385,7 +386,7 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
 
     compact_clustered_table(inc, ["a", "b"], bits=6, num_files=4,
                             row_group_bytes=16 * 1024, spark=spark)
-    back = spark.read.parquet(inc)
+    back = read_clustered_table(spark, inc)
     assert back.count() == n * n
     assert back.select(F.countDistinct("a", "b")).collect()[0][0] == n * n
     after = layout_scan_fraction(inc, box)
@@ -400,83 +401,11 @@ def test_compact_recovers_global_clustering(spark, tmp_path):
     # safely.
     assert after["fraction_rows_kept"] < bound["fraction_rows_kept"] + 0.15
     assert before["fraction_rows_kept"] < 0.6  # batches pruned already
-    assert not os.path.exists(inc + ".compact")
-    assert not os.path.exists(inc + ".retired")
 
     with pytest.raises(ValueError, match="PATH"):
         compact_clustered_table(df, ["a"])
     with pytest.raises(ValueError, match="session required"):
         compact_clustered_table(inc, ["a", "b"])
-
-
-def test_compact_swap_crash_points_are_recoverable(spark, tmp_path):
-    """Every inter-rename crash point of compact_clustered_table leaves
-    a recoverable state (same standard the index lifecycles' swap is
-    held to):
-
-    - a compact that silently drops rows raises at the verify, BEFORE
-      any rename: live table untouched, the bad compact dir kept for
-      inspection;
-    - crash BETWEEN the renames (live -> .retired done, .compact ->
-      live not): the verified old table sits at <path>.retired and the
-      verified new one at <path>.compact - rename either back;
-    - after recovery a fresh compact completes normally and cleans up.
-    """
-    import shutil
-
-    import aind_protein_data_transformation_spark.operators.layout as mod
-    from aind_protein_data_transformation_spark.operators.layout import (
-        compact_clustered_table,
-    )
-
-    rows = [Row(a=float(a), b=float(b)) for a in range(32) for b in range(32)]
-    df = spark.createDataFrame(rows)
-    live = str(tmp_path / "t")
-    zorder_layout(df, ["a", "b"], live, bits=4, num_files=2)
-
-    def nrows(p):
-        return spark.read.parquet(p).count()
-
-    before_rows = nrows(live)
-
-    # corrupted compact: the re-cluster silently drops rows - the
-    # verify must raise before any rename touches the live table
-    real_zorder_layout = mod.zorder_layout
-
-    def lossy_zorder_layout(d, cols, out, **kw):
-        return real_zorder_layout(d.limit(100), cols, out, **kw)
-
-    mod.zorder_layout = lossy_zorder_layout
-    try:
-        with pytest.raises(RuntimeError, match="changed the row multiset"):
-            compact_clustered_table(live, ["a", "b"], bits=4,
-                                    num_files=2, spark=spark)
-    finally:
-        mod.zorder_layout = real_zorder_layout
-    assert nrows(live) == before_rows            # live untouched
-    assert os.path.isdir(live + ".compact")      # kept for inspection
-    shutil.rmtree(live + ".compact")
-
-    # crash between the renames: reproduce the state manually
-    zorder_layout(spark.read.parquet(live), ["a", "b"], live + ".compact",
-                  bits=4, num_files=2)
-    os.rename(live, live + ".retired")
-    assert not os.path.exists(live)
-    # recovery A: rename the old table back
-    os.rename(live + ".retired", live)
-    assert nrows(live) == before_rows
-    # recovery B: promote the new table instead
-    os.rename(live, live + ".retired")
-    os.rename(live + ".compact", live)
-    assert nrows(live) == before_rows
-    shutil.rmtree(live + ".retired")
-
-    # a fresh compact over the recovered table completes and cleans up
-    compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark)
-    assert nrows(live) == before_rows
-    assert not os.path.exists(live + ".compact")
-    assert not os.path.exists(live + ".retired")
 
 
 def test_zorder_key_nan_top_bin(spark):
@@ -556,7 +485,7 @@ def test_auto_bits_matches_measured_optima():
 # (1) the bits-sizing law is the DEFAULT, and the default beats bits=8;
 # (2) auto_bits can be capped to the Hilbert lookup budget;
 # (3) the helper-column collision guard;
-# (4) the object-store-safe manifest swap regime;
+# (4) the object-store-safe manifest commit;
 # (5) DATE-typed stats in layout_scan_fraction.
 
 
@@ -688,11 +617,11 @@ def test_scan_fraction_handles_date_columns(spark, tmp_path):
     assert res2["rows_kept"] == res["rows_kept"]
 
 
-def test_manifest_compact_swap_and_resolve(spark, tmp_path):
-    """swap="manifest": promotion is one small pointer update, data
-    directories are immutable versioned units, readers resolve through
-    resolve_clustered_table, and a raw read of the root fails loudly
-    instead of returning stale data."""
+def test_manifest_compact_swap_and_resolve(spark, tmp_path, monkeypatch):
+    """Promotion is one small pointer update and no directory rename,
+    data directories are immutable versioned units, readers resolve
+    through resolve_clustered_table, and a raw read of the root fails
+    loudly instead of returning stale data."""
     from aind_protein_data_transformation_spark.operators.layout import (
         compact_clustered_table,
         read_clustered_table,
@@ -711,8 +640,14 @@ def test_manifest_compact_swap_and_resolve(spark, tmp_path):
                   mode="append", edges=e)
     assert resolve_clustered_table(live) == live  # flat until compacted
 
+    # no directory is renamed: the pointer commit uses os.replace, so
+    # every compact below runs with os.rename raising
+    def no_rename(*args):
+        raise AssertionError(f"compact renamed a directory: {args}")
+
+    monkeypatch.setattr(os, "rename", no_rename)
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     v1 = resolve_clustered_table(live)
     assert v1.endswith(os.path.join("_versions", "v_000001"))
     assert read_clustered_table(spark, live).count() == 1024
@@ -724,7 +659,7 @@ def test_manifest_compact_swap_and_resolve(spark, tmp_path):
     # but RETAINED (keep_versions=1 default — the in-flight-reader
     # grace window); the explicit vacuum reclaims it
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     v2 = resolve_clustered_table(live)
     assert v2.endswith("v_000002")
     assert os.path.isdir(v1)                       # grace window
@@ -738,16 +673,14 @@ def test_manifest_compact_swap_and_resolve(spark, tmp_path):
     # keep_versions=0 restores eager cleanup: the third compact removes
     # v_000002 immediately
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest", keep_versions=0)
+                            spark=spark, keep_versions=0)
     assert resolve_clustered_table(live).endswith("v_000003")
     assert not os.path.exists(v2)
 
-    with pytest.raises(ValueError, match="swap regime"):
-        compact_clustered_table(live, ["a"], spark=spark, swap="copy")
 
 
 def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
-    """The manifest twin of the rename crash-point test: a lossy
+    """Every crash point of the manifest commit is recoverable: a lossy
     compact raises at the verify BEFORE the pointer moves (live
     resolution untouched, bad unit kept for inspection); a crash after
     the version-dir write but before the pointer update leaves the old
@@ -775,7 +708,7 @@ def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
     try:
         with pytest.raises(RuntimeError, match="changed the row multiset"):
             compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                                    spark=spark, swap="manifest")
+                                    spark=spark)
     finally:
         mod.zorder_layout = real_zorder_layout
     assert resolve_clustered_table(live) == live       # pointer untouched
@@ -787,7 +720,7 @@ def test_manifest_swap_crash_points_are_recoverable(spark, tmp_path):
     # exactly that state; the retried compact recomputes v_000001 from
     # the (absent) pointer and overwrites the orphan
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     assert resolve_clustered_table(live).endswith("v_000001")
     from aind_protein_data_transformation_spark.operators.layout import read_clustered_table
     assert read_clustered_table(spark, live).count() == 1024
@@ -824,7 +757,7 @@ def test_append_after_manifest_compact_stays_visible(spark, tmp_path):
     e = zorder_layout(first, ["a", "b"], live, bits=4, num_files=2,
                       mode="append")
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     v1 = resolve_clustered_table(live)
 
     # post-compact appends land in the live unit, visible to readers
@@ -841,7 +774,7 @@ def test_append_after_manifest_compact_stays_visible(spark, tmp_path):
     # stays for the retention window (keep_versions=1 default) and the
     # live read is unaffected by its presence
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     assert resolve_clustered_table(live).endswith("v_000002")
     assert os.path.isdir(v1)
     assert read_clustered_table(spark, live).count() == 1024
@@ -965,7 +898,7 @@ def test_manifest_swap_through_hadoop_filesystem_branch(spark, tmp_path):
     assert _read_pointer(uri, spark) is None
 
     compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     # pointer readable only through the Hadoop branch (no local file
     # at the literal URI string), resolution + read work end to end
     assert _read_pointer(uri, spark) == "v_000001"
@@ -981,7 +914,7 @@ def test_manifest_swap_through_hadoop_filesystem_branch(spark, tmp_path):
     # (keep_versions=0 so the retired-unit delete itself exercises the
     # Hadoop branch too)
     compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest", keep_versions=0)
+                            spark=spark, keep_versions=0)
     assert _read_pointer(uri, spark) == "v_000002"
     assert not (local_root / "_versions" / "v_000001").exists()
     assert read_clustered_table(spark, uri).count() == 1024
@@ -990,7 +923,7 @@ def test_manifest_swap_through_hadoop_filesystem_branch(spark, tmp_path):
     # — both resolving, listing, and deleting through the Hadoop branch
     from aind_protein_data_transformation_spark.operators.layout import vacuum_clustered_table
     compact_clustered_table(uri, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     assert (local_root / "_versions" / "v_000002").exists()   # retained
     removed = vacuum_clustered_table(uri, spark)
     assert [os.path.basename(p) for p in removed] == ["v_000002"]
@@ -1016,7 +949,7 @@ def test_blank_pointer_fails_loudly_never_multi_unit(spark, tmp_path):
     )
     zorder_layout(df, ["a", "b"], live, bits=3, num_files=2)
     compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     pointer = os.path.join(live, "_versions", "_CURRENT")
     with open(pointer, "w") as f:
         f.write("")  # simulate the crashed-commit state
@@ -1052,7 +985,7 @@ def test_manifest_sweep_preserves_caller_sidecars(spark, tmp_path):
 
     for _ in range(2):
         compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                                spark=spark, swap="manifest")
+                                spark=spark)
     assert os.path.isfile(sidecar)          # sidecar survived both sweeps
     with open(sidecar) as f:
         assert json.load(f) == edges
@@ -1081,14 +1014,14 @@ def test_manifest_retention_keeps_in_flight_reader_alive(spark, tmp_path):
     )
     zorder_layout(df, ["a", "b"], live, bits=4, num_files=2)
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     v1 = resolve_clustered_table(live)
 
     # the in-flight reader: resolved v_000001, scan not yet finished
     reader = spark.read.parquet(v1)
 
     compact_clustered_table(live, ["a", "b"], bits=4, num_files=2,
-                            spark=spark, swap="manifest")
+                            spark=spark)
     assert resolve_clustered_table(live).endswith("v_000002")
     # the pre-compact reader finishes its scan against the retained unit
     assert reader.count() == 1024
@@ -1123,7 +1056,7 @@ def test_vacuum_respects_keep_versions_and_flat_noop(spark, tmp_path):
     # three compacts with an unbounded window: v1 and v2 both retained
     for _ in range(3):
         compact_clustered_table(live, ["a", "b"], bits=3, num_files=2,
-                                spark=spark, swap="manifest",
+                                spark=spark,
                                 keep_versions=10)
     assert resolve_clustered_table(live).endswith("v_000003")
     vroot = os.path.join(live, "_versions")
@@ -1190,7 +1123,7 @@ def test_remote_scheme_without_session_raises(tmp_path):
 def test_ingest_fold_through_hadoop_filesystem_branch(spark, tmp_path):
     """The batch-keyed ingest fold over an explicit ``file:`` URI with
     a session: unit listing, the per-folded-unit marker existence
-    probe, the ``_FOLD_COMMITTED`` PUT, the promote rename, the
+    probe, the ``_FOLD_COMMITTED`` PUT, the
     edge-snapshot read, and the retained-generation deletes all route
     through the Hadoop FileSystem — the same code an s3a:// lake would
     run, minus the network."""
@@ -1235,9 +1168,9 @@ def test_ingest_fold_through_hadoop_filesystem_branch(spark, tmp_path):
 
 
 def test_ingest_fold_direct_promote_through_hadoop_branch(spark, tmp_path):
-    """``promote="direct"`` over an explicit ``file:`` URI — the regime
-    prescribed for object stores running the same Hadoop FileSystem
-    code an s3a:// lake would, with ZERO renames asserted: the folded
+    """The fold over an explicit ``file:`` URI — the same Hadoop
+    FileSystem code an s3a:// lake would run, with ZERO renames
+    asserted: the folded
     unit is written straight to its marker-gated final name, the
     ``_FOLD_COMMITTED`` PUT goes through ``fs.create``, and the
     ``_rename`` helper is never invoked (monkeypatch-asserted), so on a
@@ -1267,13 +1200,12 @@ def test_ingest_fold_direct_promote_through_hadoop_branch(spark, tmp_path):
     real_rename = lm._rename
 
     def forbid(src, dst, spark_):
-        raise AssertionError(f"direct promote must not rename ({src})")
+        raise AssertionError(f"the fold must not rename ({src})")
 
     lm._rename = forbid
     try:
         report = compact_ingest_units(uri, ["a", "b"], spark, bits=4,
-                                      num_files=1, keep_last=1,
-                                      promote="direct")
+                                      num_files=1, keep_last=1)
     finally:
         lm._rename = real_rename
     assert report["folded"] == 2 and report["unit"] == "batch=c0-1"

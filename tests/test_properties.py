@@ -766,7 +766,7 @@ class _LakeModel:
         lo = min(spans[n][0] for n in candidates)
         hi = max(spans[n][1] for n in candidates)
         name = f"batch=c{lo}-{hi}"
-        assert name not in self.units  # promote rename cannot collide
+        assert name not in self.units  # the fold's output cannot collide
         self.units[name] = frozenset().union(
             *(self.units[n] for n in candidates)
         )

@@ -26,6 +26,7 @@ from aind_protein_data_transformation_spark.operators.simhash_index import (
     append_simhash_shard,
     compact_simhash_index,
     incremental_simhash_pairs,
+    swap_simhash_index,
     verify_simhash_index,
     write_simhash_index,
 )
@@ -163,11 +164,15 @@ def test_append_crash_states_and_compaction(spark, split_docs, tmp_path):
         with pytest.raises(ValueError, match="no signature row"):
             incremental_simhash_pairs(spark, shard, "t_shc", verify=True)
         # heal per the recovery rule, then crash-re-append duplicates
-        # and compact them away without changing any probe
+        # and compact them away (into a target, swapped into service)
+        # without changing any probe
         append_simhash_shard(spark, extra, "t_shc")
         append_simhash_shard(spark, appended, "t_shc")  # duplicate rows
         dup_probe = _probe(spark, shard, "t_shc")
-        stats = compact_simhash_index(spark, "t_shc")
+        stats = compact_simhash_index(
+            spark, "t_shc", "doc_id", "t_shc_v2", path=str(tmp_path / "shc_v2")
+        )
+        swap_simhash_index(spark, "t_shc", "t_shc_v2")
         assert stats["bands_after"] < stats["bands_before"]
         assert stats["sigs_after"] < stats["sigs_before"]
         assert _probe(spark, shard, "t_shc") == dup_probe
@@ -188,7 +193,10 @@ def test_append_crash_states_and_compaction(spark, split_docs, tmp_path):
         )
         append_simhash_shard(spark, conflict, "t_shc")
         with pytest.raises(ValueError, match="conflicting simhash"):
-            compact_simhash_index(spark, "t_shc")
+            compact_simhash_index(
+                spark, "t_shc", "doc_id", "t_shc_v3", path=str(tmp_path / "shc_v3")
+            )
+        assert not spark.catalog.tableExists("t_shc_v3_bands")
     finally:
         _drop(
             spark,
@@ -343,9 +351,13 @@ def test_widened_chunk_index_matches_duckdb_oracle(spark, sf_dir, tmp_path):
         # exceeds the 3-chunk guarantee and raises
         with pytest.raises(ValueError, match="pigeonhole over 3 chunks"):
             incremental_simhash_pairs(spark, shard, "t_shw", max_hamming=3)
-        # lifecycle keeps the widened geometry: in-place compaction
-        # re-stamps, and the probe still matches the oracle
-        compact_simhash_index(spark, "t_shw")
+        # lifecycle keeps the widened geometry: compaction carries the
+        # stamp through the target and the swap, and the probe still
+        # matches the oracle
+        compact_simhash_index(
+            spark, "t_shw", "doc_id", "t_shw_v2", path=str(tmp_path / "shw_v2")
+        )
+        swap_simhash_index(spark, "t_shw", "t_shw_v2")
         assert verify_simhash_index(spark, "t_shw")["missing_stamp_keys"] == 0
         assert _probe_raw(spark, shard, "t_shw") == expected
         # APPENDS derive the widened geometry from the stamp: building
@@ -375,11 +387,17 @@ def _probe_raw(spark, shard, name):
 
 
 def test_lost_simhash_stamp_detected_and_recoverable(spark, split_docs):
-    """The in-place-compaction crash window (crash after the bands
-    overwrite, before the re-stamp) leaves a complete-looking UNSTAMPED
-    index; verify flags it, and the compaction's explicit geometry
-    override restores the stamp (a plain re-run cannot — it re-reads
-    the now-unstamped table)."""
+    """An erased stamp (tampering, a hand-built table) leaves a
+    complete-looking UNSTAMPED index; verify flags it, compaction
+    cannot restore the stamp (it carries what it reads), and apply_stamp
+    with the known geometry restores it."""
+    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
+        apply_stamp,
+    )
+    from aind_protein_data_transformation_spark.operators.simhash_index import (
+        _simhash_stamp,
+    )
+
     corpus, shard = split_docs
     try:
         write_simhash_index(corpus.limit(60), "t_shl", n_buckets=2)
@@ -389,17 +407,15 @@ def test_lost_simhash_stamp_detected_and_recoverable(spark, split_docs):
             "('sparkgraft.simhash.bits', 'sparkgraft.simhash.chunks')"
         )
         assert verify_simhash_index(spark, "t_shl")["missing_stamp_keys"] == 2
-        compact_simhash_index(spark, "t_shl")  # cannot restore what it can't read
-        assert verify_simhash_index(spark, "t_shl")["missing_stamp_keys"] == 2
-        with pytest.raises(ValueError, match="BOTH bits and n_chunks"):
-            compact_simhash_index(spark, "t_shl", bits=32)
-        compact_simhash_index(spark, "t_shl", bits=32, n_chunks=4)
+        compact_simhash_index(spark, "t_shl", "doc_id", "t_shl_v2")  # cannot restore it
+        assert verify_simhash_index(spark, "t_shl_v2")["missing_stamp_keys"] == 2
+        apply_stamp(spark, "t_shl_bands", _simhash_stamp(32, 4))
         assert verify_simhash_index(spark, "t_shl")["missing_stamp_keys"] == 0
         # the restored stamp guards probes again
         with pytest.raises(ValueError, match="bits: index='32' vs session='48'; chunks: index='4' vs session='3'"):
             incremental_simhash_pairs(spark, shard, "t_shl", bits=48, n_chunks=3)
     finally:
-        _drop(spark, "t_shl_bands", "t_shl_sigs")
+        _drop(spark, "t_shl_bands", "t_shl_sigs", "t_shl_v2_bands", "t_shl_v2_sigs")
 
 
 def test_chunk_bucket_occupancy_and_skew_cap(spark, split_docs, tmp_path):

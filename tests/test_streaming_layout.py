@@ -327,8 +327,8 @@ def test_compact_ingest_units_folds_and_preserves(spark, split_sf_dir, tmp_path)
 
 
 def test_compact_ingest_units_repairs_crash_leftovers(spark, split_sf_dir, tmp_path):
-    """A promote that crashed BEFORE its commit marker (mid-copy on an
-    object store, or between rename and marker) leaves a marker-less
+    """A fold that crashed BEFORE its commit marker (mid-write, or
+    between the last data object and the marker) leaves a marker-less
     folded unit next to the fully-live originals. The resolver never
     reads it, and the next call's repair deletes exactly it (lossless —
     every original is still live) before re-folding; the retry
@@ -469,7 +469,7 @@ def test_fold_retains_units_for_inflight_readers(spark, split_sf_dir, tmp_path):
     """The fold's one-generation reader grace (VERDICT round 14 #3 —
     the same retained-generation shape the manifest compact has): a
     reader that resolved its unit list BEFORE a fold still collects the
-    exact multiset AFTER it, because the promote leaves the subsumed
+    exact multiset AFTER it, because the fold leaves the subsumed
     units in place. The retained generation is reclaimed by the NEXT
     repair sweep — after which the stale resolution fails LOUDLY
     (missing paths), never silently wrong."""
@@ -545,9 +545,9 @@ def test_fold_keep_last_zero_raises(spark, tmp_path):
 def test_fold_gate_failure_keeps_staging_for_inspection(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """A fingerprint-gate failure renames the staging to
+    """A fingerprint-gate failure renames the fold's output to
     ``.fold_failed`` so a routine retry's repair sweep (which deletes
-    any stale ``.fold_tmp``) cannot clobber the inspection copy
+    any marker-less folded unit) cannot clobber the inspection copy
     (ADVICE round 14). The retry itself succeeds and leaves the
     evidence in place."""
     from aind_protein_data_transformation_spark.operators.layout import (
@@ -578,7 +578,7 @@ def test_fold_gate_failure_keeps_staging_for_inspection(
 
     one_copy = fp(read_ingest_lake(spark, lake))
 
-    # first fingerprint call (the staging side) lies once -> gate trips
+    # first fingerprint call (the output side) lies once -> gate trips
     real_fp = layout_mod._multiset_fingerprint
     calls = {"n": 0}
 
@@ -592,7 +592,7 @@ def test_fold_gate_failure_keeps_staging_for_inspection(
         compact_ingest_units(lake, cols, spark, bits=5,
                              num_files=1, keep_last=1)
     assert os.path.isdir(os.path.join(lake, ".fold_failed"))
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
+    assert not os.path.exists(os.path.join(lake, "batch=c0-1"))  # moved
     # originals untouched: the lake still reads one exact copy
     assert fp(read_ingest_lake(spark, lake)) == one_copy
 
@@ -676,7 +676,7 @@ def test_fold_refuses_to_refold_surviving_dead_unit(
     """A retired unit whose repair delete silently failed must NEVER
     re-enter the fold's candidate set (ADVICE round 15, medium): its
     rows would double-count into the folded unit AND pass the
-    fingerprint gate (staging is compared against the same duplicated
+    fingerprint gate (the output is compared against the same duplicated
     union). The fold re-lists after repair and raises on any survivor,
     writing nothing; the resolver keeps reading exactly one copy."""
     from aind_protein_data_transformation_spark.operators.layout import (
@@ -700,7 +700,6 @@ def test_fold_refuses_to_refold_surviving_dead_unit(
     names = sorted(n for n in os.listdir(lake) if n.startswith("batch="))
     assert names == ["batch=0", "batch=1", "batch=2", "batch=3",
                      "batch=c0-2"]
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
     assert fp(read_ingest_lake(spark, lake)) == one_copy
 
 
@@ -709,7 +708,7 @@ def test_fold_gate_secondary_failure_raises_original(
 ):
     """If the fingerprint gate trips AND the evidence-preserving move
     to ``.fold_failed`` itself fails, the ORIGINAL multiset diagnostic
-    still raises — noting that the staging stayed put and the next
+    still raises — noting that the output stayed put and the next
     repair sweep will delete it (ADVICE round 15: the secondary OSError
     must not mask the RuntimeError)."""
     from aind_protein_data_transformation_spark.operators.layout import (
@@ -736,8 +735,12 @@ def test_fold_gate_secondary_failure_raises_original(
                        match="changed the row multiset.*FAILED"):
         compact_ingest_units(lake, cols, spark, bits=5, num_files=1,
                              keep_last=1)
-    # staging stayed where it was written; originals untouched
-    assert os.path.isdir(os.path.join(lake, ".fold_tmp"))
+    # the marker-less output stayed where it was written; originals
+    # untouched
+    assert os.path.isdir(os.path.join(lake, "batch=c0-1"))
+    assert not os.path.exists(
+        os.path.join(lake, "batch=c0-1", layout_mod._FOLD_MARKER)
+    )
     assert not os.path.exists(os.path.join(lake, ".fold_failed"))
     assert fp(read_ingest_lake(spark, lake)) == one_copy
 
@@ -745,13 +748,11 @@ def test_fold_gate_secondary_failure_raises_original(
 def test_fold_promote_direct_no_rename(
     spark, split_sf_dir, tmp_path, monkeypatch
 ):
-    """``promote="direct"`` writes the folded unit STRAIGHT to its
-    final ``batch=c<lo>-<hi>`` name — zero renames, so zero per-object
-    copies on S3-class stores (VERDICT round 15 #3: the fold's last
-    object-store boundary closed as a choice). The marker is still the
+    """The fold writes the folded unit STRAIGHT to its final
+    ``batch=c<lo>-<hi>`` name — zero renames, so zero per-object
+    copies on S3-class stores (VERDICT round 15 #3). The marker is the
     commit point: mid-write the unit is marker-less and invisible to
-    the resolver, a pre-marker crash is repaired losslessly, and the
-    committed result is observation-identical to the rename regime."""
+    the resolver, and a pre-marker crash is repaired losslessly."""
     from aind_protein_data_transformation_spark.operators.layout import (
         _FOLD_MARKER,
         compact_ingest_units,
@@ -763,22 +764,20 @@ def test_fold_promote_direct_no_rename(
     one_copy = fp(read_ingest_lake(spark, lake))
 
     def no_renames(src, dst, spark_):
-        raise AssertionError(f"direct promote must not rename ({src})")
+        raise AssertionError(f"the fold must not rename ({src})")
 
     monkeypatch.setattr(layout_mod, "_rename", no_renames)
     report = compact_ingest_units(lake, cols, spark, bits=5,
-                                  num_files=1, keep_last=1,
-                                  promote="direct")
+                                  num_files=1, keep_last=1)
     assert report["folded"] == 3 and report["unit"] == "batch=c0-2"
     assert report["retired"] == ["batch=0", "batch=1", "batch=2"]
     assert os.path.isfile(
         os.path.join(lake, "batch=c0-2", _FOLD_MARKER)
     )
-    assert not os.path.exists(os.path.join(lake, ".fold_tmp"))
     assert fp(read_ingest_lake(spark, lake)) == one_copy
     monkeypatch.undo()
 
-    # pre-marker crash in the direct regime: the final-named unit exists
+    # pre-marker crash: the final-named unit exists
     # but is uncommitted — resolver-invisible, repaired, retry converges
     os.remove(os.path.join(lake, "batch=c0-2", _FOLD_MARKER))
     assert [os.path.basename(u) for u in resolve_ingest_units(lake)] == [
@@ -786,15 +785,10 @@ def test_fold_promote_direct_no_rename(
     ]
     assert fp(read_ingest_lake(spark, lake)) == one_copy
     report2 = compact_ingest_units(lake, cols, spark, bits=5,
-                                   num_files=1, keep_last=1,
-                                   promote="direct")
+                                   num_files=1, keep_last=1)
     assert report2["repaired"] == ["batch=c0-2"]
     assert report2["folded"] == 3 and report2["unit"] == "batch=c0-2"
     assert fp(read_ingest_lake(spark, lake)) == one_copy
-
-    with pytest.raises(ValueError, match="promote must be"):
-        compact_ingest_units(lake, cols, spark, keep_last=1,
-                             promote="pointer")
 
 
 def test_ingest_lifecycle_end_to_end(spark, split_sf_dir, tmp_path):

@@ -52,6 +52,7 @@ from aind_protein_data_transformation_spark.operators.simhash_index import (
 
 
 class MinhashFamily:
+    id_col = "doc_id"
     sidecar = "sigs"
     stamp_keys = MINHASH_STAMP_KEYS
     append = staticmethod(append_minhash_shard)
@@ -84,6 +85,7 @@ class MinhashFamily:
 
 
 class SrpFamily:
+    id_col = "vec_id"
     sidecar = "vecs"
     stamp_keys = SRP_STAMP_KEYS
     append = staticmethod(append_srp_shard)
@@ -117,6 +119,7 @@ class SrpFamily:
 
 
 class SimhashFamily:
+    id_col = "doc_id"
     sidecar = "sigs"
     stamp_keys = SIMHASH_STAMP_KEYS
     append = staticmethod(append_simhash_shard)
@@ -206,7 +209,7 @@ def test_swap_promotes_compacted_target(spark, sf_dir, fam):
     shard = fam.build(spark, sf_dir, name)
     before = fam.probe(spark, shard, name)
     assert before  # the fixtures must produce near-dup pairs
-    fam.compact(spark, name, target=target)
+    fam.compact(spark, name, fam.id_col, target=target)
     out = fam.swap(spark, name, target)
     assert out["status"] == "swapped"
     # ADVICE r9: the returned dict audits exactly which retired tables
@@ -241,7 +244,7 @@ def test_swap_crash_recovery_at_every_inter_rename_point(spark, sf_dir, fam):
         _drop_all(spark, f"swp_c{k}")
         shard = fam.build(spark, sf_dir, name)
         before = fam.probe(spark, shard, name)
-        fam.compact(spark, name, target=target)
+        fam.compact(spark, name, fam.id_col, target=target)
         ops = _swap_ops(name, target, sidecar)
         for op in ops[:k]:
             spark.sql(op)
@@ -272,7 +275,7 @@ def test_resume_with_wrong_target_never_drops_the_only_copy(spark, sf_dir):
     _drop_all(spark, "swp_w")
     shard = MinhashFamily.build(spark, sf_dir, name)
     before = MinhashFamily.probe(spark, shard, name)
-    compact_minhash_index(spark, name, target=target)
+    compact_minhash_index(spark, name, "doc_id", target=target)
     # crash after the first retire
     spark.sql(f"ALTER TABLE {name}_bands RENAME TO {name}_bands__retired")
     with pytest.raises(ValueError, match="wrong\\s+target name on a resume"):
@@ -362,10 +365,10 @@ def test_external_source_target_compact_requires_path(spark, sf_dir, tmp_path):
         write_minhash_index(docs, "swp_e", n_buckets=4,
                             path=str(tmp_path / "ext"))
         with pytest.raises(ValueError, match="EXTERNAL but target mode"):
-            compact_minhash_index(spark, "swp_e", target="swp_e_v2")
+            compact_minhash_index(spark, "swp_e", "doc_id", target="swp_e_v2")
         # explicit relocation works
         compact_minhash_index(
-            spark, "swp_e", target="swp_e_v2", path=str(tmp_path / "ext2")
+            spark, "swp_e", "doc_id", target="swp_e_v2", path=str(tmp_path / "ext2")
         )
     finally:
         _drop_all(spark, "swp_e")
@@ -379,7 +382,7 @@ def test_swap_refuses_missing_or_half_built_target(spark, sf_dir):
     with pytest.raises(ValueError, match="no mid-swap evidence"):
         swap_minhash_index(spark, name, "swp_m_nope")
     # half-built target (sidecar write crashed): refuse to promote
-    compact_minhash_index(spark, name, target="swp_m_v2")
+    compact_minhash_index(spark, name, "doc_id", target="swp_m_v2")
     spark.sql("DROP TABLE swp_m_v2_sigs")
     with pytest.raises(ValueError, match="COMPLETE target"):
         swap_minhash_index(spark, name, "swp_m_v2")
@@ -395,7 +398,7 @@ def test_swap_refuses_unstamped_target(spark, sf_dir, fam):
     name, target = "swp_u", "swp_u_v2"
     _drop_all(spark, "swp_u")
     fam.build(spark, sf_dir, name)
-    fam.compact(spark, name, target=target)
+    fam.compact(spark, name, fam.id_col, target=target)
     keys = ", ".join(f"'{k}'" for k in fam.stamp_keys)
     spark.sql(f"ALTER TABLE {target}_bands UNSET TBLPROPERTIES ({keys})")
     with pytest.raises(ValueError, match="missing its geometry stamp"):
