@@ -8,15 +8,15 @@ as idiomatic Spark DataFrame / SQL / Structured Streaming plans.
 
 Layout:
 - ``session``   — SparkSession factory tuned for the local[32] harness.
+- ``arraylib``  — the reference job: CZI stacks → multiscale pyramid →
+  parquet levels and OME-Zarr stores (``arraylib.job.run_job``).
 - ``catalog``   — loaders / temp-view registration for the test tables.
 - ``plans``     — canonicalization shared with the DuckDB oracle.
 - ``queries``   — the registry of checkable queries (driver contract).
 - ``operators`` — composite operators (as-of join, dedup, pyramid, ...).
 - ``functions`` — scalar/vector helper column expressions.
-- ``sources``   — non-parquet sources (binary-file chunk decode, ...).
 - ``streaming`` — Structured Streaming surface over the events table.
 - ``measure``   — shared interleaved order-alternated A/B harness.
-- ``calibrate`` — HOF-vs-kernel dispatch crossover self-calibration.
 """
 
 __version__ = "0.1.0"

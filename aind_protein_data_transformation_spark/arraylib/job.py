@@ -50,6 +50,12 @@ class StackJobSettings:
     zarr_v2: bool = False
 
     def __post_init__(self) -> None:
+        # counts arrive from CLI JSON or a config file, where 2.0 is a
+        # float: reject it here, not in range() after outputs are written
+        for name in ("num_of_partitions", "partition_to_process", "downsample_levels"):
+            value = getattr(self, name)
+            if not isinstance(value, int):
+                raise ValueError(f"{name} must be an int, got {value!r}")
         if not 0 <= self.partition_to_process < self.num_of_partitions:
             raise ValueError("partition_to_process must be in [0, num_of_partitions)")
         if self.downsample_levels < 1:

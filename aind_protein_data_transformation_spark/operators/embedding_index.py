@@ -15,7 +15,7 @@ signer, its stamp, its cosine verify score and its input checks.
 
 Signatures default to the Arrow GEMM signer
 (:func:`~aind_protein_data_transformation_spark.operators.similarity.srp_band_vals_gemm`):
-the round-8 calibration ladder found NO fold-favorable regime for this
+the round-8 dispatch ladder found NO fold-favorable regime for this
 family (the fold does O(n_bits x dim) interpreted multiply-adds per
 row — kernel 2x at dim-64, ~226x at dim-1024; BENCH.md round 8).
 ``use_gemm=False`` falls back to the oracle-replayable fold, and the
@@ -303,7 +303,6 @@ def incremental_srp_pairs(
     use_gemm: bool = True,
     verify: bool = False,
     verify_batch: bool | None = False,
-    pair_min_dim: int = PAIR_COSINE_UDF_MIN_DIM,
     prune_scan: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs between ``new_vectors`` and the indexed corpus:
@@ -320,12 +319,14 @@ def incremental_srp_pairs(
     ``ivf_topk``: False = JVM dot-product fold (both sides are unit
     vectors, so the dot IS the cosine); True = the Arrow pair-cosine
     kernel; None = dispatch on the index dimension against
-    ``pair_min_dim``. Batch equivalence (the pair set equals the banded
-    batch pipeline's) is pinned by tests/test_embedding_index.py.
+    ``PAIR_COSINE_UDF_MIN_DIM``. Batch equivalence (the pair set equals
+    the banded batch pipeline's) is pinned by
+    tests/test_embedding_index.py.
     Runbook step 3 of operators/index_lifecycle.py."""
     _check_dim(spark, name, new_vectors, vec_col)
     if verify_batch is None:
-        verify_batch = dispatch_by_dim(_table_dim(spark, name), pair_min_dim) == "kernel"
+        dim = _table_dim(spark, name)
+        verify_batch = dispatch_by_dim(dim, PAIR_COSINE_UDF_MIN_DIM) == "kernel"
     paired = probe_index(
         spark,
         new_vectors,

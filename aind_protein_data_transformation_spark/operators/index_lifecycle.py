@@ -217,8 +217,8 @@ def prune_probe_scan(idx, probe, key: str, max_keys: int = PRUNE_SCAN_MAX_KEYS):
     the already-checkpointed shard rows; an empty shard short-circuits
     to an empty scan.
 
-    When it pays — measured honestly (scripts/exp_prune_scan.py,
-    BENCH.md round 11): at sandbox layouts (up to a 4M-row bands
+    When it pays — measured honestly (BENCH.md round 11,
+    "Prune regime measured"): at sandbox layouts (up to a 4M-row bands
     table) the prune does NOT win — the collect job's fixed cost
     meets or exceeds the saved scan (minhash arms read ~10% slower
     pruned; simhash arms equal, that probe being collision-bound on

@@ -235,7 +235,7 @@ def multi_column_percentiles_rank_select(
     not equi-anything, so no min/max pre-pass exists at all — the
     equi-width form this replaced spent a full extra scan (plus a
     driver-side bounds collect) computing ranges, measured 33% slower
-    end-to-end at 6M rows (scripts/exp_percentile.py) for identical
+    end-to-end at 6M rows (BENCH.md round 4 plan work) for identical
     results. Bucket count is bounded by octaves-present ×
     subdivisions (~tens per octave of spread), and each phase-2 sort
     handles one bucket's ~0.4%-wide value slice.

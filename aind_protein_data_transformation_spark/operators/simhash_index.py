@@ -23,7 +23,7 @@ probes, WIDEN the chunks: since round 10 the geometry is a
 **constructor parameter**, not a constants edit — e.g.
 ``write_simhash_index(docs, name, bits=48, n_chunks=3)`` builds 16-bit
 chunks (pigeonhole still covers hamming <= n_chunks - 1 = 2). Honest
-sizing note (measured round 10, scripts/exp_simhash_widen.py at the
+sizing note (measured round 10, BENCH.md "Round-10", at the
 10x text layout): SimHash chunk values are NOT uniform — documents
 sharing vocabulary cluster on the same chunk values — so the realized
 reduction is governed by the value distribution's skew, not the width
@@ -310,7 +310,7 @@ def incremental_simhash_pairs(
     (chunk, val) key the candidate join uses, so the cap adds no extra
     partitioning. Honest recall statement — STRONGER than
     lsh_candidate_pairs' (measured round 10,
-    scripts/exp_simhash_widen.py): a pair survives iff the two hashes
+    BENCH.md "Round-10"): a pair survives iff the two hashes
     agree on at least one SUB-CAP chunk value, and unlike minhash's
     composed band keys, a single w-bit chunk value is exactly the kind
     of signature corpus-hot boilerplate shares — on the 10x

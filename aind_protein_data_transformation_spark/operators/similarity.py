@@ -35,28 +35,30 @@ from pyspark.sql.window import Window
 from ..functions.vector import dot, norm
 
 #: Measured crossover for exact cosine top-k, re-anchored late round 8
-#: under the FAIR calibration protocol (calibrate_dispatch with every
-#: candidate in interleaved_ab's callable form, so the GEMM side's
-#: driver collect + matrix build is billed per run: 20k corpus, 5
-#: queries): hof wins dim-64/128, GEMM from dim-192 (1.33x) through
-#: dim-1024 (3.3x) -> bracket midpoint 160. (The earlier 256 came from
-#: exp_topk_gemm.py's prepared-frame protocol.) Lower than the
+#: under the FAIR protocol (every candidate in interleaved_ab's
+#: callable form, so the GEMM side's driver collect + matrix build is
+#: billed per run: 20k corpus, 5 queries; BENCH.md round 8): hof wins
+#: dim-64/128, GEMM from dim-192 (1.33x) through dim-1024 (3.3x) ->
+#: bracket midpoint 160. (The earlier 256 came from round 7's
+#: prepared-frame protocol, BENCH.md round 7.) Lower than the
 #: quantize crossover: the top-k HOF pays three folds per query x
 #: corpus pair, so its interpreted cost crosses the Arrow cost sooner.
+#: A caller who measured another crossover calls
+#: :func:`brute_force_topk` or :func:`brute_force_topk_gemm` directly.
 TOPK_GEMM_MIN_DIM = 160
 
 
 #: Measured crossover for the PAIRWISE cosine projection (the IVF
 #: verify stage: one cosine per already-joined (qe, ce) row —
-#: scripts/exp_pair_cosine.py, 100k pairs, interleaved protocol). The
+#: BENCH.md round 7, 100k pairs, interleaved protocol). The
 #: fold pays three aggregates per row while the batch UDF ships two
 #: vectors per row for one fused einsum. Re-anchored late round 8
 #: under the fair callable-billing protocol at the same 100k-pair
 #: volume: fold wins dim-64 (1.23x), the UDF from dim-128 (1.05x)
 #: through dim-1024 (2x) -> bracket midpoint 96. (The earlier 192 came
-#: from exp_pair_cosine.py's prepared-frame protocol.) Volume caveat
-#: unchanged: at 20k pairs the crossover sits ~900 (BENCH.md round 8)
-#: — callers off this volume should calibrate_dispatch their own.
+#: from round 7's prepared-frame protocol.) Volume caveat unchanged:
+#: at 20k pairs the crossover sits ~900 (BENCH.md round 8) — callers
+#: off this volume pass ``verify_batch=True`` or ``False`` directly.
 PAIR_COSINE_UDF_MIN_DIM = 96
 
 
@@ -262,7 +264,6 @@ def brute_force_topk_auto(
     query_id: str = "query_id",
     corpus_id: str = "neighbor_id",
     dim: int | None = None,
-    gemm_min_dim: int = TOPK_GEMM_MIN_DIM,
 ) -> DataFrame:
     """Dim-aware exact top-k: route to the JVM HOF form or the GEMM
     twin by embedding dimension (the top-k counterpart of
@@ -274,7 +275,7 @@ def brute_force_topk_auto(
     if dim is None:
         first = queries.select(F.size("qe").alias("d")).limit(1).collect()
         dim = first[0]["d"] if first else None
-    if dispatch_by_dim(dim, gemm_min_dim) == "hof":
+    if dispatch_by_dim(dim, TOPK_GEMM_MIN_DIM) == "hof":
         return brute_force_topk(queries, corpus, k, query_id, corpus_id)
     return brute_force_topk_gemm(queries, corpus, k, query_id, corpus_id)
 
@@ -662,7 +663,7 @@ def quantize_int8_hof(
 
 
 #: Measured HOF-vs-Arrow-kernel crossover (BENCH.md round-6 addendum +
-#: round-7 dim sweep, scripts/exp_dim_dispatch.py): the JVM
+#: round-7 dim sweep): the JVM
 #: higher-order projection wins at narrow dims (whole-stage codegen, no
 #: Arrow transfer), the batch kernel wins at wide ones (the interpreted
 #: fold's n*dim cost crosses the near-flat Arrow cost). The round-7
@@ -673,18 +674,12 @@ def quantize_int8_hof(
 #: billing and session moved the bracket one rung down).
 #: The crossover is layout- and cluster-dependent
 #: (round 6's 10-file layout measured a much larger kernel win at
-#: dim-1024) — callers who measured their own should override
-#: ``kernel_min_dim``; the dispatch errs toward the HOF, which is never
-#: catastrophically wrong, while the kernel pays Arrow transfer for
-#: nothing at narrow dims.
+#: dim-1024) — callers who measured their own call
+#: :func:`quantize_int8_hof` or :func:`quantize_int8_batch` directly;
+#: the dispatch errs toward the HOF, which is never catastrophically
+#: wrong, while the kernel pays Arrow transfer for nothing at narrow
+#: dims.
 QUANTIZE_KERNEL_MIN_DIM = 448
-
-
-def quantize_dispatch_dim(
-    dim: int | None, kernel_min_dim: int = QUANTIZE_KERNEL_MIN_DIM
-) -> str:
-    """:func:`dispatch_by_dim` with the measured QUANTIZE crossover."""
-    return dispatch_by_dim(dim, kernel_min_dim)
 
 
 def quantize_int8_auto(
@@ -692,7 +687,6 @@ def quantize_int8_auto(
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    kernel_min_dim: int = QUANTIZE_KERNEL_MIN_DIM,
 ) -> DataFrame:
     """Dim-aware int8 quantization: route to the JVM HOF projection or
     the Arrow-batch kernel by embedding dimension, so a production
@@ -706,12 +700,11 @@ def quantize_int8_auto(
     same budget assign_buckets_gemm's codebook collect spends — the
     embeddings-table contract is fixed-dimension, so any row's size is
     THE dimension). An empty frame dispatches to the HOF form, whose
-    empty result is free. ``kernel_min_dim`` overrides the measured
-    crossover for callers whose cluster measured a different one."""
+    empty result is free."""
     if dim is None:
         first = embeddings.select(F.size(vec_col).alias("d")).limit(1).collect()
         dim = first[0]["d"] if first else None
-    if quantize_dispatch_dim(dim, kernel_min_dim) == "hof":
+    if dispatch_by_dim(dim, QUANTIZE_KERNEL_MIN_DIM) == "hof":
         return quantize_int8_hof(embeddings, vec_id, vec_col)
     return quantize_int8_batch(embeddings, vec_id, vec_col)
 
@@ -826,7 +819,6 @@ def ivf_topk(
     nprobe: int = 2,
     gemm: bool = False,
     verify_batch: bool | None = False,
-    pair_min_dim: int = PAIR_COSINE_UDF_MIN_DIM,
 ) -> DataFrame:
     """IVF ANN: probe the nprobe nearest buckets per query, exact
     cosine within candidates. queries: (query_id, qe);
@@ -845,10 +837,10 @@ def ivf_topk(
     twins (measured crossover :data:`PAIR_COSINE_UDF_MIN_DIM`; the
     probe stage's query x centroid ranking stays a fold — it is
     codebook-sized, never the cost). ``None`` auto-dispatches by
-    probing one corpus row's dimension against ``pair_min_dim`` —
-    defaulted to the module constant, overridable with a value from
-    ``calibrate.calibrate_dispatch`` (the crossover is layout- and
-    volume-dependent). Neighbor sets and ranks agree
+    probing one corpus row's dimension against
+    :data:`PAIR_COSINE_UDF_MIN_DIM`; the crossover is layout- and
+    volume-dependent, so a caller who measured another one passes
+    ``True`` or ``False``. Neighbor sets and ranks agree
     with the fold form on tie-free data (BLAS low-bit caveat,
     agreement-tested); default False keeps the oracle-replayable plan.
 
@@ -864,7 +856,7 @@ def ivf_topk(
     if verify_batch is None:
         first = corpus.select(F.size("ce").alias("d")).limit(1).collect()
         dim = first[0]["d"] if first else None
-        verify_batch = dispatch_by_dim(dim, pair_min_dim) == "kernel"
+        verify_batch = dispatch_by_dim(dim, PAIR_COSINE_UDF_MIN_DIM) == "kernel"
     assign = assign_buckets_gemm if gemm else assign_buckets
     valid_cents = centroids.filter(norm("centroid_vec") != 0)
     corpus_buckets = assign(

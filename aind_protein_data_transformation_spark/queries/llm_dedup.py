@@ -223,7 +223,7 @@ def _minhash_oracle() -> str:
 # 2^62): the collision set is identical to joining on the four raw
 # keys, but the self-join exchange carries 2 longs instead of 4 and
 # the join-key comparator is half as wide. Measured on the registered
-# query round-robin same-session (scripts/exp_minhash.py): 1.31s vs
+# query round-robin same-session (BENCH.md round 4 plan work): 1.31s vs
 # 1.61s unpacked, and 1.69 vs 2.39 on a loaded VM — adopted round 4
 # (the round-3 wash measurement is outvoted by two later sessions).
 _MH_BAND_STRUCTS = ", ".join(
@@ -259,6 +259,14 @@ _MH_BAND_EQ = "a.p01 = b.p01 AND a.p23 = b.p23"
 #: not its key width. Kept the two-column form (it reads better and the
 #: packing adds a doc_id < 2^31 domain coupling the band packing already
 #: carries but the pair stage otherwise would not).
+#:
+#: Recorded NEGATIVE (VERDICT r16 #7, closed): the band-GROUP aggregate
+#: candidate — GROUP BY the packed band key, collect the sorted doc_ids
+#: per bucket and explode the i<j pairs, so the band exchange carries
+#: one row per (doc, band) and the self-join disappears — read ~12%
+#: slower: join form best 1.21s vs 1.36s, rows equal at 533, one 4-core
+#: same-session interleaved order-alternated run, not confirmed with
+#: event-log counters. The band self-join stays.
 #:
 #: Join-hint placement is unchanged in intent: only the (doc_a, doc_b)
 #: PAIR KEYS are hint-broadcast (bounded by the LSH candidate count);
@@ -649,8 +657,8 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     r17: the edge pipeline is the static-SQL checkpointed form (see
     _CC_SHINGLES_SQL note) — identical values to the former
     shingle_set + minhash_signatures + lsh_candidate_pairs +
-    jaccard_for_pairs composition (equality-checked same-session in
-    scripts/exp_r17_trio.py; the operators remain the general API),
+    jaccard_for_pairs composition (equality-checked same-session,
+    OPTIMIZATION_r17.md item 4; the operators remain the general API),
     with the shingle pipeline and the 33-agg signature pass each
     computed ONCE instead of per consumer."""
     ensure_views(spark, sf_dir, "documents")

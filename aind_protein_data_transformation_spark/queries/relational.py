@@ -120,9 +120,9 @@ ORDER BY op, c_custkey
 #: whichever form ran second inherited warmer cache/JIT. Unbiased:
 #: parity at sf0.1 (literal 0.239 min / reagg 0.288) AND at 10x
 #: (0.189 vs 0.172) — so the simpler literal form stands. The reagg
-#: variant is kept as the recorded negative in
-#: scripts/exp_constants.py; its exactness machinery (re-aggregatable
-#: split-sum partials) lives on in functions/numeric.py
+#: variant's numbers are the recorded negative in BENCH.md round 6
+#: ("the two ugliest constants"); its exactness machinery
+#: (re-aggregatable split-sum partials) lives on in functions/numeric.py
 #: split_partials_sql/exact_recombine_sql.
 #:
 #: Empty-input edge (documented): Spark's ROLLUP yields 0 rows over
@@ -481,7 +481,7 @@ def q_window_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: WindowGroupLimit shipped <= k per group per map task — measured
 #: interleaved A/B decides (see OPTIMIZATION_r16.md).
 #:
-#: r17 at-scale A/B (VERDICT r16 #5; scripts/exp_r17_topk.py, both
+#: r17 at-scale A/B (VERDICT r16 #5; OPTIMIZATION_r17.md item 5, both
 #: forms row-equal, interleaved best-of-8): at the 10x layout with the
 #: data's real orders-per-customer ratio (~10, constant in SF) this
 #: prefused form wins — 0.563s vs 0.625s for the WindowGroupLimit form

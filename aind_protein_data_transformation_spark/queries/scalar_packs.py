@@ -397,7 +397,7 @@ _PCT_H90 = "CAST(n - 1 AS DOUBLE) * 0.9D"
 #: flag column's IO (both forms are column-pruned; CPU identical, the
 #: Expand doubles in-flight rows). Reverted to the 3-scan form.
 #:
-#: Round 17 re-attempt (VERDICT r16 #1; scripts/exp_r17_pct.py): the
+#: Round 17 re-attempt (VERDICT r16 #1; OPTIMIZATION_r17.md item 1): the
 #: checkpoint objection was ELIMINATED — a checkpoint-free fusion where
 #: no branch filter can descend below the windows (per-leg counts are
 #: conditional CASE projections, the targets-side GROUPING() filter is

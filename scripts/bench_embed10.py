@@ -136,8 +136,8 @@ def operator_scaling(sf_dir: str, out_dir: str) -> dict:
             # construction work (the GEMM twins' dim-probe collect and
             # driver-side weight/centroid matrix build) is billed
             # inside the timed window on both sides — the same
-            # prepared-frame shave the round-8 fair calibration
-            # protocol retired in calibrate.py (ADVICE r8: prepared
+            # prepared-frame shave the round-8 fair dispatch ladder
+            # retired (BENCH.md round 8; ADVICE r8: prepared
             # frames prepay it, making the kernel side look better
             # than a cold caller would see). Numbers measured before
             # this change are kernel-optimistic by the construction

@@ -448,6 +448,10 @@ def test_job_settings_validation(tmp_path):
         {"scale_factor": (0, 2, 2)},
         {"chunk_size": (128, 128)},
         {"chunk_size": (128, 0, 128)},
+        {"downsample_levels": 2.5},
+        {"downsample_levels": 4.0},
+        {"partition_to_process": 0.5},
+        {"num_of_partitions": 2.0},
     ):
         with pytest.raises(ValueError, match=next(iter(bad))):
             StackJobSettings(input_source="a", output_directory="b", **bad)

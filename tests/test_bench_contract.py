@@ -198,7 +198,7 @@ def test_interleaved_ab_rounds_up_for_equal_slot_occupancy():
 
 def test_interleaved_ab_even_bumps_rounds_when_candidates_exceed_them():
     """The round-up is capped: with more candidates than rounds (a
-    many-query conf sweep — exp_conf passes ~40 frames with rounds=3)
+    many-query conf sweep passes ~40 frames with rounds=3)
     equalization would need >= n rounds, a 10x+ blowup; the requested
     round count is kept apart from an even-bump (an odd count would
     leave every pair's leading side split 2/1, so half the measured

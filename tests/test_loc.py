@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -40,3 +41,49 @@ def test_loc_counts_code_lines_skipping_docstrings_and_comments():
     # import, class, X (2 lines), def, bare string, return
     assert _loc().code_lines(SNIPPET) == 7
     assert _loc().code_lines("") == 0
+
+
+#: Where a script citation must resolve. BENCH.md, OPTIMIZATION_r*.md
+#: and VERDICT.md are round history: they name scripts that later
+#: rounds deleted (``git show`` recovers them), so they are not scanned.
+CITING = (
+    "aind_protein_data_transformation_spark",
+    "plans",
+    "tests",
+    "scripts",
+    "bench.py",
+    "__spark_entry__.py",
+    "README.md",
+    os.path.join(".claude", "skills", "verify", "SKILL.md"),
+)
+CITATION = re.compile(r"scripts/(\w+\.py)\b|\b((?:exp|bench)_\w+\.py)\b")
+
+
+def _citing_files():
+    for entry in CITING:
+        path = os.path.join(REPO, entry)
+        if os.path.isfile(path):
+            yield path
+        for root, _dirs, files in os.walk(path):
+            yield from (os.path.join(root, f) for f in files if f.endswith((".py", ".md")))
+
+
+def test_every_cited_script_exists():
+    """A deleted script leaves no pointer behind: every script path
+    under ``scripts/``, and every bare ``exp_<name>.py`` or
+    ``bench_<name>.py``, named in code, tests, README or the verify
+    recipe exists under scripts/."""
+    cited = {}
+    for path in _citing_files():
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                for m in CITATION.finditer(line):
+                    where = f"{os.path.relpath(path, REPO)}:{lineno}"
+                    cited.setdefault(m.group(1) or m.group(2), []).append(where)
+    assert "drive_contract.py" in cited and "exp_zorder.py" in cited
+    missing = {
+        name: where
+        for name, where in cited.items()
+        if not os.path.isfile(os.path.join(REPO, "scripts", name))
+    }
+    assert not missing, missing

@@ -345,8 +345,8 @@ def test_ivf_topk_verify_batch_identical(spark, sf_dir):
     must return the same neighbor set and ranks as the fold verify
     (cosines agree within BLAS-vs-fold tolerance), and the auto
     dispatch (verify_batch=None) must pick the fold plan at the
-    fixtures' dim-64 (no Python eval node) per the measured
-    PAIR_COSINE_UDF_MIN_DIM crossover."""
+    fixtures' dim-64 (no Python eval node) and the Arrow verify stage
+    at dim-128, per the measured PAIR_COSINE_UDF_MIN_DIM crossover."""
     from pyspark.sql import functions as F
 
     from aind_protein_data_transformation_spark.catalog import load_table
@@ -388,16 +388,23 @@ def test_ivf_topk_verify_batch_identical(spark, sf_dir):
         .toString()
     )
     assert "EvalPython" not in auto_plan
-    # a calibrated threshold (calibrate_dispatch output) overrides the
-    # module constant: pair_min_dim at/below the fixture dim flips the
-    # auto dispatch to the Arrow verify stage
-    calibrated_plan = (
-        ivf_topk(q, c, cents, verify_batch=None, pair_min_dim=64)
+    # the same vectors doubled to dim-128 (cosines unchanged) cross the
+    # crossover: the auto dispatch flips to the Arrow verify stage
+    wide_plan = (
+        ivf_topk(
+            q.select("query_id", F.concat("qe", "qe").alias("qe")),
+            c.select("neighbor_id", F.concat("ce", "ce").alias("ce")),
+            cents.select(
+                "centroid_id",
+                F.concat("centroid_vec", "centroid_vec").alias("centroid_vec"),
+            ),
+            verify_batch=None,
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
-    assert "EvalPython" in calibrated_plan
+    assert "EvalPython" in wide_plan
 
 
 def test_ivf_topk_verify_batch_zero_norm_edges(spark):
@@ -786,19 +793,20 @@ def test_brute_force_topk_auto_dispatch(spark):
 
 def test_quantize_dispatch_rule():
     """Pure dispatch rule (VERDICT r6 #2): HOF below the measured
-    crossover (and when the dim is unknown), kernel at/above it,
-    threshold overridable."""
+    crossover (and when the dim is unknown), kernel at/above it."""
     from aind_protein_data_transformation_spark.operators.similarity import (
         QUANTIZE_KERNEL_MIN_DIM,
-        quantize_dispatch_dim,
+        dispatch_by_dim,
     )
 
-    assert quantize_dispatch_dim(64) == "hof"  # measured HOF win
-    assert quantize_dispatch_dim(1024) == "kernel"  # measured 4.7x kernel win
-    assert quantize_dispatch_dim(None) == "hof"
-    assert quantize_dispatch_dim(QUANTIZE_KERNEL_MIN_DIM - 1) == "hof"
-    assert quantize_dispatch_dim(QUANTIZE_KERNEL_MIN_DIM) == "kernel"
-    assert quantize_dispatch_dim(64, kernel_min_dim=32) == "kernel"
+    def dispatch(dim):
+        return dispatch_by_dim(dim, QUANTIZE_KERNEL_MIN_DIM)
+
+    assert dispatch(64) == "hof"  # measured HOF win
+    assert dispatch(1024) == "kernel"  # measured 4.7x kernel win
+    assert dispatch(None) == "hof"
+    assert dispatch(QUANTIZE_KERNEL_MIN_DIM - 1) == "hof"
+    assert dispatch(QUANTIZE_KERNEL_MIN_DIM) == "kernel"
 
 
 def test_quantize_auto_dispatch_and_agreement_across_boundary(spark):

@@ -520,15 +520,11 @@ def test_text_quality_fans_out_the_narrow_scan(spark, sf_dir):
     assert plan.count("RLIKE") >= 1, plan[:3000]
 
 
-def test_rollup_shape_and_reagg_variant_equivalence(spark, sf_dir):
+def test_rollup_shape(spark, sf_dir):
     """The registered rollup (literal GROUP BY ROLLUP, restored after
-    the round-6 order-bias retraction — see relational.py's note)
-    broadcasts its dims and produces all three levels; the retracted
-    re-aggregation variant (scripts/exp_constants.py) must remain
-    row-identical so the recorded A/B stays a true comparison."""
-    import importlib.util
-    import os
-
+    the round-6 order-bias retraction — see relational.py's note and
+    BENCH.md "Round-6: the two ugliest constants") broadcasts its dims
+    and produces all three levels."""
     from aind_protein_data_transformation_spark.queries.relational import (
         q_rollup_region_nation_revenue,
     )
@@ -540,21 +536,6 @@ def test_rollup_shape_and_reagg_variant_equivalence(spark, sf_dir):
     assert ("<ALL>", "<ALL>") in rows
     regions = {r for r, n in rows if n == "<ALL>" and r != "<ALL>"}
     assert len(regions) == 5
-
-    spec = importlib.util.spec_from_file_location(
-        "expc",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-            "exp_constants.py",
-        ),
-    )
-    expc = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(expc)
-    got = [tuple(r) for r in expc.rollup_reagg(spark, sf_dir).collect()]
-    want = [tuple(r) for r in q_rollup_region_nation_revenue(
-        spark, sf_dir).collect()]
-    assert got == want
 
 
 def test_rollup_empty_input_yields_no_rows(spark):
