@@ -30,6 +30,10 @@ from pyspark.sql import SparkSession
 from aind_protein_data_transformation_spark.arraylib import blocks, decode, ome, pyramid, stacks
 
 
+def _is_int(value) -> bool:
+    return isinstance(value, int) and not isinstance(value, bool)
+
+
 @dataclass
 class StackJobSettings:
     """Typed job config (parity: models.py:23-76 ``ZeissJobSettings``)."""
@@ -51,11 +55,15 @@ class StackJobSettings:
 
     def __post_init__(self) -> None:
         # counts arrive from CLI JSON or a config file, where 2.0 is a
-        # float: reject it here, not in range() after outputs are written
+        # float and true is a bool (an int subclass): reject both here,
+        # not in range() after outputs are written
         for name in ("num_of_partitions", "partition_to_process", "downsample_levels"):
             value = getattr(self, name)
-            if not isinstance(value, int):
+            if not _is_int(value):
                 raise ValueError(f"{name} must be an int, got {value!r}")
+        # a truthy "false" string would turn the zarr sink on
+        if not isinstance(self.zarr_v2, bool):
+            raise ValueError(f"zarr_v2 must be a bool, got {self.zarr_v2!r}")
         if not 0 <= self.partition_to_process < self.num_of_partitions:
             raise ValueError("partition_to_process must be in [0, num_of_partitions)")
         if self.downsample_levels < 1:
@@ -65,7 +73,7 @@ class StackJobSettings:
             if not (
                 isinstance(value, (tuple, list))
                 and len(value) == 3
-                and all(isinstance(v, int) and v >= 1 for v in value)
+                and all(_is_int(v) and v >= 1 for v in value)
             ):
                 raise ValueError(f"{name} must be 3 ints >= 1, got {value!r}")
 

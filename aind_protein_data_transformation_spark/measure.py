@@ -46,7 +46,7 @@ def interleaved_ab(
     ``frames`` maps a label to a DataFrame (the prepared-statement
     model: built once, executed per run) or to a zero-arg callable
     (rebuilt per run — required when the plan does eager work like
-    localCheckpoint that must be billed inside the timing, mirroring
+    plans.scale.materialize that must be billed inside the timing, mirroring
     bench.py's ``_plan_has_eager_rdd`` rule).
 
     Protocol (the one that caught the round-6 rollup artifact):

@@ -31,11 +31,11 @@ of silently returning a half-merged clustering (an unconverged result
 is indistinguishable from a correct one downstream — it would quietly
 keep duplicate families apart).
 
-Lineage is truncated each round with an eager localCheckpoint so the
-plan does not grow with the iteration count; a production run on a real
-cluster would point this at a checkpoint directory instead
-(``spark.sparkContext.setCheckpointDir`` + ``.checkpoint()``) to also
-survive executor loss.
+Lineage is truncated each round through ``plans.scale.materialize`` so
+the plan does not grow with the iteration count. A session with a
+checkpoint dir (``spark.sparkContext.setCheckpointDir`` or
+``$SPARK_GRAFT_CHECKPOINT_DIR``) gets reliable checkpoints there, which
+survive executor loss; without one the rounds are local checkpoints.
 """
 
 from __future__ import annotations

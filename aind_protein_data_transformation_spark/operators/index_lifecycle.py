@@ -18,15 +18,15 @@ Runbook — the same for every family (``{kind}`` = minhash | srp |
 simhash):
 
 1. ``write_{kind}_index`` (:func:`write_index`) — one-time build. The
-   signed frame is materialized once (persist, released before return)
-   and feeds both writes. Build order bands → stamp → sidecar: a crash
+   signed frame is materialized once (``plans.scale.materialize``) and
+   feeds both writes. Build order bands → stamp → sidecar: a crash
    before the LAST write leaves the sidecar missing, so every partial
    state fails loudly — a complete-LOOKING unstamped index cannot come
    out of a crashed build.
 2. ``append_{kind}_shard`` (:func:`append_index`) — per-ingest update.
    Bucket counts come from the live tables' metadata (a mismatched
    bucket spec would silently poison the co-located join), the stamp
-   guard runs, the shard is signed once (localCheckpoint), then
+   guard runs, the shard is signed once (materialize), then
    SIDECAR first, bands second. Not transactional (two plain parquet
    tables; an ACID table format would supply that) but ORDERED so every
    partial state is benign: a crash between the writes leaves orphan
@@ -38,9 +38,9 @@ simhash):
    a cloned session) must ``spark.catalog.refreshTable`` both tables
    first (tests/test_streaming_dedup_ingest.py does).
 3. ``incremental_{kind}_pairs`` (:func:`probe_index`) — the probe. The
-   shard is signed once (localCheckpoint: it feeds the blocking join
-   AND the verify, and unlike persist() leaves nothing in the session's
-   cache manager); its band rows join the bands table on
+   shard is signed once (materialize: it feeds the blocking join AND
+   the verify, and leaves nothing in the session's cache manager); its
+   band rows join the bands table on
    ``spec.band_keys`` (only the shard's rows exchange, the index side
    reads co-located and pre-sorted); the DISTINCT candidate pairs join
    both sidecars; the family scores them (Jaccard / cosine / hamming)
@@ -101,6 +101,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.scale import materialize
 
 
 @dataclass(frozen=True)
@@ -349,25 +351,22 @@ def write_index(
     path: str | None,
 ) -> None:
     """Runbook step 1: build ``name``'s two tables from ``frame``. The
-    signed frame feeds both writes, so it is persisted for the build
-    and released before return (without it each write would re-sign
-    from the raw input)."""
-    signed = signer.sign(frame).persist()
-    try:
-        _write_pair(
-            frame.sparkSession,
-            name,
-            spec,
-            id_col,
-            signer.bands(signed),
-            signed.select(id_col, *spec.payload_cols),
-            "overwrite",
-            (n_buckets, n_buckets),
-            (path and f"{path}/bands", path and f"{path}/{spec.sidecar_suffix}"),
-            signer.stamp,
-        )
-    finally:
-        signed.unpersist()
+    signed frame feeds both writes, so it is materialized once (without
+    it each write would re-sign from the raw input); the checkpoint is
+    GC-managed, so nothing is left to release."""
+    signed = materialize(signer.sign(frame))
+    _write_pair(
+        frame.sparkSession,
+        name,
+        spec,
+        id_col,
+        signer.bands(signed),
+        signed.select(id_col, *spec.payload_cols),
+        "overwrite",
+        (n_buckets, n_buckets),
+        (path and f"{path}/bands", path and f"{path}/{spec.sidecar_suffix}"),
+        signer.stamp,
+    )
 
 
 def append_index(
@@ -375,12 +374,12 @@ def append_index(
 ) -> None:
     """Runbook step 2: fold ``frame`` (an already-deduplicated shard)
     into ``name`` — bucket counts from the live tables, stamp guard,
-    one localCheckpoint of the signed shard, then sidecar FIRST and
+    one materialization of the signed shard, then sidecar FIRST and
     bands second (the benign-partial-state ordering)."""
     band_buckets = table_num_buckets(spark, f"{name}_bands")
     side_buckets = table_num_buckets(spark, f"{name}_{spec.sidecar_suffix}")
     check_stamp(spark, name, spec, signer.stamp)
-    signed = signer.sign(frame).localCheckpoint()
+    signed = materialize(signer.sign(frame))
     _save(
         signed.select(id_col, *spec.payload_cols),
         f"{name}_{spec.sidecar_suffix}",
@@ -416,7 +415,7 @@ def probe_index(
     if verify:
         verify_index(spark, name, spec, id_col)
     check_stamp(spark, name, spec, signer.stamp)
-    signed = signer.sign(frame).localCheckpoint()
+    signed = materialize(signer.sign(frame))
     probe = signer.bands(signed)
     idx = spark.table(f"{name}_bands")
     if prune_scan is not None:

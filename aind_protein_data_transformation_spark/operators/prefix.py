@@ -30,6 +30,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.scale import materialize
+
 
 def ntile_from_rank_sql(k: int, rank: str = "_rank", n: str = "_n") -> str:
     """SQL expression computing ``NTILE(k)`` from a 1-based global rank
@@ -66,14 +68,14 @@ def partitioned_prefix_sum(
         if num_partitions
         else df.repartitionByRange(*order_cols)
     )
-    # localCheckpoint pins the range partitioning: ``staged`` fans out
+    # Materializing pins the range partitioning: ``staged`` fans out
     # into two plan branches (local sums, per-partition offsets), and a
     # re-evaluated range exchange re-SAMPLES its boundaries — two
     # independent evaluations could assign rows different _pids, making
-    # the recombined totals silently wrong. Materializing here makes
-    # both branches read the same partitions (and pays for itself: the
-    # relation is consumed twice).
-    staged = parts.withColumn("_pid", F.spark_partition_id()).localCheckpoint()
+    # the recombined totals silently wrong. Either checkpoint outcome
+    # makes both branches read the same partitions (and pays for itself:
+    # the relation is consumed twice).
+    staged = materialize(parts.withColumn("_pid", F.spark_partition_id()))
 
     w_local = (
         Window.partitionBy("_pid")

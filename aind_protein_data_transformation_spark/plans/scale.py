@@ -23,65 +23,36 @@ from pyspark.sql import functions as F
 
 
 def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Eagerly cut lineage / materialize an intermediate relation, with
-    the durability mode switched by ``SPARK_GRAFT_MATERIALIZE`` (VERDICT
-    r16 #3 — localCheckpoint is a local-mode-friendly durability bet,
-    wrong default for a 100 TB cluster run). Executor-loss semantics of
-    each mode:
+    """Materialize ``df`` and cut its lineage: the package's one way to
+    compute a shared subtree once. The deployment picks the outcome;
+    neither leaves a cache-manager entry to release (the checkpointed
+    RDD is GC-managed, dropped with the last DataFrame over it).
+    Executor-loss semantics of the two outcomes:
 
-    - ``local`` (default; the bench contract): ``localCheckpoint`` —
-      blocks stored UNREPLICATED on executor local storage with lineage
-      TRUNCATED. One lost executor (or dynamic-allocation scale-in)
-      makes the RDD unrecoverable and fails the query mid-run; there is
-      no recompute path. Correct on a single-JVM local master, where
-      "executor loss" means the application died anyway, and the
-      cheapest mode by far.
-    - ``reliable``: ``checkpoint()`` to the session's checkpoint dir
-      (``spark.sparkContext.setCheckpointDir``; set it to durable
-      shared storage — HDFS/object store). Falls back to
-      ``$SPARK_GRAFT_CHECKPOINT_DIR`` when the session has none, and
-      raises a clear contract error when neither is set. Executor loss
-      is transparent: blocks are re-read from durable storage. Costs a
-      distributed write of the materialized relation.
-    - ``replicated``: ``persist(MEMORY_AND_DISK_2)`` (+ an eager count
-      when ``eager``): two replicas on executors AND lineage retained —
-      a single executor loss is served by the replica, wider loss
-      recomputes from lineage. Costs 2x storage. NOT for the bench
-      loop: a persisted plan whose cache is cleared between timed runs
-      re-executes per consumer without re-storing (the r16 minhash
-      trap, llm_dedup.py), and the cache-manager entry must be released
-      by the caller's lifecycle.
+    - a checkpoint dir is set on the session
+      (``spark.sparkContext.setCheckpointDir``) or named by
+      ``$SPARK_GRAFT_CHECKPOINT_DIR``: ``df.checkpoint`` writes the
+      relation there. Losing an executor is transparent, since a lost
+      partition is re-read from the files, provided the dir is on
+      shared storage (HDFS, an object store). Costs one distributed
+      write; the files stay in the dir unless the deployment sets
+      ``spark.cleaner.referenceTracking.cleanCheckpoints``.
+    - otherwise ``df.localCheckpoint``: blocks are stored unreplicated
+      on the executors and the lineage is gone, so losing an executor
+      that holds a block fails the next job that reads it. On a
+      single-JVM local master executor loss ends the application
+      anyway, and this is the cheaper outcome.
 
     ``eager=False`` defers materialization to the first action (used by
     the connected-components round loop, where the convergence
     aggregate is that action)."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local")
-    if mode == "local":
-        return df.localCheckpoint(eager=eager)
-    if mode == "reliable":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if not ckdir:
-                raise RuntimeError(
-                    "SPARK_GRAFT_MATERIALIZE=reliable needs a durable "
-                    "checkpoint dir: call spark.sparkContext."
-                    "setCheckpointDir(...) or set "
-                    "SPARK_GRAFT_CHECKPOINT_DIR"
-                )
-            sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
-    if mode == "replicated":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        if eager:
-            out.count()
-        return out
-    raise ValueError(
-        f"unknown SPARK_GRAFT_MATERIALIZE mode {mode!r}; expected "
-        "local | reliable | replicated"
-    )
+    sc = df.sparkSession.sparkContext
+    if sc.getCheckpointDir() is None:
+        ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+        if not ckdir:
+            return df.localCheckpoint(eager=eager)
+        sc.setCheckpointDir(ckdir)
+    return df.checkpoint(eager=eager)
 
 
 def write_bucketed(

@@ -33,8 +33,7 @@ from ..functions.text import (
     word_shingles,
 )
 from ..operators.dedup import shingle_set
-from ..plans.scale import sorted_small
-from .cache import tracked_persist as _persist
+from ..plans.scale import materialize, sorted_small
 from .registry import query
 
 # Gopher-style repetition thresholds (Rae et al. 2021 use 0.2 for
@@ -293,12 +292,12 @@ def decontaminate_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     The eval side is broadcast (benchmarks are tiny next to a training
     corpus); the corpus shingle relation streams through a map-side hash
     probe of it, then one shuffle on (doc_id, eval_id) counts overlaps.
-    The shingle relation is persisted because it feeds both the overlap
+    The shingle relation is materialized because it feeds both the overlap
     join and the per-doc size normalizer."""
     d = load_table(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % EVAL_MOD != 0)
     eval_docs = d.filter(F.col("doc_id") % EVAL_MOD == 0)
-    corpus_sh = _persist(shingle_set(corpus, k=3))
+    corpus_sh = materialize(shingle_set(corpus, k=3))
     eval_sh = shingle_set(eval_docs, k=3).select(
         F.col("doc_id").alias("eval_id"), "h"
     )

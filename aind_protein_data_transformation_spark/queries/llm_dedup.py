@@ -31,14 +31,11 @@ from ..operators.dedup import (
 )
 from .registry import query
 
-# -------------------------------------------------------- cache lifecycle
-# Tracked persists shared across ALL query modules (llm_similarity,
-# llm_text, curation use the same helper): see queries/cache.py for the
-# lifecycle contract. persist() stays the right tool for the
-# multi-consumer frames below (localCheckpoint measured +0.25s/run on
-# the minhash signatures).
-
-from .cache import release_caches, tracked_persist as _persist  # noqa: F401
+# ------------------------------------------------------ shared subtrees
+# Every multi-consumer frame below (signature frames, shingle
+# relations, the simhash pairs) computes once through
+# plans.scale.materialize: a GC-managed checkpoint, so there is no
+# cache-manager entry for a caller to release.
 
 # ---------------------------------------------------------------- corpus
 
@@ -215,7 +212,7 @@ def _minhash_oracle() -> str:
 
 # Spark-side band join + Jaccard verify, mirroring lsh_candidate_pairs +
 # jaccard_for_pairs over the _mh_shingles/_mh_sig views (the sig view
-# is an eager localCheckpoint since r16).
+# is an eager checkpoint since r16).
 # Static module-level string: zero per-call construction cost.
 #
 # Band keys are PACKED bijectively into two bigints (p01 = m0*P + m1,
@@ -246,8 +243,8 @@ _MH_BAND_EQ = "a.p01 = b.p01 AND a.p23 = b.p23"
 #: (single- or multi-ref; bisected empirically), so the old CTE chain
 #: re-inlined ``_mh_sig`` and the whole shingle+signature pipeline
 #: executed FOUR times per run — the dominant cost of the query. The
-#: signature frame is now an eager localCheckpoint (see the fn body for
-#: why not persist), and the no-CTE form keeps every ``_mh_sig``
+#: signature frame is now an eager checkpoint (plans.scale.materialize;
+#: see the fn body), and the no-CTE form keeps every ``_mh_sig``
 #: mention resolving to that one materialized relation (4x checkpoint
 #: scan, 0 parquet re-scans — plan-asserted in tests/test_scale.py).
 #:
@@ -369,7 +366,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       into ONE aggregation producing the signature frame: 32 min
       columns, the set size n, and the doc's sorted hash set ``hs``;
     - that signature frame (one row per doc) is the ONLY materialized
-      relation (an eager localCheckpoint) — it feeds both band-join
+      relation (an eager checkpoint) — it feeds both band-join
       sides AND the verify, so the corpus is scanned once at any scale;
     - verify needs no pass over an exploded shingle relation at all:
       the candidate PAIR KEYS broadcast into the signature frame (the
@@ -383,21 +380,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
       shingles/doc would not."""
     ensure_views(spark, sf_dir, "documents")
     spark.sql(_MH_SHINGLES_SQL.format(fan=fanout_width(spark))).createOrReplaceTempView("_mh_shingles")
-    # r16: the signature frame materializes via localCheckpoint, not
+    # The signature frame is an eager checkpoint (materialize), not a
     # persist(). Both give compute-once for the four consumers on a
-    # FRESH build (measured equal, best 1.07 both, same-session
-    # interleaved at sf0.1), but persist interacts badly with the
-    # prepared-statement timing contract: a reused DataFrame whose
-    # cache was cleared between runs re-executes its InMemoryRelation
-    # per CONSUMER without re-storing — the pipeline silently computes
-    # 4x again (bench run B read 1.83s that way). The checkpoint is
-    # eager per fn() call, so bench's eager-RDD rule rebuilds the query
-    # each run and bills the one materialization inside the timing;
-    # lifecycle is GC-managed (no cache-manager entry to leak).
-    # r17: routed through plans.scale.materialize — the bench default
-    # stays this localCheckpoint, and SPARK_GRAFT_MATERIALIZE=reliable/
-    # replicated switches to cluster-safe durability (see materialize's
-    # docstring for the executor-loss semantics of each mode).
+    # FRESH build (r16: measured equal, best 1.07 both, same-session
+    # interleaved at sf0.1), but a reused persisted DataFrame whose
+    # cache was cleared between bench runs re-executes its
+    # InMemoryRelation per CONSUMER without re-storing — the pipeline
+    # silently computed 4x again (bench run B read 1.83s that way). The
+    # checkpoint is eager per fn() call, so bench's eager-RDD rule
+    # rebuilds the query each run and bills the one materialization
+    # inside the timing; the checkpoint is GC-managed, and a session
+    # checkpoint dir makes it survive executor loss (see materialize).
     materialize(spark.sql(_MH_SIG_SQL)).createOrReplaceTempView("_mh_sig")
     return spark.sql(_MH_VERIFY_SQL).transform(
         lambda d: sorted_small(d, "doc_a", "doc_b")
@@ -449,7 +442,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency before pairing (operators/dedup.py notes) — here kept
     exact so the oracle semantics are identical."""
     corpus = _corpus_near(spark, sf_dir)
-    shingles = _persist(shingle_set(corpus, k=3))
+    shingles = materialize(shingle_set(corpus, k=3))
     a = shingles.alias("a")
     b = shingles.alias("b")
     pairs = (
@@ -463,9 +456,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count("*").alias("shared"))
     )
-    # sizes feeds both the n_a and n_b legs; persist the per-doc counts
+    # sizes feeds both the n_a and n_b legs; materialize the per-doc counts
     # so the count-agg over the shingle relation runs once, not twice.
-    sizes = _persist(shingles.groupBy("doc_id").agg(F.count("*").alias("n")))
+    sizes = materialize(shingles.groupBy("doc_id").agg(F.count("*").alias("n")))
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return (
@@ -537,11 +530,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near-pairs at sf0.1 on this vocab-shared corpus), so the range
     # partitioner's sampling pass would otherwise re-execute the whole
     # chunk join; the checkpointed relation is what both the sampler and
-    # the sort read. localCheckpoint, NOT persist(): a persisted plan
-    # sits in the cache manager until an explicit unpersist/clearCache,
-    # leaking executor memory for the session lifetime in library use —
-    # the checkpoint RDD is GC-managed (ContextCleaner drops it when the
-    # returned DataFrame goes unreferenced).
+    # the sort read. The checkpoint is GC-managed (ContextCleaner drops
+    # it when the returned DataFrame goes unreferenced), so library use
+    # leaves no cache-manager entry behind.
     pairs = materialize(
         simhash_near_pairs(sims, max_hamming=3)
         .select("doc_a", "doc_b", "hamming")
@@ -559,7 +550,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: not be equivalent on an intra-document hash collision). The corpus
 #: fans out hashed on doc_id so the string DISTINCT and the signature
 #: GROUP BY are partition-local (guide §2.4); the (doc_id, h) relation
-#: and the signature frame are the two eager localCheckpoints — the
+#: and the signature frame are the two eager checkpoints — the
 #: operator composition re-ran the tokenize+shingle+md5 pipeline per
 #: consumer above the fan exchange (2 verify probes) and the 33-agg
 #: signature pass per band-join side. Same plan-shape rules as

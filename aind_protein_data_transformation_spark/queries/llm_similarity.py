@@ -21,7 +21,7 @@ from ..functions.vector import (
     sql_unit_normalize,
     unit_normalize,
 )
-from ..plans.scale import fanout_width, sorted_small
+from ..plans.scale import fanout_width, materialize, sorted_small
 from ..operators.similarity import (
     SRP_W_MOD,
     SRP_W_OFF,
@@ -31,7 +31,6 @@ from ..operators.similarity import (
     sql_centroid_update,
     stride_centroids,
 )
-from .cache import tracked_persist as _persist
 from .registry import query
 
 TOPK_NQUERIES = 5
@@ -289,7 +288,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF buckets (deterministic stride centroids, same index shape as
     ``similarity_ivf_ann``); candidate pairs are vectors sharing a
     probed bucket, exact-verified with one dot fold over the
-    unit-normalized (persisted) corpus. Near-identical vectors rank
+    unit-normalized (materialized) corpus. Near-identical vectors rank
     centroids near-identically, so dup pairs co-bucket while the pair
     stage shrinks from n² to ~n·bucket_size·nprobe — the same
     contract the text near-dup family gets from LSH banding. The
@@ -305,7 +304,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("float"),
         ).alias("embedding"),
     )
-    corpus = _persist(
+    corpus = materialize(
         emb.select("vec_id", "embedding")
         .unionByName(perturbed)
         .select("vec_id", unit_normalize("embedding").alias("en"))
@@ -661,7 +660,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.similarity.assign_buckets_ivf`` is the fully
     distributed two-level regime (same measurement).
 
-    r17: the persisted corpus fans out hashed on vec_id (guide §2.5;
+    r17: the materialized corpus fans out hashed on vec_id (guide §2.5;
     the r16 minhash doc_id-fan precedent): the one-row-group scan
     otherwise serializes the normalize folds, the broadcast-argmax
     assignment, and the in-bucket pair folds onto single tasks. Values
@@ -677,7 +676,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("float"),
         ).alias("embedding"),
     )
-    corpus = _persist(
+    corpus = materialize(
         emb.select("vec_id", "embedding")
         .unionByName(perturbed)
         .repartition(fanout_width(spark), "vec_id")

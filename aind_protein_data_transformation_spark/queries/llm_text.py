@@ -14,8 +14,7 @@ from pyspark.sql.window import Window
 
 from ..catalog import ensure_views, load_table
 from ..functions.text import hash64, tokens
-from ..plans.scale import fanout_width, sorted_small
-from .cache import tracked_persist as _persist
+from ..plans.scale import fanout_width, materialize, sorted_small
 from .registry import query
 
 # Stopword lists for the n-gram/stopword language heuristic. The synthetic
@@ -413,12 +412,12 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-ulp ln()/sum-order differences below the driver's 6-decimal
     hash.
 
-    The tokenized relation is persisted: vocab and scoring are its two
+    The tokenized relation is materialized: vocab and scoring are its two
     consumers, and recomputing the regex split of the whole corpus per
     consumer is the kind of double scan a 100-TB pipeline cannot
     afford."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _persist(
+    toks = materialize(
         d.selectExpr(
             "doc_id",
             "explode(filter(split(text, '\\\\s+'), t -> t != '')) AS token",
@@ -481,12 +480,12 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF keywords per document — the classic content-tagging
     pass of a curation pipeline. tf and df stack on ONE tokenized
-    relation (persisted: df re-aggregates the tf partials, never the
+    relation (materialized: df re-aggregates the tf partials, never the
     raw tokens); idf is rounded to 6dp before the product so the
     ranking is an exact-double comparison on both engines; the top-k
     window partitions by doc_id (bounded groups, fully parallel)."""
     d = load_table(spark, sf_dir, "documents")
-    tf = _persist(
+    tf = materialize(
         d.selectExpr(
             "doc_id",
             "explode(filter(split(text, '\\\\s+'), t -> t != '')) AS token",

@@ -54,20 +54,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
             # Both are runtime-settable and idempotent.
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            # Some queries persist() an intermediate (e.g. the MinHash
-            # shingle relation) that stays cached until the session ends.
-            # A runner sweeping the whole registry in one session would
-            # accumulate those caches; clearing leftovers on entry bounds
-            # cache memory to a single query's working set. By the time
-            # query N+1 is built, query N's result has been collected, so
-            # nothing live is evicted. release_caches() first: clearCache
-            # alone unpersists the DATA but leaves the tracked plan
-            # handles pinned in the driver (queries/cache.py) — draining
-            # both keeps a whole-registry sweep flat in driver memory.
-            from .cache import release_caches
-
-            release_caches()
-            spark.catalog.clearCache()
             return fn(spark, sf_dir)
 
         REGISTRY[name] = QuerySpec(name, wrapped, oracle, (fn.__doc__ or "").strip())

@@ -9,9 +9,9 @@ fixtures (the Tier-1 tests use the sf0.001 set). For each family
 (minhash, srp, simhash) the script builds an index over a fixed split
 of those documents / embeddings, then appends a
 shard, probes it (full scan and ``prune_scan=``) and compacts into a
-target. Every frame the flow hands to ``saveAsTable``,
-``localCheckpoint`` or ``persist`` is recorded with its
-``explain("formatted")`` text, plus the probe's returned frame, so a
+target. Every frame the flow hands to ``saveAsTable`` or to
+``plans.scale.materialize`` (its ``localCheckpoint`` or ``checkpoint``)
+is recorded with its ``explain("formatted")`` text, plus the probe's returned frame, so a
 refactor of the lifecycle can be diffed flow by flow. Expression IDs,
 RDD ids and the work-dir / warehouse / fixture paths are normalized so two runs
 of the same code produce identical files. The package is imported from
@@ -46,9 +46,8 @@ _records: list[tuple[str, str]] = []
 
 
 def _plan(df) -> str:
-    # explain a fresh Dataset over the same plan: explaining ``df``
-    # itself would pin its cached-data substitution before a following
-    # persist() and hide the cache from its own later writes
+    # explain a fresh Dataset over the same plan, leaving ``df``'s own
+    # query execution untouched
     fresh = df.select("*")
     return fresh._sc._jvm.PythonSQLUtils.explainString(
         fresh._jdf.queryExecution(), "formatted"
@@ -56,27 +55,24 @@ def _plan(df) -> str:
 
 
 def _patch() -> None:
-    save, checkpoint, persist = (
-        DataFrameWriter.saveAsTable,
-        DataFrame.localCheckpoint,
-        DataFrame.persist,
-    )
+    save = DataFrameWriter.saveAsTable
 
     def save_as_table(self, name, *args, **kwargs):
         _records.append((f"saveAsTable {name}", _plan(self._df)))
         return save(self, name, *args, **kwargs)
 
-    def local_checkpoint(self, *args, **kwargs):
-        _records.append(("localCheckpoint", _plan(self)))
-        return checkpoint(self, *args, **kwargs)
+    def recorded(method):
+        original = getattr(DataFrame, method)
 
-    def persist_(self, *args, **kwargs):
-        _records.append(("persist", _plan(self)))
-        return persist(self, *args, **kwargs)
+        def wrapper(self, *args, **kwargs):
+            _records.append((method, _plan(self)))
+            return original(self, *args, **kwargs)
+
+        setattr(DataFrame, method, wrapper)
 
     DataFrameWriter.saveAsTable = save_as_table
-    DataFrame.localCheckpoint = local_checkpoint
-    DataFrame.persist = persist_
+    recorded("localCheckpoint")
+    recorded("checkpoint")
 
 
 def _normalize(text: str, work: str, warehouse: str, sf_dir: str) -> str:

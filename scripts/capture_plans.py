@@ -58,7 +58,6 @@ def main() -> int:
                 if kind in plan
             ]
             print(f"{name}: Exchange x{n_ex}; joins={joins or '-'}; python={pyn or '-'}")
-            q.cache.release_caches()
             spark.catalog.clearCache()
     finally:
         spark.stop()

@@ -452,6 +452,13 @@ def test_job_settings_validation(tmp_path):
         {"downsample_levels": 4.0},
         {"partition_to_process": 0.5},
         {"num_of_partitions": 2.0},
+        # JSON true is a Python bool, an int subclass
+        {"downsample_levels": True},
+        {"num_of_partitions": True},
+        {"chunk_size": (True, 128, 128)},
+        # a truthy non-bool would turn the zarr sink on
+        {"zarr_v2": "false"},
+        {"zarr_v2": 0},
     ):
         with pytest.raises(ValueError, match=next(iter(bad))):
             StackJobSettings(input_source="a", output_directory="b", **bad)

@@ -705,45 +705,47 @@ def test_cluster_components_static_sql_matches_operator_composition(spark, sf_di
 
 
 def test_materialize_mode_switch(spark, tmp_path, monkeypatch):
-    """r17 (VERDICT r16 #3): plans.scale.materialize picks the
-    durability of an eager intermediate by SPARK_GRAFT_MATERIALIZE.
-    local (default) = localCheckpoint: lineage truncated, unreplicated
-    blocks (executor loss kills the query — fine single-JVM). reliable
-    = checkpoint() into a durable dir: files on shared storage, loss
-    transparent. replicated = persist(MEMORY_AND_DISK_2): replica +
-    retained lineage. Unknown modes and reliable-without-a-dir raise
-    contract errors instead of silently degrading durability."""
-    import pytest
+    """plans.scale.materialize has two outcomes, picked by the
+    deployment: with no checkpoint dir it is a localCheckpoint
+    (lineage truncated, nothing written to a dir); with
+    $SPARK_GRAFT_CHECKPOINT_DIR set — or a dir already on the session —
+    it is a reliable checkpoint whose files land in that dir. The
+    shared session's dir is reset afterwards: left set, it would switch
+    every later test to reliable checkpoints."""
+    import glob
 
     from aind_protein_data_transformation_spark.plans.scale import materialize
 
+    sc = spark.sparkContext
     df = spark.range(10).selectExpr("id", "id * 2 AS v")
+    ckdir = tmp_path / "ck"
 
-    monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
-    local = materialize(df)
-    assert "LogicalRDD" in local._jdf.queryExecution().optimizedPlan().toString()
+    def checkpoint_files():
+        return glob.glob(str(ckdir / "**" / "rdd-*"), recursive=True)
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "reliable")
+    def values(frame):
+        return sorted(r.v for r in frame.collect())
+
     monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
-    had_dir = spark.sparkContext.getCheckpointDir()
-    if had_dir is None:
-        with pytest.raises(RuntimeError, match="checkpoint dir"):
-            materialize(df)
-        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(tmp_path / "ck"))
-    rel = materialize(df)
-    assert sorted(r.v for r in rel.collect()) == [2 * i for i in range(10)]
-    ckdir = spark.sparkContext.getCheckpointDir()
-    assert ckdir is not None
-    import glob
-    import os as _os
-    assert glob.glob(_os.path.join(ckdir.replace("file:", ""), "**", "rdd-*"),
-                     recursive=True), "reliable mode must write durable files"
+    sc._jsc.sc().setCheckpointDir(None)
+    try:
+        local = materialize(df)
+        assert "LogicalRDD" in local._jdf.queryExecution().optimizedPlan().toString()
+        assert values(local) == [2 * i for i in range(10)]
+        assert sc.getCheckpointDir() is None
+        assert not checkpoint_files()
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "replicated")
-    rep = materialize(df)
-    assert rep.storageLevel.replication == 2 and rep.storageLevel.useDisk
-    rep.unpersist()
+        monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckdir))
+        reliable = materialize(df)
+        assert values(reliable) == [2 * i for i in range(10)]
+        assert sc.getCheckpointDir() is not None
+        n_files = len(checkpoint_files())
+        assert n_files, "a checkpoint dir must receive the relation's files"
 
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "bogus")
-    with pytest.raises(ValueError, match="bogus"):
-        materialize(df)
+        # the dir now set on the session is used without the variable
+        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
+        assert values(materialize(df)) == [2 * i for i in range(10)]
+        assert len(checkpoint_files()) > n_files
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None

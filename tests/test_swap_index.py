@@ -184,12 +184,11 @@ def _swap_ops(name, target, sidecar):
 @pytest.mark.parametrize("fam", FAMILIES)
 def test_probe_leaves_cache_manager_empty(spark, sf_dir, fam):
     """write → append → probe leaves the session's plan-keyed cache
-    manager empty for every family: the shared write releases its
-    persisted signed frame before returning, and the append and probe
-    materialize their shard with localCheckpoint, whose RDD-level
-    storage is GC-bounded with the DataFrame. A persist() left behind
-    would be a session-lifetime entry that matches (and silently
-    serves) future plans."""
+    manager empty for every family: the write, the append and the probe
+    materialize their signed frame through plans.scale.materialize, a
+    checkpoint whose storage is GC-bounded with the DataFrame. A
+    persist() left behind would be a session-lifetime entry that
+    matches (and silently serves) future plans."""
     name = "swp_cache"
     _drop_all(spark, name)
     spark.catalog.clearCache()
