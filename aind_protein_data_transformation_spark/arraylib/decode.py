@@ -29,6 +29,13 @@ VOXEL_SCHEMA = (
     "stack_id string, dtype string, t int, c int, z long, y long, x long, v double"
 )
 
+#: Stack dtypes the pipeline carries exactly: every value of each is a
+#: DOUBLE without loss. 64-bit integers are not (DOUBLE is exact only
+#: below 2^53), so ``decode_stacks`` refuses them and anything else.
+SUPPORTED_DTYPES = frozenset(
+    {"uint8", "uint16", "uint32", "int8", "int16", "int32", "float32", "float64"}
+)
+
 Decoder = Callable[[str, bytes], tuple[np.ndarray, str]]
 
 
@@ -93,17 +100,26 @@ def decode_stacks(files_df: DataFrame, decoder: Decoder = synthetic_decoder) -> 
     ``mapInPandas`` streams one Arrow batch per decoded array, so a
     1000-executor cluster decodes 1000 stacks concurrently with no
     driver involvement; each task holds one stack's ndarray, mirroring
-    the reference's one-process-one-stack memory bound.
+    the reference's one-process-one-stack memory bound. A stack whose
+    dtype is not in :data:`SUPPORTED_DTYPES` raises ``ValueError``
+    naming the stack and the dtype, before any of its voxel rows.
     """
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
                 arr, dtype = decoder(path, bytes(content))
+                stack_id = path.rsplit("/", 1)[-1]
+                if dtype not in SUPPORTED_DTYPES:
+                    raise ValueError(
+                        f"stack {stack_id}: dtype {dtype} is not supported "
+                        f"(voxels travel as DOUBLE; supported: "
+                        f"{', '.join(sorted(SUPPORTED_DTYPES))})"
+                    )
                 t, c, z, y, x = np.indices(arr.shape).reshape(5, -1)
                 yield pd.DataFrame(
                     {
-                        "stack_id": path.rsplit("/", 1)[-1],
+                        "stack_id": stack_id,
                         "dtype": dtype,
                         "t": t.astype(np.int32),
                         "c": c.astype(np.int32),

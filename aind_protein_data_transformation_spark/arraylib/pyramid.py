@@ -9,10 +9,15 @@ mean is a hash aggregate on the floor-divided grid — partial aggregation
 an 8x reduction per level at scale_factor 2×2×2, so the cascade's total
 shuffle volume is a geometric series bounded by ~1.14x the input.
 
-Dtype preservation: numpy's ``astype`` truncates toward zero; Spark's
-``double -> long`` cast does the same, so integer dtypes round-trip
-bit-for-bit (goldens in tests/test_arraylib.py). Edge windows (shape not
-divisible by the factor) average over the voxels present.
+Dtype preservation: every level is stored in the stack's dtype before
+the next level averages it, as the reference's write-then-read-back
+does. numpy's ``astype`` truncates integers toward zero and Spark's
+``double -> long`` cast does the same; ``float32`` levels round to
+nearest through a ``float`` cast. Both are bit-for-bit with a numpy
+cascade (tests/test_arraylib.py). 64-bit integers are refused at decode
+(``decode.SUPPORTED_DTYPES``): ``v`` is a DOUBLE, exact only below
+2^53. Edge windows (shape not divisible by the factor) average over the
+voxels present.
 """
 
 from __future__ import annotations
@@ -27,7 +32,7 @@ DEFAULT_SCALE_FACTOR = (2, 2, 2)
 DEFAULT_N_LEVELS = 4
 DEFAULT_CHUNK_SIZE = (128, 128, 128)
 
-_INT_DTYPES = {"int8", "int16", "int32", "int64", "uint8", "uint16", "uint32", "uint64"}
+_INT_DTYPES = {"int8", "int16", "int32", "uint8", "uint16", "uint32"}
 
 
 def downsample_once(
@@ -44,10 +49,14 @@ def downsample_once(
     force a sort aggregate over every input voxel.
     """
     fz, fy, fx = scale_factor
-    # Truncation-toward-zero for integer dtypes == numpy astype.
-    value = F.when(
-        F.col("dtype").isin(*_INT_DTYPES), F.avg("v").cast("long").cast("double")
-    ).otherwise(F.avg("v"))
+    # Store the mean in the stack's dtype: truncation toward zero for
+    # integers (== numpy astype), round-to-nearest for float32.
+    mean = F.avg("v")
+    value = (
+        F.when(F.col("dtype").isin(*_INT_DTYPES), mean.cast("long").cast("double"))
+        .when(F.col("dtype") == "float32", mean.cast("float").cast("double"))
+        .otherwise(mean)
+    )
     return df.groupBy(
         "stack_id",
         "dtype",

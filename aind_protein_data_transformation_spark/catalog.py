@@ -113,10 +113,6 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
     raise TypeError(f"unexpected events.ts type {ts_type!r}")
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
 #: (session -> {table: abs sf_dir}) of already-registered temp views.
 #: Weakly keyed so a stopped session's entries vanish with it. Same
 #: static-data assumption as _PLAN_MEMO (clear_plan_memo wipes both).

@@ -3,7 +3,7 @@
 All are pure DataFrame compositions (no Python UDFs) so they scale with
 the cluster and stay inside WholeStageCodegen. Hashes use the portable
 md5-based ``hash64`` (functions/text.py) so the DuckDB oracle reproduces
-every value bit-for-bit; swap in ``xxhash64`` for production throughput.
+every value bit-for-bit.
 
 Scale design (100 TB corpus):
 - exact dedup: one shuffle on the normalized hash; map-side partial agg.
@@ -107,21 +107,11 @@ def shingle_set(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    fast_hash: bool = False,
 ) -> DataFrame:
-    """Distinct word-k-shingle hashes per document: (doc_id, h).
+    """Distinct word-k-shingle hashes per document: (doc_id, h), with
+    the DuckDB-replayable md5-conv hash.
 
-    ``fast_hash=True`` is the production path the module doc promises:
-    JVM ``xxhash64`` instead of the DuckDB-replayable md5-conv hash,
-    and — because the hash is now cheaper than shuffling strings — the
-    flipped hash-then-distinct order (deduplicate on the numeric
-    (id, h), so the exchange carries longs, ~3x fewer bytes). Same
-    (doc_id, h) relation shape, same per-doc distinct counts and
-    pairwise shared counts modulo hash collisions (equivalence test:
-    tests/test_operators.py); NOT oracle-replayable, so every
-    registered query keeps the portable hash.
-
-    Collision honesty, both paths: h lives in [0, 2^31-1) because the
+    Collision honesty: h lives in [0, 2^31-1) because the
     MinHash permutations need h < MINHASH_PRIME for their (a*h+b)
     arithmetic to stay under 2^62 — so per-pair collision probability
     is ~2^-31, NOT the hash's native width. Per DOCUMENT (what Jaccard
@@ -144,12 +134,12 @@ def shingle_set(
     and deduplicating first cuts its evaluations from one-per-occurrence
     to one-per-distinct-shingle (~6x here — measured 1.28s -> 0.75s for
     the full shingle pass at sf0.1). The exchange carries short strings
-    instead of longs (~3x bytes); with a cheap production hash
-    (xxhash64) the better order flips back to hash-then-distinct. The
-    SQL oracles replay the same order, so the hash-collision knife edge
-    (~2^-31 per pair after the MINHASH_PRIME modulus — see the
-    fast_hash note above for the honest arithmetic) is identical on
-    both engines and every downstream join stays numeric.
+    instead of longs (~3x bytes); with a cheap hash such as xxhash64
+    the better order would flip back to hash-then-distinct. The SQL
+    oracles replay the same order, so the hash-collision knife edge
+    (~2^-31 per pair after the MINHASH_PRIME modulus — the arithmetic
+    is above) is identical on both engines and every downstream join
+    stays numeric.
     """
     # Built as selectExpr strings: the composed-Column form of this plan
     # costs hundreds of py4j round-trips (~0.4s of pure driver-side
@@ -164,10 +154,6 @@ def shingle_set(
         .selectExpr(f"`{id_col}`", "tk", f"explode(sequence(1, size(tk) - {k - 1})) AS i")
         .selectExpr(f"`{id_col}`", f"concat_ws(' ', {parts}) AS s")
     )
-    if fast_hash:
-        return shingled.selectExpr(
-            f"`{id_col}`", f"PMOD(XXHASH64(s), {MINHASH_PRIME}) AS h"
-        ).distinct()
     return (
         shingled.distinct()
         .selectExpr(

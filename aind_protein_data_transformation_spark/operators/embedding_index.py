@@ -13,19 +13,19 @@ signer, its stamp, its cosine verify score and its input checks.
   UNIT-NORMALIZED vectors, so the probe's verify stage is a plain dot
   product (no norms recomputed per candidate pair).
 
-Signatures default to the Arrow GEMM signer
+Signatures come from the Arrow GEMM signer
 (:func:`~aind_protein_data_transformation_spark.operators.similarity.srp_band_vals_gemm`):
 the round-8 dispatch ladder found NO fold-favorable regime for this
 family (the fold does O(n_bits x dim) interpreted multiply-adds per
-row — kernel 2x at dim-64, ~226x at dim-1024; BENCH.md round 8).
-``use_gemm=False`` falls back to the oracle-replayable fold, and the
-two signers are agreement-pinned at the band-table level by
-tests/test_embedding_index.py. ``n_bits``/``n_bands`` are the stamped
+row — kernel 2x at dim-64, ~226x at dim-1024; BENCH.md round 8). The
+oracle-replayable fold ``srp_band_vals`` stays the reference: the
+probe's pair set equals the fold-signed batch pipeline's
+(tests/test_embedding_index.py). ``n_bits``/``n_bands`` are the stamped
 geometry (``sparkgraft.srp.*``). The input checks are this family's
 own: every write/append/probe validates the whole shard for NULL
 vectors, NULL elements, ragged or empty dimensions and (append/probe)
-the index's dimension, because the fold signer would otherwise degrade
-silently where the GEMM signer raises.
+the index's dimension, before any signer runs, so a bad row raises
+instead of being stored as an unreachable row.
 
 No counterpart exists in the reference (its array layer is
 conversion-only); part of the SURVEY.md §2 training-pipeline addendum.
@@ -51,7 +51,6 @@ from .similarity import (
     PAIR_COSINE_UDF_MIN_DIM,
     dispatch_by_dim,
     pair_cosine_batch_col,
-    srp_band_vals,
     srp_band_vals_gemm,
 )
 
@@ -89,14 +88,12 @@ def _sig_bands(
     vec_col: str,
     n_bits: int,
     n_bands: int,
-    use_gemm: bool,
 ) -> DataFrame:
     """(vec_id, band, band_val) rows for ``vectors`` — the signer's
     packed band values exploded one row per band. Derived straight
-    from the raw vectors (both signers normalize internally), so bands
+    from the raw vectors (the signer normalizes internally), so bands
     and the vecs-table lineage share one source frame with NO join."""
-    signer = srp_band_vals_gemm if use_gemm else srp_band_vals
-    sig = signer(vectors, vec_id, vec_col, n_bits=n_bits, n_bands=n_bands)
+    sig = srp_band_vals_gemm(vectors, vec_id, vec_col, n_bits=n_bits, n_bands=n_bands)
     return sig.select(
         vec_id, F.posexplode("band_vals").alias("band", "band_val")
     )
@@ -106,15 +103,15 @@ def _srp_stamp(n_bits: int, n_bands: int) -> dict[str, str]:
     return {"sparkgraft.srp.n_bits": str(n_bits), "sparkgraft.srp.n_bands": str(n_bands)}
 
 
-def _signer(vec_id: str, vec_col: str, n_bits: int, n_bands: int, use_gemm: bool) -> Signer:
-    """The signed frame carries the raw vector (the band signers
-    normalize internally) and its unit-normalized form ``en`` — the
+def _signer(vec_id: str, vec_col: str, n_bits: int, n_bands: int) -> Signer:
+    """The signed frame carries the raw vector (the band signer
+    normalizes internally) and its unit-normalized form ``en`` — the
     sidecar payload and the probe's verify operand."""
     return Signer(
         sign=lambda vectors: vectors.select(
             vec_id, vec_col, F.expr(_en_expr(vec_col)).alias("en")
         ),
-        bands=lambda signed: _sig_bands(signed, vec_id, vec_col, n_bits, n_bands, use_gemm),
+        bands=lambda signed: _sig_bands(signed, vec_id, vec_col, n_bits, n_bands),
         stamp=_srp_stamp(n_bits, n_bands),
     )
 
@@ -228,7 +225,6 @@ def write_srp_index(
     n_bands: int = 4,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
-    use_gemm: bool = True,
 ) -> None:
     """Index ``vectors`` for incremental near-dup probes: persist the
     band and normalized-vector tables described in the module notes,
@@ -237,7 +233,7 @@ def write_srp_index(
     — a NULL embedding in a fresh build would be stored as an
     unreachable row). Runbook step 1 of operators/index_lifecycle.py."""
     _check_vectors(vectors, vec_col)
-    signer = _signer(vec_id, vec_col, n_bits, n_bands, use_gemm)
+    signer = _signer(vec_id, vec_col, n_bits, n_bands)
     write_index(vectors, name, SRP_SPEC, signer, vec_id, n_buckets, path)
 
 
@@ -249,7 +245,6 @@ def append_srp_shard(
     n_bands: int = 4,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
-    use_gemm: bool = True,
 ) -> None:
     """Fold an (already-deduplicated) shard into the persisted index —
     a bucketed APPEND of its vector rows, then band rows; the history
@@ -257,7 +252,7 @@ def append_srp_shard(
     against the index up front (:func:`_check_dim`). Runbook step 2 of
     operators/index_lifecycle.py."""
     _check_dim(spark, name, vectors, vec_col)
-    signer = _signer(vec_id, vec_col, n_bits, n_bands, use_gemm)
+    signer = _signer(vec_id, vec_col, n_bits, n_bands)
     append_index(spark, vectors, name, SRP_SPEC, signer, vec_id)
 
 
@@ -300,7 +295,6 @@ def incremental_srp_pairs(
     n_bands: int = 4,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
-    use_gemm: bool = True,
     verify: bool = False,
     verify_batch: bool | None = False,
     prune_scan: int | None = None,
@@ -332,7 +326,7 @@ def incremental_srp_pairs(
         new_vectors,
         name,
         SRP_SPEC,
-        _signer(vec_id, vec_col, n_bits, n_bands, use_gemm),
+        _signer(vec_id, vec_col, n_bits, n_bands),
         vec_id,
         verify=verify,
         prune_scan=prune_scan,

@@ -483,8 +483,8 @@ def assign_buckets_ivf(
     """Two-level (hierarchical) nearest-centroid assignment — the scale
     regime for CORPUS-PROPORTIONAL codebooks, where the flat paths'
     O(N·K) flops are O(N²/stride) by construction (measured:
-    scripts/bench_embed10.py round 12 — the fold read 10.8× wall at 10×
-    corpus with a stride-derived codebook; the GEMM twin absorbed the
+    BENCH.md round 12, "SemDeDup core slope" — the fold read 10.8×
+    wall at 10× corpus with a stride-derived codebook; the GEMM twin absorbed the
     same 100× flops at this layout, but its flop count grows the same
     way and no BLAS outruns a quadratic at 100 TB).
 
@@ -514,8 +514,8 @@ def assign_buckets_ivf(
     silent default — the flat paths stay the exact, oracle-replayable
     forms.
 
-    When it pays — measured honestly (scripts/bench_embed10.py
-    measurement 5): at sandbox scale the 10× slope is 5.45× vs the
+    When it pays — measured honestly (BENCH.md round 12, "SemDeDup
+    core slope"): at sandbox scale the 10× slope is 5.45× vs the
     flat fold's 7.89× (the subquadratic flop count emerging), but
     :func:`assign_buckets_gemm` still wins OUTRIGHT (0.73s at ×10)
     because this codebook fits on the driver and BLAS absorbs N·K.
@@ -826,8 +826,8 @@ def ivf_topk(
 
     ``gemm=True`` builds the corpus index with
     :func:`assign_buckets_gemm` (one BLAS call per Arrow batch —
-    measured ~9x cheaper than the fold at any corpus size,
-    scripts/bench_embed10.py) instead of the oracle-replayable HOF
+    measured ~9x cheaper than the fold at any corpus size, BENCH.md
+    round 5's 10x embedding experiment) instead of the oracle-replayable HOF
     fold; identical assignment by the exact-agreement test, so the
     top-k result is unchanged.
 

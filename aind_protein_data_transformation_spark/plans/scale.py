@@ -35,8 +35,10 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
       relation there. Losing an executor is transparent, since a lost
       partition is re-read from the files, provided the dir is on
       shared storage (HDFS, an object store). Costs one distributed
-      write; the files stay in the dir unless the deployment sets
-      ``spark.cleaner.referenceTracking.cleanCheckpoints``.
+      write; the context cleaner deletes the files once the last
+      DataFrame over them is garbage-collected
+      (``spark.cleaner.referenceTracking.cleanCheckpoints``, set by
+      ``session.get_spark``).
     - otherwise ``df.localCheckpoint``: blocks are stored unreplicated
       on the executors and the lineage is gone, so losing an executor
       that holds a block fails the next job that reads it. On a

@@ -28,6 +28,7 @@ from ..operators.similarity import (
     assign_buckets,
     centroid_update_exact,
     ivf_topk,
+    quantize_int8_hof,
     sql_centroid_update,
     stride_centroids,
 )
@@ -528,23 +529,6 @@ def dedup_embedding_srp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SRP_SPARK_SQL.format(fan=fanout_width(spark)))
 
 
-def quantize_hof_frame(emb: DataFrame) -> DataFrame:
-    """The quantize projection WITHOUT the driver-contract ORDER BY —
-    the map-only work shared by the registered query (which appends
-    sorted_small) and the HOF-vs-Arrow-batch A/B in
-    scripts/bench_embed10.py. Timing the registered query for that A/B
-    would be wrong in a subtle way: sorted_small's coalesce(1) fuses
-    into the shuffle-free projection and collapses the WHOLE scan to
-    one task, so the comparison would measure one core against the
-    batch kernel's 32. The projection itself now lives in
-    operators/similarity.py (quantize_int8_hof) so the dim-aware
-    dispatcher can route to it; this wrapper pins the embeddings-table
-    column names the oracle replays."""
-    from ..operators.similarity import quantize_int8_hof
-
-    return quantize_int8_hof(emb, vec_id="vec_id", vec_col="embedding")
-
-
 @query(
     "embedding_quantize_int8",
     oracle="""
@@ -585,9 +569,12 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes would be written alongside the fp32 originals in one pass.
     Cross-engine exactness: floor(x+0.5) sidesteps ROUND-semantics
     divergence, max/abs are order-free, and the MSE fold follows the
-    verified aggregate==list_sum element order."""
+    verified aggregate==list_sum element order. A kernel A/B times
+    ``quantize_int8_hof`` itself, not this query: sorted_small's
+    coalesce(1) fuses into the projection and runs the whole scan as
+    one task."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return quantize_hof_frame(emb).transform(
+    return quantize_int8_hof(emb, vec_id="vec_id", vec_col="embedding").transform(
         lambda d: sorted_small(d, "vec_id")
     )
 

@@ -29,6 +29,11 @@ _BASE_CONF: dict[str, str] = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # plans.scale.materialize writes a reliable checkpoint per shared
+    # subtree when a checkpoint dir is set; without this the files stay
+    # in the dir for its whole life. A context conf: it must be set
+    # before the SparkContext starts, so it lives here.
+    "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
     # 8 initial shuffle partitions on the harness: AQE coalesces reads
     # anyway, but the shuffle WRITE side (sorter buckets, scheduling) still
     # scales with this number; at harness data sizes the full suite

@@ -239,7 +239,7 @@ def main(argv: list[str]) -> int:
     import aind_protein_data_transformation_spark.queries as q
 
     names = list(q.REGISTRY) if run_all else list(HEADLINE)
-    # Optional subset (scripts/bench_scale10.py): comma-separated names.
+    # Optional subset (scripts/bench_layout.py): comma-separated names.
     subset = os.environ.get("SPARK_GRAFT_QUERIES")
     if subset:
         names = [n for n in subset.split(",") if n]

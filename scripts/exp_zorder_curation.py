@@ -26,8 +26,9 @@ plus a timed curation pass (sum of text lengths in band — forces the
 text bytes of kept groups to be read).
 
 Usage: python scripts/exp_zorder_curation.py [docs_dir] [out_root]
-``docs_dir`` needs documents.parquet (default: the bench_text10 layout,
-generated if absent). Prints one JSON line.
+``docs_dir`` needs documents.parquet (default: the documents of the
+``scripts/bench_layout.py --layout x10`` layout, generated if absent).
+Prints one JSON line.
 """
 
 from __future__ import annotations
@@ -45,18 +46,18 @@ NUM_FILES = 8
 
 
 def main(argv: list[str]) -> int:
-    docs_dir = argv[1] if len(argv) > 1 else "/tmp/sparkgraft-text10"
+    docs_dir = argv[1] if len(argv) > 1 else "/tmp/sparkgraft-x10-sf0.1"
     out_root = argv[2] if len(argv) > 2 else "/tmp/sparkgraft-zorder-cur"
     # default per the bits-sizing law (BENCH.md round 12): this store
     # lands ~71 row groups -> (log2(71)+2)/2 ~ 4
     bits = int(argv[3]) if len(argv) > 3 else 4
 
     if not os.path.isdir(os.path.join(docs_dir, "documents.parquet")):
-        import bench_text10 as bt
+        from bench_layout import write_layout
 
         print(f"generating 10x documents -> {docs_dir}",
               file=sys.stderr, flush=True)
-        bt.scale_documents("/root/testdata/sf0.1", docs_dir)
+        write_layout("/root/testdata/sf0.1", docs_dir, "x10", tables=("documents",))
 
     from pyspark.sql import functions as F
 

@@ -13,7 +13,10 @@ import json
 import os
 
 import numpy as np
+import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from aind_protein_data_transformation_spark.arraylib import blocks, decode, ome, pyramid, stacks
@@ -826,3 +829,143 @@ def test_zarr_sink_adds_one_job_per_level(spark, stack_dir, tmp_path):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     assert jobs_of(True) - jobs_of(False) == levels
+
+
+# ------------------------------------------------------ dtype-exact cascade
+
+
+def np_cascade(arr: np.ndarray, factor, levels: int) -> list[np.ndarray]:
+    """The reference's cascade in numpy: level k+1 is the windowed mean
+    of level k AS STORED in the stack's dtype (float64 accumulate, then
+    ``astype``: truncation for integers, round-to-nearest for floats)."""
+    out = [arr]
+    for _ in range(1, levels):
+        total = out[-1].astype(np.float64)
+        count = np.ones_like(total)
+        for axis, f in zip((2, 3, 4), factor):
+            starts = np.arange(0, total.shape[axis], f)
+            total = np.add.reduceat(total, starts, axis=axis)
+            count = np.add.reduceat(count, starts, axis=axis)
+        out.append((total / count).astype(arr.dtype))
+    return out
+
+
+def _seeded_stacks():
+    """``(stack, decoder)``. ``stack(name, dtype, shape)`` is stack
+    ``name``'s voxels, seeded by ``zlib.crc32`` of the name (the same on
+    every Python worker, unlike the salted ``hash()``); ``decoder`` reads
+    a ``<dtype>;T,C,Z,Y,X;`` payload into them. Floats are multiples of
+    2^-10 below 2^13, so every window sum at every level is exact in
+    float64 and its order cannot matter, while the means still need
+    rounding to float32. Built in a function so Spark pickles both by
+    value: the test module does not import on the workers."""
+
+    def stack(name: str, dtype: str, shape) -> np.ndarray:
+        import zlib as _zlib
+
+        rng = np.random.default_rng(_zlib.crc32(name.encode()))
+        if dtype == "float32":
+            return (rng.integers(-(1 << 23), 1 << 23, size=shape) / 1024).astype(np.float32)
+        info = np.iinfo(dtype)
+        return rng.integers(info.min, info.max, size=shape, dtype=dtype, endpoint=True)
+
+    def decoder(path: str, content: bytes) -> tuple[np.ndarray, str]:
+        dtype, shape, _ = content.decode("ascii").split(";")
+        name = path.rsplit("/", 1)[-1]
+        return stack(name, dtype, tuple(int(s) for s in shape.split(","))), dtype
+
+    return stack, decoder
+
+
+seeded_stack, seeded_decoder = _seeded_stacks()
+
+
+def write_seeded_stacks(root, stacks_: dict) -> str:
+    root.mkdir()
+    for name, (dtype, shape) in stacks_.items():
+        (root / name).write_bytes(f"{dtype};{','.join(map(str, shape))};".encode())
+    return str(root)
+
+
+odd = st.integers(0, 5).map(lambda n: 2 * n + 1)
+stack_spec = st.tuples(
+    st.sampled_from(["uint8", "uint16", "int16", "float32"]),
+    st.tuples(st.just(1), st.integers(1, 2), odd, odd, odd),
+)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    specs=st.lists(stack_spec, min_size=1, max_size=2),
+    factor=st.sampled_from([(2, 2, 2), (1, 2, 2), (2, 1, 1)]),
+    chunk=st.tuples(st.integers(2, 4), st.integers(2, 4), st.integers(2, 4)),
+    levels=st.integers(1, 4),
+)
+# always run: float32 levels >= 2 must average the float32-rounded level below
+@example(
+    specs=[("float32", (1, 2, 9, 7, 5)), ("int16", (1, 1, 5, 5, 3))],
+    factor=(2, 2, 2),
+    chunk=(2, 3, 4),
+    levels=4,
+)
+def test_run_job_cascade_is_dtype_exact(spark, tmp_path_factory, specs, factor, chunk, levels):
+    """Every parquet and zarr level of ``run_job`` is bit-equal to a numpy
+    cascade that stores each level in the stack's dtype, for the 8/16-bit
+    integer and float32 dtypes, anisotropic factors and odd shapes."""
+    root = tmp_path_factory.mktemp("cascade")
+    stacks_ = {f"s{i}.czi": spec for i, spec in enumerate(specs)}
+    job = StackJobSettings(
+        input_source=write_seeded_stacks(root / "in", stacks_),
+        output_directory=str(root / "out"),
+        chunk_size=chunk,
+        scale_factor=factor,
+        downsample_levels=levels,
+        zarr_v2=True,
+    )
+    assert run_job(spark, job, decoder=seeded_decoder).status_code == 0
+    want = {
+        name: np_cascade(seeded_stack(name, dtype, shape), factor, levels)
+        for name, (dtype, shape) in stacks_.items()
+    }
+    for lvl in range(levels):
+        seen = set()
+        for row in pq.read_table(os.path.join(job.output_directory, f"level={lvl}")).to_pylist():
+            arr = want[row["stack_id"]][lvl]
+            z0, y0, x0 = row["z0"], row["y0"], row["x0"]
+            dz, dy, dx = row["shape"]
+            block = arr[row["t"], row["c"], z0 : z0 + dz, y0 : y0 + dy, x0 : x0 + dx]
+            assert row["dtype"] == str(arr.dtype)
+            assert list(block.shape) == [dz, dy, dx] and row["payload"] == block.tobytes(), (
+                row["stack_id"], lvl, (z0, y0, x0),
+            )
+            seen.add((row["stack_id"], row["t"], row["c"], z0, y0, x0))
+        assert seen == {
+            (name, t, c, z0, y0, x0)
+            for name, cascade in want.items()
+            for t in range(cascade[lvl].shape[0])
+            for c in range(cascade[lvl].shape[1])
+            for z0 in range(0, cascade[lvl].shape[2], chunk[0])
+            for y0 in range(0, cascade[lvl].shape[3], chunk[1])
+            for x0 in range(0, cascade[lvl].shape[4], chunk[2])
+        }, lvl
+        for name, cascade in want.items():
+            meta, got = read_zarr_v2(os.path.join(job.output_directory, "zarr", name, str(lvl)))
+            assert meta["dtype"] == cascade[lvl].dtype.str
+            assert got.shape == cascade[lvl].shape and got.tobytes() == cascade[lvl].tobytes(), (name, lvl)
+
+
+def test_run_job_refuses_64_bit_integer_stacks(spark, tmp_path):
+    """``v`` is a DOUBLE, exact only below 2^53: a 64-bit integer stack is
+    refused with an error naming the stack and the dtype, before any
+    output is written."""
+    for dtype in ("int64", "uint64"):
+        out = tmp_path / f"out-{dtype}"
+        job = StackJobSettings(
+            input_source=write_seeded_stacks(tmp_path / f"in-{dtype}", {"big.czi": (dtype, (1, 1, 3, 3, 3))}),
+            output_directory=str(out),
+            chunk_size=(2, 2, 2),
+            zarr_v2=True,
+        )
+        with pytest.raises(Exception, match=f"stack big.czi: dtype {dtype} is not supported"):
+            run_job(spark, job, decoder=seeded_decoder)
+        assert not out.exists()

@@ -26,6 +26,7 @@ from aind_protein_data_transformation_spark.operators.embedding_index import (
     verify_srp_index,
     write_srp_index,
 )
+from aind_protein_data_transformation_spark.operators.similarity import srp_band_vals
 
 THRESHOLD = 0.9
 
@@ -57,7 +58,9 @@ def _batch_cross_pairs(corpus, shard, threshold=THRESHOLD):
     oracle-parity form), restricted to directed shard->corpus pairs:
     the set the incremental probe must reproduce exactly."""
     both = corpus.unionByName(shard)
-    bands = _sig_bands(both, "vec_id", "embedding", 32, 4, use_gemm=False)
+    bands = srp_band_vals(both, n_bits=32, n_bands=4).select(
+        "vec_id", F.posexplode("band_vals").alias("band", "band_val")
+    )
     en = both.select("vec_id", F.expr(_en_expr("embedding")).alias("en"))
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -125,7 +128,7 @@ def _partial_append(spark, vectors, name, *, vecs=False, bands=False):
         )
     if bands:
         (
-            _sig_bands(base, "vec_id", "embedding", 32, 4, True)
+            _sig_bands(base, "vec_id", "embedding", 32, 4)
             .write.mode("append")
             .bucketBy(table_num_buckets(spark, f"{name}_bands"), "band", "band_val")
             .sortBy("band", "band_val")
@@ -428,10 +431,8 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
             "size(embedding) AS d"
         ).collect()[0]["d"] == 64  # first row matches the index dim
         for fn in (
-            lambda: append_srp_shard(spark, ragged, "t_edim", use_gemm=False),
-            lambda: incremental_srp_pairs(
-                spark, ragged, "t_edim", use_gemm=False
-            ),
+            lambda: append_srp_shard(spark, ragged, "t_edim"),
+            lambda: incremental_srp_pairs(spark, ragged, "t_edim"),
         ):
             with pytest.raises(ValueError, match="RAGGED"):
                 fn()
@@ -444,9 +445,9 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
             "ELSE embedding END AS embedding",
         )
         with pytest.raises(ValueError, match="NULL"):
-            append_srp_shard(spark, nullish, "t_edim", use_gemm=False)
+            append_srp_shard(spark, nullish, "t_edim")
         with pytest.raises(ValueError, match="NULL"):
-            incremental_srp_pairs(spark, nullish, "t_edim", use_gemm=False)
+            incremental_srp_pairs(spark, nullish, "t_edim")
         # the FRESH build runs the same validation (second-pass review:
         # a NULL embedding in the corpus used to be stored silently as
         # an unreachable row), and NULL ELEMENTS inside a vector — which
@@ -461,7 +462,7 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
             "ELSE embedding END AS embedding",
         )
         with pytest.raises(ValueError, match="NULL ELEMENT"):
-            incremental_srp_pairs(spark, elemnull, "t_edim", use_gemm=False)
+            incremental_srp_pairs(spark, elemnull, "t_edim")
         # ADVICE r9: uniformly EMPTY vectors pass lo==hi but a size-0
         # embedding gets all-zero fold bands and a zero norm
         # (try_divide-degenerate en) — the same silent
@@ -472,7 +473,7 @@ def test_dim_mismatch_raises_instead_of_silent_drop(spark, vecs, tmp_path):
         with pytest.raises(ValueError, match="zero-dimensional"):
             write_srp_index(empty, "t_edim_never")
         with pytest.raises(ValueError, match="zero-dimensional"):
-            incremental_srp_pairs(spark, empty, "t_edim", use_gemm=False)
+            incremental_srp_pairs(spark, empty, "t_edim")
         assert not spark.catalog.tableExists("t_edim_never_bands")
     finally:
         for t in ("t_edim_bands", "t_edim_vecs"):

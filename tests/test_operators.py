@@ -942,55 +942,6 @@ def test_lsh_candidate_pairs_bucket_cap(spark, sf_dir):
     assert base and with_cap == base
 
 
-def test_shingle_set_fast_hash_equivalent_shape(spark, sf_dir):
-    """The xxhash64 production path must carry the same information as
-    the portable-hash path: identical per-document distinct-shingle
-    counts, and identical pairwise shared-shingle counts (and therefore
-    identical exact Jaccard) for the LSH-candidate pairs — only the
-    hash VALUES differ (so it is not oracle-replayable and stays out of
-    the registered queries).
-
-    Exactness caveat (ADVICE r6): the fast path applies distinct()
-    AFTER the xxhash64 modulus, so a within-document hash collision
-    (~d^2/2^32 per doc) would merge two distinct shingles and shrink
-    one count by 1. The equality assertions below are therefore
-    CORPUS-PINNED — exact on this fixture corpus (verified), not a
-    mathematical identity; on an unlucky corpus the honest tolerance
-    is one count per ~10^5 docs at these document sizes. Behavior is
-    acceptable and documented in shingle_set's docstring."""
-    from pyspark.sql import functions as F
-
-    from aind_protein_data_transformation_spark.operators.dedup import (
-        jaccard_for_pairs,
-        shared_shingle_pairs,
-        shingle_set,
-    )
-    from aind_protein_data_transformation_spark.queries.llm_dedup import (
-        _corpus_near,
-    )
-
-    corpus = _corpus_near(spark, sf_dir)
-    slow = shingle_set(corpus, k=3).localCheckpoint()
-    fast = shingle_set(corpus, k=3, fast_hash=True).localCheckpoint()
-
-    n_slow = {r.doc_id: r.n for r in slow.groupBy("doc_id").agg(
-        F.count("*").alias("n")).collect()}
-    n_fast = {r.doc_id: r.n for r in fast.groupBy("doc_id").agg(
-        F.count("*").alias("n")).collect()}
-    assert n_fast == n_slow
-
-    pairs = shared_shingle_pairs(slow).localCheckpoint()
-    j_slow = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_for_pairs(pairs, slow).collect()
-    }
-    j_fast = {
-        (r.doc_a, r.doc_b): r.jaccard
-        for r in jaccard_for_pairs(pairs, fast).collect()
-    }
-    assert j_fast == j_slow
-
-
 def test_ivf_topk_survives_zero_norm_centroid_and_query(spark):
     """The zero-norm contract must hold one operator up from the
     assignment paths: a dead centroid in the codebook previously

@@ -749,3 +749,37 @@ def test_materialize_mode_switch(spark, tmp_path, monkeypatch):
     finally:
         sc._jsc.sc().setCheckpointDir(None)
     assert sc.getCheckpointDir() is None
+
+
+def test_reliable_checkpoints_are_cleaned(spark, tmp_path, monkeypatch):
+    """A reliable checkpoint's files go away with the last DataFrame
+    over them: ``get_spark`` turns on the context cleaner's checkpoint
+    cleanup, so a long session with a checkpoint dir does not keep one
+    relation per shared subtree for the life of the dir."""
+    import gc
+    import glob
+    import time
+
+    from aind_protein_data_transformation_spark.plans.scale import materialize
+
+    sc = spark.sparkContext
+    ckdir = tmp_path / "ck"
+
+    def checkpoint_files():
+        return glob.glob(str(ckdir / "**" / "rdd-*"), recursive=True)
+
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckdir))
+    try:
+        reliable = materialize(spark.range(100).selectExpr("id", "id * 2 AS v"))
+        assert reliable.count() == 100
+        assert checkpoint_files(), "a checkpoint dir must receive the relation's files"
+        del reliable
+        deadline = time.monotonic() + 60
+        while checkpoint_files() and time.monotonic() < deadline:
+            gc.collect()
+            sc._jvm.System.gc()
+            time.sleep(0.5)
+        assert not checkpoint_files()
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
+    assert sc.getCheckpointDir() is None
