@@ -637,8 +637,6 @@ def incremental_minhash_pairs(
     k: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    verify: bool = False,
-    prune_scan: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs between ``new_docs`` and the corpus indexed by
     :func:`write_minhash_index`: (new_id, index_id, jaccard), exact
@@ -646,15 +644,10 @@ def incremental_minhash_pairs(
     (``max(jaccard)`` — row dedup under the append-only contract).
 
     The shard is shingled and signed with shingle width ``k``, which
-    must match the index's stamp (a mismatch raises). ``verify=True``
-    audits the index first (:func:`verify_minhash_index`).
-    ``prune_scan`` (int, default None = full-scan regime) pushes the
-    shard's distinct ``k0`` values into the (band, k0, ...)-sorted bands
-    scan — any candidate matches on every band key including k0, so the
-    pair set is identical to the unpruned probe
-    (tests/test_prune_scan.py). Batch equivalence (the pair set equals
-    the full batch pipeline's between the same shard and corpus) is
-    pinned by tests/test_incremental.py. Runbook step 3 (probing during
+    must match the index's stamp (a mismatch raises). To audit the
+    index first, call :func:`verify_minhash_index`. Batch equivalence
+    (the pair set equals the full batch pipeline's between the same
+    shard and corpus) is pinned by tests/test_incremental.py. Runbook step 3 (probing during
     a swap, scale shape) of operators/index_lifecycle.py."""
     paired = probe_index(
         spark,
@@ -663,8 +656,6 @@ def incremental_minhash_pairs(
         MINHASH_SPEC,
         _signer(k, text_col, id_col),
         id_col,
-        verify=verify,
-        prune_scan=prune_scan,
     )
     shared = F.size(F.array_intersect("hs_new", "hs_idx"))
     return (

@@ -295,26 +295,19 @@ def incremental_srp_pairs(
     n_bands: int = 4,
     vec_id: str = "vec_id",
     vec_col: str = "embedding",
-    verify: bool = False,
     verify_batch: bool | None = False,
-    prune_scan: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs between ``new_vectors`` and the indexed corpus:
     (new_id, index_id, cosine), exact cosine >= ``threshold`` over the
     SRP band collisions, one row per pair (``max(cosine)``).
 
     ``n_bits``/``n_bands`` must match the index's stamp (a mismatch
-    raises). ``verify=True`` audits the index first
-    (:func:`verify_srp_index`). ``prune_scan`` (int, default None =
-    full-scan regime) pushes the shard's distinct ``band_val`` values
-    into the (band, band_val)-sorted bands scan — any candidate matches
-    on band AND band_val, so the pair set is identical to the unpruned
-    probe (tests/test_prune_scan.py). ``verify_batch`` mirrors
-    ``ivf_topk``: False = JVM dot-product fold (both sides are unit
-    vectors, so the dot IS the cosine); True = the Arrow pair-cosine
-    kernel; None = dispatch on the index dimension against
-    ``PAIR_COSINE_UDF_MIN_DIM``. Batch equivalence (the pair set equals
-    the banded batch pipeline's) is pinned by
+    raises). To audit the index first, call :func:`verify_srp_index`.
+    ``verify_batch`` mirrors ``ivf_topk``: False = JVM dot-product
+    fold (both sides are unit vectors, so the dot IS the cosine); True =
+    the Arrow pair-cosine kernel; None = dispatch on the index dimension
+    against ``PAIR_COSINE_UDF_MIN_DIM``. Batch equivalence (the pair
+    set equals the banded batch pipeline's) is pinned by
     tests/test_embedding_index.py.
     Runbook step 3 of operators/index_lifecycle.py."""
     _check_dim(spark, name, new_vectors, vec_col)
@@ -328,8 +321,6 @@ def incremental_srp_pairs(
         SRP_SPEC,
         _signer(vec_id, vec_col, n_bits, n_bands),
         vec_id,
-        verify=verify,
-        prune_scan=prune_scan,
     )
     if verify_batch:
         # two-step projection: the UDF lands in its own column FIRST so

@@ -45,10 +45,8 @@ simhash):
    reads co-located and pre-sorted); the DISTINCT candidate pairs join
    both sidecars; the family scores them (Jaccard / cosine / hamming)
    and keeps one row per (new_id, index_id). History is never
-   re-scanned, re-shuffled or re-signed. ``verify=True`` runs step 4
-   first — use it on the first probe after a possibly interrupted
-   ingest. ``prune_scan=`` selects the point-lookup regime
-   (:func:`prune_probe_scan`).
+   re-scanned, re-shuffled or re-signed. After a possibly interrupted
+   ingest, call ``verify_{kind}_index`` (step 4) before the first probe.
 4. ``verify_{kind}_index`` (:func:`verify_index`) — offline audit:
    raises on band rows without a sidecar row (probes silently drop
    their candidates; only tampering or pre-ordering code leave this —
@@ -109,9 +107,8 @@ from ..plans.scale import materialize
 class IndexSpec:
     """Everything the shared lifecycle needs to know about one index
     family. ``band_keys`` are the bands table's bucket+sort columns
-    (also, with the id, its row identity for compaction; the second key
-    is the first hash-valued one, the column :func:`prune_probe_scan`
-    pushes); ``payload_cols`` are the sidecar columns, which must be
+    (also, with the id, its row identity for compaction);
+    ``payload_cols`` are the sidecar columns, which must be
     IDENTICAL across duplicate rows for one id (the append-only
     contract) and which the probe pairs up as ``{col}_new`` /
     ``{col}_idx``; ``stamp_keys`` are the TBLPROPERTIES that make up the
@@ -167,99 +164,6 @@ def table_external_location(spark, table: str) -> str | None:
         elif nm == "Location":
             loc = (r.data_type or "").strip()
     return loc if typ == "EXTERNAL" else None
-
-
-#: Cap on the collected key list for :func:`prune_probe_scan`.
-#: session.py DERIVES spark.sql.parquet.pushdown.inFilterThreshold from
-#: this constant (lockstep by construction, test-pinned in
-#: tests/test_prune_scan.py): past the threshold parquet sees only
-#: min(keys)..max(keys), and for hash-valued blocking keys that range
-#: covers every row group, so a longer list would SILENTLY stop
-#: skipping anything. Raising the cap raises both sides together.
-PRUNE_SCAN_MAX_KEYS = 1024
-
-
-def prune_probe_scan(idx, probe, key: str, max_keys: int = PRUNE_SCAN_MAX_KEYS):
-    """Restrict a probe's bands-table scan to the shard's own blocking
-    keys — the point-lookup regime's complement to the bucketed
-    candidate join, shared by all three families (each
-    ``incremental_*_pairs`` probe exposes it as ``prune_scan=``).
-
-    ``max_keys`` may only TIGHTEN the cap: a value above
-    :data:`PRUNE_SCAN_MAX_KEYS` raises up front, because past the
-    session's parquet ``inFilterThreshold`` the pushed IN list silently
-    degrades to a min(keys)..max(keys) range scan — useless for
-    hash-valued blocking keys — while still paying the collect, which
-    is exactly the silent failure this guard exists to prevent.
-
-    The default probe shape streams the ENTIRE bands table through the
-    candidate join once per shard (no shuffle of history — the index
-    side is bucketed — but full scan I/O). That is the right shape when
-    the shard is a production ingest batch (millions of docs: its keys
-    touch essentially every bucket, so there is nothing to skip). For a
-    SMALL shard — an ad-hoc "is this handful of documents already in
-    the corpus?" lookup — scanning a 100-TB index to answer for 20
-    documents is the scale failure, and the fix is storage-level:
-    collect the shard's distinct ``key`` values (bounded: raises past
-    ``max_keys``; see :data:`PRUNE_SCAN_MAX_KEYS`) and push them as an
-    IN filter into the bands scan. Because every family's write path
-    ``sortBy``-s the bands files on (prefix, ``key``) inside each
-    bucket, parquet row-group min/max stats on ``key`` are tight, so
-    the pushed per-value predicates skip the row groups — and with
-    them most of the index's bytes — at scan time, before any join.
-
-    Correctness is unconditional: the filter is on the very column the
-    candidate join equates, and each family's bucket-key group shares
-    one ``key`` value, so pruning removes only whole buckets the shard
-    cannot collide with — the pair set is IDENTICAL to the unpruned
-    probe (test-pinned per family: tests/test_prune_scan.py), and
-    per-bucket occupancy counts
-    (the ``max_bucket`` cap's input) are unchanged for every surviving
-    bucket. Only the I/O profile changes. The collect is one job over
-    the already-checkpointed shard rows; an empty shard short-circuits
-    to an empty scan.
-
-    When it pays — measured honestly (BENCH.md round 11,
-    "Prune regime measured"): at sandbox layouts (up to a 4M-row bands
-    table) the prune does NOT win — the collect job's fixed cost
-    meets or exceeds the saved scan (minhash arms read ~10% slower
-    pruned; simhash arms equal, that probe being collision-bound on
-    vocab-shared text). Enable it only when the bands SCAN wall-time
-    dominates the probe — the large-index regime this exists for,
-    where streaming the table per probe costs minutes and the one
-    collect costs milliseconds. The equivalence and the
-    pushed-predicate plan are what the tests pin; the payoff is
-    storage-scale-dependent by design."""
-    if max_keys < 1:
-        raise ValueError(
-            f"prune_scan: max_keys={max_keys} — the key budget must be a "
-            f"positive int (a non-positive budget can prune nothing; to "
-            f"run the full-scan regime, drop prune_scan instead)."
-        )
-    if max_keys > PRUNE_SCAN_MAX_KEYS:
-        raise ValueError(
-            f"prune_scan: max_keys={max_keys} exceeds PRUNE_SCAN_MAX_KEYS "
-            f"({PRUNE_SCAN_MAX_KEYS}), the session's parquet IN-pushdown "
-            f"threshold (spark.sql.parquet.pushdown.inFilterThreshold — "
-            f"lockstep test-pinned). Past it the pushed IN list silently "
-            f"degrades to a min/max range scan that skips nothing for "
-            f"hash-valued blocking keys while still paying the collect. "
-            f"Raise both numbers together, or drop prune_scan and let the "
-            f"bucketed candidate join stream the index once."
-        )
-    rows = probe.select(key).distinct().limit(max_keys + 1).collect()
-    if len(rows) > max_keys:
-        raise ValueError(
-            f"prune_scan: the shard carries more than {max_keys} distinct "
-            f"{key!r} blocking keys — past the session's parquet IN-pushdown "
-            f"threshold the scan would silently degrade to a min/max range "
-            f"(useless for hash-valued keys) while still paying the collect. "
-            f"A shard this wide is the full-scan regime: drop prune_scan and "
-            f"let the bucketed candidate join stream the index once."
-        )
-    if not rows:
-        return idx.where(F.lit(False))
-    return idx.where(F.col(key).isin([r[0] for r in rows]))
 
 
 def read_stamp(spark, table: str, keys: tuple[str, ...]) -> dict[str, str]:
@@ -397,8 +301,6 @@ def probe_index(
     spec: IndexSpec,
     signer: Signer,
     id_col: str,
-    verify: bool = False,
-    prune_scan: int | None = None,
     shape=None,
 ) -> DataFrame:
     """Runbook step 3 up to the score: the DISTINCT candidate pairs
@@ -406,20 +308,14 @@ def probe_index(
     (index_id, new_id, {payload}_new..., {payload}_idx...). The family
     scores this frame and keeps one row per pair.
 
-    ``prune_scan`` pushes the shard's distinct ``spec.band_keys[1]``
-    values into the bands scan (:func:`prune_probe_scan`). ``shape``, a
-    ``(probe, idx) -> (probe, idx)`` hook applied after the prune, lets
-    a family re-partition its probe rows or cap the index buckets
-    before the candidate join (the SimHash fan-out and ``max_bucket``).
+    ``shape``, a ``(probe, idx) -> (probe, idx)`` hook, lets a family
+    re-partition its probe rows or cap the index buckets before the
+    candidate join (the SimHash fan-out and ``max_bucket``).
     """
-    if verify:
-        verify_index(spark, name, spec, id_col)
     check_stamp(spark, name, spec, signer.stamp)
     signed = materialize(signer.sign(frame))
     probe = signer.bands(signed)
     idx = spark.table(f"{name}_bands")
-    if prune_scan is not None:
-        idx = prune_probe_scan(idx, probe, spec.band_keys[1], prune_scan)
     if shape is not None:
         probe, idx = shape(probe, idx)
     cand = (

@@ -276,11 +276,9 @@ def incremental_simhash_pairs(
     max_hamming: int | None = None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    verify: bool = False,
     bits: int | None = None,
     n_chunks: int | None = None,
     max_bucket: int | None = None,
-    prune_scan: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs between ``new_docs`` and the indexed corpus:
     (new_id, index_id, hamming), hamming <= ``max_hamming`` over the
@@ -291,11 +289,7 @@ def incremental_simhash_pairs(
     geometry's pigeonhole guarantee, ``n_chunks - 1``: beyond it the
     chunk blocking silently under-recalls, so the API raises instead.
 
-    ``verify=True`` audits the index first
-    (:func:`verify_simhash_index`); ``prune_scan`` pushes the shard's
-    distinct chunk values into the sorted bands scan before the cap —
-    pruning removes whole (chunk, val) buckets, so the surviving
-    buckets' occupancy (the cap's input) is unchanged. Batch
+    To audit the index first, call :func:`verify_simhash_index`. Batch
     equivalence against simhash_near_pairs over corpus+shard is pinned
     by tests/test_simhash_index.py. Runbook step 3 (scale shape,
     probing during a swap) of operators/index_lifecycle.py.
@@ -368,8 +362,6 @@ def incremental_simhash_pairs(
         SIMHASH_SPEC,
         _signer(text_col, id_col, bits, n_chunks),
         id_col,
-        verify=verify,
-        prune_scan=prune_scan,
         shape=shape,
     )
     return (

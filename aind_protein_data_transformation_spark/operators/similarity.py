@@ -510,7 +510,7 @@ def assign_buckets_ivf(
     Total ~N·(K/stride + nprobe·stride) vs flat N·K — minimized around
     stride ≈ sqrt(K/nprobe). APPROXIMATE by construction: the true
     nearest centroid may live in an unprobed coarse bucket, so this is
-    a documented regime (like ``prune_scan=``/``max_bucket=``), never a
+    a documented regime (like ``max_bucket=``), never a
     silent default — the flat paths stay the exact, oracle-replayable
     forms.
 

@@ -169,8 +169,7 @@ def similarity_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-bucketed approximate NN — the scale path: probe nprobe=2 of
     the deterministic-subsample centroids, exact cosine only within the
     probed buckets. Fully deterministic (subsample centroids + tie
-    breaks), so unlike most ANN this one IS oracle-checkable; recall
-    vs brute force is asserted in tests/test_llm.py."""
+    breaks), so unlike most ANN this one IS oracle-checkable."""
     emb = load_table(spark, sf_dir, "embeddings")
     centroids = emb.filter(F.col("vec_id") % IVF_CENTROID_STRIDE == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("centroid_vec")

@@ -19,8 +19,7 @@ from .registry import query
 
 # Stopword lists for the n-gram/stopword language heuristic. The synthetic
 # corpus is English-ish for every label, so the *mechanism* is what the
-# oracle checks; tests/test_llm.py asserts real discrimination on crafted
-# multilingual strings.
+# oracle checks.
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "and", "of", "to", "a", "in", "is", "was", "it", "for"),
     "de": ("der", "die", "das", "und", "nicht", "ist", "ich", "ein", "zu"),

@@ -18,8 +18,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .operators.index_lifecycle import PRUNE_SCAN_MAX_KEYS
-
 #: Defaults chosen for scale: AQE handles skew + partition sizing at any SF;
 #: shuffle partitions default to cores locally, thousands on a real cluster.
 _BASE_CONF: dict[str, str] = {
@@ -51,14 +49,6 @@ _BASE_CONF: dict[str, str] = {
     # Keep broadcast autoselection on (dim tables region/nation/supplier/part
     # are tiny at every SF); AQE can also convert SMJ->BHJ at runtime.
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Push IN lists up to PRUNE_SCAN_MAX_KEYS values to parquet as
-    # per-value predicates (default 10; past the threshold parquet sees
-    # only min..max, which a hash-valued key list never narrows). Derived
-    # from the pruned-probe cap itself so the two CANNOT drift
-    # (operators/index_lifecycle.prune_probe_scan raises past the same
-    # constant); harmless elsewhere — a 1024-entry OR costs a
-    # row-group-stat check, not a per-row scan.
-    "spark.sql.parquet.pushdown.inFilterThreshold": str(PRUNE_SCAN_MAX_KEYS),
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     "spark.ui.enabled": "false",
     # Scan split size, parameterised like shuffle partitions (guide §6:

@@ -90,22 +90,23 @@ def _plan_has_eager_rdd(df) -> bool:
 
 def _sidecar_path(sf_dir: str, is_headline_run: bool, n_queries: int) -> str:
     """Where the per-query detail sidecar lands. Only the FULL headline
-    run at the default (driver) sf writes the committed repo-root
+    run at sf0.1 (the driver's scale) writes the committed repo-root
     ``bench_detail.json`` — round 5's sf0.1 perf record was silently
     clobbered by a later sf0.001 smoke run, leaving the committed
-    sidecar inconsistent with the committed headline line. Subset runs,
-    ``--all`` sweeps, and non-default sf dirs write a tagged file under
-    the system temp dir instead; ``$SPARK_GRAFT_DETAIL_PATH`` overrides
+    sidecar inconsistent with the committed headline line. The test is
+    on the dir's sf tag, not on ``DEFAULT_SF_DIR``, because that
+    constant itself follows ``$SPARK_GRAFT_SF_DIR``. Subset runs,
+    ``--all`` sweeps, and other sf dirs write a tagged file under the
+    system temp dir instead; ``$SPARK_GRAFT_DETAIL_PATH`` overrides
     everything (used by experiment scripts that want the split)."""
     override = os.environ.get("SPARK_GRAFT_DETAIL_PATH")
     if override:
         return override
     repo = os.path.dirname(os.path.abspath(__file__))
-    if is_headline_run and os.path.realpath(sf_dir) == os.path.realpath(
-        DEFAULT_SF_DIR
-    ):
+    sf = _sf_from_dir(sf_dir)
+    if is_headline_run and sf == 0.1:
         return os.path.join(repo, "bench_detail.json")
-    tag = f"sf{_sf_from_dir(sf_dir)}_{n_queries}q"
+    tag = f"sf{sf}_{n_queries}q"
     return os.path.join(
         tempfile.gettempdir(), f"sparkgraft_bench_detail_{tag}.json"
     )

@@ -7,14 +7,14 @@ Usage: python scripts/capture_index_plans.py <out_dir> <work_dir> <sf_dir>
 ``<sf_dir>`` holds the ``documents.parquet`` / ``embeddings.parquet``
 fixtures (the Tier-1 tests use the sf0.001 set). For each family
 (minhash, srp, simhash) the script builds an index over a fixed split
-of those documents / embeddings, then appends a
-shard, probes it (full scan and ``prune_scan=``) and compacts into a
-target. Every frame the flow hands to ``saveAsTable`` or to
-``plans.scale.materialize`` (its ``localCheckpoint`` or ``checkpoint``)
-is recorded with its ``explain("formatted")`` text, plus the probe's returned frame, so a
-refactor of the lifecycle can be diffed flow by flow. Expression IDs,
-RDD ids and the work-dir / warehouse / fixture paths are normalized so two runs
-of the same code produce identical files. The package is imported from
+of those documents / embeddings, then appends a shard, probes it and
+compacts into a target. Every frame the flow hands to ``saveAsTable``
+or to ``plans.scale.materialize`` (its ``localCheckpoint`` or
+``checkpoint``) is recorded with its ``explain("formatted")`` text,
+plus the probe's returned frame, so a refactor of the lifecycle can be
+diffed flow by flow. Expression IDs, RDD ids and the work-dir /
+warehouse / fixture paths are normalized so two runs of the same code
+produce identical files. The package is imported from
 the checkout the script lives in.
 """
 
@@ -95,27 +95,18 @@ def _flows(spark, work: str, sf_dir: str):
     yield "minhash", "write", lambda: dedup.write_minhash_index(corpus, "pm", path=f"{work}/pm")
     yield "minhash", "append", lambda: dedup.append_minhash_shard(spark, shard1, "pm")
     yield "minhash", "probe", lambda: dedup.incremental_minhash_pairs(spark, shard0, "pm")
-    yield "minhash", "probe_pruned", lambda: dedup.incremental_minhash_pairs(
-        spark, shard0, "pm", prune_scan=1024
-    )
     yield "minhash", "compact", lambda: dedup.compact_minhash_index(
         spark, "pm", "doc_id", "pm_v2", path=f"{work}/pm_v2"
     )
     yield "srp", "write", lambda: embedding_index.write_srp_index(vcorpus, "ps", path=f"{work}/ps")
     yield "srp", "append", lambda: embedding_index.append_srp_shard(spark, vshard1, "ps")
     yield "srp", "probe", lambda: embedding_index.incremental_srp_pairs(spark, vshard0, "ps")
-    yield "srp", "probe_pruned", lambda: embedding_index.incremental_srp_pairs(
-        spark, vshard0, "ps", prune_scan=1024
-    )
     yield "srp", "compact", lambda: embedding_index.compact_srp_index(
         spark, "ps", "vec_id", "ps_v2", path=f"{work}/ps_v2"
     )
     yield "simhash", "write", lambda: simhash_index.write_simhash_index(corpus, "pz", path=f"{work}/pz")
     yield "simhash", "append", lambda: simhash_index.append_simhash_shard(spark, shard1, "pz")
     yield "simhash", "probe", lambda: simhash_index.incremental_simhash_pairs(spark, shard0, "pz")
-    yield "simhash", "probe_pruned", lambda: simhash_index.incremental_simhash_pairs(
-        spark, shard0, "pz", prune_scan=1024, max_bucket=50
-    )
     yield "simhash", "compact", lambda: simhash_index.compact_simhash_index(
         spark, "pz", "doc_id", "pz_v2", path=f"{work}/pz_v2"
     )

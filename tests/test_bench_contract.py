@@ -105,36 +105,43 @@ def test_bench_prints_one_compact_json_line_plus_sidecar(tmp_path):
 
 def test_sidecar_routing_protects_headline_record(monkeypatch):
     """Unit-level pin of the routing rule itself (no subprocess): only a
-    full headline run at the default sf dir may write the repo-root
-    sidecar; subset/sweep/non-default-sf runs land in the temp dir, and
-    the env override wins over both."""
+    full headline run at sf0.1 may write the repo-root sidecar;
+    subset/sweep/other-sf runs land in the temp dir, and the env
+    override wins over both."""
     import importlib.util
+    import tempfile
 
     spec = importlib.util.spec_from_file_location(
         "bench_mod", os.path.join(REPO, "bench.py")
     )
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
-    from aind_protein_data_transformation_spark.catalog import DEFAULT_SF_DIR
 
     repo_sidecar = os.path.join(REPO, "bench_detail.json")
+    sf01 = "/data/tpch/sf0.1"
     # an override exported in the surrounding environment must not
     # skew the routing assertions (and must be restored afterwards —
     # monkeypatch, not bare os.environ mutation)
     monkeypatch.delenv("SPARK_GRAFT_DETAIL_PATH", raising=False)
-    assert (
-        bench._sidecar_path(DEFAULT_SF_DIR, True, 20) == repo_sidecar
-    )
-    # subset run at the default sf: NOT the repo sidecar
-    assert bench._sidecar_path(DEFAULT_SF_DIR, False, 2) != repo_sidecar
-    # full run at a non-default sf: NOT the repo sidecar
+    assert bench._sidecar_path(sf01, True, 20) == repo_sidecar
+    # subset run at sf0.1: NOT the repo sidecar
+    assert bench._sidecar_path(sf01, False, 2) != repo_sidecar
+    # full run at another sf: NOT the repo sidecar
     assert (
         bench._sidecar_path("/root/testdata/sf0.001", True, 20)
         != repo_sidecar
     )
+    # SPARK_GRAFT_SF_DIR=<sf0.01 dir> also moves catalog.DEFAULT_SF_DIR
+    # (it reads the same variable), so a full run there is a "default
+    # sf" run — it must still not overwrite the sf0.1 record
+    sf001 = "/data/tpch/sf0.01"
+    monkeypatch.setattr(bench, "DEFAULT_SF_DIR", sf001)
+    assert bench._sidecar_path(bench.DEFAULT_SF_DIR, True, 20) == os.path.join(
+        tempfile.gettempdir(), "sparkgraft_bench_detail_sf0.01_20q.json"
+    )
     # env override wins
     monkeypatch.setenv("SPARK_GRAFT_DETAIL_PATH", "/tmp/x.json")
-    assert bench._sidecar_path(DEFAULT_SF_DIR, True, 20) == "/tmp/x.json"
+    assert bench._sidecar_path(sf01, True, 20) == "/tmp/x.json"
 
 
 def test_interleaved_ab_protocol_rotates_and_interleaves():

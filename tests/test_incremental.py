@@ -437,39 +437,6 @@ def test_compact_raises_on_conflicting_signatures(spark, sf_dir, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_probe_verify_flag_detects_interrupted_index(spark, sf_dir, tmp_path):
-    """VERDICT r7 #6: the offline audit is wired into the probe —
-    incremental_minhash_pairs(verify=True) raises up front on an index
-    whose band rows lack signatures (the dangerous partial state),
-    instead of silently dropping those candidates; on a healthy index
-    the flag changes nothing."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    part = F.pmod(F.hash("doc_id"), F.lit(3))
-    a, b, c = (docs.filter(part == i) for i in range(3))
-    try:
-        write_minhash_index(a, "t_vfy", path=str(tmp_path / "vfy"))
-        healthy = incremental_minhash_pairs(
-            spark, c, "t_vfy", threshold=THRESHOLD, verify=True
-        ).collect()
-        plain = incremental_minhash_pairs(
-            spark, c, "t_vfy", threshold=THRESHOLD
-        ).collect()
-        assert {(r.new_id, r.index_id) for r in healthy} == {
-            (r.new_id, r.index_id) for r in plain
-        }
-        # interrupt: band rows without signatures
-        _partial_append(spark, b, "t_vfy", bands=True)
-        with pytest.raises(ValueError, match="no signature row"):
-            incremental_minhash_pairs(
-                spark, c, "t_vfy", threshold=THRESHOLD, verify=True
-            )
-    finally:
-        for t in ("t_vfy_bands", "t_vfy_sigs"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
 # ------------------------------------------------- geometry stamp (r10)
 
 

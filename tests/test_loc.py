@@ -68,22 +68,43 @@ def _citing_files():
             yield from (os.path.join(root, f) for f in files if f.endswith((".py", ".md")))
 
 
+def _citations(pattern: re.Pattern) -> dict[str, list[str]]:
+    """Each name ``pattern`` captures in a citing file -> its
+    ``path:line`` sites."""
+    cited = {}
+    for path in _citing_files():
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                for m in pattern.finditer(line):
+                    where = f"{os.path.relpath(path, REPO)}:{lineno}"
+                    cited.setdefault(next(g for g in m.groups() if g), []).append(where)
+    return cited
+
+
+def _missing(cited: dict[str, list[str]], subdir: str) -> dict[str, list[str]]:
+    return {
+        name: where
+        for name, where in cited.items()
+        if not os.path.isfile(os.path.join(REPO, subdir, name))
+    }
+
+
 def test_every_cited_script_exists():
     """A deleted script leaves no pointer behind: every script path
     under ``scripts/``, and every bare ``exp_<name>.py`` or
     ``bench_<name>.py``, named in code, tests, README or the verify
     recipe exists under scripts/."""
-    cited = {}
-    for path in _citing_files():
-        with open(path, encoding="utf-8") as f:
-            for lineno, line in enumerate(f, 1):
-                for m in CITATION.finditer(line):
-                    where = f"{os.path.relpath(path, REPO)}:{lineno}"
-                    cited.setdefault(m.group(1) or m.group(2), []).append(where)
+    cited = _citations(CITATION)
     assert "drive_contract.py" in cited and "exp_zorder.py" in cited
-    missing = {
-        name: where
-        for name, where in cited.items()
-        if not os.path.isfile(os.path.join(REPO, "scripts", name))
-    }
+    missing = _missing(cited, "scripts")
+    assert not missing, missing
+
+
+def test_every_cited_test_file_exists():
+    """A docstring that says "asserted in tests/<name>.py" points at a
+    file that exists: every ``tests/<name>.py`` named in code, tests,
+    README or the verify recipe is under tests/."""
+    cited = _citations(re.compile(r"\btests/(\w+\.py)\b"))
+    assert "test_incremental.py" in cited
+    missing = _missing(cited, "tests")
     assert not missing, missing

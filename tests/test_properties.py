@@ -524,62 +524,6 @@ def test_simhash_pigeonhole_guarantee_for_any_valid_geometry(data):
     )
 
 
-# ------------------------------------------------ prune equivalence (r11)
-
-
-@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(
-    idx_rows=st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=50),
-            st.one_of(st.none(), st.integers(min_value=-5, max_value=5)),
-        ),
-        min_size=0,
-        max_size=40,
-    ),
-    probe_rows=st.lists(
-        st.tuples(
-            st.integers(min_value=100, max_value=130),
-            st.one_of(st.none(), st.integers(min_value=-5, max_value=5)),
-        ),
-        min_size=0,
-        max_size=15,
-    ),
-)
-def test_prune_probe_scan_never_changes_the_join(spark, idx_rows, probe_rows):
-    """The algebra behind index_lifecycle.prune_probe_scan, pinned for
-    ARBITRARY multisets including NULL blocking keys: filtering the
-    index side to ``key IN (probe's distinct keys)`` before an
-    equi-join on ``key`` never changes the join's result. The NULL
-    edge is the subtle half — ``isin`` evaluates to NULL for a NULL
-    key (row dropped by the prune), and join equality never matches
-    NULL either, so a NULL-keyed index row was unjoinable anyway; a
-    NULL in the probe's collected key list likewise poisons nothing.
-    The family suites (tests/test_prune_scan.py) pin this end-to-end
-    on real indexes; this pins the set identity itself on inputs no
-    fixture reaches (tiny frames, one Spark job per example)."""
-    from aind_protein_data_transformation_spark.operators.index_lifecycle import (
-        prune_probe_scan,
-    )
-
-    idx = spark.createDataFrame(idx_rows or [(0, 0)], "id long, key long")
-    probe = spark.createDataFrame(probe_rows or [(100, 0)], "pid long, key long")
-    if not idx_rows:
-        idx = idx.where("false")
-    if not probe_rows:
-        probe = probe.where("false")
-
-    def joined(index_side):
-        return sorted(
-            (r.pid, r.id)
-            for r in probe.join(index_side, "key").select("pid", "id").collect()
-        )
-
-    base = joined(idx)
-    pruned = joined(prune_probe_scan(idx, probe, "key", max_keys=64))
-    assert pruned == base
-
-
 @given(data=st.data())
 @settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
 def test_assign_buckets_ivf_exhaustive_probe_equals_flat_property(spark, data):

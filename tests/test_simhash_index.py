@@ -161,8 +161,6 @@ def test_append_crash_states_and_compaction(spark, split_docs, tmp_path):
         )
         with pytest.raises(ValueError, match="no signature row"):
             verify_simhash_index(spark, "t_shc")
-        with pytest.raises(ValueError, match="no signature row"):
-            incremental_simhash_pairs(spark, shard, "t_shc", verify=True)
         # heal per the recovery rule, then crash-re-append duplicates
         # and compact them away (into a target, swapped into service)
         # without changing any probe
