@@ -61,8 +61,13 @@ MINHASH_PRIME = 2147483647  # 2^31 - 1; (a*h + b) stays under 2^62
 # minhash_coeffs, the MINHASH_PRIME modulus, and the portable
 # md5-conv-mod-prime shingle hash (functions/text.py). Bump it if any of
 # those change — signatures across versions never collide meaningfully,
-# exactly like a perm-count change.
-MINHASH_HASH_VERSION = "1"
+# exactly like a perm-count change. It also versions the persisted
+# index encoding (the storage notes at MINHASH_SPEC): "1" stored the
+# band tuple as four k-columns and the sidecar as (n, array<bigint>);
+# "2" stores one xxhash64 key per band row and the sidecar as
+# array<int> alone. A v1 index is refused on probe and append and must
+# be rebuilt.
+MINHASH_HASH_VERSION = "2"
 
 # Index-identity properties stamped on every {name}_bands table by
 # write_minhash_index and validated by every append/probe (VERDICT r9
@@ -515,16 +520,26 @@ def simhash_near_pairs(sims: DataFrame, max_hamming: int = 3, id_col: str = "doc
 # The persisted MinHash index (lifecycle and runbook:
 # operators/index_lifecycle.py):
 #
-#   <name>_bands  (id, band, k0..k3)  bucketed+sorted on the band join
-#                 key — probes read co-located, pre-sorted buckets;
-#   <name>_sigs   (id, n, hs)         bucketed on id — the exact-Jaccard
-#                 verify joins the (small) candidate set against it.
+#   <name>_bands  (id, band, key)  bucketed+sorted on (band, key) —
+#                 probes read co-located, pre-sorted buckets; ``key`` is
+#                 xxhash64 of the band's LSH_BAND_SIZE minhash values;
+#   <name>_sigs   (id, hs)         bucketed on id — the sorted
+#                 array<int> shingle-hash set the exact-Jaccard verify
+#                 joins the (small) candidate set against.
+#
+# The band key is a hash of the tuple, not the tuple: a probe only tests
+# band tuples for equality, and equal tuples give equal keys, so no pair
+# is ever lost. A 64-bit collision only adds a candidate, which must
+# still pass exact Jaccard >= threshold over ``hs`` to be returned. The
+# shingle hashes are below MINHASH_PRIME = 2^31 - 1, so array<int> holds
+# them exactly, and the set size is size(hs) (minhash_signatures' ``n``
+# counts the same distinct rows), so ``n`` is not stored.
 
 MINHASH_SPEC = IndexSpec(
     kind="minhash",
     sidecar_suffix="sigs",
-    band_keys=("band", *(f"k{j}" for j in range(LSH_BAND_SIZE))),
-    payload_cols=("n", "hs"),
+    band_keys=("band", "key"),
+    payload_cols=("hs",),
     payload_noun="signature payloads",
     sidecar_noun="signature row",
     entity="document",
@@ -546,15 +561,19 @@ def _minhash_stamp(k: int) -> dict[str, str]:
 
 def _signer(k: int, text_col: str, id_col: str) -> Signer:
     """Shingle and sign in one aggregation pass, carrying the sorted
-    shingle-hash set the Jaccard verify intersects; the band rows are
-    :func:`band_rows` of the signatures."""
+    shingle-hash set the Jaccard verify intersects (as array<int>); the
+    band rows are :func:`band_rows` of the signatures with each band
+    tuple hashed to one 64-bit ``key`` (the storage notes above)."""
+    keys = ", ".join(f"k{j}" for j in range(LSH_BAND_SIZE))
     return Signer(
         sign=lambda docs: minhash_signatures(
             shingle_set(docs, k=k, text_col=text_col, id_col=id_col),
             id_col=id_col,
             with_hashes=True,
+        ).withColumn("hs", F.col("hs").cast("array<int>")),
+        bands=lambda sig: band_rows(sig, id_col).selectExpr(
+            f"`{id_col}`", "band", f"xxhash64({keys}) AS key"
         ),
-        bands=lambda sig: band_rows(sig, id_col),
         stamp=_minhash_stamp(k),
     )
 
@@ -571,7 +590,7 @@ def write_minhash_index(
     """Index ``docs`` for incremental near-dup probes: shingle, sign,
     and persist the band + signature tables described above, stamped
     with the signature geometry (perm count, band size, shingle ``k``,
-    hash derivation version). Runbook step 1 of
+    hash derivation and index encoding version). Runbook step 1 of
     operators/index_lifecycle.py."""
     write_index(docs, name, MINHASH_SPEC, _signer(k, text_col, id_col), id_col, n_buckets, path)
 
@@ -613,8 +632,8 @@ def compact_minhash_index(
 ) -> dict[str, int]:
     """Rewrite both index tables into ``target`` (at ``path`` when
     given) without the duplicate rows crash re-appends accumulate —
-    bands on (band, k0..k{B-1}, id), sigs on the doc id — zero-shuffle,
-    raising on a doc_id with conflicting (n, hs) payloads; promote with
+    bands on (band, key, id), sigs on the doc id — zero-shuffle,
+    raising on a doc_id with conflicting ``hs`` payloads; promote with
     :func:`swap_minhash_index`. See
     :func:`index_lifecycle.compact_index`. Returns ``{"bands_before",
     "bands_after", "sigs_before", "sigs_after"}``."""
@@ -643,6 +662,12 @@ def incremental_minhash_pairs(
     Jaccard >= ``threshold`` over the LSH candidates, one row per pair
     (``max(jaccard)`` — row dedup under the append-only contract).
 
+    Candidates come from equal hashed band keys: equal band tuples give
+    equal keys, so no LSH pair is lost, and a 64-bit key collision only
+    adds a candidate, which is still returned only if its exact Jaccard
+    (over the stored shingle hashes, with ``size(hs)`` as the set size)
+    clears ``threshold``.
+
     The shard is shingled and signed with shingle width ``k``, which
     must match the index's stamp (a mismatch raises). To audit the
     index first, call :func:`verify_minhash_index`. Batch equivalence
@@ -658,13 +683,12 @@ def incremental_minhash_pairs(
         id_col,
     )
     shared = F.size(F.array_intersect("hs_new", "hs_idx"))
+    union = F.size("hs_new") + F.size("hs_idx") - shared
     return (
         paired.select(
             "new_id",
             "index_id",
-            (shared.cast("double") / (F.col("n_new") + F.col("n_idx") - shared)).alias(
-                "jaccard"
-            ),
+            (shared.cast("double") / union).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
         .groupBy("new_id", "index_id")

@@ -81,10 +81,13 @@ Contracts shared by every family:
   (:func:`check_stamp`) — unstamped (hand-built, legacy) tables pass, a
   partial stamp raises, a mismatch raises naming each field and both
   values. A mismatched probe would otherwise emit band keys that never
-  collide and silently lose pairs. A lost stamp (tampering, or a
-  hand-built table) shows as ``missing_stamp_keys`` > 0; the one
-  recovery is :func:`apply_stamp` with the family's stamp dict for the
-  known geometry.
+  collide and silently lose pairs. A mismatch on a field that versions
+  the family's persisted encoding (minhash ``hash_version``) means the
+  index was written in another format: rebuild it with
+  ``write_{kind}_index`` — there is no in-place migration. A lost
+  stamp (tampering, or a hand-built table) shows as
+  ``missing_stamp_keys`` > 0; the one recovery is :func:`apply_stamp`
+  with the family's stamp dict for the known geometry.
 
 No counterpart exists in the reference (its array layer is
 conversion-only, reference czi_to_zarr.py); the lifecycle extends the
@@ -95,6 +98,7 @@ training-pipeline addendum.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -334,6 +338,15 @@ def probe_index(
     )
 
 
+def _sums(*frames: DataFrame) -> tuple[int, ...]:
+    """Per-column sums over the union of ``frames`` (same columns) in
+    ONE Spark action: every input feeds one scan stage and one final
+    aggregate, where a cross join of per-frame aggregates costs two
+    jobs per side (measured 2 vs 4)."""
+    union = reduce(DataFrame.unionByName, frames)
+    return tuple(v or 0 for v in union.agg(*[F.sum(c) for c in union.columns]).first())
+
+
 def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, int]:
     """Runbook step 4: every id with band rows must hold a sidecar row,
     else probes SILENTLY drop that id's candidates at the verify join
@@ -341,8 +354,9 @@ def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, in
     tampering can leave) — raises with the recovery rule if any do.
     Orphan SIDECAR rows (the benign partial state the sidecar-first
     append ordering can leave) are counted, not raised: they affect no
-    probe. Cost: two distinct aggregates + one anti-join — an offline
-    audit, not a per-probe tax.
+    probe. Cost: one Spark action — a full outer join of the distinct
+    band ids and the distinct sidecar ids under one aggregate — an
+    offline audit, not a per-probe tax.
 
     The result also carries ``missing_stamp_keys``: non-zero means the
     bands table lost (part of) its stamp — on an index built by
@@ -350,11 +364,22 @@ def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, in
     unguarded index. Recover with :func:`apply_stamp` and the known
     geometry (runbook). Hand-built indexes that never stamped can
     ignore the count."""
-    bands = spark.table(f"{name}_bands").select(id_col).distinct()
-    sidecar = spark.table(f"{name}_{spec.sidecar_suffix}").select(id_col).distinct()
-    n_band = bands.count()
-    n_stored = sidecar.count()
-    n_unbacked = bands.join(sidecar, id_col, "left_anti").count()
+    bands = spark.table(f"{name}_bands").select(id_col, F.lit(True).alias("_b")).distinct()
+    sidecar = (
+        spark.table(f"{name}_{spec.sidecar_suffix}")
+        .select(id_col, F.lit(True).alias("_s"))
+        .distinct()
+    )
+    n_band, n_stored, n_unbacked, n_orphan = (
+        bands.join(sidecar, id_col, "full_outer")
+        .agg(
+            F.count("_b"),
+            F.count("_s"),
+            F.expr("count_if(_s IS NULL)"),
+            F.expr("count_if(_b IS NULL)"),
+        )
+        .first()
+    )
     if n_unbacked:
         raise ValueError(
             f"{spec.kind} index {name!r} is inconsistent: {n_unbacked} of "
@@ -365,7 +390,6 @@ def verify_index(spark, name: str, spec: IndexSpec, id_col: str) -> dict[str, in
             f"duplicate rows change no probe result) or rebuilding the "
             f"index with write_{spec.kind}_index."
         )
-    n_orphan = sidecar.join(bands, id_col, "left_anti").count()
     present = read_stamp(spark, f"{name}_bands", spec.stamp_keys)
     return {
         spec.banded_key: n_band,
@@ -452,14 +476,17 @@ def compact_index(
             f"index. Repair the properties first (apply_stamp with the "
             f"known full stamp)."
         )
-    # ---- data scans (conflict contract check, before/after counts)
+    # ---- data scans: one action for the conflict contract check and
+    # the before-counts, one for the after-counts
     bands = spark.table(f"{name}_bands")
     sidecar = spark.table(f"{name}_{spec.sidecar_suffix}")
-    n_conflicts = (
-        sidecar.groupBy(id_col)
-        .agg(F.count_distinct(F.struct(*spec.payload_cols)).alias("n_versions"))
-        .filter(F.col("n_versions") > 1)
-        .count()
+    per_id = sidecar.groupBy(id_col).agg(
+        F.count_distinct(F.struct(*spec.payload_cols)).alias("n_versions"),
+        F.count("*").alias("n_rows"),
+    )
+    n_conflicts, side_before, bands_before = _sums(
+        per_id.selectExpr("CAST(n_versions > 1 AS BIGINT) AS c", "n_rows AS s", "0L AS b"),
+        bands.selectExpr("0L AS c", "0L AS s", "1L AS b"),
     )
     if n_conflicts:
         raise ValueError(
@@ -470,8 +497,6 @@ def compact_index(
             f"cannot pick a version. Rebuild with write_{spec.kind}_index or "
             f"remove the stale shard's rows."
         )
-    bands_before = bands.count()
-    side_before = sidecar.count()
     # bands first, stamp immediately after (_write_pair): a crash before
     # the LAST write leaves the target's sidecar missing, so every
     # partial target is LOUD
@@ -488,11 +513,15 @@ def compact_index(
         stamp,
     )
     side = spec.sidecar_suffix
+    bands_after, side_after = _sums(
+        spark.table(f"{target}_bands").selectExpr("1L AS b", "0L AS s"),
+        spark.table(f"{target}_{side}").selectExpr("0L AS b", "1L AS s"),
+    )
     return {
         "bands_before": bands_before,
-        "bands_after": spark.table(f"{target}_bands").count(),
+        "bands_after": bands_after,
         f"{side}_before": side_before,
-        f"{side}_after": spark.table(f"{target}_{side}").count(),
+        f"{side}_after": side_after,
     }
 
 

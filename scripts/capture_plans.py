@@ -14,7 +14,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from aind_protein_data_transformation_spark.catalog import DEFAULT_SF_DIR
 from aind_protein_data_transformation_spark.session import get_spark
@@ -27,7 +28,7 @@ def main() -> int:
     from bench import HEADLINE
 
     names = sys.argv[3:] or list(HEADLINE)
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture-plans")
     try:

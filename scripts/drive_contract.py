@@ -1,8 +1,9 @@
 """Driver-mimic: exercise the __spark_entry__ contract at sf0.01 like the real verify does."""
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 # executors (python workers) must also see the package
-os.environ["PYTHONPATH"] = "/root/repo" + os.pathsep + os.environ.get("PYTHONPATH", "")
+os.environ["PYTHONPATH"] = ROOT + os.pathsep + os.environ.get("PYTHONPATH", "")
 import __spark_entry__ as e
 from pyspark.sql import SparkSession
 import duckdb

@@ -16,6 +16,8 @@ import sys
 
 import pytest
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _SCRIPT = r"""
 import json, sys
 from pyspark.sql import SparkSession
@@ -52,7 +54,7 @@ def test_queries_survive_bare_default_session(sf_dir, duck):
         text=True,
         timeout=600,
         env=env,
-        cwd="/root/repo",
+        cwd=REPO,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     line = next(l for l in proc.stdout.splitlines() if l.startswith("RESULT:"))

@@ -84,8 +84,11 @@ def test_index_roundtrip_is_bucketed_and_complete(spark, split_docs, tmp_path):
         n_docs = corpus.count()
         sigs = spark.table(f"{name}_sigs")
         assert sigs.count() == n_docs
-        assert {"n", "hs"} <= set(sigs.columns)
         bands = spark.table(f"{name}_bands")
+        # the compact format: one hashed key per band row, 32-bit
+        # shingle hashes and no stored set size
+        assert dict(bands.dtypes) == {"doc_id": "bigint", "band": "int", "key": "bigint"}
+        assert dict(sigs.dtypes) == {"doc_id": "bigint", "hs": "array<int>"}
         # one row per (doc, band): MINHASH_PERMS // LSH_BAND_SIZE bands
         from aind_protein_data_transformation_spark.operators.dedup import (
             LSH_BAND_SIZE,
@@ -100,6 +103,17 @@ def test_index_roundtrip_is_bucketed_and_complete(spark, split_docs, tmp_path):
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {name}_bands")
         spark.sql(f"DROP TABLE IF EXISTS {name}_sigs")
+
+
+def test_signature_set_size_equals_stored_hash_count(split_docs):
+    """``n`` and ``size(hs)`` count the same distinct (doc, shingle)
+    rows, so the persisted index can score with ``size(hs)`` and store
+    no ``n``."""
+    corpus, shard = split_docs
+    sig = minhash_signatures(shingle_set(corpus.unionByName(shard)), with_hashes=True)
+    n_docs, n_differ = sig.selectExpr("count(*)", "count_if(n != size(hs))").first()
+    assert n_docs > 0
+    assert n_differ == 0
 
 
 def test_append_then_probe_equals_rebuilt_index(spark, sf_dir, tmp_path):
@@ -147,27 +161,26 @@ def _partial_append(spark, docs, name, *, sigs=False, bands=False):
     simulator: sigs-only = a crash after the first (new-order) write;
     bands-only = the dangerous state the pre-ordering code could leave."""
     from aind_protein_data_transformation_spark.operators.dedup import (
-        LSH_BAND_SIZE,
-        band_rows,
+        MINHASH_SPEC,
+        _signer,
     )
     from aind_protein_data_transformation_spark.operators.index_lifecycle import (
         table_num_buckets,
     )
 
-    sig = minhash_signatures(
-        shingle_set(docs), id_col="doc_id", with_hashes=True
-    ).localCheckpoint()
+    signer = _signer(3, "text", "doc_id")
+    sig = signer.sign(docs).localCheckpoint()
     if sigs:
         (
-            sig.select("doc_id", "n", "hs")
+            sig.select("doc_id", *MINHASH_SPEC.payload_cols)
             .write.mode("append")
             .bucketBy(table_num_buckets(spark, f"{name}_sigs"), "doc_id")
             .saveAsTable(f"{name}_sigs")
         )
     if bands:
-        key_cols = ["band"] + [f"k{j}" for j in range(LSH_BAND_SIZE)]
+        key_cols = list(MINHASH_SPEC.band_keys)
         (
-            band_rows(sig, "doc_id")
+            signer.bands(sig)
             .write.mode("append")
             .bucketBy(table_num_buckets(spark, f"{name}_bands"), *key_cols)
             .sortBy(*key_cols)
@@ -339,10 +352,10 @@ def test_compact_restores_single_append_counts(spark, sf_dir, tmp_path):
         # columns, so the bucketed reads satisfy the aggregation's
         # clustering requirement and compaction shuffles NOTHING
         from aind_protein_data_transformation_spark.operators.dedup import (
-            LSH_BAND_SIZE,
+            MINHASH_SPEC,
         )
 
-        key_cols = ["band"] + [f"k{j}" for j in range(LSH_BAND_SIZE)]
+        key_cols = list(MINHASH_SPEC.band_keys)
         for tbl, keys in (
             ("t_cmp_bands", key_cols + ["doc_id"]),
             ("t_cmp_sigs", ["doc_id"]),
@@ -481,6 +494,17 @@ def test_minhash_stamp_guards_probe_and_append(spark, split_docs, tmp_path):
             f"ALTER TABLE {name}_bands SET TBLPROPERTIES "
             f"('sparkgraft.minhash.perms' = '32')"
         )
+        # a v1 index (four k-columns per band row, (n, array<bigint>)
+        # sidecar) is another encoding: refused, to be rebuilt
+        spark.sql(
+            f"ALTER TABLE {name}_bands SET TBLPROPERTIES "
+            f"('sparkgraft.minhash.hash_version' = '1')"
+        )
+        with pytest.raises(ValueError, match="hash_version: index='1' vs session='2'"):
+            incremental_minhash_pairs(spark, shard, name)
+        with pytest.raises(ValueError, match="hash_version: index='1' vs session='2'"):
+            append_minhash_shard(spark, shard, name)
+        apply_stamp(spark, f"{name}_bands", _minhash_stamp(3))
         # PARTIAL stamp = corruption, not legacy: raises
         spark.sql(
             f"ALTER TABLE {name}_bands UNSET TBLPROPERTIES "

@@ -108,3 +108,21 @@ def test_every_cited_test_file_exists():
     assert "test_incremental.py" in cited
     missing = _missing(cited, "tests")
     assert not missing, missing
+
+
+def test_no_file_hard_codes_the_checkout_path():
+    """Scripts and tests find the package from their own ``__file__``:
+    a file naming this checkout's absolute path would, when run from a
+    second checkout (a parent commit cloned for a plan or benchmark
+    diff), import and write into this one instead."""
+    files = [os.path.join(REPO, "bench.py")]
+    for sub in ("scripts", "tests"):
+        for root, _dirs, names in os.walk(os.path.join(REPO, sub)):
+            files += [os.path.join(root, n) for n in names if n.endswith(".py")]
+    offenders = []
+    for path in files:
+        with open(path, encoding="utf-8") as f:
+            for lineno, line in enumerate(f, 1):
+                if re.search(re.escape(REPO) + r"(?![\w.-])", line):
+                    offenders.append(f"{os.path.relpath(path, REPO)}:{lineno}")
+    assert not offenders, offenders
